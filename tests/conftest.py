@@ -1,6 +1,15 @@
+import os
+
 import pytest
 
 from wurzel_spark import get_spark
+
+# get_spark's default driver heap (48g) is sized for large local benches.
+# Over the whole suite the JVM grows toward it, past the RAM of a 16-GB
+# host, and is OOM-killed mid-run. The test inputs are small, so cap the
+# heap here (an explicit SPARK_DRIVER_MEMORY still wins; CLI subprocesses
+# the tests start inherit it).
+os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 
 # Driver-budget tiering (VERDICT r12 Next #2): the grading driver runs
 # `pytest tests/ -x -q` under a wall-clock budget and the r12 run was
@@ -21,7 +30,6 @@ _TIER_FIRST = (
     "test_plans_round9.py",
     "test_plans_round9b.py",
     "test_plans_round10.py",
-    "test_round10.py",
     "test_round11.py",
     "test_round12.py",
     "test_round13.py",
@@ -49,6 +57,13 @@ _TIER_LAST = (
 
 
 def pytest_collection_modifyitems(session, config, items):
+    here = os.path.dirname(os.path.abspath(__file__))
+    missing = [
+        f for f in _TIER_FIRST + _TIER_LAST if not os.path.exists(os.path.join(here, f))
+    ]
+    if missing:  # a renamed or deleted file would silently fall into tier 1
+        raise pytest.UsageError(f"conftest tiers name missing test files: {missing}")
+
     def _tier(item):
         fname = item.nodeid.split("::", 1)[0].rsplit("/", 1)[-1]
         if fname in _TIER_FIRST:

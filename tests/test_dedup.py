@@ -58,6 +58,18 @@ def test_minhash_lsh_recall_vs_exact(spark):
     assert lsh <= exact  # verification step removes false positives
 
 
+def test_minhash_pairs_id_col_named_cid(spark):
+    # the verify step's internal candidate-id alias must not collide with
+    # the caller's id column (it once aliased to "cid": AMBIGUOUS_REFERENCE)
+    def pairs(id_col):
+        df = _corpus(spark).withColumnRenamed("doc_id", id_col)
+        out = minhash_dedup_pairs(df, id_col=id_col, threshold=0.5)
+        return [tuple(r) for r in out.collect()]
+
+    got = pairs("cid")
+    assert got and got == pairs("chunk_id")
+
+
 def test_simhash_finds_exact_and_near(spark):
     pairs = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(_corpus(spark), max_hamming=3).collect()}
     assert (0, 1) in pairs  # identical text → hamming 0

@@ -5,8 +5,14 @@ import subprocess
 import sys
 
 import pytest
+from pyspark import cloudpickle
+from pyspark.sql import functions as F
 
 from wurzel_spark.manifest import Manifest, ManifestError, run_manifest
+
+# the step-boundary tests ship UDFs defined here into Spark's Python
+# workers, which can't import test modules — pickle them by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 YAML = """
 pipeline:
@@ -340,3 +346,159 @@ def test_argo_env_round_trips_into_settings(md_folder, monkeypatch):
     # round-trip INCLUDING type: Argo exports str(128), env_settings
     # coerces it back to the int the local run passes (ADVICE r6)
     assert m.env_settings("split")["token_limit"] == 128
+
+
+# ---------------------------------------------- step-boundary materialization
+
+_ACC = None  # accumulator the bump step's UDF adds to (the ``acc`` fixture)
+
+
+@pytest.fixture()
+def acc(spark, monkeypatch):
+    a = spark.sparkContext.accumulator(0)
+    monkeypatch.setattr(sys.modules[__name__], "_ACC", a)
+    return a
+
+
+def rows_step(spark, inputs, *, n):
+    return spark.range(int(n)).selectExpr("id AS v")
+
+
+def bump_step(spark, inputs):
+    """Maps every row through a Python UDF that counts its calls."""
+    (df,) = inputs
+    acc = _ACC
+
+    @F.udf("long")
+    def bump(v):
+        acc.add(1)
+        return v + 1
+
+    return df.withColumn("v", bump("v"))
+
+
+def three_actions_step(spark, inputs):
+    """A multi-action consumer, like the near-dup step or the sink."""
+    (df,) = inputs
+    for _ in range(3):
+        df.agg(F.sum("v")).collect()  # consumes v: no column pruning
+    return df
+
+
+def derive_three_actions_step(spark, inputs):
+    """A multi-action consumer whose output is a new frame."""
+    return three_actions_step(spark, inputs).withColumn("v", F.col("v") * 2)
+
+
+def lazy_step(spark, inputs):
+    (df,) = inputs
+    return df.filter("v > 0")
+
+
+def fail_step(spark, inputs):
+    raise RuntimeError("step failed")
+
+
+def embed_noting_cache_step(spark, inputs):
+    """The embed step, tagging its rows with whether its input was still
+    cached when it ran."""
+    from wurzel_spark.operators.embedding import embed_stage
+
+    (df,) = inputs
+    return embed_stage(df, dim=8).withColumn("input_cached", F.lit(df.is_cached))
+
+
+def _graph(*tail: str) -> Manifest:
+    """rows -> bump -> the ``tail`` steps, one after the other."""
+    steps, prev = "", "bump"
+    for i, fn in enumerate(tail):
+        steps += f"""
+  s{i}:
+    uses: "{__name__}:{fn}"
+    dependsOn: [{prev}]"""
+        prev = f"s{i}"
+    return Manifest.from_yaml(
+        f"""
+steps:
+  rows:
+    uses: "{__name__}:rows_step"
+    settings: {{n: 40}}
+  bump:
+    uses: "{__name__}:bump_step"
+    dependsOn: [rows]{steps}
+"""
+    )
+
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_step_output_computed_once_for_multi_action_consumer(spark, acc):
+    outs = run_manifest(spark, _graph("three_actions_step"))
+    # bump's UDF ran once per row, not once per downstream action
+    assert acc.value == 40
+    assert outs["s0"].agg(F.sum("v")).first()[0] == sum(range(1, 41))
+
+
+def test_multi_action_steps_in_a_row_compute_upstream_once(spark, acc):
+    """The first multi-action step's output is filled while bump's cache
+    still exists, so the second one never re-runs bump's UDF."""
+    outs = run_manifest(
+        spark, _graph("derive_three_actions_step", "derive_three_actions_step")
+    )
+    assert acc.value == 40
+    assert outs["s1"].agg(F.sum("v")).first()[0] == 4 * sum(range(1, 41))
+
+
+def test_lazy_chain_runs_nothing_until_the_caller_acts(spark, acc):
+    """No step takes an action: run_manifest fills no cache and runs no
+    UDF; the caller's one action on the lazy terminal runs it once."""
+    outs = run_manifest(spark, _graph("lazy_step", "lazy_step"))
+    assert acc.value == 0
+    assert outs["s1"].count() == 40
+    assert acc.value == 40
+
+
+def test_run_manifest_leaves_nothing_cached(spark, acc):
+    spark.catalog.clearCache()
+    run_manifest(spark, _graph("derive_three_actions_step", "three_actions_step"))
+    assert _cache_empty(spark)
+    with pytest.raises(RuntimeError, match="step failed"):
+        run_manifest(spark, _graph("derive_three_actions_step", "fail_step"))
+    assert _cache_empty(spark)
+
+
+def test_non_terminal_parquet_sink_matches_materialize_dir(spark, md_folder, tmp_path):
+    """parquet_sink returns its input object: the shared cache entry must
+    stay until the step after the sink has run."""
+    m = Manifest.from_yaml(
+        f"""
+steps:
+  source:
+    uses: markdown_source
+    settings: {{path: "{md_folder}"}}
+  split:
+    uses: split
+    dependsOn: [source]
+    settings: {{token_limit: 32, token_limit_buffer: 8, token_limit_min: 4}}
+  save:
+    uses: parquet_sink
+    dependsOn: [split]
+    settings: {{path: "{tmp_path}/saved"}}
+  embed:
+    uses: "{__name__}:embed_noting_cache_step"
+    dependsOn: [save]
+"""
+    )
+
+    def rows(df):
+        return sorted((r["text"], tuple(r["vector"]), r["input_cached"]) for r in df.collect())
+
+    spark.catalog.clearCache()
+    cached = rows(run_manifest(spark, m)["embed"])
+    assert _cache_empty(spark)
+    assert cached and all(r[2] for r in cached)  # split's entry outlived its own consumer
+    materialized = rows(run_manifest(spark, m, str(tmp_path / "mat"))["embed"])
+    assert [r[:2] for r in cached] == [r[:2] for r in materialized]
+    assert spark.read.parquet(f"{tmp_path}/saved").count() == len(cached)

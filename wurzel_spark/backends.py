@@ -24,7 +24,7 @@ Reference parity (SURVEY §3.2/§3.3):
 The generated cmds use ``python -m wurzel_spark run <manifest> --only
 <step> --materialize-dir <data_dir>`` — the single-step re-entry the
 reference's executors rely on (base_executor.py:302-309). In Spark the
-whole graph can also run as ONE composed plan (``run`` without
+whole graph can also run in one Spark application (``run`` without
 ``--only``); the generated artifact is for environments that want DVC's
 cross-run memoization or Argo's pod-per-step isolation.
 

@@ -6,8 +6,9 @@
     python -m wurzel_spark env manifest.yaml
     python -m wurzel_spark generate manifest.yaml --backend {dvc,argo}
 
-``run`` without ``--only`` composes the whole graph into ONE Catalyst plan —
-a Spark pipeline IS the artifact. ``generate`` exists for reference parity
+``run`` without ``--only`` runs the whole graph in one Spark application,
+each non-terminal step's output cached once at its step boundary — a Spark
+pipeline IS the artifact. ``generate`` exists for reference parity
 (SURVEY §3.2): it emits dvc.yaml / Argo Workflow YAML whose per-step cmds
 re-enter this CLI with ``--only STEP``, for environments that want DVC's
 cross-run memoization or pod-per-step isolation.

@@ -1,4 +1,4 @@
-"""Pipeline manifests: YAML → validated step graph → one composed Spark job.
+"""Pipeline manifests: YAML → validated step graph → one Spark application.
 
 Reference parity (SURVEY §3.3):
   - PipelineManifest model (wurzel/manifest/models.py:135-141; steps with
@@ -13,8 +13,14 @@ Reference parity (SURVEY §3.3):
 The crucial difference (SURVEY §3.2): generate_artifact compiles to
 *nothing*. Where the reference emits dvc.yaml / Argo workflows that re-enter
 the CLI once per step (one process/pod per step, data via files/S3), here
-the step graph composes into ONE Catalyst plan; per-step materialization is
-an optional flag, not an execution requirement.
+all steps run in one Spark application and hand each other DataFrames.
+Like the reference executor, each step's output is computed once:
+``run_manifest`` persists every non-terminal DataFrame output at its step
+boundary and unpersists it once all its consumers have run. Without that,
+every action a multi-action consumer takes (a near-dup step's checkpoints,
+a sink's count and upload) would replay the whole upstream chain — source
+read and every UDF — from the input. ``materialize_dir`` swaps the
+in-memory boundary for a Parquet round-trip per step.
 
 Manifest format:
 
@@ -37,12 +43,14 @@ from __future__ import annotations
 
 import importlib
 import os
+from collections import Counter
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 import yaml
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -485,24 +493,73 @@ def _execute_step(spark, manifest, name, inputs, chain=None, encapsulate=True):
     return chain.execute(ctx, _run)
 
 
+def _cache_filled(df) -> bool:
+    """Whether ``df`` is a cached DataFrame whose cache holds all its
+    partitions, i.e. an action has read it since it was persisted."""
+    if not isinstance(df, DataFrame) or not df.is_cached:
+        return False
+    cm = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    entry = cm.lookupCachedData(df._jdf)
+    return entry.isDefined() and (
+        entry.get().cachedRepresentation().cacheBuilder().isCachedColumnBuffersLoaded()
+    )
+
+
 def run_manifest(
     spark: SparkSession,
     manifest: Manifest,
     materialize_dir: str | None = None,
     chain=None,
 ) -> dict[str, DataFrame]:
-    """Execute the step graph as one composed plan; returns terminal outputs."""
+    """Execute the step graph; returns terminal outputs.
+
+    Step-boundary rule: a non-terminal step's DataFrame output is
+    persisted (MEMORY_AND_DISK, lineage kept, so a lost executor only
+    recomputes its blocks), and the first action that reads it fills the
+    cache. A consumer that takes many actions (the near-dup step's
+    checkpoints, a sink's sample, count and upload) thus runs the
+    upstream steps once, not once per action. A step that has read its
+    cached inputs gets its own output counted at once, while those
+    inputs are still cached; filled later, it would recompute them. A
+    cached output is unpersisted as soon as no step still to run needs
+    it, so at most the live frontier of the graph stays cached, and
+    nothing stays cached when the run returns or raises. A chain of lazy
+    steps therefore fills no cache and runs no job here. Frames are
+    tracked by identity: a step that returns its input (``parquet_sink``)
+    shares that input's cache entry. Terminal outputs come back lazy;
+    non-DataFrame outputs (a sink's version name) pass through as is.
+    With ``materialize_dir`` each output is written there as Parquet and
+    read back instead.
+    """
     outputs: dict[str, DataFrame] = {}
-    for name in manifest.topo_order():
-        spec = manifest.steps[name]
-        inputs = [outputs[d] for d in spec.depends_on]
-        df = _execute_step(spark, manifest, name, inputs, chain=chain)
-        if materialize_dir is not None:
-            path = os.path.join(materialize_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            df = spark.read.parquet(path)
-        outputs[name] = df
-    return {t: outputs[t] for t in manifest.terminals()}
+    # consumers not yet run, per step
+    waiting = Counter(d for s in manifest.steps.values() for d in s.depends_on)
+    cached: list[DataFrame] = []  # frames this run persisted
+    try:
+        for name in manifest.topo_order():
+            spec = manifest.steps[name]
+            inputs = [outputs[d] for d in spec.depends_on]
+            df = _execute_step(spark, manifest, name, inputs, chain=chain)
+            if materialize_dir is not None:
+                path = os.path.join(materialize_dir, name)
+                df.write.mode("overwrite").parquet(path)
+                df = spark.read.parquet(path)
+            elif waiting[name] and isinstance(df, DataFrame) and not df.is_cached:
+                df.persist(StorageLevel.MEMORY_AND_DISK)
+                cached.append(df)
+                if any(_cache_filled(i) for i in inputs):
+                    df.count()  # fill it while the inputs are still cached
+            outputs[name] = df
+            for d in spec.depends_on:
+                waiting[d] -= 1
+            live = [o for n, o in outputs.items() if waiting[n]]
+            for c in [c for c in cached if not any(c is o for o in live)]:
+                c.unpersist()
+                cached.remove(c)
+        return {t: outputs[t] for t in manifest.terminals()}
+    finally:
+        for c in cached:
+            c.unpersist()
 
 
 def run_single_step(

@@ -462,6 +462,11 @@ def lsh_candidate_pairs(
     )
 
 
+#: candidate-id column of the verify semi-joins; reserved so that it can
+#: never collide with a caller's id column
+_CAND_ID = "__cand_id"
+
+
 def _verify_jaccard_pairs(
     df: DataFrame,
     cands: DataFrame,
@@ -485,7 +490,7 @@ def _verify_jaccard_pairs(
     ``cands`` must be materialized (localCheckpoint) by the caller.
     """
     cand_ids = (
-        cands.select(F.col("id_a").alias("cid"))
+        cands.select(F.col("id_a").alias(_CAND_ID))
         .union(cands.select(F.col("id_b")))
         .distinct()
     )
@@ -493,14 +498,14 @@ def _verify_jaccard_pairs(
         # shared-corpus-pass path: candidate docs' shingles derive from the
         # (id, whs) word-hash frame — no second text scan/split.
         needed_wh = wh.join(
-            F.broadcast(cand_ids), F.col("id") == F.col("cid"), "left_semi"
+            F.broadcast(cand_ids), F.col("id") == F.col(_CAND_ID), "left_semi"
         )
         sh = needed_wh.select(
             "id", _shingle_hashes_from_whs(F.col("whs"), n).alias("sh")
         )
     else:
         needed = df.join(
-            F.broadcast(cand_ids), F.col(id_col) == F.col("cid"), "left_semi"
+            F.broadcast(cand_ids), F.col(id_col) == F.col(_CAND_ID), "left_semi"
         )
         sh = _parallelize(needed).select(
             F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("sh")
@@ -1636,13 +1641,13 @@ def incremental_near_dup_pairs(
         .localCheckpoint()
     )
     new_needed = new_docs.join(
-        F.broadcast(cands.select(F.col("id_a").alias("cid")).distinct()),
-        F.col(id_col) == F.col("cid"),
+        F.broadcast(cands.select(F.col("id_a").alias(_CAND_ID)).distinct()),
+        F.col(id_col) == F.col(_CAND_ID),
         "left_semi",
     )
     old_needed = corpus_docs.join(
-        F.broadcast(cands.select(F.col("id_b").alias("cid")).distinct()),
-        F.col(id_col) == F.col("cid"),
+        F.broadcast(cands.select(F.col("id_b").alias(_CAND_ID)).distinct()),
+        F.col(id_col) == F.col(_CAND_ID),
         "left_semi",
     )
     sh_new = _parallelize(new_needed).select(

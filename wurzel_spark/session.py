@@ -44,6 +44,11 @@ def get_spark(
         # MinHash signature) blow past the default 100-field cap and silently
         # fall out of whole-stage codegen into interpreted mode (~3× slower).
         .config("spark.sql.codegen.maxFields", "256")
+        # Let AQE coalesce the partitions of a cached plan as it does for an
+        # uncached one. Off (the default), a persisted frame keeps all
+        # spark.sql.shuffle.partitions, and every Python UDF stage reading
+        # it runs one Arrow worker task per partition, however small.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         # Straggler insurance: one stalled core (noisy neighbor on this VM,
         # slow node on a real cluster) stalls a whole task wave; speculative
         # re-execution bounds the tail at the cost of some duplicate work.

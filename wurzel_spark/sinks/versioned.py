@@ -158,10 +158,17 @@ class VersionedCollectionWriter:
         replaces the reference's in-process counter, qdrant/step.py:72-77),
         assigned WITHOUT a global window: a range repartition on
         ``order_col`` + within-partition sort gives a total order across
-        ordered partitions; a cheap per-partition count job (whose shuffle
-        map stage is reused — skipped — by the upload job) yields prefix-sum
+        ordered partitions; a per-partition count action yields prefix-sum
         offsets, and each upload task numbers its rows from its partition's
-        offset (zipWithIndex pattern). A single-task ``Window.orderBy`` would
+        offset (zipWithIndex pattern). The count and the upload are two
+        separate DataFrame actions, so each plans and runs its own range
+        sample job and its own range exchange; the upload reuses nothing
+        of the count's. Known defect: the range sample is seeded from the
+        sampling RDD's id, which differs per action, so once an input
+        partition holds more rows than the sample takes from it (about
+        ``60 × n_parts / input partitions``) the two actions can pick
+        different bounds, and the offsets then no longer match the
+        upload's partitions. A single-task ``Window.orderBy`` would
         funnel the whole dataset through one executor — fatal at 100 TB.
         The foreachPartition upload batches ``batch_size`` points per call
         (qdrant/step.py:144-155) and is idempotent under Spark task retries
@@ -200,8 +207,8 @@ class VersionedCollectionWriter:
         )
 
         # Per-partition counts → prefix-sum offsets. Tiny collect (one row
-        # per partition); the upload job below skips the already-computed
-        # range-shuffle map stage.
+        # per partition), but a full action: range sample, range shuffle,
+        # then the count. The upload below repeats the sample and shuffle.
         counts = (
             parted.select(F.spark_partition_id().alias("__pid"))
             .groupBy("__pid")
