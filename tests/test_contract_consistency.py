@@ -154,3 +154,16 @@ def test_bench_headline_names_all_resolve():
     missing = [n for n in bench.HEADLINE if n not in qs]
     assert not missing, missing
     assert len(bench.HEADLINE) == len(set(bench.HEADLINE))
+
+
+def test_bench_compact_keep_names_all_resolve():
+    """compact_line skips COMPACT_KEEP names absent from a run, so a
+    renamed query would silently fold into "oth". Every keep-set name must
+    be a registered query, and none may repeat."""
+    import bench
+
+    import __spark_entry__ as e
+
+    missing = [n for n in bench.COMPACT_KEEP if n not in e.queries()]
+    assert not missing, missing
+    assert len(bench.COMPACT_KEEP) == len(set(bench.COMPACT_KEEP))

@@ -409,6 +409,10 @@ def embed_noting_cache_step(spark, inputs):
 
 
 def _graph(*tail: str) -> Manifest:
+    return Manifest.from_yaml(_graph_yaml(*tail))
+
+
+def _graph_yaml(*tail: str) -> str:
     """rows -> bump -> the ``tail`` steps, one after the other."""
     steps, prev = "", "bump"
     for i, fn in enumerate(tail):
@@ -417,8 +421,7 @@ def _graph(*tail: str) -> Manifest:
     uses: "{__name__}:{fn}"
     dependsOn: [{prev}]"""
         prev = f"s{i}"
-    return Manifest.from_yaml(
-        f"""
+    return f"""
 steps:
   rows:
     uses: "{__name__}:rows_step"
@@ -427,7 +430,6 @@ steps:
     uses: "{__name__}:bump_step"
     dependsOn: [rows]{steps}
 """
-    )
 
 
 def _cache_empty(spark) -> bool:
@@ -502,3 +504,21 @@ steps:
     materialized = rows(run_manifest(spark, m, str(tmp_path / "mat"))["embed"])
     assert [r[:2] for r in cached] == [r[:2] for r in materialized]
     assert spark.read.parquet(f"{tmp_path}/saved").count() == len(cached)
+
+
+
+def test_cli_run_out_runs_each_terminal_once(spark, acc, tmp_path, monkeypatch, capsys):
+    """`run --out` counts and then writes each lazy terminal output; the
+    UDF behind it must still run once per row, not once per action."""
+    import wurzel_spark
+    from wurzel_spark.cli import main
+
+    monkeypatch.setattr(wurzel_spark, "get_spark", lambda name: spark)
+    mf = tmp_path / "m.yaml"
+    mf.write_text(_graph_yaml())  # terminal: bump itself
+    spark.catalog.clearCache()
+    assert main(["run", str(mf), "--out", str(tmp_path / "out")]) == 0
+    assert "bump: 40 rows" in capsys.readouterr().out
+    assert acc.value == 40
+    assert spark.read.parquet(str(tmp_path / "out" / "bump")).count() == 40
+    assert _cache_empty(spark)

@@ -1,5 +1,5 @@
 """Round-13 optimization guards: the driver-gated incremental-cluster
-fold must be bit-equal to the distributed fall-through (the union-find
+fold must be bit-equal to the fully distributed path (the union-find
 1M-edge-class convention — every driver-side algorithm path needs an
 equivalence-tested distributed twin)."""
 
@@ -15,14 +15,16 @@ def test_incremental_cluster_gated_fold_matches_fallthrough(
 ):
     """q_incremental_cluster_members' r13 driver-gated fold (one Arrow
     pull + two driver union-finds) must produce byte-identical rows to
-    the distributed star-merge fall-through on the same corpus."""
+    the fully distributed path (star-merge fall-through with distributed
+    label propagation) on the same corpus."""
     from wurzel_spark.operators import dedup as D
 
     gated = _collect_rows(D.q_incremental_cluster_members(spark, sf_dir))
-    # force the fall-through: the 4·n_pairs probe can never fit a gate
-    # of -1, so the original near_dup_cluster_members/merge_cluster_labels
-    # path runs (whose own per-call gates are untouched — they still take
-    # the certified driver union-find below 1M edges)
+    # force the fully distributed path: no edge count fits a gate of -1,
+    # so the 4·n_pairs probe falls through to the original
+    # near_dup_cluster_members/merge_cluster_labels path, and the per-call
+    # union-find gates inside it, which read the same global, fall through
+    # to distributed label propagation too
     monkeypatch.setattr(D, "_DRIVER_UNION_FIND_MAX_EDGES", -1)
     fallthrough = _collect_rows(D.q_incremental_cluster_members(spark, sf_dir))
     assert gated == fallthrough

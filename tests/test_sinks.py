@@ -58,6 +58,33 @@ def test_versioned_ids_dense_across_partitions(spark, tmp_path):
     assert by_doc == {k: i + 1 for i, k in enumerate(range(1000, 1500))}
 
 
+def test_versioned_ids_dense_when_the_range_sample_is_sparse(spark, tmp_path):
+    """200k rows in 4 input partitions are far more per input partition
+    than the range sample takes (~60 × 8 / 4). The per-partition count and
+    the upload must still see the same range bounds, or ids repeat or skip."""
+    root = str(tmp_path / "store_sparse")
+    writer = VersionedCollectionWriter(
+        lambda: LocalCollectionBackend(root), "kb", batch_size=50_000
+    )
+    n = 200_000
+    df = spark.range(n).selectExpr("id AS doc_id").repartition(4)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")  # repartitionByRange(8)
+    try:
+        writer.write(df, "doc_id")
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    ids = {}
+    cdir = tmp_path / "store_sparse" / "kb_v1"
+    for part in os.listdir(cdir):
+        if part.startswith("part-"):
+            for line in open(cdir / part):
+                r = json.loads(line)
+                ids[r["doc_id"]] = r["id"]
+    assert sorted(ids.values()) == list(range(1, n + 1))
+    assert ids == {k: k + 1 for k in range(n)}
+
+
 def test_retirement_keeps_newest(spark, tmp_path):
     root = str(tmp_path / "store3")
     writer = VersionedCollectionWriter(

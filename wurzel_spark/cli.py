@@ -41,14 +41,21 @@ def _cmd_run(args) -> int:
         return 0
     outs = run_manifest(spark, m, materialize_dir=args.materialize_dir)
     for name, df in outs.items():
-        n = df.count()
-        print(f"{name}: {n} rows, schema={df.schema.simpleString()}")
+        # With --out the count and the write are two actions on the same
+        # lazy terminal: cache it so its graph runs once, not twice.
         if args.out:
-            import os
+            df.persist()
+        try:
+            n = df.count()
+            print(f"{name}: {n} rows, schema={df.schema.simpleString()}")
+            if args.out:
+                import os
 
-            df.orderBy(df.columns[0]).write.mode("overwrite").parquet(
-                os.path.join(args.out, name)
-            )
+                df.orderBy(df.columns[0]).write.mode("overwrite").parquet(
+                    os.path.join(args.out, name)
+                )
+        finally:
+            df.unpersist()
     return 0
 
 

@@ -14,6 +14,41 @@ import sys
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(total_bytes: int | None = None) -> str:
+    """Default driver heap: half the host's RAM, at least 1g, at most 48g.
+
+    A fixed 48g let the heap of a long local run grow past the RAM of a
+    small host until the kernel killed the JVM. ``total_bytes`` defaults
+    to the physical memory this host reports.
+    """
+    if total_bytes is None:
+        try:
+            total_bytes = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (OSError, ValueError):
+            return "48g"
+    half_mb = total_bytes // (2 * 1024 * 1024)
+    return f"{max(1024, min(48 * 1024, half_mb))}m"
+
+
+def python_daemon_conf(extra_conf: dict[str, str]) -> dict[str, str]:
+    """Conf that launches Python workers through ``wurzel_spark.daemon``.
+
+    That daemon stops each task from re-reading ``pyspark.zip`` (see its
+    docstring). The package's parent directory goes on the workers'
+    PYTHONPATH, ahead of any path the caller set there, so the daemon
+    imports whatever the driver's working directory is. A caller that
+    names its own daemon module gets nothing changed.
+    """
+    if "spark.python.daemon.module" in extra_conf:
+        return {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = (root, extra_conf.get("spark.executorEnv.PYTHONPATH"))
+    return {
+        "spark.python.daemon.module": "wurzel_spark.daemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(p for p in paths if p),
+    }
+
+
 def get_spark(
     app_name: str = "wurzel_spark",
     cpus: int | None = None,
@@ -24,7 +59,9 @@ def get_spark(
 
     On a real cluster, master/memory come from spark-submit; in local mode we
     default to ``local[$SPARK_GRAFT_CPUS]`` with shuffle partitions matched
-    to cores (not the 200 default, which makes tiny local partitions).
+    to cores (not the 200 default, which makes tiny local partitions),
+    and Python workers start from ``wurzel_spark.daemon``
+    (``python_daemon_conf``).
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -57,10 +94,14 @@ def get_spark(
         .config("spark.speculation.quantile", "0.9")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     # Only force a master when none is configured (cluster submit wins).
-    if not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ:
+    local = not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ
+    if local:
         builder = builder.master(f"local[{cpus}]")
     # Scale-dependent settings stay parameterised: deployment-specific
     # overrides ride $SPARK_GRAFT_EXTRA_CONF as ';'-separated k=v pairs
@@ -98,6 +139,9 @@ def get_spark(
                 )
     if extra_conf:
         for k, v in extra_conf.items():
+            builder = builder.config(k, v)
+    if local:
+        for k, v in python_daemon_conf(extra_conf or {}).items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

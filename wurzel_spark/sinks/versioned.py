@@ -23,6 +23,7 @@ same protocol (gated import — not installed here).
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import re
@@ -161,15 +162,14 @@ class VersionedCollectionWriter:
         ordered partitions; a per-partition count action yields prefix-sum
         offsets, and each upload task numbers its rows from its partition's
         offset (zipWithIndex pattern). The count and the upload are two
-        separate DataFrame actions, so each plans and runs its own range
-        sample job and its own range exchange; the upload reuses nothing
-        of the count's. Known defect: the range sample is seeded from the
-        sampling RDD's id, which differs per action, so once an input
-        partition holds more rows than the sample takes from it (about
-        ``60 × n_parts / input partitions``) the two actions can pick
-        different bounds, and the offsets then no longer match the
-        upload's partitions. A single-task ``Window.orderBy`` would
-        funnel the whole dataset through one executor — fatal at 100 TB.
+        actions on one RDD, so the range sample and the range shuffle run
+        once and both actions see the same bounds. Two DataFrame actions
+        would each sample their own bounds, seeded from their own sampling
+        RDD's id; once an input partition held more rows than the sample
+        takes from it (about ``60 × n_parts / input partitions``) they
+        could disagree, and ids would repeat or skip. A single-task
+        ``Window.orderBy`` would funnel the whole dataset through one
+        executor — fatal at 100 TB.
         The foreachPartition upload batches ``batch_size`` points per call
         (qdrant/step.py:144-155) and is idempotent under Spark task retries
         (same partition ⇒ same sorted rows ⇒ same ids).
@@ -198,29 +198,18 @@ class VersionedCollectionWriter:
         if history:
             staged = staged.withColumn("history", F.lit(history))
 
-        # Explicit partition count so AQE cannot re-coalesce differently
-        # between the count job and the upload job (partition ids must
-        # agree across both).
+        # An explicit partition count, which AQE does not coalesce: the
+        # upload keeps n_parts parallel tasks.
         n_parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
         parted = staged.repartitionByRange(n_parts, F.col(order_col)).sortWithinPartitions(
             order_col
         )
-
-        # Per-partition counts → prefix-sum offsets. Tiny collect (one row
-        # per partition), but a full action: range sample, range shuffle,
-        # then the count. The upload below repeats the sample and shuffle.
-        counts = (
-            parted.select(F.spark_partition_id().alias("__pid"))
-            .groupBy("__pid")
-            .count()
-            .collect()
-        )
-        by_pid = {int(r["__pid"]): int(r["count"]) for r in counts}
-        offsets: dict[int, int] = {}
-        acc = 0
-        for pid in range(max(by_pid, default=-1) + 1):
-            offsets[pid] = acc
-            acc += by_pid.get(pid, 0)
+        # Building the RDD runs the range sample and the range shuffle once;
+        # the count and the upload below both read that one shuffle output,
+        # so they see the same range bounds.
+        rdd = parted.rdd
+        counts = rdd.mapPartitions(lambda it: [sum(1 for _ in it)]).collect()
+        offsets = list(itertools.accumulate([0] + counts[:-1]))  # by partition id
 
         factory = self.backend_factory
         batch_size = self.batch_size
@@ -229,7 +218,7 @@ class VersionedCollectionWriter:
             from pyspark import TaskContext
 
             be = factory()
-            next_id = offsets.get(TaskContext.get().partitionId(), 0) + 1
+            next_id = offsets[TaskContext.get().partitionId()] + 1
             batch: list[dict] = []
             for r in rows:
                 d = r.asDict(recursive=True)
@@ -241,7 +230,7 @@ class VersionedCollectionWriter:
                     batch = []
             be.upsert_batch(name, batch)
 
-        parted.foreachPartition(upload)
+        rdd.foreachPartition(upload)
         self.finalize(backend, name)
         return name
 
