@@ -167,3 +167,34 @@ def test_bench_compact_keep_names_all_resolve():
     missing = [n for n in bench.COMPACT_KEEP if n not in e.queries()]
     assert not missing, missing
     assert len(bench.COMPACT_KEEP) == len(set(bench.COMPACT_KEEP))
+
+
+def _streaming_sites(needle):
+    """{(module file, enclosing top-level function)} of the sites of
+    ``needle`` in the streaming/ sources."""
+    import ast
+    import pathlib
+
+    import wurzel_spark.streaming as S
+
+    sites = set()
+    for path in sorted(pathlib.Path(S.__file__).parent.glob("*.py")):
+        src = path.read_text()
+        for node in ast.parse(src).body:
+            if needle in (ast.get_source_segment(src, node) or ""):
+                sites.add((path.name, getattr(node, "name", "<module>")))
+    return sites
+
+
+def test_streaming_skeleton_lives_only_in_the_fold_runner():
+    """The availableNow/foreachBatch drive and the crash-fold recovery are
+    written once, in streaming/_state.py; a twin declares its stage, keys
+    and drain instead of re-typing them. The only other sites are the
+    memory-sink drive events.run_available_now and the two-state-dir
+    clusters twin, which recovers both of its dirs itself."""
+    assert {f for f, _ in _streaming_sites(".foreachBatch(")} == {"_state.py"}
+    trigger = _streaming_sites(".trigger(availableNow=True)")
+    assert {f for f, _ in trigger} == {"_state.py", "events.py"}
+    assert [fn for f, fn in trigger if f == "events.py"] == ["run_available_now"]
+    recover = {f for f, _ in _streaming_sites("recover_fold(")}
+    assert recover == {"_state.py", "clusters.py"}

@@ -2263,8 +2263,8 @@ def q_incremental_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame
         pdf = pairs.select("id_a", "id_b").toPandas()
         ia = pdf["id_a"].astype("int64")
         ib = pdf["id_b"].astype("int64")
-        # doc ids are non-negative, so pandas % matches Spark's pmod here
-        new_mask = (ia % 5 == 4) | (ib % 5 == 4)
+        # truncated remainder, like Spark's and DuckDB's % (pandas % floors)
+        new_mask = (np.fmod(ia, 5) == 4) | (np.fmod(ib, 5) == 4)
         labels = _uf_roots(ia[~new_mask], ib[~new_mask])
         star = [(n, r) for n, r in labels.items() if n != r]
         second_src = [n for n, _ in star] + [int(x) for x in ia[new_mask]]

@@ -8,21 +8,22 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` under the session's config."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def path_exists(spark: SparkSession, path: str) -> bool:
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf).exists(p)
+    fs, p = _fs_path(spark, path)
+    return fs.exists(p)
 
 
 def list_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
     """Batch ids of the ``batch=N`` partition subdirectories under a
     streaming state dir (any Hadoop URI), sorted ascending. Empty if the
     dir doesn't exist yet."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(state_dir)
-    fs = p.getFileSystem(conf)
+    fs, p = _fs_path(spark, state_dir)
     if not fs.exists(p):
         return []
     ids = []
@@ -38,18 +39,12 @@ def list_batch_ids(spark: SparkSession, state_dir: str) -> list[int]:
 
 def delete_path(spark: SparkSession, path: str) -> None:
     """Recursive delete (no-op if absent) through the FileSystem API."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = _fs_path(spark, path)
     if fs.exists(p):
         fs.delete(p, True)
 
 
 def rename_path(spark: SparkSession, src: str, dst: str) -> bool:
     """FileSystem rename (atomic on HDFS/local for directories)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    ps = jvm.org.apache.hadoop.fs.Path(src)
-    pd = jvm.org.apache.hadoop.fs.Path(dst)
-    return ps.getFileSystem(conf).rename(ps, pd)
+    fs, ps = _fs_path(spark, src)
+    return fs.rename(ps, _fs_path(spark, dst)[1])

@@ -20,11 +20,9 @@ watermark cutoff: an hour's count just keeps absorbing partials).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.queries.events import anomalies_from_hourly, event_hourly_counts
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def event_anomaly_stream(
@@ -35,41 +33,19 @@ def event_anomaly_stream(
 ) -> DataFrame:
     """Drain an availableNow event stream; return the anomaly rows for
     the full stream seen — identical to the batch event_hour_anomalies."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = event_hourly_counts(batch_df).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "event_type", "hour"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "event_type", "hour"],
+        event_hourly_counts, compact_every,
     )
-    q.awaitTermination()
-    return drain_anomaly_state(spark, state_dir)
+    return drain_anomaly_state(stream.sparkSession, state_dir)
 
 
 def drain_anomaly_state(spark, state_dir: str) -> DataFrame:
-    if not path_exists(spark, state_dir):
+    hourly = summed_state(spark, state_dir, ["event_type", "hour"], ["c"])
+    if hourly is None:
         return spark.createDataFrame(
             [],
             "event_type string, hour timestamp, n_events long, "
             "median_events long, mad_events long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "event_type", "hour", "c")
-        .dropDuplicates(["src_batch", "event_type", "hour"])
-    )
-    hourly = staged.groupBy("event_type", "hour").agg(F.sum("c").alias("c"))
     return anomalies_from_hourly(hourly)

@@ -19,11 +19,9 @@ State size: ≤10 rows per batch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.queries.relational import benford_from_partials, benford_partials
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def benford_stream(
@@ -35,41 +33,20 @@ def benford_stream(
 ) -> DataFrame:
     """Drain an availableNow stream; return the Benford table for the
     full ledger seen — identical to the batch benford_value_audit."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = benford_partials(batch_df, value_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "digit"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "digit"],
+        lambda b: benford_partials(b, value_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_benford_state(spark, state_dir)
+    return drain_benford_state(stream.sparkSession, state_dir)
 
 
 def drain_benford_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch digit counts, then the shared tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["digit"], ["n_values"])
+    if partials is None:
         return spark.createDataFrame(
             [],
             "digit int, n_values long, obs_permille long, exp_permille long,"
             " dev_permille long, n_excluded long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "digit", "n_values")
-        .dropDuplicates(["src_batch", "digit"])
-    )
-    partials = staged.groupBy("digit").agg(F.sum("n_values").alias("n_values"))
     return benford_from_partials(partials)

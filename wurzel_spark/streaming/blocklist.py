@@ -19,7 +19,6 @@ batches are; compaction bounds live dirs at O(compact_every).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     BLOCKLIST_MAX_PERMILLE,
@@ -27,8 +26,7 @@ from wurzel_spark.operators.textstats import (
     blocklist_from_partials,
     blocklist_source_partials,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 _PARTIAL_COLS = ["n_docs", "flagged_docs", "gated_docs", "total_hits", "total_tokens"]
 
@@ -45,44 +43,22 @@ def blocklist_stream(
     """Drain an availableNow document stream; return the blocklist
     filter-rate table for the full corpus seen — identical to the batch
     blocklist_filter_stats."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = blocklist_source_partials(
-            batch_df, text_col, terms, max_permille
-        ).withColumn("src_batch", F.lit(batch_id))
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source"],
+        lambda b: blocklist_source_partials(b, text_col, terms, max_permille),
+        compact_every,
     )
-    q.awaitTermination()
-    return drain_blocklist_state(spark, state_dir)
+    return drain_blocklist_state(stream.sparkSession, state_dir)
 
 
 def drain_blocklist_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch partials, then the shared permille tail.
     Empty state → empty result with the batch schema."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["source"], _PARTIAL_COLS)
+    if partials is None:
         return spark.createDataFrame(
             [],
             "source string, n_docs long, flagged_docs long, gated_docs long, "
             "total_hits long, total_tokens long, hit_permille long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", *_PARTIAL_COLS)
-        .dropDuplicates(["src_batch", "source"])
-    )
-    partials = staged.groupBy("source").agg(
-        *[F.sum(c).alias(c) for c in _PARTIAL_COLS]
-    )
     return blocklist_from_partials(partials)

@@ -20,11 +20,9 @@ event-grain.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.queries.events import bot_partials, bot_score_from_partials
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def bot_score_stream(
@@ -35,42 +33,20 @@ def bot_score_stream(
 ) -> DataFrame:
     """Drain an availableNow event stream; return the bot scoreboard for
     the full stream seen — identical to the batch twin."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = bot_partials(batch_df).withColumn("src_batch", F.lit(batch_id))
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "user_id", "kind", "k"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "user_id", "kind", "k"],
+        bot_partials, compact_every,
     )
-    q.awaitTermination()
-    return drain_bot_state(spark, state_dir)
+    return drain_bot_state(stream.sparkSession, state_dir)
 
 
 def drain_bot_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch flag-domain counts, then the score tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["user_id", "kind", "k"], ["c"])
+    if partials is None:
         return spark.createDataFrame(
             [],
             "bot_score long, n_users long, share_permille long,"
             " n_monotype long, n_burst long, n_clockwork long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "user_id", "kind", "k", "c")
-        .dropDuplicates(["src_batch", "user_id", "kind", "k"])
-    )
-    partials = staged.groupBy("user_id", "kind", "k").agg(
-        F.sum("c").cast("long").alias("c")
-    )
     return bot_score_from_partials(partials)

@@ -19,15 +19,13 @@ metadata-sized however large the batches are.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     auc_from_hist,
     calibration_from_hist,
     score_label_hist,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def calibration_stream(
@@ -39,27 +37,11 @@ def calibration_stream(
 ) -> tuple[DataFrame, DataFrame]:
     """Drain an availableNow document stream; return (calibration_bins,
     auc_stats) for the full corpus seen — identical to the batch pair."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = score_label_hist(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "source", "q1000"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "q1000"],
+        lambda b: score_label_hist(b, text_col), compact_every,
     )
-    q.awaitTermination()
+    spark = stream.sparkSession
     return (
         drain_calibration_state(spark, state_dir),
         drain_auc_state(spark, state_dir),
@@ -67,16 +49,7 @@ def calibration_stream(
 
 
 def _summed_hist(spark, state_dir: str) -> DataFrame | None:
-    if not path_exists(spark, state_dir):
-        return None
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "q1000", "pos", "neg")
-        .dropDuplicates(["src_batch", "source", "q1000"])
-    )
-    return staged.groupBy("source", "q1000").agg(
-        F.sum("pos").alias("pos"), F.sum("neg").alias("neg")
-    )
+    return summed_state(spark, state_dir, ["source", "q1000"], ["pos", "neg"])
 
 
 def drain_calibration_state(spark, state_dir: str) -> DataFrame:

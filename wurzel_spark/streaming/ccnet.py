@@ -30,8 +30,7 @@ from wurzel_spark.operators.textstats import (
     ccnet_doc_bigrams,
     ccnet_scores_from_bigrams,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def ccnet_stream(
@@ -44,45 +43,26 @@ def ccnet_stream(
     """Drain an availableNow document stream; return the per-doc LM
     perplexity table for the full corpus seen — identical to the batch
     ccnet_lm_perplexity."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = ccnet_doc_bigrams(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "doc_id", "h1", "h2"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "doc_id", "h1", "h2"],
+        lambda b: ccnet_doc_bigrams(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_ccnet_state(spark, state_dir)
+    return drain_ccnet_state(stream.sparkSession, state_dir)
 
 
 def drain_ccnet_state(spark, state_dir: str) -> DataFrame:
     """Re-assemble the doc-grain bigram table from the staged partials,
     then the shared train/score tail. Empty state → empty result with
     the batch schema."""
-    if not path_exists(spark, state_dir):
+    staged = staged_state(
+        spark, state_dir, ["src_batch", "doc_id", "h1", "h2"], ["source", "lang", "m"]
+    )
+    if staged is None:
         return spark.createDataFrame(
             [],
             "doc_id long, source string, lang string, n_bigrams long, "
             "oov_bigrams long, nll_q20 long, avg_nll_q20 long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "doc_id", "source", "lang", "h1", "h2", "m")
-        .dropDuplicates(["src_batch", "doc_id", "h1", "h2"])
-    )
     sc = staged.groupBy("doc_id", "source", "lang", "h1", "h2").agg(
         F.sum("m").alias("m")
     )

@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import _CHK_MOD, corpus_checksum
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def checksum_stream(
@@ -38,42 +37,24 @@ def checksum_stream(
     """Drain an availableNow document stream; return the per-source
     checksum table for the full corpus seen — identical to the batch
     corpus_checksum."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = corpus_checksum(batch_df, text_col, hasher).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source"],
+        lambda b: corpus_checksum(b, text_col, hasher), compact_every,
     )
-    q.awaitTermination()
-    return drain_checksum_state(spark, state_dir)
+    return drain_checksum_state(stream.sparkSession, state_dir)
 
 
 def drain_checksum_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged partials; checksums re-reduce mod 2^61 (the partial
     sums are already < 2^61, so the drain sum fits decimal(38,0) for any
     realistic batch count). Empty state → empty result, batch schema."""
-    if not path_exists(spark, state_dir):
+    staged = staged_state(
+        spark, state_dir, ["src_batch", "source"], ["n_docs", "sum_chars", "checksum"]
+    )
+    if staged is None:
         return spark.createDataFrame(
             [], "source string, n_docs long, sum_chars long, checksum long"
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "n_docs", "sum_chars", "checksum")
-        .dropDuplicates(["src_batch", "source"])
-    )
     return (
         staged.groupBy("source")
         .agg(

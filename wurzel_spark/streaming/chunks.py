@@ -26,8 +26,7 @@ from wurzel_spark.operators.chunking import (
     chunk_dedup_stats,
     content_defined_chunks,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def chunk_dedup_stream(
@@ -44,35 +43,22 @@ def chunk_dedup_stream(
     """Drain an availableNow document stream; return the corpus-wide
     chunk-dedup accounting — identical to batch chunk_dedup_stats over
     the union of every batch."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        chunks = content_defined_chunks(
-            batch_df, id_col, text_col, min_size, avg_size, max_size
-        )
-        write_batch_state(
-            spark, chunks, state_dir, batch_id, ["doc_id", "chunk_idx"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["doc_id", "chunk_idx"],
+        lambda b: content_defined_chunks(
+            b, id_col, text_col, min_size, avg_size, max_size
+        ),
+        compact_every,
     )
-    q.awaitTermination()
-    if not path_exists(spark, state_dir):
+    spark = stream.sparkSession
+    # the key dedup is the drain-side replay guard
+    staged = staged_state(
+        spark, state_dir, ["doc_id", "chunk_idx"], ["chunk_len", "chunk_hash"]
+    )
+    if staged is None:
         return spark.createDataFrame(
             [],
             "n_chunks bigint, n_distinct_chunks bigint, total_bytes bigint, "
             "distinct_bytes bigint, dedup_ratio double",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("doc_id", "chunk_idx", "chunk_len", "chunk_hash")
-        .dropDuplicates(["doc_id", "chunk_idx"])  # drain-side replay guard
-    )
     return chunk_dedup_stats(staged)

@@ -32,6 +32,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.classifier import doc_features, score_documents
+from wurzel_spark.streaming._fs import path_exists
+from wurzel_spark.streaming._state import foreach_batch
 
 
 def write_batch_scores(
@@ -66,18 +68,13 @@ def score_stream(
     (doc_id, score, pred) parquet rows under ``out_dir``. Blocks until
     the availableNow run drains; returns the query."""
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_scores(batch_df, batch_id, w, bias, out_dir, text_col)
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    q = foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: write_batch_scores(
+            batch_df, batch_id, w, bias, out_dir, text_col
+        ),
     )
-    q.awaitTermination()
-    from wurzel_spark.streaming._fs import path_exists
-
     spark = stream.sparkSession
     if not path_exists(spark, out_dir):  # every batch empty: nothing was scored
         spark.createDataFrame([], "doc_id long, score double, pred long").write.mode(

@@ -64,6 +64,7 @@ from wurzel_spark.operators.dedup import (
 from wurzel_spark.streaming._fs import path_exists
 from wurzel_spark.streaming._state import (  # shared fold protocol
     fold_tmp as _fold_tmp,  # noqa: F401 — re-exported for tests
+    foreach_batch,
     recover_fold,
     write_batch_state as _write_batch_state,
 )
@@ -133,13 +134,7 @@ def cluster_stream(
             compact_every,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    foreach_batch(stream, checkpoint_dir, _process)
     if not path_exists(spark, labels_dir):
         return spark.createDataFrame([], "doc_id long, cluster_id long")
     return spark.read.parquet(labels_dir)

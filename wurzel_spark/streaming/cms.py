@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.sketches import cms_cells, cms_estimate_terms
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_batch, foreach_batch, summed_state
 
 
 def write_batch_cells(
@@ -45,32 +44,22 @@ def write_batch_cells(
     through the shared crash-safe fold protocol. Overwrite to ``batch=N``
     plus the drain's provenance dedup make a replayed batch a no-op for
     the final (i, cell) sum, before AND after a fold."""
-    if batch_df.isEmpty():
-        return
-    spark = batch_df.sparkSession
-    recover_fold(spark, staging_dir, batch_id)
-    cells = cms_cells(batch_df, text_col).withColumn(
-        "src_batch", F.lit(batch_id).cast("long")
-    )
-    write_batch_state(
-        spark,
-        cells,
-        staging_dir,
-        batch_id,
+    fold_batch(
+        batch_df.sparkSession, batch_df, staging_dir, batch_id,
         ["src_batch", "i", "cell"],
+        # this state stages src_batch as long: pin the tag type to match
+        lambda b: cms_cells(b, text_col).withColumn(
+            "src_batch", F.lit(None).cast("long")
+        ),
         compact_every,
     )
 
 
-def drain_cms_cells(spark, staging_dir: str) -> DataFrame:
+def drain_cms_cells(spark, staging_dir: str) -> DataFrame | None:
     """Corpus (i, cell, c) sums over the staged state: provenance dedup
-    (absorbs fold-then-replay duplicates) then one additive aggregate."""
-    return (
-        spark.read.parquet(staging_dir)
-        .dropDuplicates(["src_batch", "i", "cell"])
-        .groupBy("i", "cell")
-        .agg(F.sum("c").alias("c"))
-    )
+    (absorbs fold-then-replay duplicates) then one additive aggregate.
+    None if nothing was staged."""
+    return summed_state(spark, staging_dir, ["i", "cell"], ["c"])
 
 
 def cms_stream_estimates(
@@ -83,19 +72,16 @@ def cms_stream_estimates(
 ) -> DataFrame:
     """Drain an availableNow stream staging per-batch CMS cells; return
     (w, cms_estimate) for the probe ``terms`` from the summed cells."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        write_batch_cells(batch_df, batch_id, staging_dir, text_col, compact_every)
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: write_batch_cells(
+            batch_df, batch_id, staging_dir, text_col, compact_every
+        ),
     )
-    q.awaitTermination()
     spark = stream.sparkSession
     tdf = spark.createDataFrame([(t,) for t in terms], "w string")
-    if not path_exists(spark, staging_dir):
+    cells = drain_cms_cells(spark, staging_dir)
+    if cells is None:
         return tdf.select("w", F.lit(None).cast("long").alias("cms_estimate")).limit(0)
-    return cms_estimate_terms(drain_cms_cells(spark, staging_dir), tdf).orderBy("w")
+    return cms_estimate_terms(cells, tdf).orderBy("w")

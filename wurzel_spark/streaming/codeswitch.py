@@ -16,14 +16,12 @@ State size: n_sources rows per batch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     code_switch_from_partials,
     code_switch_partials,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 _PARTIAL_COLS = ["n_docs", "n_unmarked", "n_monolingual", "n_mixed"]
 
@@ -38,43 +36,20 @@ def code_switch_stream(
     """Drain an availableNow document stream; return the per-source
     code-switching table for the full corpus seen — identical to the
     batch code_switch_stats."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = code_switch_partials(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source"],
+        lambda b: code_switch_partials(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_code_switch_state(spark, state_dir)
+    return drain_code_switch_state(stream.sparkSession, state_dir)
 
 
 def drain_code_switch_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch partials, then the shared permille tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["source"], _PARTIAL_COLS)
+    if partials is None:
         return spark.createDataFrame(
             [],
             "source string, n_docs long, n_unmarked long, n_monolingual long, "
             "n_mixed long, mixed_permille long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", *_PARTIAL_COLS)
-        .dropDuplicates(["src_batch", "source"])
-    )
-    partials = staged.groupBy("source").agg(
-        *[F.sum(c).alias(c) for c in _PARTIAL_COLS]
-    )
     return code_switch_from_partials(partials)

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.textstats import compressibility_stats
 from wurzel_spark.streaming._fs import path_exists
+from wurzel_spark.streaming._state import foreach_batch
 
 
 def compressibility_stream(
@@ -39,13 +40,7 @@ def compressibility_stream(
             f"{out_dir}/batch={batch_id}"
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = foreach_batch(stream, checkpoint_dir, _process)
     spark = stream.sparkSession
     if not path_exists(spark, out_dir):  # every batch empty
         spark.createDataFrame(

@@ -26,12 +26,13 @@ the batch twin's schema.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
 from wurzel_spark.operators.textstats import curation_stage_flags
 from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream
 
 __all__ = ["curation_funnel_stream"]
 
@@ -56,10 +57,7 @@ def curation_funnel_stream(
     ledger = ledger_dir or f"{checkpoint_dir.rstrip('/')}_ledger"
     totals: dict[str, list[int]] = {}  # source -> [in, g_ok, p_ok, final, tokens]
 
-    def _process(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, ledger, batch_id)
+    def _new_hashes(batch_df: DataFrame) -> DataFrame:
         staged = curation_stage_flags(batch_df, text_col)
         survivors = (
             staged.filter(F.col("g_ok") & F.col("p_ok"))
@@ -67,8 +65,6 @@ def curation_funnel_stream(
         )
         # within-batch first-per-hash (min doc_id — deterministic under
         # retries), then anti-join the cross-batch ledger
-        from pyspark.sql import Window as W
-
         w = W.partitionBy("h").orderBy("doc_id")
         firsts = (
             survivors.withColumn("__rn", F.row_number().over(w))
@@ -81,11 +77,6 @@ def curation_funnel_stream(
         new_rows = firsts.select(
             "source", "h", F.size(TXT.words(F.col("text"))).alias("n_tokens")
         ).localCheckpoint()
-        # idempotent under batch replay: overwrite this batch's ledger
-        # part; the shared protocol folds every compact_every partitions
-        write_batch_state(
-            spark, new_rows.select("h"), ledger, batch_id, ["h"], compact_every
-        )
         stage_counts = staged.groupBy("source").agg(
             F.count(F.lit(1)).alias("n_input"),
             F.sum(F.col("g_ok").cast("long")).alias("n_gopher_ok"),
@@ -104,14 +95,11 @@ def curation_funnel_stream(
             t = totals.setdefault(r["source"], [0, 0, 0, 0, 0])
             t[3] += int(r["n_final"])
             t[4] += int(r["surviving_tokens"] or 0)
+        return new_rows.select("h")
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    # idempotent under batch replay: the runner overwrites this batch's
+    # ledger part; the shared protocol folds every compact_every partitions
+    fold_stream(stream, ledger, checkpoint_dir, ["h"], _new_hashes, compact_every)
     rows = [
         (src, t[0], t[1], t[2], t[3], t[4]) for src, t in sorted(totals.items())
     ]

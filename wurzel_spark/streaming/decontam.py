@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.dedup import decontamination_overlap, eval_span_hashes
+from wurzel_spark.streaming._state import foreach_batch
 
 
 def decontaminate_stream(
@@ -49,11 +50,4 @@ def decontaminate_stream(
         )
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return foreach_batch(stream, checkpoint_dir, _process)

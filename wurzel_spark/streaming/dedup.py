@@ -97,7 +97,7 @@ def curate_stream_to_versioned_sink(
     from pyspark.sql import functions as F
 
     from wurzel_spark.operators.textstats import gopher_quality_flags, pii_scan
-    from wurzel_spark.streaming._state import recover_fold, write_batch_state
+    from wurzel_spark.streaming._state import fold_stream
 
     staging = staging_dir or f"{checkpoint_dir.rstrip('/')}_staging"
     spark = stream.sparkSession
@@ -116,38 +116,23 @@ def curate_stream_to_versioned_sink(
             .drop("__rn")
         )
 
-    def _process(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, staging, batch_id)
+    def _curate(batch_df):
         keep_ids = (
             gopher_quality_flags(batch_df, text_col)
             .filter(F.col("ok_mean_word_len") & F.col("ok_symbol_ratio"))
             .select("doc_id")
         )
         clean_ids = pii_scan(batch_df, text_col).filter(~F.col("pii_flag")).select("doc_id")
-        curated = (
+        return (
             batch_df.join(keep_ids, "doc_id", "left_semi")
             .join(clean_ids, "doc_id", "left_semi")
             .dropDuplicates([text_col])  # within-batch shrink before staging
         )
-        write_batch_state(
-            spark,
-            curated,
-            staging,
-            batch_id,
-            ["doc_id"],
-            compact_every,
-            fold=_min_order_per_content,
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    q = fold_stream(
+        stream, staging, checkpoint_dir, ["doc_id"], _curate, compact_every,
+        fold=_min_order_per_content,
     )
-    q.awaitTermination()
 
     from wurzel_spark.streaming._fs import path_exists
 

@@ -19,8 +19,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.queries.events import psi_from_type_counts
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
+
+
+def _day_type_counts(batch_df: DataFrame) -> DataFrame:
+    return (
+        batch_df.groupBy(F.date_trunc("day", "ts").alias("day"), "event_type")
+        .agg(F.count(F.lit(1)).alias("c"))
+        # this state stages src_batch as long: pin the tag type to match
+        .withColumn("src_batch", F.lit(None).cast("long"))
+    )
 
 
 def event_drift_stream(
@@ -32,43 +40,14 @@ def event_drift_stream(
     """Drain an availableNow event stream staging per-batch (day, type)
     counts; return the full day-over-day PSI table — identical to the
     batch event_type_drift over the same events."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        counts = (
-            batch_df.groupBy(
-                F.date_trunc("day", "ts").alias("day"), "event_type"
-            )
-            .agg(F.count(F.lit(1)).alias("c"))
-            .withColumn("src_batch", F.lit(batch_id).cast("long"))
-        )
-        write_batch_state(
-            spark,
-            counts,
-            state_dir,
-            batch_id,
-            ["src_batch", "day", "event_type"],
-            compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "day", "event_type"],
+        _day_type_counts, compact_every,
     )
-    q.awaitTermination()
-    if not path_exists(spark, state_dir):
+    spark = stream.sparkSession
+    merged = summed_state(spark, state_dir, ["day", "event_type"], ["c"])
+    if merged is None:
         return spark.createDataFrame(
             [], "day timestamp, n_events bigint, psi_q20 bigint"
         )
-    merged = (
-        spark.read.parquet(state_dir)
-        .dropDuplicates(["src_batch", "day", "event_type"])
-        .groupBy("day", "event_type")
-        .agg(F.sum("c").alias("c"))
-    )
     return psi_from_type_counts(merged)

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.asof import asof_join
+from wurzel_spark.streaming._state import foreach_batch
 
 
 def asof_enrich_stream(
@@ -61,11 +62,4 @@ def asof_enrich_stream(
         )
         out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return foreach_batch(stream, checkpoint_dir, _process)

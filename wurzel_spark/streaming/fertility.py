@@ -21,11 +21,9 @@ bound the directory count.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import fertility_from_sums, fertility_sums
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def fertility_stream(
@@ -38,52 +36,25 @@ def fertility_stream(
     """Drain an availableNow document stream; return the per-(source,
     lang) fertility table for the full corpus seen — identical to the
     batch tokenizer_fertility_stats."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = fertility_sums(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "source", "lang"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "lang"],
+        lambda b: fertility_sums(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_fertility_state(spark, state_dir)
+    return drain_fertility_state(stream.sparkSession, state_dir)
 
 
 def drain_fertility_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch partials, then the shared derived tail.
     Empty state → empty result with the batch schema."""
-    if not path_exists(spark, state_dir):
+    sums = summed_state(
+        spark, state_dir, ["source", "lang"],
+        ["n_docs", "n_ws_tokens", "n_subword_tokens", "n_chars"],
+    )
+    if sums is None:
         return spark.createDataFrame(
             [],
             "source string, lang string, n_docs long, n_ws_tokens long, "
             "n_subword_tokens long, n_chars long, fertility_permille long, "
             "chars_per_subword double",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select(
-            "src_batch", "source", "lang",
-            "n_docs", "n_ws_tokens", "n_subword_tokens", "n_chars",
-        )
-        .dropDuplicates(["src_batch", "source", "lang"])
-    )
-    sums = staged.groupBy("source", "lang").agg(
-        F.sum("n_docs").alias("n_docs"),
-        F.sum("n_ws_tokens").alias("n_ws_tokens"),
-        F.sum("n_subword_tokens").alias("n_subword_tokens"),
-        F.sum("n_chars").alias("n_chars"),
-    )
     return fertility_from_sums(sums)

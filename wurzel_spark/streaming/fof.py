@@ -29,8 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import fof_from_types, term_type_counts
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_batch, foreach_batch, summed_state
 
 _FOLDED = -1  # sentinel src_batch for aggregated rows
 
@@ -39,7 +38,7 @@ def fold_types(union: DataFrame) -> DataFrame:
     """The aggregating fold: key-dedup then sum partials into one row per
     live type under the ``src_batch = -1`` sentinel. Re-keying means this
     fold may ONLY see checkpoint-committed batches (``fold_current=False``
-    in write_batch_state) — see the module docstring."""
+    in fold_batch) — see the module docstring."""
     return (
         union.dropDuplicates(["src_batch", "source", "h"])
         .groupBy("source", "h")
@@ -57,14 +56,10 @@ def stage_type_counts(
 ) -> None:
     """Land one batch's per-type count partials (exposed for replay
     tests; fof_stream's foreachBatch delegates here)."""
-    spark = batch_df.sparkSession
-    mine = term_type_counts(batch_df, text_col).withColumn(
-        "src_batch", F.lit(batch_id)
-    )
-    write_batch_state(
-        spark, mine, state_dir, batch_id,
-        ["src_batch", "source", "h"], compact_every, fold=fold_types,
-        fold_current=False,
+    fold_batch(
+        batch_df.sparkSession, batch_df, state_dir, batch_id,
+        ["src_batch", "source", "h"], lambda b: term_type_counts(b, text_col),
+        compact_every, fold=fold_types, fold_current=False,
     )
 
 
@@ -78,35 +73,22 @@ def fof_stream(
     """Drain an availableNow document stream; return the per-source
     frequency-of-frequencies for the full corpus seen — identical to the
     batch term_freq_of_freq."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        stage_type_counts(batch_df, batch_id, state_dir, text_col, compact_every)
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: stage_type_counts(
+            batch_df, batch_id, state_dir, text_col, compact_every
+        ),
     )
-    q.awaitTermination()
-    return drain_fof_state(spark, state_dir)
+    return drain_fof_state(stream.sparkSession, state_dir)
 
 
 def drain_fof_state(spark, state_dir: str) -> DataFrame:
-    if not path_exists(spark, state_dir):
+    types = summed_state(spark, state_dir, ["source", "h"], ["c"])
+    if types is None:
         return spark.createDataFrame(
             [],
             "source string, n_tokens long, n_types long, f1 long, f2 long, "
             "f3 long, f4 long, f5 long, p_unseen double",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "h", "c")
-        .dropDuplicates(["src_batch", "source", "h"])
-    )
-    types = staged.groupBy("source", "h").agg(F.sum("c").alias("c"))
     return fof_from_types(types)

@@ -22,14 +22,12 @@ bounds the directory count, not the byte size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     index_postings,
     index_stats_from_postings,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def index_stream(
@@ -42,43 +40,21 @@ def index_stream(
     """Drain an availableNow document stream; return the bucket-layout
     stats for the full corpus seen — identical to the batch
     inverted_index_stats."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = index_postings(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "h", "doc_id"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "h", "doc_id"],
+        lambda b: index_postings(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_index_state(spark, state_dir)
+    return drain_index_state(stream.sparkSession, state_dir)
 
 
 def drain_index_state(spark, state_dir: str) -> DataFrame:
     """Key-dedup the staged postings, merge per (h, doc), run the shared
     bucket tail. Empty state → empty result with the batch schema."""
-    if not path_exists(spark, state_dir):
+    post = summed_state(spark, state_dir, ["h", "doc_id"], ["tf"])
+    if post is None:
         return spark.createDataFrame(
             [],
             "bucket long, n_terms long, n_postings long, n_tokens long, "
             "max_posting_len long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "h", "doc_id", "tf")
-        .dropDuplicates(["src_batch", "h", "doc_id"])
-    )
-    post = staged.groupBy("h", "doc_id").agg(F.sum("tf").alias("tf"))
     return index_stats_from_postings(post)

@@ -19,11 +19,9 @@ value domain, never the corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import ks_from_partials, ks_length_partials
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def ks_drift_stream(
@@ -35,40 +33,18 @@ def ks_drift_stream(
 ) -> DataFrame:
     """Drain an availableNow document stream; return the KS drift table
     for the full corpus seen — identical to the batch ks_length_drift."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = ks_length_partials(batch_df, value_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source", "v"],
-            compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "v"],
+        lambda b: ks_length_partials(b, value_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_ks_state(spark, state_dir)
+    return drain_ks_state(stream.sparkSession, state_dir)
 
 
 def drain_ks_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch counts, then the shared grid/max tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["source", "v"], ["c"])
+    if partials is None:
         return spark.createDataFrame(
             [], "source string, n_docs long, ks_permille long, drift_flag boolean"
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "v", "c")
-        .dropDuplicates(["src_batch", "source", "v"])
-    )
-    partials = staged.groupBy("source", "v").agg(F.sum("c").alias("c"))
     return ks_from_partials(partials)

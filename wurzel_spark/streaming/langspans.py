@@ -18,14 +18,12 @@ State size: n_sources · (n_langs + 1) rows per batch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     line_lang_from_partials,
     line_lang_partials,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def line_lang_stream(
@@ -38,48 +36,22 @@ def line_lang_stream(
     """Drain an availableNow document stream; return the per-(source,
     lang) line-share table for the full corpus seen — identical to the
     batch line_lang_spans."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = line_lang_partials(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark,
-            mine,
-            state_dir,
-            batch_id,
-            ["src_batch", "source", "lang"],
-            compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "lang"],
+        lambda b: line_lang_partials(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_line_lang_state(spark, state_dir)
+    return drain_line_lang_state(stream.sparkSession, state_dir)
 
 
 def drain_line_lang_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch partials, then the shared share tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(
+        spark, state_dir, ["source", "lang"], ["n_lines", "n_docs"]
+    )
+    if partials is None:
         return spark.createDataFrame(
             [],
             "source string, lang string, n_lines long, n_docs long, "
             "line_share_permille long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "lang", "n_lines", "n_docs")
-        .dropDuplicates(["src_batch", "source", "lang"])
-    )
-    partials = staged.groupBy("source", "lang").agg(
-        F.sum("n_lines").alias("n_lines"), F.sum("n_docs").alias("n_docs")
-    )
     return line_lang_from_partials(partials)

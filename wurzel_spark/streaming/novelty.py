@@ -28,8 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.dedup import _parallelize, shingle_hashes
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def novelty_stream(
@@ -44,37 +43,20 @@ def novelty_stream(
     """Drain an availableNow document stream; return (doc_id, n_shingles,
     n_novel, novelty) for the full corpus seen — identical to the batch
     ngram_novelty."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        sh = _parallelize(batch_df).select(
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["id", "shingle"],
+        lambda b: _parallelize(b).select(
             F.col(id_col).alias("id"),
             F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle"),
-        )
-        write_batch_state(
-            spark, sh, state_dir, batch_id, ["id", "shingle"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        compact_every,
     )
-    q.awaitTermination()
-    return drain_novelty_state(spark, state_dir, id_col)
+    return drain_novelty_state(stream.sparkSession, state_dir, id_col)
 
 
 def drain_novelty_state(spark, state_dir: str, id_col: str = "doc_id") -> DataFrame:
     """Global novelty over the staged shingle state — the drain half of
     :func:`novelty_stream`, exposed so replay scenarios are testable."""
-    if not path_exists(spark, state_dir):
-        return spark.createDataFrame(
-            [], f"{id_col} long, n_shingles long, n_novel long, novelty double"
-        )
     # Replay-safety at the DRAIN, not just the write: after a fold commits
     # batch N into the folded batch=-(N+1) partition, an at-least-once
     # redelivery (foreachBatch retry before checkpoint commit, or the
@@ -82,13 +64,13 @@ def drain_novelty_state(spark, state_dir: str, id_col: str = "doc_id") -> DataFr
     # copies are then visible to this read, double-counting n_shingles and
     # halving novelty. Rows are deterministic per (id, shingle) key — the
     # per-doc shingle set is array_distinct by construction — so a key-level
-    # dropDuplicates restores exactly-once semantics (same guard as
-    # snapshot_diff_stream's dropDuplicates(['id'])).
-    sh = (
-        spark.read.parquet(state_dir)
-        .select("id", "shingle")
-        .dropDuplicates(["id", "shingle"])
-    )
+    # dedup restores exactly-once semantics (same guard as
+    # snapshot_diff_stream's dedup on id).
+    sh = staged_state(spark, state_dir, ["id", "shingle"], [])
+    if sh is None:
+        return spark.createDataFrame(
+            [], f"{id_col} long, n_shingles long, n_novel long, novelty double"
+        )
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     novel = (
         sh.groupBy("shingle")

@@ -16,11 +16,9 @@ State size: n_flags rows per batch, metadata-sized at any batch size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.queries.relational import ols_from_partials, ols_partials
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 _PARTIAL_COLS = ["n", "sx", "sy", "sxy", "sxx"]
 
@@ -33,43 +31,21 @@ def ols_stream(
 ) -> DataFrame:
     """Drain an availableNow lineitem stream; return the per-flag OLS
     fit for the full stream seen — identical to the batch twin."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = ols_partials(batch_df).withColumn("src_batch", F.lit(batch_id))
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "l_returnflag"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "l_returnflag"],
+        ols_partials, compact_every,
     )
-    q.awaitTermination()
-    return drain_ols_state(spark, state_dir)
+    return drain_ols_state(stream.sparkSession, state_dir)
 
 
 def drain_ols_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch power sums, then the shared fit tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["l_returnflag"], _PARTIAL_COLS)
+    if partials is None:
         return spark.createDataFrame(
             [],
             "l_returnflag string, n_rows long, sum_centiqty long,"
             " sum_cents long, slope_millicents_per_unit long,"
             " intercept_cents long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "l_returnflag", *_PARTIAL_COLS)
-        .dropDuplicates(["src_batch", "l_returnflag"])
-    )
-    partials = staged.groupBy("l_returnflag").agg(
-        *[F.sum(c).cast("decimal(38,0)").alias(c) for c in _PARTIAL_COLS]
-    )
     return ols_from_partials(partials)

@@ -18,11 +18,9 @@ the value domain, never the event corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.queries.events import value_hist, value_percentiles_from_hist
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def value_percentiles_stream(
@@ -34,42 +32,20 @@ def value_percentiles_stream(
     """Drain an availableNow event stream; return the per-type exact
     percentile table for the full stream seen — identical to the batch
     twin."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = value_hist(batch_df).withColumn("src_batch", F.lit(batch_id))
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "event_type", "v_milli"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "event_type", "v_milli"],
+        value_hist, compact_every,
     )
-    q.awaitTermination()
-    return drain_percentile_state(spark, state_dir)
+    return drain_percentile_state(stream.sparkSession, state_dir)
 
 
 def drain_percentile_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch histograms, then the shared rank tail."""
-    if not path_exists(spark, state_dir):
+    hist = summed_state(spark, state_dir, ["event_type", "v_milli"], ["c"])
+    if hist is None:
         return spark.createDataFrame(
             [],
             "event_type string, n_values long, sum_milli long,"
             " p500_milli long, p900_milli long, p990_milli long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "event_type", "v_milli", "c")
-        .dropDuplicates(["src_batch", "event_type", "v_milli"])
-    )
-    hist = staged.groupBy("event_type", "v_milli").agg(
-        F.sum("c").cast("long").alias("c")
-    )
     return value_percentiles_from_hist(hist)

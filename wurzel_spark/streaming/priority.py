@@ -20,15 +20,24 @@ always-current weighted sample of an unbounded ingest stream.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.selection import (
     PRIORITY_K,
+    PRIORITY_STRAT_K,
     priority_from_scores,
     priority_scores,
+    priority_stratified_from_scores,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
+
+
+def _staged_candidates(spark, state_dir: str) -> DataFrame | None:
+    # one dedup on doc_id subsumes the protocol's (src_batch, doc_id)
+    # key-dedup here: a doc's priority row is deterministic, so
+    # duplicates across batches AND replays are identical rows
+    return staged_state(spark, state_dir, ["doc_id"], ["source", "w", "q"])
 
 
 def priority_sample_stream(
@@ -41,50 +50,27 @@ def priority_sample_stream(
 ) -> DataFrame:
     """Drain an availableNow document stream; return the priority sample
     of the full corpus seen — identical to the batch priority_sample."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = (
-            priority_scores(batch_df, weight_col)
-            .orderBy(F.col("q").desc(), "doc_id")
-            .limit(k + 1)
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "doc_id"], compact_every
-        )
-
-    qy = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "doc_id"],
+        lambda b: priority_scores(b, weight_col)
+        .orderBy(F.col("q").desc(), "doc_id")
+        .limit(k + 1),
+        compact_every,
     )
-    qy.awaitTermination()
-    return drain_priority_state(spark, state_dir, k)
+    return drain_priority_state(stream.sparkSession, state_dir, k)
 
 
 def drain_priority_state(spark, state_dir: str, k: int = PRIORITY_K) -> DataFrame:
     """Union the staged candidate sets, then the shared top/τ/HT tail.
     A doc re-delivered in two batches dedups on doc_id (its priority is
     deterministic, so the duplicates are identical rows)."""
-    if not path_exists(spark, state_dir):
+    staged = _staged_candidates(spark, state_dir)
+    if staged is None:
         return spark.createDataFrame(
             [],
             "doc_id long, source string, weight long, priority_q double, "
             "est_weight_q3 double",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("doc_id", "source", "w", "q")
-        # one dedup on doc_id subsumes the protocol's (src_batch, doc_id)
-        # key-dedup here: a doc's priority row is deterministic, so
-        # duplicates across batches AND replays are identical rows
-        .dropDuplicates(["doc_id"])
-    )
     return priority_from_scores(staged, k)
 
 
@@ -103,37 +89,17 @@ def priority_stratified_stream(
     global per-source top-(k+1) is in its own batch's per-source
     top-(k+1) — so state is bounded at (k+1)·n_sources rows per batch,
     and the drain runs the SAME per-group top/τ/HT tail."""
-    from pyspark.sql import Window as W
-
-    from wurzel_spark.operators.selection import PRIORITY_STRAT_K
-
     kk = PRIORITY_STRAT_K if k is None else k
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        wg = W.partitionBy(group_col).orderBy(F.col("q").desc(), "doc_id")
-        mine = (
-            priority_scores(batch_df, weight_col)
-            .withColumn("rn", F.row_number().over(wg))
-            .filter(F.col("rn") <= kk + 1)
-            .drop("rn")
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "doc_id"], compact_every
-        )
-
-    qy = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    wg = W.partitionBy(group_col).orderBy(F.col("q").desc(), "doc_id")
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "doc_id"],
+        lambda b: priority_scores(b, weight_col)
+        .withColumn("rn", F.row_number().over(wg))
+        .filter(F.col("rn") <= kk + 1)
+        .drop("rn"),
+        compact_every,
     )
-    qy.awaitTermination()
-    return drain_priority_stratified_state(spark, state_dir, kk, group_col)
+    return drain_priority_stratified_state(stream.sparkSession, state_dir, kk, group_col)
 
 
 def drain_priority_stratified_state(
@@ -142,21 +108,12 @@ def drain_priority_stratified_state(
     """Union staged per-group candidates, dedup on doc_id (priorities are
     deterministic, so cross-batch duplicates are identical rows), then
     the shared per-group tail."""
-    from wurzel_spark.operators.selection import (
-        PRIORITY_STRAT_K,
-        priority_stratified_from_scores,
-    )
-
     kk = PRIORITY_STRAT_K if k is None else k
-    if not path_exists(spark, state_dir):
+    staged = _staged_candidates(spark, state_dir)
+    if staged is None:
         return spark.createDataFrame(
             [],
             "source string, doc_id long, weight long, priority_q double, "
             "est_weight_q3 double",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("doc_id", "source", "w", "q")
-        .dropDuplicates(["doc_id"])
-    )
     return priority_stratified_from_scores(staged, kk, group_col)

@@ -19,14 +19,12 @@ large the batches are.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     quality_score_buckets,
     sweep_from_buckets,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def quality_sweep_stream(
@@ -39,45 +37,23 @@ def quality_sweep_stream(
     """Drain an availableNow document stream; return the quality yield
     curve for the full corpus seen — identical to the batch
     quality_threshold_sweep."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = quality_score_buckets(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "source", "b"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "b"],
+        lambda b: quality_score_buckets(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_quality_sweep_state(spark, state_dir)
+    return drain_quality_sweep_state(stream.sparkSession, state_dir)
 
 
 def drain_quality_sweep_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch partials, then the shared sweep tail.
     Empty state → empty result with the batch schema."""
-    if not path_exists(spark, state_dir):
+    buckets = summed_state(
+        spark, state_dir, ["source", "b"], ["n_docs", "n_tokens"]
+    )
+    if buckets is None:
         return spark.createDataFrame(
             [],
             "source string, threshold long, n_docs_kept long, "
             "n_tokens_kept long, doc_frac double, token_frac double",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "b", "n_docs", "n_tokens")
-        .dropDuplicates(["src_batch", "source", "b"])
-    )
-    buckets = staged.groupBy("source", "b").agg(
-        F.sum("n_docs").alias("n_docs"), F.sum("n_tokens").alias("n_tokens")
-    )
     return sweep_from_buckets(buckets)

@@ -21,15 +21,13 @@ bottom-k of a union of bottom-k sets is the global bottom-k).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.sketches import (
     SAMPLE_QUANTILE_K,
     bottomk_sample,
     sample_quantile_estimates,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def sample_quantile_stream(
@@ -45,33 +43,22 @@ def sample_quantile_stream(
     """Drain an availableNow document stream; return (group, p1000,
     sample_k, est) — bit-equal to the batch estimator over the union of
     all admitted batches."""
-    spark = stream.sparkSession
 
     def _fold(union: DataFrame) -> DataFrame:
         return bottomk_sample(
             union.dropDuplicates([group_col, id_col]), k, group_col, id_col
         )
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = bottomk_sample(batch_df, k, group_col, id_col).select(
+    fold_stream(
+        stream, state_dir, checkpoint_dir, [group_col, id_col],
+        lambda b: bottomk_sample(b, k, group_col, id_col).select(
             group_col, id_col, val_col
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, [group_col, id_col],
-            compact_every, fold=_fold,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        compact_every, fold=_fold,
     )
-    q.awaitTermination()
-    return drain_quantile_state(spark, state_dir, k, group_col, val_col, id_col)
+    return drain_quantile_state(
+        stream.sparkSession, state_dir, k, group_col, val_col, id_col
+    )
 
 
 def drain_quantile_state(
@@ -84,15 +71,11 @@ def drain_quantile_state(
 ) -> DataFrame:
     """Estimates from the staged union (re-running bottom-k absorbs any
     crash-window duplicates). Empty state → empty result, batch schema."""
-    if not path_exists(spark, state_dir):
+    staged = staged_state(spark, state_dir, [group_col, id_col], [val_col])
+    if staged is None:
         return spark.createDataFrame(
             [], f"{group_col} string, p1000 long, sample_k long, est long"
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select(group_col, id_col, val_col)
-        .dropDuplicates([group_col, id_col])
-    )
     samp = bottomk_sample(staged, k, group_col, id_col)
     return sample_quantile_estimates(
         samp, k, group_col, val_col, id_col

@@ -17,14 +17,12 @@ State size: n_sources rows per batch, metadata-sized at any batch size.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     readability_from_partials,
     readability_partials,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 _PARTIAL_COLS = [
     "n_docs",
@@ -47,43 +45,20 @@ def readability_stream(
     """Drain an availableNow document stream; return the per-source
     readability table for the full corpus seen — identical to the batch
     readability_stats."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = readability_partials(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source"],
+        lambda b: readability_partials(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_readability_state(spark, state_dir)
+    return drain_readability_state(stream.sparkSession, state_dir)
 
 
 def drain_readability_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch partials, then the shared cast tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["source"], _PARTIAL_COLS)
+    if partials is None:
         return spark.createDataFrame(
             [],
             "source string, n_docs long, n_unscored long, sum_flesch_milli long,"
             " sum_grade_milli long, n_easy long, n_standard long, n_hard long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", *_PARTIAL_COLS)
-        .dropDuplicates(["src_batch", "source"])
-    )
-    partials = staged.groupBy("source").agg(
-        *[F.sum(c).alias(c) for c in _PARTIAL_COLS]
-    )
     return readability_from_partials(partials)

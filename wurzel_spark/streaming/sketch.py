@@ -26,14 +26,15 @@ adds the O(compact_every) directory bound.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.sketches import (
     hll_estimate_from_registers,
     hll_registers,
 )
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._fs import path_exists
+from wurzel_spark.streaming._state import fold_stream
 
 
 def _max_merge(df: DataFrame) -> DataFrame:
@@ -51,33 +52,12 @@ def hll_stream_distinct(
     """Drain an availableNow stream, staging per-batch HLL registers;
     return per-source (n_buckets_hit, hll_sum_scaled, hll_estimate) from
     the merged registers."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        recover_fold(spark, staging_dir, batch_id)
-        regs = hll_registers(batch_df, source_col, text_col)
-        write_batch_state(
-            spark,
-            regs,
-            staging_dir,
-            batch_id,
-            ["source", "bucket"],
-            compact_every,
-            fold=_max_merge,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, staging_dir, checkpoint_dir, ["source", "bucket"],
+        lambda b: hll_registers(b, source_col, text_col), compact_every,
+        fold=_max_merge,
     )
-    q.awaitTermination()
     spark = stream.sparkSession
-    from wurzel_spark.streaming._fs import path_exists
-
     if not path_exists(spark, staging_dir):  # every batch empty: nothing staged
         return spark.createDataFrame(
             [],

@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def snapshot_diff_stream(
@@ -38,37 +37,22 @@ def snapshot_diff_stream(
 ) -> DataFrame:
     """Drain an availableNow stream of the NEW snapshot; return the
     (id, status ∈ {added, removed, changed}) diff against ``old``."""
-    spark = new_stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, staging_dir, batch_id)
-        hashes = batch_df.select(
+    fold_stream(
+        new_stream, staging_dir, checkpoint_dir, ["id"],
+        lambda b: b.select(
             F.col(id_col).alias("id"), F.sha2(F.col(text_col), 256).alias("new_hash")
-        )
-        write_batch_state(spark, hashes, staging_dir, batch_id, "id", compact_every)
-
-    q = (
-        new_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        compact_every,
     )
-    q.awaitTermination()
-
     oh = old.select(
         F.col(id_col).alias("id"), F.sha2(F.col(text_col), 256).alias("old_hash")
     )
-    if not path_exists(spark, staging_dir):  # empty new snapshot: all removed
+    # replay-safe: redelivered batches collapse on the id dedup
+    nh = staged_state(new_stream.sparkSession, staging_dir, ["id"], ["new_hash"])
+    if nh is None:  # empty new snapshot: all removed
         return oh.select(
             F.col("id").alias(id_col), F.lit("removed").alias("status")
         ).orderBy(id_col)
-    nh = (
-        spark.read.parquet(staging_dir)
-        .select("id", "new_hash")
-        .dropDuplicates(["id"])  # replay-safe: redelivered batches collapse
-    )
     joined = oh.join(nh, "id", "full_outer")
     status = (
         F.when(F.col("old_hash").isNull(), F.lit("added"))

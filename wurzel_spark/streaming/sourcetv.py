@@ -23,8 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import source_tv_from_counts
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def _term_counts(batch_df: DataFrame, text_col: str) -> DataFrame:
@@ -48,44 +47,20 @@ def source_tv_stream(
 ) -> DataFrame:
     """Drain an availableNow document stream; return the pairwise TV
     drift matrix for the full corpus seen — identical to the batch twin."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = _term_counts(batch_df, text_col).withColumn(
-            "src_batch", F.lit(batch_id)
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "source", "w"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "w"],
+        lambda b: _term_counts(b, text_col), compact_every,
     )
-    q.awaitTermination()
-    return drain_source_tv_state(spark, state_dir)
+    return drain_source_tv_state(stream.sparkSession, state_dir)
 
 
 def drain_source_tv_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch term counts, then the shared TV tail."""
-    if not path_exists(spark, state_dir):
+    per_sw = summed_state(spark, state_dir, ["source", "w"], ["c"])
+    if per_sw is None:
         return spark.createDataFrame(
             [],
             "src_a string, src_b string, head_tv_permille long,"
             " head_share_a long, head_share_b long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "w", "c")
-        .dropDuplicates(["src_batch", "source", "w"])
-    )
-    per_sw = staged.groupBy("source", "w").agg(
-        F.sum("c").cast("decimal(38,0)").alias("c")
-    )
     return source_tv_from_counts(per_sw)

@@ -33,8 +33,7 @@ from wurzel_spark.operators.substrings import (
     removal_stats_from_starts,
     window_hashes,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
 def exact_substring_stream(
@@ -49,32 +48,21 @@ def exact_substring_stream(
     """Drain an availableNow document stream; return (doc_id, n_tokens,
     n_dup_windows, n_runs, n_removed_tokens, removed_frac) for the full
     corpus seen — identical to the batch exact_substring_removal."""
-    spark = stream.sparkSession
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
+    def _stage(batch_df: DataFrame) -> DataFrame:
         wins, toks = window_hashes(batch_df, length, id_col, text_col)
-        staged = wins.unionByName(
+        return wins.unionByName(
             toks.select(
                 "doc_id",
                 F.lit(0).cast("int").alias("s"),
                 F.col("n_tokens").cast("long").alias("h"),
             )
         )
-        write_batch_state(
-            spark, staged, state_dir, batch_id, ["doc_id", "s"], compact_every
-        )
 
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["doc_id", "s"], _stage, compact_every
     )
-    q.awaitTermination()
-    return drain_substring_state(spark, state_dir, length)
+    return drain_substring_state(stream.sparkSession, state_dir, length)
 
 
 def drain_substring_state(
@@ -82,12 +70,6 @@ def drain_substring_state(
 ) -> DataFrame:
     """Run the batch stats tail over the staged state. Empty state →
     empty result with the batch schema."""
-    if not path_exists(spark, state_dir):
-        return spark.createDataFrame(
-            [],
-            "doc_id long, n_tokens int, n_dup_windows long, n_runs long, "
-            "n_removed_tokens long, removed_frac double",
-        )
     # Replay guard (ADVICE r7): a batch replayed after a completed fold
     # (crash between fold rename and checkpoint commit) exists BOTH in the
     # folded partition and in its rewritten batch=N partition. Rows are
@@ -96,11 +78,13 @@ def drain_substring_state(
     # times and falsely flags ALL of them, and duplicated s=0 sentinels
     # emit duplicate per-doc output rows. Matches the other drains
     # (chunks.py, fof.py, quality.py, quantiles.py).
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("doc_id", "s", "h")
-        .dropDuplicates(["doc_id", "s"])
-    )
+    staged = staged_state(spark, state_dir, ["doc_id", "s"], ["h"])
+    if staged is None:
+        return spark.createDataFrame(
+            [],
+            "doc_id long, n_tokens int, n_dup_windows long, n_runs long, "
+            "n_removed_tokens long, removed_frac double",
+        )
     totals = staged.filter(F.col("s") == 0).select(
         "doc_id", F.col("h").cast("int").alias("n_tokens")
     )

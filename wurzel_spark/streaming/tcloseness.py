@@ -20,14 +20,12 @@ State size: |sources × langs| rows per batch, metadata-sized.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.operators.textstats import (
     tcloseness_from_partials,
     tcloseness_partials,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def tcloseness_stream(
@@ -39,40 +37,20 @@ def tcloseness_stream(
     """Drain an availableNow document stream; return the t-closeness
     release table for the full corpus seen — identical to the batch
     tcloseness_release."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = tcloseness_partials(batch_df).withColumn("src_batch", F.lit(batch_id))
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source", "lang"],
-            compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source", "lang"],
+        tcloseness_partials, compact_every,
     )
-    q.awaitTermination()
-    return drain_tcloseness_state(spark, state_dir)
+    return drain_tcloseness_state(stream.sparkSession, state_dir)
 
 
 def drain_tcloseness_state(spark, state_dir: str) -> DataFrame:
     """Sum the staged per-batch counts, then the shared window/gate tail."""
-    if not path_exists(spark, state_dir):
+    partials = summed_state(spark, state_dir, ["source", "lang"], ["c"])
+    if partials is None:
         return spark.createDataFrame(
             [],
             "source string, n_docs long, max_tvd_permille long,"
             " n_merged_groups long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "lang", "c")
-        .dropDuplicates(["src_batch", "source", "lang"])
-    )
-    partials = staged.groupBy("source", "lang").agg(F.sum("c").alias("c"))
     return tcloseness_from_partials(partials)

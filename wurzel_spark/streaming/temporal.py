@@ -24,7 +24,6 @@ never the event corpus.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from wurzel_spark.queries.events import (
     acf_from_rollup,
@@ -34,8 +33,7 @@ from wurzel_spark.queries.events import (
     mannkendall_from_rollup,
     slo_burn_from_rollup,
 )
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def temporal_battery_stream(
@@ -46,42 +44,16 @@ def temporal_battery_stream(
 ) -> dict[str, DataFrame]:
     """Drain an availableNow event stream; return all five monitor
     tables for the full stream seen — identical to their batch twins."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = hourly_rollup(batch_df).withColumn("src_batch", F.lit(batch_id))
-        write_batch_state(
-            spark, mine, state_dir, batch_id,
-            ["src_batch", "event_type", "hour"], compact_every,
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "event_type", "hour"],
+        hourly_rollup, compact_every,
     )
-    q.awaitTermination()
-    return drain_temporal_state(spark, state_dir)
-
-
-def _summed_rollup(spark, state_dir: str) -> DataFrame | None:
-    if not path_exists(spark, state_dir):
-        return None
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "event_type", "hour", "c")
-        .dropDuplicates(["src_batch", "event_type", "hour"])
-    )
-    return staged.groupBy("event_type", "hour").agg(F.sum("c").alias("c"))
+    return drain_temporal_state(stream.sparkSession, state_dir)
 
 
 def drain_temporal_state(spark, state_dir: str) -> dict[str, DataFrame]:
     """Sum the staged rollup once, then run all five shared tails."""
-    rollup = _summed_rollup(spark, state_dir)
+    rollup = summed_state(spark, state_dir, ["event_type", "hour"], ["c"])
     if rollup is None:
         empty_cusum = spark.createDataFrame(
             [],

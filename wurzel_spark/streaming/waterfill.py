@@ -24,8 +24,7 @@ from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
 from wurzel_spark.operators.textstats import waterfill_from_avail
-from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import recover_fold, write_batch_state
+from wurzel_spark.streaming._state import fold_stream, summed_state
 
 
 def waterfill_stream(
@@ -39,32 +38,14 @@ def waterfill_stream(
     """Drain an availableNow document stream; return the water-filling
     allocation for the full corpus seen — identical to the batch
     token_budget_waterfill."""
-    spark = stream.sparkSession
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        recover_fold(spark, state_dir, batch_id)
-        mine = (
-            batch_df.select(
-                "source", TXT.word_count(F.col(text_col)).alias("n_toks")
-            )
-            .groupBy("source")
-            .agg(F.sum("n_toks").alias("avail"))
-            .withColumn("src_batch", F.lit(batch_id))
-        )
-        write_batch_state(
-            spark, mine, state_dir, batch_id, ["src_batch", "source"], compact_every
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    fold_stream(
+        stream, state_dir, checkpoint_dir, ["src_batch", "source"],
+        lambda b: b.select("source", TXT.word_count(F.col(text_col)).alias("n_toks"))
+        .groupBy("source")
+        .agg(F.sum("n_toks").alias("avail")),
+        compact_every,
     )
-    q.awaitTermination()
-    return drain_waterfill_state(spark, state_dir, rates_permille)
+    return drain_waterfill_state(stream.sparkSession, state_dir, rates_permille)
 
 
 def drain_waterfill_state(
@@ -72,17 +53,12 @@ def drain_waterfill_state(
 ) -> DataFrame:
     """Sum the staged per-batch availability partials, then the shared
     metadata-sized water-filling solver."""
-    if not path_exists(spark, state_dir):
+    per = summed_state(spark, state_dir, ["source"], ["avail"])
+    if per is None:
         return spark.createDataFrame(
             [],
             "source string, weight_permille long, avail_tokens long, "
             "alloc_tokens long, saturated boolean, fill_permille long, "
             "budget_tokens long",
         )
-    staged = (
-        spark.read.parquet(state_dir)
-        .select("src_batch", "source", "avail")
-        .dropDuplicates(["src_batch", "source"])
-    )
-    per = staged.groupBy("source").agg(F.sum("avail").alias("avail"))
     return waterfill_from_avail(per, rates_permille)
