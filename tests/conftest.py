@@ -1,8 +1,10 @@
+import contextlib
 import os
 
 import pytest
 
 from wurzel_spark import get_spark
+from wurzel_spark.operators import common
 
 # get_spark's default driver heap (48g) is sized for large local benches.
 # Over the whole suite the JVM grows toward it, past the RAM of a 16-GB
@@ -22,6 +24,7 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 # tier is collection order (stable sort). No test is skipped or deleted.
 _TIER_FIRST = (
     "test_contract_consistency.py",
+    "test_gate_sweep.py",
     "test_plans.py",
     "test_plans_round4.py",
     "test_plans_round6.py",
@@ -87,23 +90,61 @@ def sf_dir():
 
 
 @pytest.fixture(scope="session")
-def registered_dfs(spark, sf_dir):
+def _registered_build(spark, sf_dir):
     """Every registered query's DataFrame, built ONCE at sf0.001 and
     shared by the repo-wide plan sweeps (checkpoint-payload guard,
     global-window bound guard, whitelist discovery). Before r13 each
     sweep rebuilt all 286 plans itself — two of the three builds were
     pure duplication, ~4 min of the driver's pytest budget. A query
     whose plan CONSTRUCTION raises maps to the Exception instead, so
-    the bounds sweep can report it."""
+    the bounds sweep can report it.
+
+    The build also records which queries asked a size gate
+    (``operators.common.fits``) while building, for the gates-off sweep."""
     import __spark_entry__ as entry
 
-    out = {}
-    for name, fn in entry.queries().items():
-        try:
-            out[name] = fn(spark, sf_dir)
-        except Exception as ex:  # noqa: BLE001 — reported by the sweep
-            out[name] = ex
-    return out
+    real_fits = common.fits
+    dfs, gated, building = {}, set(), [None]
+
+    def spy(size, limit):
+        gated.add(building[0])
+        return real_fits(size, limit)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(common, "fits", spy)
+        for name, fn in entry.queries().items():
+            building[0] = name
+            try:
+                dfs[name] = fn(spark, sf_dir)
+            except Exception as ex:  # noqa: BLE001 — reported by the sweep
+                dfs[name] = ex
+    return dfs, frozenset(gated)
+
+
+@pytest.fixture(scope="session")
+def registered_dfs(_registered_build):
+    return _registered_build[0]
+
+
+@pytest.fixture(scope="session")
+def gated_queries(_registered_build):
+    """Names of the registered queries whose build reached a size gate."""
+    return _registered_build[1]
+
+
+@contextlib.contextmanager
+def _all_gates_off():
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(common, "fits", lambda size, limit: False)
+        yield
+
+
+@pytest.fixture()
+def gates_off():
+    """``with gates_off(): ...`` forces every size gate in the package
+    (``operators.common.fits``) to its fall-through: the distributed,
+    unpinned or plain-window twin of each gated shortcut runs instead."""
+    return _all_gates_off
 
 
 @pytest.fixture()

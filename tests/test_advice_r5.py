@@ -58,7 +58,7 @@ def test_novelty_drain_dedups_redelivered_batch(spark, tmp_path):
     assert got == exp  # doc 3 in particular: not double-counted
 
 
-def test_percentile_gate_null_source_same_output_both_plans(spark):
+def test_percentile_gate_null_source_same_output_both_plans(spark, gates_off):
     """ADVICE r5 #2: NULL source rows must survive the two-phase bucketed
     plan exactly as the plain per-source window treats them (their own
     partition), not be dropped by null join keys."""
@@ -74,15 +74,11 @@ def test_percentile_gate_null_source_same_output_both_plans(spark):
         (r["doc_id"], r["source"], r["src_pctile"])
         for r in S.quality_percentile_gate(docs, keep_frac=0.6).collect()
     }
-    old = S._GATE_TWO_PHASE_MAX_SOURCES
-    try:
-        S._GATE_TWO_PHASE_MAX_SOURCES = 0
+    with gates_off():
         plain = {
             (r["doc_id"], r["source"], r["src_pctile"])
             for r in S.quality_percentile_gate(docs, keep_frac=0.6).collect()
         }
-    finally:
-        S._GATE_TWO_PHASE_MAX_SOURCES = old
     assert two == plain
     assert any(src is None for _, src, _ in two)  # null partition kept
 
@@ -136,7 +132,7 @@ def test_real_decode_decimates_to_max_pixels():
     assert full.shape == (64, 64, 3) and (full == px).all()
 
 
-def test_convergence_detected_exactly_at_round_budget(spark):
+def test_convergence_detected_exactly_at_round_budget(spark, gates_off):
     """ADVICE r5 #4: a graph whose labels reach the fixed point exactly on
     round max_iters must be reported CONVERGED (equality is only
     observable one round later) — strict mode must not raise on a
@@ -145,13 +141,9 @@ def test_convergence_detected_exactly_at_round_budget(spark):
     from wurzel_spark.operators import dedup as D
 
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
-    old = D._DRIVER_UNION_FIND_MAX_EDGES
-    try:
-        D._DRIVER_UNION_FIND_MAX_EDGES = 0  # force the distributed path
+    with gates_off():  # force the distributed path
         out = {
             (r["doc_id"], r["cluster_id"])
             for r in D.near_dup_cluster_members(pairs, max_iters=1).collect()
         }
-    finally:
-        D._DRIVER_UNION_FIND_MAX_EDGES = old
     assert out == {(1, 1), (2, 1)}

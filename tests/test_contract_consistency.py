@@ -198,3 +198,52 @@ def test_streaming_skeleton_lives_only_in_the_fold_runner():
     assert [fn for f, fn in trigger if f == "events.py"] == ["run_available_now"]
     recover = {f for f, _ in _streaming_sites("recover_fold(")}
     assert recover == {"_state.py", "clusters.py"}
+    # the row-local output twins land batch=N through write_batch_output
+    assert {f for f, _ in _streaming_sites("batch={")} == {"_state.py"}
+
+
+_RETIRED_GATE_NAMES = (
+    "_DRIVER_UNION_FIND_MAX_EDGES",
+    "PAGERANK_DRIVER_EDGE_GATE",
+    "KCORE_DRIVER_EDGE_GATE",
+    "_DSIR_CHECKPOINT_MAX_INPUT_BYTES",
+    "_plan_size_bytes",
+    "max_driver_elems",
+)
+
+
+def _py_files(*dirs):
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    return [p for d in dirs for p in sorted((root / d).rglob("*.py"))]
+
+
+def test_size_gates_decide_only_through_common_fits():
+    """Every size gate decides through operators.common.fits, called via
+    the module so the test suite's gates_off fixture reaches it: no
+    per-module gate limits or aliases survive, only common.py reads the
+    plan-size estimate, and no module from-imports ``fits`` (a bound
+    name would keep the real function under the monkeypatch)."""
+    import ast
+    import pathlib
+
+    this = pathlib.Path(__file__).resolve()
+    files = [p for p in _py_files("wurzel_spark", "tests") if p != this]
+    retired = sorted(
+        (p.name, n) for p in files for n in _RETIRED_GATE_NAMES if n in p.read_text()
+    )
+    assert not retired, retired
+    estimators = {
+        p.name for p in _py_files("wurzel_spark") if "plan_size_bytes(" in p.read_text()
+    }
+    assert estimators == {"common.py"}
+    bound = sorted(
+        p.name
+        for p in files
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.ImportFrom)
+        and (node.module or "").endswith("common")
+        and any(a.name in ("fits", "*") for a in node.names)
+    )
+    assert not bound, bound

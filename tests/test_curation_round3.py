@@ -234,7 +234,7 @@ def test_gopher_flags_on_crafted_docs(spark):
     assert out[4]["ok_bullet_lines"] is False
 
 
-def test_cluster_paths_agree(spark):
+def test_cluster_paths_agree(spark, gates_off):
     """Driver union-find and distributed min-label propagation must produce
     identical components."""
     from wurzel_spark.operators import dedup as D
@@ -246,12 +246,8 @@ def test_cluster_paths_agree(spark):
     ]
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
     a = {(r["cluster_id"], r["size"]) for r in D.near_dup_clusters(pairs).collect()}
-    old = D._DRIVER_UNION_FIND_MAX_EDGES
-    try:
-        D._DRIVER_UNION_FIND_MAX_EDGES = 0
+    with gates_off():
         b = {(r["cluster_id"], r["size"]) for r in D.near_dup_clusters(pairs).collect()}
-    finally:
-        D._DRIVER_UNION_FIND_MAX_EDGES = old
     assert a == b == {(1, 3), (10, 2), (20, 3)}
 
 
@@ -399,7 +395,7 @@ def test_repetition_stats_degenerate_docs_match_oracle(spark):
         assert (pd.isna(a) and pd.isna(b)) or a == b
 
 
-def test_label_propagation_strict_raises_on_nonconvergence(spark):
+def test_label_propagation_strict_raises_on_nonconvergence(spark, gates_off):
     """A labeling that splits components across labels must never escape
     as ground truth (it would be persisted as streaming cluster state):
     strict mode raises; strict=False keeps the warn-and-return behavior."""
@@ -409,16 +405,12 @@ def test_label_propagation_strict_raises_on_nonconvergence(spark):
 
     rows = [(i, i + 1) for i in range(1, 8)]  # 8-node chain, diameter 7
     pairs = spark.createDataFrame(rows, "id_a long, id_b long")
-    old = D._DRIVER_UNION_FIND_MAX_EDGES
-    try:
-        D._DRIVER_UNION_FIND_MAX_EDGES = 0  # force the distributed path
+    with gates_off():  # force the distributed path
         with _pytest.raises(RuntimeError, match="did not converge"):
             D.near_dup_cluster_members(pairs, max_iters=1)
         with _pytest.warns(RuntimeWarning, match="did not converge"):
             out = D.near_dup_cluster_members(pairs, max_iters=1, strict=False)
         assert out.count() == 8  # all nodes labeled, labels possibly partial
-    finally:
-        D._DRIVER_UNION_FIND_MAX_EDGES = old
 
 
 def test_snapshot_diff_statuses(spark):
@@ -490,7 +482,7 @@ def test_length_bucket_batches_waste_accounting(spark):
     assert out[(2, 0)]["n_docs"] == 1
 
 
-def test_percentile_gate_two_phase_equals_plain_window(spark, sf_dir):
+def test_percentile_gate_two_phase_equals_plain_window(spark, sf_dir, gates_off):
     """The skew-safe bucketed rank and the plain per-source window must
     produce identical percentiles (same total order, same formula)."""
     from wurzel_spark.operators import selection as S
@@ -499,17 +491,13 @@ def test_percentile_gate_two_phase_equals_plain_window(spark, sf_dir):
     docs = _table(spark, sf_dir, "documents")
     two = {(r["doc_id"], r["src_pctile"]) for r in
            S.quality_percentile_gate(docs).collect()}
-    old = S._GATE_TWO_PHASE_MAX_SOURCES
-    try:
-        S._GATE_TWO_PHASE_MAX_SOURCES = 0  # force the plain-window path
+    with gates_off():  # force the plain-window path
         plain = {(r["doc_id"], r["src_pctile"]) for r in
                  S.quality_percentile_gate(docs).collect()}
-    finally:
-        S._GATE_TWO_PHASE_MAX_SOURCES = old
     assert two == plain and len(two) > 0
 
 
-def test_long_chain_converges_within_log_rounds(spark):
+def test_long_chain_converges_within_log_rounds(spark, gates_off):
     """Round 5: pointer-doubling shortcuts make a 120-node chain (diameter
     119) converge well inside 20 rounds on the DISTRIBUTED path — plain
     min-propagation would need 119 rounds and strict mode would raise."""
@@ -518,13 +506,9 @@ def test_long_chain_converges_within_log_rounds(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 120)], "id_a long, id_b long"
     )
-    old = D._DRIVER_UNION_FIND_MAX_EDGES
-    try:
-        D._DRIVER_UNION_FIND_MAX_EDGES = 0  # force the distributed path
+    with gates_off():  # force the distributed path
         out = {r["doc_id"]: r["cluster_id"]
                for r in D.near_dup_cluster_members(pairs, max_iters=20).collect()}
-    finally:
-        D._DRIVER_UNION_FIND_MAX_EDGES = old
     assert len(out) == 120
     assert set(out.values()) == {1}  # one component, labeled by its minimum
 

@@ -122,8 +122,8 @@ def test_kcore_converges_before_round_cap(spark):
     assert a == b == []  # a pure chain has no 2-core
 
 
-def test_kcore_driver_and_distributed_paths_bit_equal(spark):
-    """Round-10 size gate: below KCORE_DRIVER_EDGE_GATE the peel runs
+def test_kcore_driver_and_distributed_paths_bit_equal(spark, gates_off):
+    """Round-10 size gate: below common.DRIVER_MAX_EDGES the peel runs
     driver-side (the union-find precedent). Both paths must be
     bit-equal on adversarial shapes — including an onion DEEPER than
     the round cap, where the capped (non-converged) state is the
@@ -159,16 +159,12 @@ def test_kcore_driver_and_distributed_paths_bit_equal(spark):
                 d.localCheckpoint(), G.KCORE_K, G.KCORE_ROUNDS
             ).collect()
         ]
-        gate = G.KCORE_DRIVER_EDGE_GATE
-        try:
-            G.KCORE_DRIVER_EDGE_GATE = -1  # force the distributed loop
+        with gates_off():  # force the distributed loop
             dist = [tuple(r) for r in G.graph_kcore(d).collect()]
-        finally:
-            G.KCORE_DRIVER_EDGE_GATE = gate
         assert drv == dist, (sorted(edges)[:5], drv, dist)
 
 
-def test_pagerank_driver_and_distributed_paths_bit_equal(spark):
+def test_pagerank_driver_and_distributed_paths_bit_equal(spark, gates_off):
     """Round-10 size gate for quantized PageRank: driver and distributed
     paths must be BIT-equal (the whole point of integer quantization) on
     directed, bipartite-undirected, sink-heavy and random shapes."""
@@ -191,12 +187,8 @@ def test_pagerank_driver_and_distributed_paths_bit_equal(spark):
         edges = {(a, b) for a, b in edges if a != b} or {(0, 1)}
         d = edges_df(edges)
         drv = [tuple(r) for r in G.quantized_pagerank(d).collect()]
-        gate = G.PAGERANK_DRIVER_EDGE_GATE
-        try:
-            G.PAGERANK_DRIVER_EDGE_GATE = -1  # force the distributed loop
+        with gates_off():  # force the distributed loop
             dist = sorted(tuple(r) for r in G.quantized_pagerank(d).collect())
-        finally:
-            G.PAGERANK_DRIVER_EDGE_GATE = gate
         assert sorted(drv) == dist, (sorted(edges)[:5], drv[:5], dist[:5])
         # rank mass ≈ SCALE (floor drain only)
         total = sum(r for _, r in drv)

@@ -13,7 +13,7 @@ from wurzel_spark.tables import table
 
 def _no_text_in_exchanges(t, col="text"):
     """No HASH exchange may carry the raw column — a RoundRobin exchange
-    is the deliberate `_parallelize` small-input spread (a no-op at
+    is the deliberate `common.parallelize` small-input spread (a no-op at
     scale: big inputs arrive already multi-split) and is exempt."""
     for block in re.findall(r"\(\d+\) Exchange\n(.*?)(?:\n\n|\Z)", t, re.S):
         if "RoundRobinPartitioning" in block:
@@ -55,7 +55,7 @@ def test_gram_matrix_shuffle_is_dimension_bounded(spark, sf_dir):
 
     t = plan_text(embedding_gram_matrix(table(spark, sf_dir, "embeddings")))
     # hash/range exchanges (the (i,j) combine + final order) must not
-    # carry the embedding column — only the `_parallelize` round-robin
+    # carry the embedding column — only the `common.parallelize` round-robin
     # spread may (no-op at scale)
     _no_text_in_exchanges(t, col="embedding")
     assert "ArrowEvalPython" not in t, t  # mapInPandas, not a scalar UDF

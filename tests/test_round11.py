@@ -12,13 +12,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from wurzel_spark.operators import textstats
+from wurzel_spark.operators import common
 from wurzel_spark.operators.selection import curation_funnel_v2
-from wurzel_spark.operators.textstats import (
-    _DSIR_CHECKPOINT_MAX_INPUT_BYTES,
-    _plan_size_bytes,
-    dsir_importance_scores,
-)
+from wurzel_spark.operators.textstats import dsir_importance_scores
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -127,47 +123,43 @@ def test_no_registered_query_checkpoints_document_text(spark, registered_dfs):
 
 
 def test_dsir_plan_size_estimate_is_metadata_only(spark):
-    est = _plan_size_bytes(_docs(spark))
+    est = common.plan_size_bytes(_docs(spark))
     assert est is not None and est > 0
 
 
 def test_dsir_gate_small_input_checkpoints(spark):
     docs = _docs(spark)
-    assert _plan_size_bytes(docs) <= _DSIR_CHECKPOINT_MAX_INPUT_BYTES
+    assert common.plan_size_bytes(docs) <= common.CHECKPOINT_MAX_INPUT_BYTES
     scans = _rdd_scan_schemas(dsir_importance_scores(docs))
     assert scans, "small input should take the checkpointed plan"
 
 
-def test_rfm_customer_pin_gated_and_bit_equal(spark, monkeypatch):
+def test_rfm_customer_pin_gated_and_bit_equal(spark, gates_off):
     """rfm_segments' customer-grain pin (4 longs/row but a grain that
     scales with the data) rides the same size gate as DSIR: forcing the
     gate shut must drop the checkpoint and leave the result identical."""
     from wurzel_spark.queries.relational import rfm_segments
 
-    from wurzel_spark.operators import common
-
     pinned_df = rfm_segments(spark, SF_DIR)
     assert _rdd_scan_cols(pinned_df), "small input should pin the customer frame"
     pinned = pinned_df.collect()
-    monkeypatch.setattr(common, "CHECKPOINT_MAX_INPUT_BYTES", 0)
-    unpinned_df = rfm_segments(spark, SF_DIR)
-    assert not _rdd_scan_cols(unpinned_df)
-    assert pinned == unpinned_df.collect()
+    with gates_off():
+        unpinned_df = rfm_segments(spark, SF_DIR)
+        assert not _rdd_scan_cols(unpinned_df)
+        assert pinned == unpinned_df.collect()
 
 
-def test_dsir_gate_large_input_two_scan_and_bit_equal(spark, monkeypatch):
+def test_dsir_gate_large_input_two_scan_and_bit_equal(spark, gates_off):
     """Forcing the gate shut (as a 100 TB input would) must remove the
     token-grain checkpoint AND leave the result bit-identical."""
     docs = _docs(spark)
     pinned = dsir_importance_scores(docs).orderBy("doc_id").collect()
-    monkeypatch.setattr(
-        textstats, "_DSIR_CHECKPOINT_MAX_INPUT_BYTES", 0
-    )
-    unpinned_df = dsir_importance_scores(docs)
-    assert not _rdd_scan_schemas(unpinned_df), (
-        "gate shut ⇒ no localCheckpoint (no RDD scan) in the plan"
-    )
-    unpinned = unpinned_df.orderBy("doc_id").collect()
+    with gates_off():
+        unpinned_df = dsir_importance_scores(docs)
+        assert not _rdd_scan_schemas(unpinned_df), (
+            "gate shut ⇒ no localCheckpoint (no RDD scan) in the plan"
+        )
+        unpinned = unpinned_df.orderBy("doc_id").collect()
     assert pinned == unpinned
 
 

@@ -7,8 +7,6 @@
    global-window formulation, and (b) actually bound the rows entering
    every window partition — asserted at RUNTIME with the cap patched
    small so the refinement path executes.
-2. The shared checkpoint gate (operators/common.py) is the single
-   definition both DSIR and rfm consume.
 """
 
 from __future__ import annotations
@@ -19,7 +17,6 @@ import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from wurzel_spark.operators import common
 from wurzel_spark.queries import relational
 from wurzel_spark.queries.relational import (
     _RFM_LABEL_CASE,
@@ -202,13 +199,3 @@ def test_rfm_sf001_unchanged_by_refinement_plumbing(spark):
     twin exactly — the zero-skew fast path is the round-11 plan."""
     o = spark.read.parquet(f"{SF_DIR}/orders.parquet")
     assert [tuple(r) for r in rfm_segments(spark, SF_DIR).collect()] == _naive_rfm(o)
-
-
-def test_shared_gate_is_single_definition():
-    from wurzel_spark.operators import textstats
-
-    assert textstats._plan_size_bytes is common.plan_size_bytes
-    assert (
-        textstats._DSIR_CHECKPOINT_MAX_INPUT_BYTES
-        == common.CHECKPOINT_MAX_INPUT_BYTES
-    )

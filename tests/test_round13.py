@@ -33,7 +33,7 @@ def _negative_id_corpus(spark, root):
 
 
 def test_incremental_cluster_gated_fold_matches_fallthrough(
-    spark, sf_dir, monkeypatch, tmp_path
+    spark, sf_dir, monkeypatch, tmp_path, gates_off
 ):
     """q_incremental_cluster_members' r13 driver-gated fold (one Arrow
     pull + two driver union-finds) must produce byte-identical rows to
@@ -43,7 +43,6 @@ def test_incremental_cluster_gated_fold_matches_fallthrough(
     (star compression hides a wrong split in the final labels)."""
     from wurzel_spark.operators import dedup as D
 
-    gate = D._DRIVER_UNION_FIND_MAX_EDGES
     real_uf, real_members = D._uf_roots, D.near_dup_cluster_members
     for corpus in (sf_dir, _negative_id_corpus(spark, tmp_path)):
         uf_calls, member_calls = [], []
@@ -57,17 +56,18 @@ def test_incremental_cluster_gated_fold_matches_fallthrough(
             member_calls.append(sorted(map(tuple, edges)))
             return real_members(pairs, *args, **kwargs)
 
-        monkeypatch.setattr(D, "_DRIVER_UNION_FIND_MAX_EDGES", gate)
         monkeypatch.setattr(D, "_uf_roots", uf_spy)
         gated = _collect_rows(D.q_incremental_cluster_members(spark, corpus))
-        # force the fully distributed path: no edge count fits a gate of -1,
-        # so the 4·n_pairs probe falls through to the original
+        # force the fully distributed path: with every gate off the
+        # 4·n_pairs probe falls through to the original
         # near_dup_cluster_members/merge_cluster_labels path, and the per-call
-        # union-find gates inside it, which read the same global, fall through
-        # to distributed label propagation too
-        monkeypatch.setattr(D, "_DRIVER_UNION_FIND_MAX_EDGES", -1)
+        # union-find gates inside it fall through to distributed label
+        # propagation too
         monkeypatch.setattr(D, "near_dup_cluster_members", members_spy)
-        fallthrough = _collect_rows(D.q_incremental_cluster_members(spark, corpus))
+        with gates_off():
+            fallthrough = _collect_rows(
+                D.q_incremental_cluster_members(spark, corpus)
+            )
         monkeypatch.setattr(D, "near_dup_cluster_members", real_members)
         assert gated == fallthrough
         assert len(gated) > 0

@@ -219,7 +219,7 @@ def test_kmeans_train_reseed_empty_cell(spark):
     assert all(r["n_members"] > 0 for r in full)
 
 
-def test_kmeans_driver_path_equals_distributed(spark, sf_dir):
+def test_kmeans_driver_path_equals_distributed(spark, sf_dir, gates_off):
     """The size-guarded driver Lloyd (numpy, fold-exact) and the
     distributed loop produce BYTE-identical centroids/counts — same
     equivalence contract as the union-find/min-label clusterer pair."""
@@ -228,24 +228,19 @@ def test_kmeans_driver_path_equals_distributed(spark, sf_dir):
 
     emb = table(spark, sf_dir, "embeddings")
     a = sorted(map(tuple, kmeans_train(emb, k=8, max_iters=3).collect()))
-    b = sorted(
-        map(
-            tuple,
-            kmeans_train(emb, k=8, max_iters=3, max_driver_elems=0).collect(),
-        )
-    )
+    with gates_off():
+        b = sorted(map(tuple, kmeans_train(emb, k=8, max_iters=3).collect()))
     assert a == b
     ar = sorted(
         map(tuple, kmeans_train(emb, k=6, max_iters=4, reseed_empty=True).collect())
     )
-    br = sorted(
-        map(
-            tuple,
-            kmeans_train(
-                emb, k=6, max_iters=4, reseed_empty=True, max_driver_elems=0
-            ).collect(),
+    with gates_off():
+        br = sorted(
+            map(
+                tuple,
+                kmeans_train(emb, k=6, max_iters=4, reseed_empty=True).collect(),
+            )
         )
-    )
     assert ar == br
 
 

@@ -94,7 +94,7 @@ def test_duplicated_span_stats_skew_safe_shape(spark):
     assert rows[4]["n_dup_spans"] == 0
 
 
-def test_percentile_gate_single_giant_source(spark):
+def test_percentile_gate_single_giant_source(spark, gates_off):
     """The two-phase rank's reason to exist: ONE source holding the whole
     corpus. The bucket-bounded windows must agree exactly with the plain
     per-source window (which would serialize into one task at scale)."""
@@ -107,11 +107,7 @@ def test_percentile_gate_single_giant_source(spark):
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
     two = {(r["doc_id"], r["src_pctile"]) for r in
            S.quality_percentile_gate(docs, keep_frac=0.4).collect()}
-    old = S._GATE_TWO_PHASE_MAX_SOURCES
-    try:
-        S._GATE_TWO_PHASE_MAX_SOURCES = 0
+    with gates_off():
         plain = {(r["doc_id"], r["src_pctile"]) for r in
                  S.quality_percentile_gate(docs, keep_frac=0.4).collect()}
-    finally:
-        S._GATE_TWO_PHASE_MAX_SOURCES = old
     assert two == plain and len(two) > 700  # ~40% of 2000

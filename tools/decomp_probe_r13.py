@@ -22,7 +22,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from wurzel_spark import get_spark  # noqa: E402
 from wurzel_spark.tables import table  # noqa: E402
-from wurzel_spark.operators import dedup  # noqa: E402
+from wurzel_spark.operators import common, dedup  # noqa: E402
 from wurzel_spark.queries import relational  # noqa: E402
 
 
@@ -147,7 +147,7 @@ def main() -> None:
             .distinct()
         )
         pruned = (
-            dedup._parallelize(docs)
+            common.parallelize(docs)
             .join(F.broadcast(ids), docs["doc_id"] == ids["id"])
             .select(
                 "id", F.explode(dedup.shingles(F.col("text"), 3)).alias("gram")
@@ -157,7 +157,7 @@ def main() -> None:
         cand = pruned.select("gram").distinct().localCheckpoint(eager=True)
 
         def c_gdf():
-            grams = dedup._parallelize(docs).select(
+            grams = common.parallelize(docs).select(
                 F.col("doc_id").alias("id"),
                 F.explode(dedup.shingles(F.col("text"), 3)).alias("gram"),
             )

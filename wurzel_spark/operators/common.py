@@ -1,32 +1,70 @@
-"""Shared gated-shortcut plumbing used across operator modules.
+"""Every size gate in the package decides here.
 
-Several operators pin a SMALL reused intermediate with
-``localCheckpoint`` only when the input is provably tiny (DSIR's
-token-grain stream, rfm's customer-grain frame). The gate is a
-metadata-only Catalyst size estimate compared against a fixed byte
-budget; both the helper and the budget live here so the consumers
-(operators/textstats.py, queries/relational.py) share one definition
-instead of importing each other's private names.
+Below a gate, work takes a shortcut: it runs driver-side (union-find,
+PageRank, k-core, Lloyd, the two-phase rank's offsets), broadcasts a
+small side, or pins a SMALL reused intermediate with
+``localCheckpoint``. Above it — or when the size is unknown — the
+bit-equal distributed twin runs. Each gate site measures its size and
+asks :func:`fits`, always through the module (``common.fits(...)``, never
+a ``from``-import), so forcing :func:`fits` to ``False`` sends every gate
+in the package to its fall-through at once; the test suite's
+``gates_off`` fixture and its repo-wide gates-off sweep do exactly
+that. Shared limits live here; a limit only one module knows stays a
+private constant there but still decides through :func:`fits`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+# Driver-side graph algorithms (union-find, quantized PageRank, k-core)
+# run at or under this many directed edges: ≤ ~16 MB of long pairs,
+# milliseconds of CPU, instead of per-round distributed job overhead.
+DRIVER_MAX_EDGES = 1_000_000
+# Broadcast a membership side of at most this many rows (≈32 MB of longs).
+BROADCAST_MAX_ROWS = 4_000_000
 # Byte budget for gated checkpoint shortcuts. Below this input size the
 # pin is cheap and saves a second scan; above it (or when the size is
-# unknown) the two-scan plan runs instead — same gated-shortcut
-# convention as dedup._DRIVER_UNION_FIND_MAX_EDGES and the kmeans
-# driver gate (similarity.py).
+# unknown) the two-scan plan runs instead.
 CHECKPOINT_MAX_INPUT_BYTES = 1 << 28  # 256 MiB
+
+
+def fits(size: int | None, limit: int) -> bool:
+    """The one size-gate decision: True takes the shortcut. An unknown
+    size (None) counts as too big — the conservative path."""
+    return size is not None and size <= limit
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's sizeInBytes estimate for the frame's optimized plan —
     metadata-only (parquet footer / relation stats), no job runs. None
-    when the estimate is unavailable; callers must treat None as TOO BIG
-    (the conservative path)."""
+    when the estimate is unavailable."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return None
+
+
+def input_fits(df: DataFrame) -> bool:
+    """Whether ``df``'s estimated size fits the checkpoint byte budget."""
+    return fits(plan_size_bytes(df), CHECKPOINT_MAX_INPUT_BYTES)
+
+
+def pin_if_small(frame: DataFrame, gate_df: DataFrame) -> DataFrame:
+    """``frame`` pinned (eager ``localCheckpoint``) when ``gate_df``'s
+    input fits the budget; otherwise ``frame`` unchanged, so its lineage
+    simply runs once per consumer (the DSIR / rfm convention)."""
+    return frame.localCheckpoint(eager=True) if input_fits(gate_df) else frame
+
+
+def parallelize(df: DataFrame) -> DataFrame:
+    """Spread a compute-heavy map stage across all cores.
+
+    Small parquet inputs arrive as 1-2 partitions (one per file split); a
+    CPU-bound expression (hashing every shingle 32×) then runs on one core.
+    A round-robin repartition costs one cheap shuffle of the raw text and
+    buys full parallelism. At 100 TB inputs are naturally thousands of
+    partitions and this becomes a no-op.
+    """
+    target = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(target) if df.rdd.getNumPartitions() < target else df

@@ -26,20 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from wurzel_spark.functions import text as TXT
+from wurzel_spark.operators import common
 from wurzel_spark.tables import table
-
-
-def _parallelize(df: DataFrame) -> DataFrame:
-    """Spread a compute-heavy map stage across all cores.
-
-    Small parquet inputs arrive as 1-2 partitions (one per file split); a
-    CPU-bound expression (hashing every shingle 32×) then runs on one core.
-    A round-robin repartition costs one cheap shuffle of the raw text and
-    buys full parallelism. At 100 TB inputs are naturally thousands of
-    partitions and this becomes a no-op.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
 # ------------------------------------------------------------------ exact
@@ -173,7 +161,7 @@ def ngram_jaccard_pairs(
     if wh is not None:
         base = wh.select("id", _shingle_hashes_from_whs(F.col("whs"), n).alias("arr"))
     else:
-        base = _parallelize(df).select(
+        base = common.parallelize(df).select(
             F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("arr")
         )
     sh = base.select("id", F.size("arr").alias("n"), F.explode("arr").alias("shingle"))
@@ -359,7 +347,7 @@ def minhash_signatures(
     only needs internal consistency, asserted against the exact twin by the
     recall tests.)
     """
-    base = _parallelize(df).select(
+    base = common.parallelize(df).select(
         F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
     ).filter(F.size("whs") > 0)
     return base.select("id", _minhash_udf(num_hashes, n)("whs").alias("signature"))
@@ -397,7 +385,7 @@ def minhash_banded_signatures(
         return pd.DataFrame({"signature": list(sig), "bhs": list(bhs)})
 
     if wh is None:
-        wh = _parallelize(df).select(
+        wh = common.parallelize(df).select(
             F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
         )
     base = wh.filter(F.size("whs") > 0)
@@ -507,7 +495,7 @@ def _verify_jaccard_pairs(
         needed = df.join(
             F.broadcast(cand_ids), F.col(id_col) == F.col(_CAND_ID), "left_semi"
         )
-        sh = _parallelize(needed).select(
+        sh = common.parallelize(needed).select(
             F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("sh")
         )
     a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -595,7 +583,7 @@ def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     sf0.1), and at 100 TB it shuffled 64 longs per (doc, partition) that
     the map-only form never materializes.
     """
-    base = _parallelize(df).select(
+    base = common.parallelize(df).select(
         F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("hs")
     ).filter(F.size("hs") > 0)
     return base.select("id", _simhash_kernel("hs").alias("simhash"))
@@ -715,7 +703,7 @@ def combined_near_dup_signatures(
             {"simhash": _simhash_rows(H, M), "signature": list(sig), "bhs": list(bhs)}
         )
 
-    base = _parallelize(df).select(
+    base = common.parallelize(df).select(
         F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
     )
     # Same empty-doc policy as minhash_signatures / minhash_banded_signatures:
@@ -936,13 +924,6 @@ ORDER BY d.source
 """
 
 
-# Graphs at or under this many (directed) edges cluster driver-side via
-# union-find — ≤ ~16 MB of long pairs, milliseconds of CPU — instead of
-# paying per-round distributed job overhead. Above it, distributed
-# min-label propagation runs; both produce min-member-id labels.
-_DRIVER_UNION_FIND_MAX_EDGES = 1_000_000
-
-
 def _uf_roots(src_iter, dst_iter) -> dict[int, int]:
     """Driver union-find over parallel (src, dst) endpoint iterables;
     returns {node: component-minimum id} for every node that appears.
@@ -1099,7 +1080,7 @@ def near_dup_cluster_members(
     # overhead per round for nothing. ~100k edges per partition keeps a
     # 100 TB-scale dup graph distributed on the same formula.
     n_edges = edges.count()  # cheap: checkpointed
-    if n_edges <= _DRIVER_UNION_FIND_MAX_EDGES:
+    if common.fits(n_edges, common.DRIVER_MAX_EDGES):
         # Same size-guarded reasoning as a broadcast join: a graph this
         # small (≤16 MB of long pairs) clusters in milliseconds with
         # driver-side union-find, vs 2+ shuffle rounds × job overhead per
@@ -1186,7 +1167,7 @@ def containment_pairs(
     ``max_df`` caps shingle document frequency exactly as in
     :func:`ngram_jaccard_pairs` (the d² self-join hazard is identical).
     """
-    sh = _parallelize(df).select(
+    sh = common.parallelize(df).select(
         F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("arr")
     ).select("id", F.size("arr").alias("n"), F.explode("arr").alias("shingle"))
     if max_df is not None:
@@ -1364,7 +1345,7 @@ def duplicated_span_stats(
         F.transform(F.sequence(F.lit(1), k), lambda i: F.xxhash64(F.slice("whs", i, n))),
     ).otherwise(F.array(F.xxhash64("whs")))
     spans = (
-        _parallelize(df)
+        common.parallelize(df)
         .select(F.col(id_col).alias("id"), whs.alias("whs"))
         .filter(F.size("whs") > 0)
         .select("id", F.explode(grams).alias("h"))
@@ -1480,7 +1461,7 @@ def _span_hash_stream(
         ),
     ).otherwise(F.array(F.xxhash64("whs")))
     return (
-        _parallelize(df)
+        common.parallelize(df)
         .select(F.col(id_col).alias("id"), whs.alias("whs"))
         .filter(F.size("whs") > 0)
         .select("id", F.explode(grams).alias("h"))
@@ -1650,10 +1631,10 @@ def incremental_near_dup_pairs(
         F.col(id_col) == F.col(_CAND_ID),
         "left_semi",
     )
-    sh_new = _parallelize(new_needed).select(
+    sh_new = common.parallelize(new_needed).select(
         F.col(id_col).alias("id_a"), shingle_hashes(F.col(text_col), n).alias("sh_a")
     )
-    sh_old = _parallelize(old_needed).select(
+    sh_old = common.parallelize(old_needed).select(
         F.col(id_col).alias("id_b"), shingle_hashes(F.col(text_col), n).alias("sh_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1703,7 +1684,7 @@ def duplicated_sentence_stats(
         lambda s: F.length(s) >= min_chars,
     )
     rows = (
-        _parallelize(df)
+        common.parallelize(df)
         .select(F.col(id_col).alias("id"), sents.alias("ss"))
         .filter(F.size("ss") > 0)
         .select("id", F.explode("ss").alias("s"))
@@ -1808,7 +1789,7 @@ def strip_duplicated_spans(
         ),
     ).otherwise(F.array(F.xxhash64("whs")))
     base = (
-        _parallelize(df)
+        common.parallelize(df)
         .select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"), whs.alias("whs"))
         .filter(F.size("whs") > 0)
         .select("id", "__text", F.posexplode(grams).alias("pos", "h"))
@@ -1989,7 +1970,7 @@ def winnow_fingerprints(
     # gram hashing is the CPU-dominant stage — spread one-file inputs
     # across cores first (no-op on naturally-partitioned big inputs; r7:
     # the single-partition md5 pass was most of winnow_overlap's 1.8 s)
-    base = _parallelize(df).select(
+    base = common.parallelize(df).select(
         F.col(id_col).alias("doc_id"), TXT.words(F.col(text_col)).alias("ws")
     ).filter(F.size("ws") > 0)
     hs = F.element_at(
@@ -2222,7 +2203,7 @@ def merge_cluster_labels(
     # it so the corpus-sized labels table never sort-merge-shuffles;
     # size-guarded like every other broadcast in this module.
     members = merged.select("doc_id")
-    if merged.count() <= 4_000_000:  # ≈32 MB of longs
+    if common.fits(merged.count(), common.BROADCAST_MAX_ROWS):
         members = F.broadcast(members)
     singletons = labels.filter(F.col("doc_id") == F.col("cluster_id")).join(
         members, "doc_id", "left_anti"
@@ -2259,7 +2240,7 @@ def q_incremental_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame
     # tests/test_round13.py. Above the gate: the distributed path below,
     # unchanged.
     n_pairs = pairs.count()  # cheap: checkpointed
-    if 4 * n_pairs <= _DRIVER_UNION_FIND_MAX_EDGES:
+    if common.fits(4 * n_pairs, common.DRIVER_MAX_EDGES):
         pdf = pairs.select("id_a", "id_b").toPandas()
         ia = pdf["id_a"].astype("int64")
         ib = pdf["id_b"].astype("int64")
@@ -2362,7 +2343,7 @@ def ngram_jaccard_prefix_pairs(
     """
     from pyspark.sql import Window as W
 
-    docs_arr = _parallelize(df).select(
+    docs_arr = common.parallelize(df).select(
         F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("arr")
     ).select("id", F.size("arr").alias("n"), "arr")
     docs_arr = docs_arr.localCheckpoint(eager=True)  # feeds prefix AND verify
@@ -2481,7 +2462,7 @@ def ngram_novelty(
     tables, never a shingle-level join. Novelty is a single division of
     exact integers (cross-engine bit-exact).
     """
-    sh = _parallelize(df).select(
+    sh = common.parallelize(df).select(
         F.col(id_col).alias("id"), F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle")
     )
     sh = sh.localCheckpoint(eager=True)  # feeds sizes AND firsts
@@ -2547,7 +2528,7 @@ def build_novelty_index(
     ingestion score novelty without re-touching old text (the same
     pattern as build_near_dup_index for pairs). ~16 B/shingle."""
     return (
-        _parallelize(df)
+        common.parallelize(df)
         .select(
             F.col(id_col).alias("first_id"),
             F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle"),
@@ -2572,7 +2553,7 @@ def incremental_ngram_novelty(
     Relation to :func:`ngram_novelty`: for a doc NOT in the index, this
     equals the global definition with the corpus as "earlier" — the
     parity the tests pin."""
-    sh = _parallelize(new_docs).select(
+    sh = common.parallelize(new_docs).select(
         F.col(id_col).alias("id"),
         F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle"),
     )
@@ -2866,20 +2847,15 @@ def lsh_recall_audit(
     _shingle_hashes_from_whs is shingle_hashes by construction,
     equivalence-tested in tests/).
     """
-    from wurzel_spark.operators.common import (
-        CHECKPOINT_MAX_INPUT_BYTES,
-        plan_size_bytes,
-    )
     from wurzel_spark.operators.dedup import (  # self-import for clarity
         minhash_dedup_pairs,
         ngram_jaccard_pairs,
     )
 
-    est = plan_size_bytes(docs)
     wh = None
-    if est is not None and est <= CHECKPOINT_MAX_INPUT_BYTES:
+    if common.input_fits(docs):
         wh = (
-            _parallelize(docs)
+            common.parallelize(docs)
             .select(F.col("doc_id").alias("id"), _word_hashes(F.col("text")).alias("whs"))
             .localCheckpoint(eager=True)
         )
@@ -2971,7 +2947,7 @@ def dup_pair_evidence(
         .limit(top_pairs)
         .localCheckpoint(eager=True)
     )
-    grams = _parallelize(df).select(
+    grams = common.parallelize(df).select(
         F.col("doc_id").alias("id"),
         F.explode(shingles(F.col("text"), n)).alias("gram"),
     )
@@ -2985,7 +2961,7 @@ def dup_pair_evidence(
     # filtering `grams` would shingle the whole corpus just to keep ~32
     # docs) — then pin, since BOTH evidence sides consume it
     pruned = (
-        _parallelize(df)
+        common.parallelize(df)
         .join(F.broadcast(ids), df["doc_id"] == ids["id"])
         .select("id", F.explode(shingles(F.col("text"), n)).alias("gram"))
         .localCheckpoint(eager=True)

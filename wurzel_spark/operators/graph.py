@@ -37,11 +37,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
 SCALE = 10**12
 N_ITERS = 3
-PAGERANK_DRIVER_EDGE_GATE = 1_000_000  # the union-find gate class
 
 
 def _pagerank_driver(spark, pdf, n_iters: int) -> DataFrame:
@@ -105,7 +105,7 @@ def quantized_pagerank(
     # a graph whose edge list fits one collect; arithmetic is identical
     # exact-integer either way (equivalence-tested). Above the gate the
     # distributed loop below is the scale path.
-    if e.count() <= PAGERANK_DRIVER_EDGE_GATE:
+    if common.fits(e.count(), common.DRIVER_MAX_EDGES):
         return _pagerank_driver(edges.sparkSession, e.toPandas(), n_iters)
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -184,7 +184,7 @@ def q_supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # disjoint (src<10^9 one way, ≥10^9 the other), so the union is
     # distinct by construction either way.
     pairs = pairs.localCheckpoint(eager=True)
-    if 2 * pairs.count() <= PAGERANK_DRIVER_EDGE_GATE:
+    if common.fits(2 * pairs.count(), common.DRIVER_MAX_EDGES):
         import pandas as pd
 
         half = pairs.toPandas()
@@ -425,7 +425,6 @@ TRANSITIVITY_CAPPED_SQL = _transitivity_sql(capped=True)
 
 KCORE_K = 2
 KCORE_ROUNDS = 8
-KCORE_DRIVER_EDGE_GATE = 1_000_000  # the union-find gate class (dedup.py:896)
 
 
 def _kcore_driver(pairs: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -484,8 +483,8 @@ def graph_kcore(
     the SHRINKING edge set, each round checkpointed so lineage stays
     flat (the incremental_cluster_members loop discipline).
 
-    Below ``KCORE_DRIVER_EDGE_GATE`` edges the peel runs driver-side
-    (the ``_DRIVER_UNION_FIND_MAX_EDGES`` precedent, dedup.py:896):
+    Below ``common.DRIVER_MAX_EDGES`` edges the peel runs driver-side
+    (the union-find precedent, dedup.near_dup_cluster_members):
     the dup graph after df-capping is typically thousands of edges, and
     up to ``rounds`` × 4 tiny distributed jobs are pure scheduling
     overhead there (measured 3.2 → 1.5 s at sf0.1). Both paths peel
@@ -494,7 +493,7 @@ def graph_kcore(
     """
     pairs = pairs.localCheckpoint(eager=True)
     n_edges = pairs.count()
-    if n_edges <= KCORE_DRIVER_EDGE_GATE:
+    if common.fits(n_edges, common.DRIVER_MAX_EDGES):
         return _kcore_driver(pairs, k, rounds)
     live = pairs.select(
         F.col("id_a").alias("u"), F.col("id_b").alias("v")

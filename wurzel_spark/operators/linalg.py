@@ -19,8 +19,8 @@ to a d×d partial gram in a vectorized numpy int64 matmul (Arrow-batched
 mapInPandas; no self-join, no exploded-table shuffle) — and the shuffle
 carries O(d² · n_partitions) rows however large the corpus is.  The
 eigensolve then runs driver-side on the d×d result — bounded by
-DIMENSION, not data (same gate as kmeans_train's ≤64-partition driver
-reduce).
+DIMENSION, not data, so it needs no size gate (kmeans_train's driver
+Lloyd, by contrast, is gated on n·dim elements).
 """
 
 from __future__ import annotations
@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wurzel_spark.operators.common import parallelize
 from wurzel_spark.tables import table
 
 QSCALE = 1 << 20
@@ -50,8 +51,6 @@ def embedding_gram_matrix(
     large enough to threaten it."""
     import numpy as np
     import pandas as pd
-
-    from wurzel_spark.operators.dedup import _parallelize
 
     iu_cache: dict[int, tuple] = {}
 
@@ -78,7 +77,7 @@ def embedding_gram_matrix(
             }
         )
 
-    partials = _parallelize(df.select(vec_col)).mapInPandas(
+    partials = parallelize(df.select(vec_col)).mapInPandas(
         _partial, "i int, j int, s long"
     )
     return (
@@ -155,8 +154,6 @@ def embedding_projection_stats(
     import numpy as np
     import pandas as pd
 
-    from wurzel_spark.operators.dedup import _parallelize
-
     vrows = embedding_pca_power(df, iters, vec_col, id_col).collect()
     varr = np.array(
         [r["v"] for r in sorted(vrows, key=lambda r: r["i"])], dtype=np.int64
@@ -177,7 +174,7 @@ def embedding_projection_stats(
             )
 
     return (
-        _parallelize(df.select(id_col, vec_col))
+        parallelize(df.select(id_col, vec_col))
         .mapInPandas(_k, f"{id_col} long, norm2 long, proj long")
         .orderBy(id_col)
     )

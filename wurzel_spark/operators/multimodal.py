@@ -502,7 +502,7 @@ def repartition_by_size(df: DataFrame, target_bytes: int = 128 * 1024 * 1024) ->
     Floor at the cluster's core count (bounded by the asset count): the
     byte target alone folds a small corpus into ONE partition, and the
     downstream decode is CPU-bound Python — the same single-core hazard
-    the shingle kernels' `_parallelize` rule guards against.
+    the shingle kernels' `common.parallelize` rule guards against.
     """
     sized = df.withColumn("__sz", F.length("content").cast("long"))
     total, cnt = sized.agg(F.sum("__sz"), F.count(F.lit(1))).collect()[0]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
+from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
 _KNUTH = 2654435761  # Knuth multiplicative hash constant (2^32 / phi)
@@ -388,7 +389,7 @@ def leakage_safe_split(
     mem = members.select(
         F.col("doc_id").alias(id_col), F.col("cluster_id").alias("__eff")
     )
-    if members.count() <= 4_000_000:  # same size guard as merge_cluster_labels
+    if common.fits(members.count(), common.BROADCAST_MAX_ROWS):
         mem = F.broadcast(mem)
     eff = df.join(mem, id_col, "left").withColumn(
         "__eff", F.coalesce(F.col("__eff"), F.col(id_col))

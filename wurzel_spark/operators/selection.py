@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
-from wurzel_spark.operators import dedup
+from wurzel_spark.operators import common, dedup
 from wurzel_spark.operators.textstats import STOPWORDS
 from wurzel_spark.tables import table
 
@@ -403,8 +403,9 @@ def quality_percentile_gate(
         .limit(_cap * 1026 + 1)
         .collect()
     )
-    n_sources = len({r["source"] for r in counts})
-    if len(counts) <= _cap * 1026 and n_sources <= _cap:
+    truncated = len(counts) > _cap * 1026  # source count unknown: too big
+    n_sources = None if truncated else len({r["source"] for r in counts})
+    if common.fits(n_sources, _cap):
         per_src: dict[str, list] = {}
         for r in counts:
             per_src.setdefault(r["source"], []).append((r["__bkt"], r["c"]))

@@ -29,6 +29,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
 
@@ -601,6 +602,7 @@ def q_kmeans_cell_stats(spark, sf_dir: str) -> DataFrame:
 # members per cell before overflow; a 100 TB corpus would widen to
 # DECIMAL(38,0) (same exactness, no other change).
 _KMEANS_SCALE = float(1 << 40)
+_KMEANS_DRIVER_MAX_ELEMS = 1 << 22  # n·dim; the kmeans_train size guard
 
 
 def kmeans_train(
@@ -610,7 +612,6 @@ def kmeans_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     reseed_empty: bool = False,
-    max_driver_elems: int = 1 << 22,
 ) -> DataFrame:
     """Lloyd's algorithm over cosine similarity, engine-reproducibly.
 
@@ -645,7 +646,7 @@ def kmeans_train(
     / :func:`ivf_topk`.
 
     Size guard (same reasoning as the ≤1M-edge union-find): when
-    n·dim ≤ ``max_driver_elems`` (default 2²² ≈ 32 MB of float64) the
+    n·dim ≤ ``_KMEANS_DRIVER_MAX_ELEMS`` (2²² ≈ 32 MB of float64) the
     whole matrix collects ONCE and Lloyd runs driver-side in numpy with
     the identical fold-rounding arithmetic — every per-iteration Spark
     job at this size is pure stage-launch latency. Above the guard the
@@ -667,7 +668,7 @@ def kmeans_train(
     ).first()
     n_vec = int(probe["n"])
     dim = int(probe["d"]) if probe["d"] is not None else 0
-    if n_vec * max(dim, 1) <= max_driver_elems:
+    if common.fits(n_vec * max(dim, 1), _KMEANS_DRIVER_MAX_ELEMS):
         return _kmeans_train_driver(
             spark, emb, k, max_iters, id_col, vec_col, reseed_empty
         )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
+from wurzel_spark.operators.common import parallelize
 from wurzel_spark.operators.dedup import md5_prefix_hash, shingles
 from wurzel_spark.tables import table
 
@@ -593,9 +594,7 @@ def _span_strings(df: DataFrame, id_col: str, text_col: str, n: int):
     same convention the exact decontamination oracle uses). The span
     build + md5 is the CPU-heavy stage, so spread single-file inputs
     across cores first (no-op on naturally-partitioned big inputs)."""
-    from wurzel_spark.operators.dedup import _parallelize
-
-    df = _parallelize(df)
+    df = parallelize(df)
     ws = TXT.words(F.col(text_col))
     k = F.size("ws") - F.lit(n - 1)
     grams = F.when(
@@ -1172,7 +1171,6 @@ def ngram_diversity_hll(
             ),
         )
     )
-    from wurzel_spark.operators.dedup import _parallelize
 
     if hasher == "md5":
         hash_fn = md5_prefix_hash
@@ -1181,7 +1179,7 @@ def ngram_diversity_hll(
         # split (bucket = h >> 50, rem = h % 2^50) was built for
         hash_fn = lambda c: F.pmod(F.xxhash64(c), F.lit(1 << 60))  # noqa: E731
     hs = (
-        _parallelize(df)  # md5-per-gram is CPU-bound; one-file parquet = one core
+        parallelize(df)  # md5-per-gram is CPU-bound; one-file parquet = one core
         .select("source", F.explode(grams).alias("p"))
         .select("source", F.col("p.n").alias("n"), hash_fn(F.col("p.g")).alias("h"))
     )

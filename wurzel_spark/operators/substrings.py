@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from wurzel_spark.functions import text as TXT
-from wurzel_spark.operators.dedup import _parallelize
+from wurzel_spark.operators.common import parallelize
 from wurzel_spark.tables import table
 
 #: minimum duplicated-substring length in tokens. Lee et al. use 50 on
@@ -55,7 +55,7 @@ def window_hashes(df: DataFrame, length: int = MIN_DUP_LEN,
     plus the hot-set reduction. Docs shorter than ``length`` contribute
     no windows (but stay in the totals)."""
     ws = TXT.words(F.col(text_col))
-    toks = _parallelize(df).select(
+    toks = parallelize(df).select(
         F.col(id_col).alias("doc_id"), ws.alias("ws")
     ).select("doc_id", "ws", F.size("ws").alias("n_tokens"))
     k = F.col("n_tokens") - F.lit(length - 1)

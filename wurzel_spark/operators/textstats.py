@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wurzel_spark.functions import text as TXT
+from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
 # Whole-word markers per language for the n-gram-heuristic language ID.
@@ -668,11 +669,8 @@ def repetition_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         return pd.DataFrame({"top_2gram": tops, "top_2gram_count": cnts})
 
     # spread the kernel across cores when the scan arrives under-partitioned
-    # (small parquet = 1-2 splits); no-op at scale (same rule as
-    # dedup._parallelize)
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        df = df.repartition(target)
+    # (small parquet = 1-2 splits); no-op at scale
+    df = common.parallelize(df)
     c = F.col(text_col)
     ng5 = word_ngrams(c, 5)
     # The kernel's 2-gram argument must NOT use word_ngrams' let-binding
@@ -1746,19 +1744,6 @@ QUALITY_MIXTURE_SQL = _quality_mixture_sql()
 
 DSIR_TARGET_SOURCES = ("src0", "src1", "src2")
 _DSIR_BUCKETS = 8192
-# Token-grain checkpoint gate: pinning the hashed token stream costs
-# ~24 B/token (three longs) ≈ 4× the input text bytes. Below this input
-# size the pin is cheap and saves the second tokenize+hash scan; above
-# it (or when the size is unknown) the two-scan plan runs instead.
-# The gate helper + budget live in operators/common.py (shared with
-# rfm_segments' customer-grain pin); the module-level aliases stay so
-# existing tests can monkeypatch DSIR's gate independently.
-from wurzel_spark.operators.common import (  # noqa: E402
-    CHECKPOINT_MAX_INPUT_BYTES as _DSIR_CHECKPOINT_MAX_INPUT_BYTES,
-)
-from wurzel_spark.operators.common import (  # noqa: E402
-    plan_size_bytes as _plan_size_bytes,
-)
 
 
 def dsir_importance_scores(
@@ -1810,9 +1795,8 @@ def dsir_importance_scores(
     # inputs checkpoint, large or unknown inputs fall through to the
     # two-scan plan (the `toks` lineage is simply evaluated twice — both
     # paths are bit-equal, equivalence-tested in tests/test_round11.py).
-    est = _plan_size_bytes(df)
-    if est is not None and est <= _DSIR_CHECKPOINT_MAX_INPUT_BYTES:
-        toks = toks.localCheckpoint(eager=True)
+    # Pinning costs ~24 B/token (three longs) ≈ 4× the input text bytes.
+    toks = common.pin_if_small(toks, df)
     is_tgt = F.col("source").isin(*target_sources)
     counts = toks.groupBy("b").agg(
         F.count(F.lit(1)).alias("c_raw"),
@@ -2046,8 +2030,6 @@ def retrieval_self_eval(
     integers as bm25_topk; the only float in the output is rr = 1/rank
     (one IEEE division).
     """
-    from wurzel_spark.operators.dedup import _parallelize
-
     ws = TXT.words(F.col(text_col))
     # d3 feeds three map-only consumers (query terms, corpus stats, the
     # term stream); tokenization is the CPU-dominant expression, so
@@ -2058,7 +2040,7 @@ def retrieval_self_eval(
     # re-tokenizing is embarrassingly parallel and shuffle-free.
     from pyspark.sql import Observation
 
-    d3 = _parallelize(df).select("doc_id", ws.alias("ws")).select(
+    d3 = common.parallelize(df).select("doc_id", ws.alias("ws")).select(
         "doc_id", "ws", F.size("ws").alias("dl")
     )
     # corpus stats (n_docs, avgdl) ride the tf job as an Observation —
@@ -2071,7 +2053,7 @@ def retrieval_self_eval(
     # query terms from the RAW input, filtered before tokenizing: the
     # doc_id predicate pushes into the parquet scan and only the 1/every
     # query docs get tokenized — routing this branch through the
-    # _parallelize'd d3 would shuffle the whole corpus text just to read
+    # parallelize'd d3 would shuffle the whole corpus text just to read
     # 1% of it.
     qt = (
         df.filter(F.col("doc_id") % every == 0)
@@ -2536,9 +2518,8 @@ def q_tlsh_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels — a one-file parquet otherwise runs the whole corpus on one
     core; measured 12.3 s → 0.9 s at 50 k docs on local[32])."""
     from wurzel_spark.functions.tlsh import tlsh_col
-    from wurzel_spark.operators.dedup import _parallelize
 
-    docs = _parallelize(table(spark, sf_dir, "documents"))
+    docs = common.parallelize(table(spark, sf_dir, "documents"))
     return docs.select(
         "doc_id", tlsh_col(F.col("text")).alias("tlsh")
     ).orderBy("doc_id")
@@ -2555,14 +2536,12 @@ def compressibility_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     Rows-only (zlib output and log2 floats are engine-internal);
     deterministic and pinned by construction tests. Arrow-batched row-
-    local kernel, ``_parallelize``d input (CPU-bound Python — the
+    local kernel, ``parallelize``d input (CPU-bound Python — the
     tlsh_fingerprints rule)."""
     import zlib
 
     import numpy as np
     import pandas as pd
-
-    from wurzel_spark.operators.dedup import _parallelize
 
     def op(batches):
         for pdf in batches:
@@ -2582,7 +2561,7 @@ def compressibility_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
                 rows, columns=["doc_id", "n_bytes", "zlib_ratio", "char_entropy"]
             )
 
-    return _parallelize(df.select("doc_id", text_col)).mapInPandas(
+    return common.parallelize(df.select("doc_id", text_col)).mapInPandas(
         op, "doc_id long, n_bytes long, zlib_ratio double, char_entropy double"
     ).orderBy("doc_id")
 
@@ -2699,10 +2678,9 @@ def ngram_diversity_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             ),
         )
     )
-    from wurzel_spark.operators.dedup import _parallelize
 
     exploded = (
-        _parallelize(df)  # gram explode is CPU-bound; one-file parquet = one core
+        common.parallelize(df)  # gram explode is CPU-bound; one-file parquet = one core
         .select("source", grams.alias("grams"))
         .select("source", F.explode("grams").alias("gr"))
         .select("source", F.col("gr.n").alias("n"), F.col("gr.g").alias("g"))
@@ -2791,10 +2769,8 @@ def quality_score_buckets(df: DataFrame, text_col: str = "text") -> DataFrame:
     corpus-sized pass of the sweep, and the staging unit of the
     streaming twin (streaming/quality.py): bucket partials are additive,
     so per-batch rows summed at drain equal the batch aggregate."""
-    from wurzel_spark.operators.dedup import _parallelize
-
     c = F.col(text_col)
-    per_doc = _parallelize(df).select(
+    per_doc = common.parallelize(df).select(
         "source",
         TXT.word_count(c).cast("long").alias("nw"),
         TXT.marker_words_count(c, STOPWORDS).cast("long").alias("sh"),
@@ -2934,11 +2910,9 @@ def vocab_growth_curve(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from wurzel_spark.operators.dedup import _parallelize
-
     spark = df.sparkSession
     c = F.col(text_col)
-    toks = _parallelize(df).select(
+    toks = common.parallelize(df).select(
         "doc_id", F.explode(TXT.words(c)).alias("w")
     ).select("doc_id", F.xxhash64("w").alias("h"))
     first = toks.groupBy("h").agg(F.min("doc_id").alias("fd"))
@@ -3160,11 +3134,9 @@ def term_type_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     staging unit of the streaming twin (streaming/fof.py): type counts
     are additive across batches, and the twin's AGGREGATING fold keeps
     the state bounded at one row per live type."""
-    from wurzel_spark.operators.dedup import _parallelize
-
     c = F.col(text_col)
     return (
-        _parallelize(df)
+        common.parallelize(df)
         .select("source", F.explode(TXT.words(c)).alias("w"))
         .groupBy("source", F.xxhash64("w").alias("h"))
         .agg(F.count(F.lit(1)).alias("c"))
@@ -3512,9 +3484,7 @@ def langid_confusion(df: DataFrame, text_col: str = "text") -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from wurzel_spark.operators.dedup import _parallelize
-
-    pred = lang_id(_parallelize(df), text_col)
+    pred = lang_id(common.parallelize(df), text_col)
     cells = pred.groupBy("labeled_lang", "predicted_lang").agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -3685,10 +3655,10 @@ def index_postings(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The corpus pass: the (h, doc_id, tf) posting table itself — also
     the staging unit of the streaming twin (streaming/index.py), where
     the staged state IS the materialized index."""
-    from wurzel_spark.operators.dedup import _parallelize, md5_prefix_hash
+    from wurzel_spark.operators.dedup import md5_prefix_hash
 
     c = F.col(text_col)
-    toks = _parallelize(df).select(
+    toks = common.parallelize(df).select(
         "doc_id", F.explode(TXT.words(c)).alias("term")
     )
     return (
@@ -4255,11 +4225,11 @@ def ccnet_doc_bigrams(df: DataFrame, text_col: str = "text") -> DataFrame:
     """The corpus pass: doc-grain (doc, source, lang, h1, h2, m) bigram
     multiplicities with language folded into the md5-prefix hashes —
     also the staging unit of the streaming twin."""
-    from wurzel_spark.operators.dedup import _parallelize, md5_prefix_hash
+    from wurzel_spark.operators.dedup import md5_prefix_hash
 
     ws = TXT.words(F.col(text_col))
     toks = (
-        _parallelize(df)
+        common.parallelize(df)
         .select("doc_id", "source", "lang", ws.alias("ws"))
         .filter(F.size("ws") >= 2)
     )

@@ -2080,9 +2080,7 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("freq"),
         F.sum(F.expr("CAST(FLOOR(o_totalprice * 100) AS BIGINT)")).alias("cents"),
     )
-    est = common.plan_size_bytes(o)
-    if est is not None and est <= common.CHECKPOINT_MAX_INPUT_BYTES:
-        cust = cust.localCheckpoint(eager=True)
+    cust = common.pin_if_small(cust, o)
     dims = {"r": "last_us", "f": "freq", "m": "cents"}
     panel = cust.agg(
         *[

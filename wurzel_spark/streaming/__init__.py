@@ -8,8 +8,9 @@ stage function, the state keys, and a drain that feeds the batch
 operator's own tail — bit-equal to the batch form under any batch split,
 and safe under crash and replay by the fold protocol documented there.
 Row-local twins (classifier scoring, decontamination, enrichment,
-compressibility) write per-batch output through the same availableNow
-drive (``foreach_batch``). The watermarked windowed aggregations
+compressibility) land per-batch output through ``output_stream`` (skip
+empty → compute → overwrite ``batch=N``) on the same availableNow drive.
+The watermarked windowed aggregations
 (``events``), the stateful ``applyInPandasWithState`` operators
 (sessions, funnel, cohort) and the stream-stream interval join
 (``rangejoin``) are the native-engine paths for continuous feeds.

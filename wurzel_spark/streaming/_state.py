@@ -216,6 +216,31 @@ def fold_stream(
     )
 
 
+def write_batch_output(
+    batch_df: DataFrame, batch_id: int, out_dir: str, compute
+) -> None:
+    """The row-local output step: skip an empty batch, then land
+    ``compute(batch_df)`` under ``out_dir/batch=N`` with overwrite, so a
+    replayed batch replaces rather than duplicates its rows. This is
+    OUTPUT (one row per input doc, never re-read here), so it stays off
+    the fold protocol."""
+    if batch_df.isEmpty():
+        return
+    compute(batch_df).write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+
+
+def output_stream(stream: DataFrame, out_dir: str, checkpoint_dir: str, compute):
+    """Drive :func:`write_batch_output` over an availableNow stream;
+    returns the terminated query."""
+    return foreach_batch(
+        stream,
+        checkpoint_dir,
+        lambda batch_df, batch_id: write_batch_output(
+            batch_df, batch_id, out_dir, compute
+        ),
+    )
+
+
 def staged_state(
     spark, state_dir: str, key_cols: list[str], cols: list[str]
 ) -> DataFrame | None:

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.classifier import doc_features, score_documents
 from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import foreach_batch
+from wurzel_spark.streaming._state import foreach_batch, write_batch_output
 
 
 def write_batch_scores(
@@ -48,12 +48,11 @@ def write_batch_scores(
     ``batch=N`` makes a replayed batch replace rather than duplicate its
     (doc_id, score, pred) rows — calling twice with the same arguments
     leaves ``out_dir`` unchanged."""
-    if batch_df.isEmpty():
-        return
-    feats = doc_features(batch_df, text_col)
-    score_documents(feats, w, bias).write.mode("overwrite").parquet(
-        f"{out_dir}/batch={batch_id}"
-    )
+
+    def score(b: DataFrame) -> DataFrame:
+        return score_documents(doc_features(b, text_col), w, bias)
+
+    write_batch_output(batch_df, batch_id, out_dir, score)
 
 
 def score_stream(

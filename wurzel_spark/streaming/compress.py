@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.textstats import compressibility_stats
 from wurzel_spark.streaming._fs import path_exists
-from wurzel_spark.streaming._state import foreach_batch
+from wurzel_spark.streaming._state import output_stream
 
 
 def compressibility_stream(
@@ -33,14 +33,9 @@ def compressibility_stream(
     char_entropy) under ``out_dir/batch=N``. Blocks until the
     availableNow run drains; returns the query."""
 
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        compressibility_stats(batch_df, text_col).write.mode("overwrite").parquet(
-            f"{out_dir}/batch={batch_id}"
-        )
-
-    q = foreach_batch(stream, checkpoint_dir, _process)
+    q = output_stream(
+        stream, out_dir, checkpoint_dir, lambda b: compressibility_stats(b, text_col)
+    )
     spark = stream.sparkSession
     if not path_exists(spark, out_dir):  # every batch empty
         spark.createDataFrame(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.dedup import decontamination_overlap, eval_span_hashes
-from wurzel_spark.streaming._state import foreach_batch
+from wurzel_spark.streaming._state import output_stream
 
 
 def decontaminate_stream(
@@ -41,13 +41,9 @@ def decontaminate_stream(
     replay-idempotent output pattern of streaming/classify.py). Blocks
     until the availableNow run drains; returns the query."""
     spans = eval_span_hashes(eval_set, id_col, text_col, n).localCheckpoint()
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = decontamination_overlap(
-            batch_df, None, id_col, text_col, n, eval_spans=spans
-        )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    return foreach_batch(stream, checkpoint_dir, _process)
+    return output_stream(
+        stream,
+        out_dir,
+        checkpoint_dir,
+        lambda b: decontamination_overlap(b, None, id_col, text_col, n, eval_spans=spans),
+    )

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from wurzel_spark.operators.asof import asof_join
-from wurzel_spark.streaming._state import foreach_batch
+from wurzel_spark.streaming._state import output_stream
 
 
 def asof_enrich_stream(
@@ -46,20 +46,11 @@ def asof_enrich_stream(
     batch's rows; batch-keyed overwrite is the replay-idempotent output
     pattern of streaming/classify.py). Blocks until the availableNow run
     drains; returns the query."""
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = asof_join(
-            batch_df,
-            reference,
-            key,
-            left_time,
-            right_time,
-            value_cols=value_cols,
-            tiebreak=tiebreak,
-            how=how,
-        )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
-    return foreach_batch(stream, checkpoint_dir, _process)
+    return output_stream(
+        stream,
+        out_dir,
+        checkpoint_dir,
+        lambda b: asof_join(
+            b, reference, key, left_time, right_time, value_cols, tiebreak, how
+        ),
+    )

@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from wurzel_spark.operators.dedup import _parallelize, shingle_hashes
+from wurzel_spark.operators.common import parallelize
+from wurzel_spark.operators.dedup import shingle_hashes
 from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
@@ -45,7 +46,7 @@ def novelty_stream(
     ngram_novelty."""
     fold_stream(
         stream, state_dir, checkpoint_dir, ["id", "shingle"],
-        lambda b: _parallelize(b).select(
+        lambda b: parallelize(b).select(
             F.col(id_col).alias("id"),
             F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle"),
         ),
