@@ -159,13 +159,16 @@ def test_bench_headline_names_all_resolve():
 def test_bench_compact_keep_names_all_resolve():
     """compact_line skips COMPACT_KEEP names absent from a run, so a
     renamed query would silently fold into "oth". Every keep-set name must
-    be a registered query, and none may repeat."""
+    be a registered query that the battery times (HEADLINE), and none may
+    repeat."""
     import bench
 
     import __spark_entry__ as e
 
     missing = [n for n in bench.COMPACT_KEEP if n not in e.queries()]
     assert not missing, missing
+    unbenched = [n for n in bench.COMPACT_KEEP if n not in bench.HEADLINE]
+    assert not unbenched, unbenched
     assert len(bench.COMPACT_KEEP) == len(set(bench.COMPACT_KEEP))
 
 
@@ -247,3 +250,35 @@ def test_size_gates_decide_only_through_common_fits():
         and any(a.name in ("fits", "*") for a in node.names)
     )
     assert not bound, bound
+
+
+def _source(path):
+    """Text of a file, by its path from the repo root."""
+    import pathlib
+
+    return (pathlib.Path(__file__).resolve().parent.parent / path).read_text()
+
+
+def _functions(path):
+    """{top-level function name: source} of one module."""
+    import ast
+
+    src = _source(path)
+    return {
+        node.name: ast.get_source_segment(src, node)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+    }
+
+
+def test_fixed_driver_costs_stay_out_of_the_query_path():
+    """Per-query driver work a session pays once: parallelize decides from
+    the plan estimate (``.rdd`` executes the frame's exchanges under AQE),
+    tables read parquet only through the schema memo (an uninferred read
+    runs a footer job), and get_spark sizes the generated-code cache."""
+    body = _functions("wurzel_spark/operators/common.py")["parallelize"]
+    assert ".rdd" not in body and "getNumPartitions" not in body
+    read = "spark.read.parquet("
+    memo = _functions("wurzel_spark/tables.py")["_read_parquet"]
+    assert _source("wurzel_spark/tables.py").count(read) == memo.count(read) > 0
+    assert "spark.sql.codegen.cache.maxEntries" in _functions("wurzel_spark/session.py")["get_spark"]

@@ -63,8 +63,39 @@ def parallelize(df: DataFrame) -> DataFrame:
     Small parquet inputs arrive as 1-2 partitions (one per file split); a
     CPU-bound expression (hashing every shingle 32×) then runs on one core.
     A round-robin repartition costs one cheap shuffle of the raw text and
-    buys full parallelism. At 100 TB inputs are naturally thousands of
-    partitions and this becomes a no-op.
+    buys full parallelism. The decision reads the plan's size estimate, so
+    no job runs: a frame smaller than ``defaultParallelism`` ×
+    ``spark.sql.files.maxPartitionBytes`` is repartitioned, since only a
+    scan at least that large is sure to split into that many partitions
+    by itself. A larger frame, or one of unknown size, is left alone — at
+    100 TB this is a no-op. The rule changes layout, never rows, so it is
+    not a size gate and stays outside :func:`fits`.
     """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(target) if df.rdd.getNumPartitions() < target else df
+    spark = df.sparkSession
+    target = spark.sparkContext.defaultParallelism
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    size = plan_size_bytes(df)
+    return df.repartition(target) if size is not None and size < target * split else df
+
+
+def _projects_a_checkpoint(df: DataFrame) -> bool:
+    """Whether ``df`` only selects (or renames) columns of a checkpointed
+    frame. Python UDFs and other expressions are not plain columns."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() == "Project":
+        exprs = node.projectList()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if e.nodeName() == "Alias":
+                e = e.child()
+            if e.nodeName() != "AttributeReference":
+                return False
+        node = node.child()
+    return node.nodeName() == "LogicalRDD" and node.rdd().isCheckpointed()
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """``df`` pinned with an eager ``localCheckpoint`` — unless it only
+    selects columns of a checkpoint already, whose blocks a second pin
+    would merely copy (one job per pin)."""
+    return df if _projects_a_checkpoint(df) else df.localCheckpoint()

@@ -411,8 +411,9 @@ def lsh_candidate_pairs(
     # (``bands`` longs — cheap) so the join can keep each pair only at its
     # FIRST shared band, replacing the distinct() that cost a full extra
     # shuffle over the candidate-pair set (pairs sharing j bands would
-    # otherwise surface j times).
-    ckpt = sig_df.localCheckpoint()
+    # otherwise surface j times). A projection of a checkpoint is already
+    # pinned (combined_near_dup_pairs), so ``common.pin`` leaves it alone.
+    ckpt = common.pin(sig_df)
     if "bhs" in ckpt.columns:
         # band hashes precomputed inside the signature kernel
         # (minhash_banded_signatures / combined_near_dup_signatures)
@@ -598,7 +599,7 @@ def simhash_band_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     # references would inline the signature expression 4×. Materialized
     # once — feeds both self-join sides, and pins the kernel output as an
     # attribute before the HOF references it (see lsh_candidate_pairs).
-    banded = sigs.localCheckpoint().selectExpr(
+    banded = common.pin(sigs).selectExpr(
         "id",
         "simhash",
         "posexplode(transform(array(simhash), s -> transform(sequence(0, 3),"

@@ -81,6 +81,20 @@ def get_spark(
         # MinHash signature) blow past the default 100-field cap and silently
         # fall out of whole-stage codegen into interpreted mode (~3× slower).
         .config("spark.sql.codegen.maxFields", "256")
+        # Generated classes are cached by source text, 100 by default. One
+        # pass of the perfbench `queries` workload alone makes ~190 entries,
+        # so every pass evicted and recompiled ~130-190 classes (~1 s of
+        # Janino compile, then JIT again) at the default; the whole
+        # registry at sf0.001 makes 3,983. 4096 holds the registry, for
+        # ~25 MB more metaspace than the default.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # The cache key is the class source, and by default the class name
+        # carries the whole-stage codegen id, which AQE assigns in the order
+        # stages get planned at run time. The same stage then missed the
+        # cache whenever its id moved (0-10 recompiles per warm pass of the
+        # benched queries); without the id it hits, and a first pass
+        # compiles ~15% fewer classes because equal stages share one.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Let AQE coalesce the partitions of a cached plan as it does for an
         # uncached one. Off (the default), a persisted frame keeps all
         # spark.sql.shuffle.partitions, and every Python UDF stage reading
@@ -146,3 +160,10 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated classes this JVM has compiled so far (Spark's
+    ``CodegenMetrics``); a warm query adds 0 when its classes stay cached."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -27,6 +27,57 @@ TABLE_NAMES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+#: inferred parquet schemas, keyed by (application id, absolute path, file
+#: identity, nanosAsLong) — see :func:`_read_parquet`
+_SCHEMAS: dict[tuple, T.StructType] = {}
+
+
+def _file_identity(path: str) -> tuple | None:
+    """``(name, st_mtime_ns, st_size)`` of each data file under ``path`` (a
+    file or a directory of part files); None when the path is not on the
+    local file system."""
+    files = [path]
+    if os.path.isdir(path):
+        files = sorted(
+            os.path.join(d, f)
+            for d, _, names in os.walk(path)
+            for f in names
+            if not f.startswith((".", "_"))
+        )
+    try:
+        return tuple((f, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)])
+    except OSError:
+        return None
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file.
+
+    Inference lists the files and runs a one-task footer job (~100 ms, the
+    first job of every query). A later read of the same unchanged file in
+    the same application reuses the inferred ``StructType``, so it runs no
+    job. Only the schema is kept, never a DataFrame: each call still
+    returns a fresh relation with new attribute ids. A rewritten file has
+    a new identity and is inferred again; so is one read under a different
+    ``nanosAsLong``, which changes the inferred type of nanosecond columns.
+    """
+    local = os.path.abspath(path)
+    ident = _file_identity(local)
+    if ident is None:
+        return spark.read.parquet(path)
+    key = (
+        spark.sparkContext.applicationId,
+        local,
+        ident,
+        spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Parquet scan → Catalyst gets pushdown + pruning.
@@ -44,7 +95,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
@@ -66,7 +117,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # spark.sql.timestampType and would no-op under TIMESTAMP_NTZ.
             df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
         return df
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
