@@ -282,3 +282,17 @@ def test_fixed_driver_costs_stay_out_of_the_query_path():
     memo = _functions("wurzel_spark/tables.py")["_read_parquet"]
     assert _source("wurzel_spark/tables.py").count(read) == memo.count(read) > 0
     assert "spark.sql.codegen.cache.maxEntries" in _functions("wurzel_spark/session.py")["get_spark"]
+
+
+def test_near_dup_core_is_written_once():
+    """dedup.py's near-dup core has one word-hash pass, one signature
+    kernel, one band join and one Jaccard verifier. The other Arrow kernel
+    is strip_duplicated_spans'."""
+    src = _source("wurzel_spark/operators/dedup.py")
+    assert src.count("@F.pandas_udf") == 2
+    assert src.count("_word_hashes(F.col(") == 1
+    assert "_word_hashes(F.col(" in _functions("wurzel_spark/operators/dedup.py")["_word_hash_frame"]
+    assert src.count("posexplode(bhs)") == 1
+    assert src.count('array_intersect("sh_a", "sh_b")') == 1
+    assert "cast(x AS string)" not in src
+    assert "minhash_signatures" not in src

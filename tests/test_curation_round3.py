@@ -308,6 +308,71 @@ def test_incremental_near_dup_matches_full_recompute(spark):
     assert not any(a == 101 for a, _ in inc)
 
 
+def _incremental_fixture(spark):
+    from wurzel_spark.operators.dedup import build_near_dup_index
+
+    base = [
+        (i, "s", f"doc {i} body " + " ".join(f"w{i}_{j}" for j in range(30)))
+        for i in range(20)
+    ]
+    corpus = _docs(spark, base)
+    # 100 copies corpus doc 5 (shares every band), 101 is fresh
+    new = _docs(spark, [(100, "s", base[5][2]), (101, "s", "fresh " * 30)])
+    return corpus, new, build_near_dup_index(corpus).localCheckpoint()
+
+
+def test_incremental_band_join_emits_a_multi_band_pair_once(spark):
+    from wurzel_spark.operators.dedup import (
+        build_near_dup_index,
+        incremental_near_dup_pairs,
+    )
+
+    corpus, new, index = _incremental_fixture(spark)
+    bhs = {r["id"]: r["bhs"] for r in index.unionByName(build_near_dup_index(new)).collect()}
+    assert sum(x == y for x, y in zip(bhs[100], bhs[5])) >= 2
+    got = [(r["id_a"], r["id_b"]) for r in incremental_near_dup_pairs(new, corpus, index).collect()]
+    assert got == [(100, 5)]
+
+
+def test_incremental_replayed_batch_never_pairs_a_doc_with_itself(spark):
+    from wurzel_spark.operators.dedup import (
+        build_near_dup_index,
+        incremental_near_dup_pairs,
+    )
+
+    corpus, new, _ = _incremental_fixture(spark)
+    # the batch is replayed: its own docs are already in the index
+    both = corpus.unionByName(new)
+    index = build_near_dup_index(both).localCheckpoint()
+    got = [(r["id_a"], r["id_b"]) for r in incremental_near_dup_pairs(new, both, index).collect()]
+    assert got == [(100, 5)]
+
+
+def test_incremental_reuses_a_checkpointed_new_sigs(spark):
+    """A new_sigs that is already a checkpoint is band-joined as it is:
+    one pin job fewer than for the same signatures unpinned."""
+    from wurzel_spark.operators.dedup import (
+        build_near_dup_index,
+        incremental_near_dup_pairs,
+    )
+
+    corpus, new, index = _incremental_fixture(spark)
+    sc = spark.sparkContext
+
+    def jobs(new_sigs, group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = incremental_near_dup_pairs(new, corpus, index, new_sigs=new_sigs).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert [(r["id_a"], r["id_b"]) for r in rows] == [(100, 5)]
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sigs = build_near_dup_index(new)
+    unpinned = jobs(sigs, "incremental-unpinned")
+    assert jobs(sigs.localCheckpoint(), "incremental-pinned") == unpinned - 1
+
+
 def test_curation_ops_on_empty_corpus(spark):
     """Every curation operator must return an empty (or all-zero) result on
     an empty corpus without raising — guards the div-by-zero and empty-agg

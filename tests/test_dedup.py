@@ -7,8 +7,8 @@ from wurzel_spark.operators.dedup import (
     combined_near_dup_signatures,
     exact_dedup,
     exact_dup_groups,
+    minhash_banded_signatures,
     minhash_dedup_pairs,
-    minhash_signatures,
     ngram_jaccard_pairs,
     simhash64,
     simhash_near_pairs,
@@ -81,7 +81,7 @@ def test_combined_signatures_match_single_family_ops(spark):
     combo = {r["id"]: r for r in combined_near_dup_signatures(df).collect()}
     for r in simhash64(df).collect():
         assert combo[r["id"]]["simhash"] == r["simhash"]
-    for r in minhash_signatures(df).collect():
+    for r in minhash_banded_signatures(df).collect():
         assert combo[r["id"]]["signature"] == r["signature"]
 
 

@@ -97,6 +97,44 @@ def test_events_ts_stays_a_timestamp_when_the_schema_is_reused(spark, sf_dir):
     assert df.agg(F.min("ts")).first()[0] is not None
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.mark.parametrize("before", ["false", "true"])
+def test_events_read_leaves_nanos_as_long_as_it_was(spark, sf_dir, before):
+    spark.conf.set(_NANOS_AS_LONG, before)
+    try:
+        table(spark, sf_dir, "events")
+        assert spark.conf.get(_NANOS_AS_LONG) == before
+    finally:
+        spark.conf.set(_NANOS_AS_LONG, "false")
+
+
+def test_events_read_keeps_other_tables_schema_memo(spark, sf_dir, tmp_path):
+    """nanosAsLong is part of the memo key: left on after an events read,
+    it made the next read of every other table infer its schema again."""
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), tmp_path / "orders.parquet")
+    spark.conf.set(_NANOS_AS_LONG, "false")
+    try:
+        table(spark, str(tmp_path), "orders")
+        table(spark, sf_dir, "events")
+        with jobs_run(spark) as ids:
+            table(spark, str(tmp_path), "orders")
+    finally:
+        spark.conf.set(_NANOS_AS_LONG, "false")
+    assert ids == []
+
+
+def test_nanosecond_events_ts_reads_as_timestamp(spark, tmp_path):
+    nanos = [1_600_000_000_123_456_789, 1_700_000_000_000_001_999]
+    ts = pa.array(nanos, pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": ts, "k": [1, 2]}), tmp_path / "events.parquet", version="2.6")
+    df = table(spark, str(tmp_path), "events")
+    assert isinstance(df.schema["ts"].dataType, T.TimestampType)
+    got = [r[0] for r in df.select(F.unix_micros("ts")).orderBy("k").collect()]
+    assert got == [n // 1000 for n in nanos]
+
+
 def test_each_call_returns_a_fresh_relation(spark, sf_dir):
     """Only the schema is memoized: a self-join of two reads resolves."""
     a, b = table(spark, sf_dir, "region"), table(spark, sf_dir, "region")

@@ -10,9 +10,12 @@ Scale notes:
   - exact dedup = map-side sha256 + hash-groupBy: one shuffle on the hash,
     never on the document body (project the hash FIRST, drop text before
     the shuffle).
-  - MinHash-LSH: signatures are computed in a single pass with xxhash64
-    (JVM codegen, no Python); banding turns all-pairs O(n²) into a groupBy
-    on band keys. Candidate verification re-joins only the candidate ids.
+  - Every near-dup stage starts from one word-hash pass (xxhash64 per
+    word, JVM codegen): shingle hashes derive from it, and one map-only
+    Arrow kernel turns it into the SimHash and MinHash signatures and the
+    LSH band hashes — no shuffle.
+  - MinHash-LSH: banding turns all-pairs O(n²) into a join on band keys.
+    Candidate verification re-joins only the candidate ids.
   - SimHash: 64-bit signature via per-bit majority vote of token hashes;
     near-dup = identical signature bands (hamming ≤ k via band partitioning).
 """
@@ -80,6 +83,26 @@ def shingles(text_col, n: int = 3):
     return F.array_distinct(grams)
 
 
+def _word_hashes(text_col):
+    """xxhash64 per word occurrence — the ONLY shape safe as an Arrow-kernel
+    argument: a plain transform over the split. Wrapping it in the
+    element_at(transform(array(...), ...)) let-binding (as shingle_hashes
+    does for JVM-side consumers) breaks Spark 4.1's Python-UDF extraction —
+    the UDF silently stays in the Project and dies at runtime with
+    INTERNAL_ERROR "Cannot evaluate expression" on any post-first-action
+    plan.
+    """
+    return F.transform(TXT.words(text_col), lambda w: F.xxhash64(w))
+
+
+def _word_hash_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, whs): each document's word-hash array — the one corpus pass
+    that signatures, shingles and the Jaccard verifier all start from."""
+    return common.parallelize(df).select(
+        F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
+    )
+
+
 def _shingle_hashes_from(hs, n: int):
     """Distinct shingle hashes from an ALREADY-hashed word array (``hs`` must
     be a lambda-bound variable so the word-hash array is evaluated once per
@@ -106,17 +129,13 @@ def shingle_hashes(text_col, n: int = 3):
     let-binding — HOF lambdas re-evaluate captured subexpressions per
     element, and binding the word-hash array avoids O(words²) hashing.
     """
-    whs = F.transform(TXT.words(text_col), lambda w: F.xxhash64(w))
-    return F.element_at(
-        F.transform(F.array(whs), lambda hs: _shingle_hashes_from(hs, n)), 1
-    )
+    return _shingle_hashes_from_whs(_word_hashes(text_col), n)
 
 
 def _shingle_hashes_from_whs(whs_col, n: int = 3):
     """:func:`shingle_hashes`, starting from an ALREADY-computed word-hash
-    array column — the shared-corpus-pass path (lsh_recall_audit): values
-    are identical by construction, since shingle_hashes(text) IS this
-    expression applied to _word_hashes(text). The transform(array(...))
+    array column (a :func:`_word_hash_frame`'s ``whs``): shingle_hashes(text)
+    IS this expression applied to _word_hashes(text). The transform(array(...))
     wrapper is the same let-binding: the whs expression appears exactly
     once in the plan even after projection collapse inlines it."""
     return F.element_at(
@@ -154,16 +173,12 @@ def ngram_jaccard_pairs(
     # along through the join and no separate size-aggregate joins are needed
     # — the text→shingle pipeline is evaluated once per join side instead of
     # three times, with zero extra shuffles.
-    # ``wh`` (optional, (id, whs) word-hash frame) is the shared-corpus-pass
-    # input: shingle hashes derive from it instead of re-splitting text —
-    # identical values (see _shingle_hashes_from_whs). Default None keeps
-    # the standalone plan byte-for-byte unchanged.
-    if wh is not None:
-        base = wh.select("id", _shingle_hashes_from_whs(F.col("whs"), n).alias("arr"))
-    else:
-        base = common.parallelize(df).select(
-            F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("arr")
-        )
+    # ``wh`` (optional, the :func:`_word_hash_frame` of ``df``) is the
+    # shared-corpus-pass input (lsh_recall_audit); without it the frame is
+    # built here.
+    if wh is None:
+        wh = _word_hash_frame(df, id_col, text_col)
+    base = wh.select("id", _shingle_hashes_from_whs(F.col("whs"), n).alias("arr"))
     sh = base.select("id", F.size("arr").alias("n"), F.explode("arr").alias("shingle"))
     if max_df is not None:
         # hyper-frequent shingles form a SMALL set (by definition each
@@ -198,7 +213,7 @@ def ngram_jaccard_pairs(
     return out.orderBy("id_a", "id_b") if sort else out
 
 
-# -------------------------------------------------------------- MinHash
+# ---------------------------------------------------- signature kernel
 
 # SplitMix64 finalizer (Steele, Lea & Flood 2014; public domain constants) —
 # the seeded hash family for MinHash slots. numpy uint64 arithmetic wraps
@@ -271,7 +286,10 @@ def _shingle_rows(H: np.ndarray, M: np.ndarray, n: int) -> tuple[np.ndarray, np.
 
 def _minhash_rows(H: np.ndarray, M: np.ndarray, num_hashes: int, n: int) -> np.ndarray:
     """(rows, num_hashes) MinHash matrix over the rows' shingle hashes:
-    slot i = min over valid shingles of splitmix64(sh ^ seed_i)."""
+    slot i = min over valid shingles of splitmix64(sh ^ seed_i). This
+    splitmix64 family is independent of the xxhash64 slice hashes the
+    exact-Jaccard side uses — MinHash only needs internal consistency,
+    asserted against the exact twin by the recall tests."""
     S, SM = _shingle_rows(H, M, n)
     sig = np.empty((S.shape[0], num_hashes), dtype=np.uint64)
     sentinel = np.uint64(0xFFFFFFFFFFFFFFFF)
@@ -281,19 +299,6 @@ def _minhash_rows(H: np.ndarray, M: np.ndarray, num_hashes: int, n: int) -> np.n
             mixed = np.where(SM, _splitmix64(S ^ seed), sentinel)
             sig[:, i] = mixed.min(axis=1)
     return sig.view(np.int64)
-
-
-def _minhash_udf(num_hashes: int, n: int):
-    @F.pandas_udf(ArrayType(LongType()))
-    def f(whs: pd.Series) -> pd.Series:
-        arrs = whs.to_numpy()
-        if len(arrs) == 0:
-            return pd.Series([], dtype=object)
-        H, M = _pad_hash_matrix(arrs)
-        sig = _minhash_rows(H, M, num_hashes, n)
-        return pd.Series(list(sig))
-
-    return f
 
 
 def _band_hashes_rows(sig: np.ndarray, bands: int, rows_per_band: int) -> np.ndarray:
@@ -315,43 +320,74 @@ def _band_hashes_rows(sig: np.ndarray, bands: int, rows_per_band: int) -> np.nda
     return out.view(np.int64)
 
 
-def _word_hashes(text_col):
-    """xxhash64 per word occurrence — the ONLY shape safe as an Arrow-kernel
-    argument: a plain transform over the split. Wrapping it in the
-    element_at(transform(array(...), ...)) let-binding (as shingle_hashes
-    does for JVM-side consumers) breaks Spark 4.1's Python-UDF extraction —
-    the UDF silently stays in the Project and dies at runtime with
-    INTERNAL_ERROR "Cannot evaluate expression" on any post-first-action
-    plan.
-    """
-    return F.transform(TXT.words(text_col), lambda w: F.xxhash64(w))
+def _simhash_rows(H: np.ndarray, M: np.ndarray) -> np.ndarray:
+    """Row-wise 64-bit SimHash over a padded uint64 hash matrix: per-bit
+    majority vote, bit_j = 1 iff Σ over valid tokens of ±1 (sign of
+    bit_j(hash)) is > 0."""
+    sig = np.zeros(H.shape[0], dtype=np.uint64)
+    one = np.uint64(1)
+    for j in range(64):
+        bits = ((H >> np.uint64(j)) & one).astype(np.int64)
+        votes = np.where(M, bits * 2 - 1, 0).sum(axis=1)
+        sig |= (votes > 0).astype(np.uint64) << np.uint64(j)
+    return sig.view(np.int64)
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", num_hashes: int = 32, n: int = 3
+#: the kernel's output columns per signature family
+_FAMILY_FIELDS = {
+    "simhash": [StructField("simhash", LongType())],
+    "minhash": [
+        StructField("signature", ArrayType(LongType())),
+        StructField("bhs", ArrayType(LongType())),
+    ],
+}
+
+
+def _signatures(
+    wh: DataFrame,
+    families: tuple[str, ...],
+    num_hashes: int = 32,
+    n: int = 3,
+    bands: int = 8,
 ) -> DataFrame:
-    """MinHash signature per document: min over the doc's shingle hashes of
-    a seeded splitmix64 re-hash, one slot per hash function.
+    """(id, <family columns>) from ONE map-only Arrow kernel over a
+    :func:`_word_hash_frame`: each batch pads into one (rows, max_words)
+    uint64 matrix, from which every requested family is computed — no
+    explode, no shuffle. ``"simhash"`` gives the 64-bit ``simhash``;
+    ``"minhash"`` gives the ``num_hashes``-slot ``signature`` (shingle
+    hashes derive from the word hashes inside the kernel) and its
+    ``bands`` LSH band hashes ``bhs``.
 
-    Shape: word hashes computed JVM-side (xxhash64 per occurrence), then a
-    map-only Arrow kernel derives shingle hashes (rolling splitmix64 over n
-    consecutive word hashes) and takes the ``num_hashes`` masked
-    column-mins — zero shuffles. This replaced an explode →
-    ``num_hashes``-way min() hash aggregate: codegen'd and
-    partial-combined, but it still shuffled a partial signature per (doc,
-    partition) and re-hashed every shingle ``num_hashes`` times in the JVM
-    expression interpreter; the kernel does the same work as vectorized
-    passes over one padded uint64 matrix per Arrow batch. (The shingle→slot
-    hash family here is splitmix64-based and intentionally independent of
-    the xxhash64 slice hashes :func:`ngram_jaccard_pairs` uses — MinHash
-    only needs internal consistency, asserted against the exact twin by the
-    recall tests.)
+    Zero-word docs are dropped for every family: their all-sentinel
+    signatures land in IDENTICAL band buckets, so e empty docs would
+    create O(e²) LSH candidate pairs.
     """
-    base = common.parallelize(df).select(
-        F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
-    ).filter(F.size("whs") > 0)
-    return base.select("id", _minhash_udf(num_hashes, n)("whs").alias("signature"))
+    rows_per_band = num_hashes // bands
+    fields = [f for fam in families for f in _FAMILY_FIELDS[fam]]
 
+    @F.pandas_udf(StructType(fields))
+    def _kernel(whs: pd.Series) -> pd.DataFrame:
+        arrs = whs.to_numpy()
+        if len(arrs) == 0:
+            return pd.DataFrame({f.name: [] for f in fields})
+        H, M = _pad_hash_matrix(arrs)
+        out = {}
+        if "simhash" in families:
+            out["simhash"] = _simhash_rows(H, M)
+        if "minhash" in families:
+            sig = _minhash_rows(H, M, num_hashes, n)
+            out["signature"] = list(sig)
+            out["bhs"] = list(_band_hashes_rows(sig, bands, rows_per_band))
+        return pd.DataFrame(out)
+
+    return (
+        wh.filter(F.size("whs") > 0)
+        .select("id", _kernel("whs").alias("c"))
+        .select("id", *[F.col(f"c.{f.name}").alias(f.name) for f in fields])
+    )
+
+
+# -------------------------------------------------------------- MinHash
 
 def minhash_banded_signatures(
     df: DataFrame,
@@ -362,80 +398,47 @@ def minhash_banded_signatures(
     bands: int = 8,
     wh: DataFrame | None = None,
 ) -> DataFrame:
-    """(id, signature, bhs): MinHash signature plus its LSH band hashes,
-    both from the ONE Arrow kernel pass — the band fold costs a few
-    vectorized ops on numbers already in cache, vs. a separate JVM
-    projection that stringified each band to feed xxhash64."""
-    rows_per_band = num_hashes // bands
-    out_type = StructType(
-        [
-            StructField("signature", ArrayType(LongType())),
-            StructField("bhs", ArrayType(LongType())),
-        ]
-    )
-
-    @F.pandas_udf(out_type)
-    def _sig_bands(whs: pd.Series) -> pd.DataFrame:
-        arrs = whs.to_numpy()
-        if len(arrs) == 0:
-            return pd.DataFrame({"signature": [], "bhs": []})
-        H, M = _pad_hash_matrix(arrs)
-        sig = _minhash_rows(H, M, num_hashes, n)
-        bhs = _band_hashes_rows(sig, bands, rows_per_band)
-        return pd.DataFrame({"signature": list(sig), "bhs": list(bhs)})
-
+    """(id, signature, bhs): MinHash signature per document — slot i = min
+    over the doc's shingle hashes of a seeded splitmix64 re-hash — plus its
+    LSH band hashes, from the signature kernel. ``wh`` (the
+    :func:`_word_hash_frame` of ``df``) skips the word-hash pass."""
     if wh is None:
-        wh = common.parallelize(df).select(
-            F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
-        )
-    base = wh.filter(F.size("whs") > 0)
-    return base.select("id", _sig_bands("whs").alias("c")).select(
-        "id", F.col("c.signature").alias("signature"), F.col("c.bhs").alias("bhs")
-    )
+        wh = _word_hash_frame(df, id_col, text_col)
+    return _signatures(wh, ("minhash",), num_hashes, n, bands)
 
 
-def lsh_candidate_pairs(
-    sig_df: DataFrame, bands: int = 8, rows_per_band: int = 4
-) -> DataFrame:
-    """LSH banding: split each signature into ``bands`` bands of
-    ``rows_per_band`` values; documents sharing any band hash are candidate
-    near-duplicates. groupBy on (band_idx, band_hash) replaces the O(n²)
-    comparison — the core trick that makes near-dedup feasible at 100 TB.
+def _band_pairs(sigs: DataFrame, other: DataFrame | None = None) -> DataFrame:
+    """(id_a, id_b) pairs of documents that share a band hash (``bhs``),
+    each pair once. Without ``other`` this is the self-join of ``sigs``
+    (id_a < id_b); with it, id_a comes from ``sigs`` (a new batch) and
+    id_b from ``other`` (an index), and no document pairs with itself — a
+    replayed batch may already be in the index.
+
+    ``sigs`` is pinned: it feeds both self-join sides (without this the
+    whole signature pipeline runs twice), and the pin turns the kernel's
+    ``bhs`` into a plain attribute — projection collapse would otherwise
+    inline the Python UDF call into the zip_with HOF below, where Spark
+    cannot evaluate it. A projection of a checkpoint is already pinned, so
+    ``common.pin`` leaves it alone.
+
+    Each exploded row carries its doc's whole band-hash array (``bands``
+    longs — cheap), so the join keeps each pair only at its FIRST shared
+    band: a pair sharing j bands would otherwise surface j times, and
+    this per-row filter replaces the distinct() that cost a full extra
+    shuffle over the candidate-pair set.
     """
-    # Materialize the signature table once: it feeds both sides of the
-    # self-join (without this the whole signature pipeline runs twice), and
-    # the checkpoint also pins the Arrow-kernel signature column as a plain
-    # attribute — projection collapse would otherwise inline the Python UDF
-    # call into the band-hash HOF argument, where Spark cannot evaluate it.
-    # Each exploded row also carries the doc's full band-hash array
-    # (``bands`` longs — cheap) so the join can keep each pair only at its
-    # FIRST shared band, replacing the distinct() that cost a full extra
-    # shuffle over the candidate-pair set (pairs sharing j bands would
-    # otherwise surface j times). A projection of a checkpoint is already
-    # pinned (combined_near_dup_pairs), so ``common.pin`` leaves it alone.
-    ckpt = common.pin(sig_df)
-    if "bhs" in ckpt.columns:
-        # band hashes precomputed inside the signature kernel
-        # (minhash_banded_signatures / combined_near_dup_signatures)
-        with_bands = ckpt.select("id", "bhs")
-    else:
-        # derive from the raw signature JVM-side. transform(array(signature),
-        # sig -> ...) is a let-binding: the (large, folded) signature
-        # expression appears exactly ONCE in the plan even after Catalyst
-        # collapses projections — element_at per band position would inline
-        # it bands×rows times.
-        band_arr = f"""
-        transform(array(signature), sig ->
-          transform(sequence(0, {bands - 1}),
-                    b -> xxhash64(array_join(
-                           transform(slice(sig, b * {rows_per_band} + 1, {rows_per_band}),
-                                     x -> cast(x AS string)), ','))))[0]
-        """
-        with_bands = ckpt.selectExpr("id", f"{band_arr} AS bhs")
-    banded = with_bands.selectExpr(
-        "id", "bhs", "posexplode(bhs) AS (band_idx, band_hash)"
+
+    def banded(s: DataFrame) -> DataFrame:
+        return s.select("id", "bhs").selectExpr(
+            "id", "bhs", "posexplode(bhs) AS (band_idx, band_hash)"
+        )
+
+    a = banded(common.pin(sigs))
+    b = a if other is None else banded(other)
+    a, b = a.alias("a"), b.alias("b")
+    ids = (
+        F.col("a.id") < F.col("b.id") if other is None else F.col("a.id") != F.col("b.id")
     )
-    a, b = banded.alias("a"), banded.alias("b")
     first_shared = F.expr(
         "array_position(zip_with(a.bhs, b.bhs, (x, y) -> x = y), true) - 1"
     )
@@ -444,16 +447,52 @@ def lsh_candidate_pairs(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
+            & ids,
         )
         .filter(F.col("a.band_idx") == first_shared)
         .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
     )
 
 
+def lsh_candidate_pairs(
+    sig_df: DataFrame, bands: int = 8, rows_per_band: int = 4
+) -> DataFrame:
+    """LSH banding: documents sharing any band hash are candidate
+    near-duplicates. The join on (band_idx, band_hash) replaces the O(n²)
+    comparison — the core trick that makes near-dedup feasible at 100 TB.
+    ``sig_df`` carries the ``bhs`` the signature kernel folded with this
+    ``bands`` × ``rows_per_band`` layout (:func:`minhash_banded_signatures`,
+    :func:`combined_near_dup_signatures`).
+    """
+    return _band_pairs(sig_df)
+
+
 #: candidate-id column of the verify semi-joins; reserved so that it can
 #: never collide with a caller's id column
 _CAND_ID = "__cand_id"
+
+
+def _candidate_shingles(
+    df: DataFrame,
+    ids: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    wh: DataFrame | None = None,
+) -> DataFrame:
+    """(id, sh): shingle hashes of just the docs whose id is in ``ids``
+    (one ``_CAND_ID`` column), reached through a broadcast LEFT SEMI join.
+    ``wh`` (the :func:`_word_hash_frame` of ``df``) is semi-joined instead
+    of ``df`` — no second text scan and split."""
+    if wh is None:
+        wh = _word_hash_frame(
+            df.join(F.broadcast(ids), F.col(id_col) == F.col(_CAND_ID), "left_semi"),
+            id_col,
+            text_col,
+        )
+    else:
+        wh = wh.join(F.broadcast(ids), F.col("id") == F.col(_CAND_ID), "left_semi")
+    return wh.select("id", _shingle_hashes_from_whs(F.col("whs"), n).alias("sh"))
 
 
 def _verify_jaccard_pairs(
@@ -464,6 +503,7 @@ def _verify_jaccard_pairs(
     threshold: float,
     n: int,
     wh: DataFrame | None = None,
+    df_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (id_a, id_b) pairs.
 
@@ -477,30 +517,24 @@ def _verify_jaccard_pairs(
     shape that works unchanged when the candidate set is huge. The pair
     list itself is always broadcast so shingle arrays never shuffle.
     ``cands`` must be materialized (localCheckpoint) by the caller.
+
+    Both ids come from ``df`` (or ``wh``, see :func:`_candidate_shingles`);
+    ``df_b`` is the incremental case, where id_b docs come from that frame.
     """
-    cand_ids = (
-        cands.select(F.col("id_a").alias(_CAND_ID))
-        .union(cands.select(F.col("id_b")))
-        .distinct()
-    )
-    if wh is not None:
-        # shared-corpus-pass path: candidate docs' shingles derive from the
-        # (id, whs) word-hash frame — no second text scan/split.
-        needed_wh = wh.join(
-            F.broadcast(cand_ids), F.col("id") == F.col(_CAND_ID), "left_semi"
+    if df_b is None:
+        cand_ids = (
+            cands.select(F.col("id_a").alias(_CAND_ID))
+            .union(cands.select(F.col("id_b")))
+            .distinct()
         )
-        sh = needed_wh.select(
-            "id", _shingle_hashes_from_whs(F.col("whs"), n).alias("sh")
-        )
+        sh_a = sh_b = _candidate_shingles(df, cand_ids, id_col, text_col, n, wh)
     else:
-        needed = df.join(
-            F.broadcast(cand_ids), F.col(id_col) == F.col(_CAND_ID), "left_semi"
-        )
-        sh = common.parallelize(needed).select(
-            F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("sh")
-        )
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+        ids_a = cands.select(F.col("id_a").alias(_CAND_ID)).distinct()
+        ids_b = cands.select(F.col("id_b").alias(_CAND_ID)).distinct()
+        sh_a = _candidate_shingles(df, ids_a, id_col, text_col, n)
+        sh_b = _candidate_shingles(df_b, ids_b, id_col, text_col, n)
+    a = sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    b = sh_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -531,7 +565,6 @@ def minhash_dedup_pairs(
     the signatures and the candidate verification from one shared corpus
     pass (lsh_recall_audit).
     """
-    rows_per_band = num_hashes // bands
     if sigs is None:
         sigs = minhash_banded_signatures(
             df, id_col, text_col, num_hashes, n, bands, wh=wh
@@ -541,53 +574,16 @@ def minhash_dedup_pairs(
     # pipeline would be recomputed per use. localCheckpoint keeps it
     # distributed (executor block storage); on a long-lived cluster use a
     # checkpoint dir instead for lineage resilience.
-    cands = lsh_candidate_pairs(sigs, bands, rows_per_band).localCheckpoint()
+    cands = lsh_candidate_pairs(sigs, bands, num_hashes // bands).localCheckpoint()
     return _verify_jaccard_pairs(df, cands, id_col, text_col, threshold, n, wh=wh)
 
 
 # -------------------------------------------------------------- SimHash
 
-def _simhash_rows(H: np.ndarray, M: np.ndarray) -> np.ndarray:
-    """Row-wise 64-bit SimHash over a padded uint64 hash matrix: per-bit
-    majority vote, bit_j = 1 iff Σ over valid tokens of ±1 (sign of
-    bit_j(hash)) is > 0."""
-    sig = np.zeros(H.shape[0], dtype=np.uint64)
-    one = np.uint64(1)
-    for j in range(64):
-        bits = ((H >> np.uint64(j)) & one).astype(np.int64)
-        votes = np.where(M, bits * 2 - 1, 0).sum(axis=1)
-        sig |= (votes > 0).astype(np.uint64) << np.uint64(j)
-    return sig.view(np.int64)
-
-
-@F.pandas_udf(LongType())
-def _simhash_kernel(hs: pd.Series) -> pd.Series:
-    """Arrow-batched SimHash: rows pad into an (N, max_words) uint64
-    matrix, then 64 masked vote-sums — no explode, no shuffle. Same vote
-    rule as :func:`combined_near_dup_signatures` (parity asserted in
-    tests)."""
-    arrs = hs.to_numpy()
-    if len(arrs) == 0:
-        return pd.Series([], dtype=np.int64)
-    H, M = _pad_hash_matrix(arrs)
-    return pd.Series(_simhash_rows(H, M))
-
-
 def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """64-bit SimHash: per-bit majority vote over xxhash64(token).
-
-    Shape: word hashes computed JVM-side (xxhash64 per occurrence), then a
-    map-only Arrow kernel folds them into the signature — zero shuffles.
-    This replaced an explode → 64-conditional-sum hash aggregate: correct
-    and codegen'd, but the 64-column vote aggregate alone cost more than
-    the entire rest of the pipeline (measured 2.2 s of a 3.0 s total at
-    sf0.1), and at 100 TB it shuffled 64 longs per (doc, partition) that
-    the map-only form never materializes.
-    """
-    base = common.parallelize(df).select(
-        F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("hs")
-    ).filter(F.size("hs") > 0)
-    return base.select("id", _simhash_kernel("hs").alias("simhash"))
+    """(id, simhash): 64-bit SimHash, a per-bit majority vote over
+    xxhash64(token), from the signature kernel."""
+    return _signatures(_word_hash_frame(df, id_col, text_col), ("simhash",))
 
 
 def simhash_band_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
@@ -595,10 +591,10 @@ def simhash_band_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     4-band pigeonhole trick: if hamming(a,b) ≤ 3, at least one of the four
     16-bit bands is identical → join on band equality, verify with
     bit_count."""
-    # let-bind simhash once (see lsh_candidate_pairs) — 4 direct band
-    # references would inline the signature expression 4×. Materialized
-    # once — feeds both self-join sides, and pins the kernel output as an
-    # attribute before the HOF references it (see lsh_candidate_pairs).
+    # let-bind simhash once — 4 direct band references would inline the
+    # signature expression 4×. Materialized once — feeds both self-join
+    # sides, and pins the kernel output as an attribute before the HOF
+    # references it (see _band_pairs).
     banded = common.pin(sigs).selectExpr(
         "id",
         "simhash",
@@ -658,64 +654,18 @@ def combined_near_dup_signatures(
     bands: int = 8,
 ) -> DataFrame:
     """BOTH near-dup signature families — 64-bit SimHash and the
-    ``num_hashes``-slot MinHash signature — from ONE corpus pass.
+    ``num_hashes``-slot MinHash signature with its band hashes — from ONE
+    corpus pass and ONE signature-kernel call over ONE shared word-hash
+    array. At 100 TB the corpus pass IS the cost, so a pipeline wanting
+    both families should use this and feed :func:`simhash_band_pairs` /
+    :func:`lsh_candidate_pairs` from the shared result.
 
-    MinHash wants shingle hashes, SimHash wants word hashes, but both start
-    from xxhash64(word): tag each hash with its kind (0 = word occurrence,
-    1 = distinct shingle), explode the concatenated array once, and compute
-    the 64 vote-sums and ``num_hashes`` mins in a single hash aggregate.
-    Halves the scan/tokenize/explode/shuffle cost vs running
-    :func:`simhash64` and :func:`minhash_signatures` separately — at 100 TB
-    the corpus pass IS the cost, so a pipeline wanting both families should
-    use this and feed :func:`simhash_band_pairs` / :func:`lsh_candidate_pairs`
-    from the shared result.
-
-    Output: (id, simhash, signature). Values are bit-identical to the
-    single-family operators (same hashing/mixing), and zero-word docs are
-    dropped — the same empty-doc policy as minhash_signatures /
-    minhash_banded_signatures (all-sentinel signatures would pair every
-    empty doc with every other).
-
-    Both signatures come from ONE map-only Arrow kernel over ONE shared
-    word-hash array in ONE scan — the earlier form was a shared explode
-    into a 64-vote + ``num_hashes``-min hash aggregate, which was
-    codegen'd but shuffled partial signatures; this shape shuffles
-    nothing, and the shingle hashes MinHash needs derive from the word
-    hashes inside the kernel (see :func:`minhash_signatures`).
+    Output: (id, simhash, signature, bhs). Values are bit-identical to
+    :func:`simhash64` and :func:`minhash_banded_signatures`, with the same
+    empty-doc policy (see :func:`_signatures`).
     """
-    rows_per_band = num_hashes // bands
-    out_type = StructType(
-        [
-            StructField("simhash", LongType()),
-            StructField("signature", ArrayType(LongType())),
-            StructField("bhs", ArrayType(LongType())),
-        ]
-    )
-
-    @F.pandas_udf(out_type)
-    def _combined(whs: pd.Series) -> pd.DataFrame:
-        arrs = whs.to_numpy()
-        if len(arrs) == 0:
-            return pd.DataFrame({"simhash": [], "signature": [], "bhs": []})
-        H, M = _pad_hash_matrix(arrs)
-        sig = _minhash_rows(H, M, num_hashes, n)
-        bhs = _band_hashes_rows(sig, bands, rows_per_band)
-        return pd.DataFrame(
-            {"simhash": _simhash_rows(H, M), "signature": list(sig), "bhs": list(bhs)}
-        )
-
-    base = common.parallelize(df).select(
-        F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
-    )
-    # Same empty-doc policy as minhash_signatures / minhash_banded_signatures:
-    # zero-word docs get all-sentinel signatures that land in IDENTICAL band
-    # buckets, so e empty docs would create O(e²) LSH candidate pairs.
-    base = base.filter(F.size("whs") > 0)
-    return base.select("id", _combined("whs").alias("c")).select(
-        "id",
-        F.col("c.simhash").alias("simhash"),
-        F.col("c.signature").alias("signature"),
-        F.col("c.bhs").alias("bhs"),
+    return _signatures(
+        _word_hash_frame(df, id_col, text_col), ("simhash", "minhash"), num_hashes, n, bands
     )
 
 
@@ -1593,59 +1543,16 @@ def incremental_near_dup_pairs(
     New-vs-new duplicates are intentionally out of scope here — run the
     batch through :func:`minhash_dedup_pairs` for those; a daily pipeline
     does both (new-vs-corpus, then new-vs-new) and unions the results.
+    The band join and the verifier are :func:`minhash_dedup_pairs`' own;
+    a ``new_sigs`` that is already a checkpoint is not copied again.
     """
-    rows_per_band = num_hashes // bands
     if new_sigs is None:
         new_sigs = minhash_banded_signatures(
             new_docs, id_col, text_col, num_hashes, n, bands
         )
-    nb = (
-        new_sigs.localCheckpoint()
-        .select("id", "bhs")
-        .selectExpr("id", "posexplode(bhs) AS (band_idx, band_hash)")
-    )
-    ib = corpus_index.select("id", "bhs").selectExpr(
-        "id", "posexplode(bhs) AS (band_idx, band_hash)"
-    )
-    # every (new, corpus) pair surfaces once per shared band → groupBy
-    # dedups; the pair set is small (it's the candidate list)
-    cands = (
-        nb.alias("a")
-        .join(
-            ib.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash")),
-        )
-        .filter(F.col("a.id") != F.col("b.id"))  # a replayed batch may
-        # already be in the index — never pair a doc with itself
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    new_needed = new_docs.join(
-        F.broadcast(cands.select(F.col("id_a").alias(_CAND_ID)).distinct()),
-        F.col(id_col) == F.col(_CAND_ID),
-        "left_semi",
-    )
-    old_needed = corpus_docs.join(
-        F.broadcast(cands.select(F.col("id_b").alias(_CAND_ID)).distinct()),
-        F.col(id_col) == F.col(_CAND_ID),
-        "left_semi",
-    )
-    sh_new = common.parallelize(new_needed).select(
-        F.col(id_col).alias("id_a"), shingle_hashes(F.col(text_col), n).alias("sh_a")
-    )
-    sh_old = common.parallelize(old_needed).select(
-        F.col(id_col).alias("id_b"), shingle_hashes(F.col(text_col), n).alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        sh_new.join(F.broadcast(cands), "id_a")
-        .join(sh_old, "id_b")
-        .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-        .orderBy("id_a", "id_b")
+    cands = _band_pairs(new_sigs, corpus_index).localCheckpoint()
+    return _verify_jaccard_pairs(
+        new_docs, cands, id_col, text_col, threshold, n, df_b=corpus_docs
     )
 
 
@@ -2747,8 +2654,8 @@ def lsh_param_sweep(
     """
     from functools import reduce as _reduce
 
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, n)
-    sigs = sigs.localCheckpoint(eager=True)
+    sigs = minhash_banded_signatures(df, id_col, text_col, num_hashes, n)
+    sigs = sigs.select("id", "signature").localCheckpoint(eager=True)
     parts = []
     for b, r in LSH_SWEEP_CONFIGS:
         bands_arr = F.array(
@@ -2848,18 +2755,9 @@ def lsh_recall_audit(
     _shingle_hashes_from_whs is shingle_hashes by construction,
     equivalence-tested in tests/).
     """
-    from wurzel_spark.operators.dedup import (  # self-import for clarity
-        minhash_dedup_pairs,
-        ngram_jaccard_pairs,
-    )
-
     wh = None
     if common.input_fits(docs):
-        wh = (
-            common.parallelize(docs)
-            .select(F.col("doc_id").alias("id"), _word_hashes(F.col("text")).alias("whs"))
-            .localCheckpoint(eager=True)
-        )
+        wh = _word_hash_frame(docs, "doc_id", "text").localCheckpoint(eager=True)
     kw = {"max_df": max_df} if max_df is not None else {}
     exact = ngram_jaccard_pairs(docs, threshold=threshold, wh=wh, **kw).select(
         "id_a", "id_b", F.lit(1).alias("in_exact")

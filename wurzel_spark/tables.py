@@ -91,11 +91,19 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     pinned to UTC (session.py), so the NTZ→LTZ cast maps wall time to the
     identical epoch micros DuckDB sees for the same naive values —
     cross-engine bit-exact either way (verified on every row at sf0.01).
+    ``nanosAsLong`` holds only while the events schema is inferred; the
+    caller's value comes back afterwards, so no other read in the session
+    infers its nanosecond columns as longs.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_parquet(spark, path)
+        conf = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(conf)
+        spark.conf.set(conf, "true")
+        try:
+            df = _read_parquet(spark, path)
+        finally:
+            spark.conf.set(conf, prev)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
