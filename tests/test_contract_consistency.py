@@ -296,3 +296,31 @@ def test_near_dup_core_is_written_once():
     assert src.count('array_intersect("sh_a", "sh_b")') == 1
     assert "cast(x AS string)" not in src
     assert "minhash_signatures" not in src
+
+
+def test_ann_core_is_written_once():
+    """similarity.py's ANN core has one ranker, one nearest-cell argmax,
+    one PQ ADC scorer and one exact rerank. The column ``cosine`` (which
+    fails on a zero vector under ANSI) stays with the three audits that
+    compute it; every other scorer uses the ``cosine_pd`` kernel."""
+    import ast
+
+    path = "wurzel_spark/operators/similarity.py"
+    src, fns = _source(path), _functions(path)
+    sites = {
+        "row_number()": "_rank",
+        "max_by(": "_nearest_cell",
+        'collect_list(F.struct("sub", "t"))': "_adc_scores",
+        "shortlist.join(": "_adc_top_k",
+    }
+    for needle, fn in sites.items():
+        assert src.count(needle) == 1 and needle in fns[fn], needle
+    assert src.count("_sub_l2(") == 2 and "_sub_l2(" in fns["_adc_scores"]
+    assert src.count("import Window") == 1
+    callers = {
+        name
+        for name, body in fns.items()
+        for node in ast.walk(ast.parse(body))
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "cosine"
+    }
+    assert callers == {"binary_embedding_recall", "retrieval_ndcg_eval", "ivf_nprobe_sweep"}

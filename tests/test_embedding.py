@@ -8,6 +8,7 @@ from wurzel_spark.operators.embedding import (
     embed_stage,
     embedding_distribution_stats,
     hash_embedding,
+    simple_context,
     truncated_embed_stage,
 )
 from wurzel_spark.operators.splitter import split_stage
@@ -72,3 +73,19 @@ def test_distribution_stats(spark):
     assert row["min"] <= row["p5"] <= row["p25"] <= row["median"]
     assert row["median"] <= row["p75"] <= row["p95"] <= row["max"]
     assert row["std"] > 0
+
+
+def test_simple_context_drops_stopwords_and_punctuation(spark):
+    df = spark.createDataFrame(
+        [(1, "The cat, AND the Dog!  sat on."), (2, ""), (3, "   "), (4, None)],
+        "id int, keywords string",
+    )
+    out = {
+        r["id"]: r["keywords"]
+        for r in simple_context(df, stopwords=("the", "AND", "On")).collect()
+    }
+    # stopwords match in any case; .,!? before whitespace splits off, a
+    # trailing one stays on its word
+    assert out[1] == "cat Dog sat on."
+    assert out[2] == "" and out[3] == ""
+    assert out[4] is None

@@ -39,3 +39,20 @@ def test_sweep_thresholds_monotone_in_r(spark):
     th = [r["threshold_permille"] for r in out]
     assert th == sorted(th), th  # stricter configs target higher jaccard
     assert th[0] < 300 and th[-1] > 800  # the grid spans the S-curve
+
+
+def test_sweep_kernel_emits_no_band_hashes(spark, monkeypatch):
+    """The sweep reads only the signature, so the kernel it calls folds
+    no band hashes."""
+    from wurzel_spark.operators import dedup
+
+    kernel, seen = dedup._signatures, []
+
+    def spy(*args, **kwargs):
+        out = kernel(*args, **kwargs)
+        seen.append(out.columns)
+        return out
+
+    monkeypatch.setattr(dedup, "_signatures", spy)
+    lsh_param_sweep(_corpus(spark)).collect()
+    assert seen == [["id", "signature"]]

@@ -517,3 +517,21 @@ def test_pq_encode_empty_codebook_returns_empty(spark):
     out = pq_encode(emb, cb, m=2)
     assert out.columns == ["vec_id", "sub", "code"]
     assert out.count() == 0
+
+
+def test_zero_norm_vector_fails_loudly(spark):
+    """A zero vector has no cosine. The kernel raises instead of ranking
+    its NaN above every neighbour or centroid; Lloyd's driver path raises
+    like its distributed twin."""
+    import pytest
+
+    from wurzel_spark.operators.similarity import kmeans_train
+
+    rows = [(i, [1.0 + (i == j) for j in range(4)]) for i in range(1, 6)]
+    emb = spark.createDataFrame(rows + [(0, [0.0] * 4)], "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="zero-norm"):
+        brute_force_topk(emb, emb.filter(F.col("vec_id") == 1), k=3).collect()
+    with pytest.raises(Exception, match="zero-norm"):
+        ivf_assign(emb, emb.filter(F.col("vec_id").isin(1, 2))).collect()
+    with pytest.raises(Exception, match="zero-norm"):
+        kmeans_train(emb, k=2, max_iters=1).collect()

@@ -336,10 +336,8 @@ def _simhash_rows(H: np.ndarray, M: np.ndarray) -> np.ndarray:
 #: the kernel's output columns per signature family
 _FAMILY_FIELDS = {
     "simhash": [StructField("simhash", LongType())],
-    "minhash": [
-        StructField("signature", ArrayType(LongType())),
-        StructField("bhs", ArrayType(LongType())),
-    ],
+    "minhash": [StructField("signature", ArrayType(LongType()))],
+    "bands": [StructField("bhs", ArrayType(LongType()))],
 }
 
 
@@ -355,8 +353,9 @@ def _signatures(
     uint64 matrix, from which every requested family is computed — no
     explode, no shuffle. ``"simhash"`` gives the 64-bit ``simhash``;
     ``"minhash"`` gives the ``num_hashes``-slot ``signature`` (shingle
-    hashes derive from the word hashes inside the kernel) and its
-    ``bands`` LSH band hashes ``bhs``.
+    hashes derive from the word hashes inside the kernel); ``"bands"``,
+    asked for after ``"minhash"``, adds its ``bands`` LSH band hashes
+    ``bhs``.
 
     Zero-word docs are dropped for every family: their all-sentinel
     signatures land in IDENTICAL band buckets, so e empty docs would
@@ -377,7 +376,8 @@ def _signatures(
         if "minhash" in families:
             sig = _minhash_rows(H, M, num_hashes, n)
             out["signature"] = list(sig)
-            out["bhs"] = list(_band_hashes_rows(sig, bands, rows_per_band))
+            if "bands" in families:
+                out["bhs"] = list(_band_hashes_rows(sig, bands, rows_per_band))
         return pd.DataFrame(out)
 
     return (
@@ -404,7 +404,7 @@ def minhash_banded_signatures(
     :func:`_word_hash_frame` of ``df``) skips the word-hash pass."""
     if wh is None:
         wh = _word_hash_frame(df, id_col, text_col)
-    return _signatures(wh, ("minhash",), num_hashes, n, bands)
+    return _signatures(wh, ("minhash", "bands"), num_hashes, n, bands)
 
 
 def _band_pairs(sigs: DataFrame, other: DataFrame | None = None) -> DataFrame:
@@ -665,7 +665,11 @@ def combined_near_dup_signatures(
     empty-doc policy (see :func:`_signatures`).
     """
     return _signatures(
-        _word_hash_frame(df, id_col, text_col), ("simhash", "minhash"), num_hashes, n, bands
+        _word_hash_frame(df, id_col, text_col),
+        ("simhash", "minhash", "bands"),
+        num_hashes,
+        n,
+        bands,
     )
 
 
@@ -2654,8 +2658,9 @@ def lsh_param_sweep(
     """
     from functools import reduce as _reduce
 
-    sigs = minhash_banded_signatures(df, id_col, text_col, num_hashes, n)
-    sigs = sigs.select("id", "signature").localCheckpoint(eager=True)
+    sigs = _signatures(
+        _word_hash_frame(df, id_col, text_col), ("minhash",), num_hashes, n
+    ).localCheckpoint(eager=True)
     parts = []
     for b, r in LSH_SWEEP_CONFIGS:
         bands_arr = F.array(

@@ -147,10 +147,10 @@ def clean_for_embedding(df: DataFrame, md_col: str = "md") -> DataFrame:
 
 def simple_context(df: DataFrame, keywords_col: str = "keywords", stopwords: tuple[str, ...] = ()) -> DataFrame:
     """Stopword-filtered keyword context (step.py:168-181): tokenize
-    keywords, drop stopwords, re-join. Stopword set folds to a literal array
-    (broadcast by constant folding).
+    keywords, drop stopwords (in any case), re-join. Stopword set folds to
+    a literal array (broadcast by constant folding).
     """
-    stop_arr = F.array(*[F.lit(s) for s in stopwords]) if stopwords else F.array()
+    stop_arr = F.array(*[F.lit(s.lower()) for s in stopwords]) if stopwords else F.array()
     toks = F.split(F.col(keywords_col), r"([.,!?]+)?\s+")
     kept = F.filter(toks, lambda t: (t != "") & ~F.array_contains(stop_arr, F.lower(t)))
     return df.withColumn("keywords", F.array_join(kept, " "))

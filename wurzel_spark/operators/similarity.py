@@ -9,6 +9,17 @@ Vector math is pure `zip_with`/`aggregate` array algebra: elementwise
 float→double products folded left-to-right, which is bit-identical to the
 DuckDB oracle's list functions (verified empirically at sf0.01).
 
+The ANN stages are written once and every query routes through them:
+`_rank` (the per-query row number with an id tie-break; its ``≤ k``
+filter keeps Spark's WindowGroupLimit), `_nearest_cell` (the nearest-cell
+argmax, a `max_by` aggregate over a scored frame), `_adc_scores` (the PQ
+lookup-table scorer, keyed by query or by query and cell) and
+`_adc_top_k` (the exact rerank of an ADC shortlist). Scoring stays with
+each caller, and each keeps the cosine it computes: the two agree bit
+for bit on nonzero vectors, but on a zero vector the `cosine_pd` kernel
+always raises, while the column `cosine` raises DIVIDE_BY_ZERO only
+under ANSI mode (Spark's default) and is NULL without it.
+
 Reference parity: embedding vectors `list[float]` (wurzel/steps/data.py:16);
 the reference never searches them (its vector stores do) — this module is
 the engine-native implementation the north star asks for.
@@ -19,6 +30,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -93,7 +105,173 @@ def cosine_pd(a: pd.Series, b: pd.Series) -> pd.Series:
     d = _fold_rows(A * B)
     na = np.sqrt(_fold_rows(A * A))
     nb = np.sqrt(_fold_rows(B * B))
+    # 0/0 would be NaN, which Spark orders above every double: a zero
+    # vector would silently rank first everywhere. Fail like the column
+    # cosine does under ANSI (DIVIDE_BY_ZERO).
+    if not (na.all() and nb.all()):
+        raise ValueError("cosine_pd: zero-norm vector, cosine is undefined")
     return pd.Series(d / (na * nb))
+
+
+# ------------------------------------------------------ shared ANN stages
+
+
+def _rank(
+    df: DataFrame,
+    order,
+    tie: str,
+    k: int | None = None,
+    part: str = "query_id",
+    name: str = "rank",
+) -> DataFrame:
+    """The one ranker: ``name`` = the row number per ``part`` by
+    ``order``, ties to the lower ``tie``. The ``≤ k`` filter comes right after the
+    window, so Spark plans a WindowGroupLimit and each partition sorts
+    only its top k."""
+    ranked = df.withColumn(
+        name, F.row_number().over(W.partitionBy(part).orderBy(order, tie))
+    )
+    return ranked if k is None else ranked.filter(F.col(name) <= k)
+
+
+def _top_k(
+    scored: DataFrame, score: str, k: int, nid: str = "neighbor_id", desc: bool = True
+) -> DataFrame:
+    """(query_id, rank, ``nid``, ``score``) of each query's k best rows,
+    in rank order; ``desc=False`` ranks the smallest score first."""
+    order = F.desc(score) if desc else F.col(score)
+    return (
+        _rank(scored, order, nid, k)
+        .select("query_id", "rank", nid, score)
+        .orderBy("query_id", "rank")
+    )
+
+
+def _nearest_cell(
+    scored: DataFrame, id_col: str, vec_col: str | None = None
+) -> DataFrame:
+    """The one nearest-cell argmax over a scored (``id_col``, cell, sim)
+    frame: (``id_col``[, ``vec_col``], cell, sim) of each id's highest-sim
+    cell, ties to the lower cell id. max_by over a (sim, -cell) struct is
+    a hash aggregate with a map-side partial combine; a row_number window
+    would shuffle and sort every (id × cell) row. ``vec_col`` rides along
+    in the aggregate."""
+    carried = [F.col(vec_col).alias("__vec")] if vec_col else []
+    best = F.max_by(
+        F.struct("cell", *carried, "sim"),
+        F.struct(F.col("sim"), (-F.col("cell")).alias("__nc")),
+    )
+    return scored.groupBy(id_col).agg(best.alias("__m")).select(
+        id_col,
+        *([F.col("__m.__vec").alias(vec_col)] if vec_col else []),
+        F.col("__m.cell").alias("cell"),
+        F.col("__m.sim").alias("sim"),
+    )
+
+
+def _argmax_cell(
+    emb: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, cell, sim): each vector's nearest centroid by cosine
+    (:func:`cosine_pd`), ties to the lower cell id. ``centroids`` is
+    (id_col, vec_col), its ids become cell ids."""
+    c = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
+    scored = emb.crossJoin(F.broadcast(c)).select(
+        id_col,
+        vec_col,
+        "cell",
+        cosine_pd(F.col(vec_col), F.col("cvec")).alias("sim"),
+    )
+    return _nearest_cell(scored, id_col, vec_col)
+
+
+def _adc_scores(
+    codes: DataFrame,
+    queries: DataFrame,
+    keys: list,
+    qcol: str,
+    cb: DataFrame,
+    m: int,
+    id_col: str,
+) -> DataFrame:
+    """The one PQ asymmetric-distance scorer: (query_id, neighbor_id,
+    approx_d2). ``queries`` carries one vector ``qcol`` per key —
+    ``keys`` selects (query_id) or (query_id, cell) from it — and each
+    key's lookup table holds the :func:`_sub_l2` of its m query
+    subvectors to every codeword. ``codes`` is (``id_col``, [cell,] sub,
+    code). A candidate sums its m table terms in subspace order
+    (array_sort, then a sequential fold), so the sum is the same under
+    any partitioning. Keyed by cell, a candidate's terms reach it only
+    through its own cell's tables, and the scorer also requires all m of
+    them, so a partial sum never ranks; keyed by query alone, every
+    (sub, code) is in the one table."""
+    dsub = F.size(F.col(qcol)) / F.lit(m)
+    qsubs = queries.select(
+        *keys, F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"), qcol
+    )
+    key_names = qsubs.columns[:-2]
+    qsubs = qsubs.select(
+        *key_names,
+        "sub",
+        F.slice(
+            F.col(qcol), (F.col("sub") * dsub.cast("int") + 1).cast("int"), dsub.cast("int")
+        ).alias("qsv"),
+    )
+    lut = qsubs.join(F.broadcast(cb), "sub").select(
+        *key_names, "sub", "code", _sub_l2(F.col("qsv"), F.col("cw")).alias("t")
+    )
+    by_cell = len(key_names) > 1
+    terms = F.array_sort(F.collect_list(F.struct("sub", "t")))
+    agg = [F.aggregate(terms, F.lit(0.0), lambda acc, s: acc + s["t"]).alias("approx_d2")]
+    if by_cell:
+        agg.append(F.count(F.lit(1)).alias("n_subs"))
+    scored = (
+        codes.join(F.broadcast(lut), [*key_names[1:], "sub", "code"])
+        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
+        .agg(*agg)
+    )
+    if by_cell:
+        return scored.filter(
+            (F.col("n_subs") == m) & (F.col("neighbor_id") != F.col("query_id"))
+        ).drop("n_subs")
+    return scored.filter(F.col("neighbor_id") != F.col("query_id"))
+
+
+def _adc_top_k(
+    scored: DataFrame,
+    ncorp: DataFrame,
+    nquery: DataFrame,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Top k by ADC distance; with ``rerank`` the one exact rerank: the
+    top ``rerank`` by ADC form the shortlist, and only those are scored
+    with the exact cosine (a dot of the unit vectors ``ncorp`` and
+    ``nquery``) — quantization then only has to keep true neighbours
+    inside the shortlist, not rank them."""
+    if not rerank:
+        return _top_k(scored, "approx_d2", k, desc=False)
+    shortlist = _rank(scored, F.col("approx_d2"), "neighbor_id", rerank).select(
+        "query_id", "neighbor_id"
+    )
+    qv = nquery.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"))
+    exact = (
+        shortlist.join(
+            ncorp.select(F.col(id_col).alias("neighbor_id"), vec_col), "neighbor_id"
+        )
+        .join(F.broadcast(qv), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            dot(F.col("query_vec"), F.col(vec_col)).alias("cos_sim"),
+        )
+    )
+    return _top_k(exact, "cos_sim", k)
+
+
+# ------------------------------------------------------------ operators
 
 
 def brute_force_topk(
@@ -117,15 +295,7 @@ def brute_force_topk(
         F.col(f"e.{id_col}").alias("neighbor_id"),
         cosine_pd(F.col("query_vec"), F.col(f"e.{vec_col}")).alias("cos_sim"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, "cos_sim", k)
 
 
 def hyperplane_lsh_buckets(
@@ -188,15 +358,7 @@ def lsh_topk(
         F.col(id_col).alias("neighbor_id"),
         cosine_pd(F.col("query_vec"), F.col(vec_col)).alias("cos_sim"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, "cos_sim", k)
 
 
 def cosine_lsh_near_dup_pairs(
@@ -255,26 +417,11 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF coarse quantization: assign each vector to its nearest centroid
-    (broadcast centroids, argmin over cosine distance). Partitioning the
-    corpus by cell id co-locates each cell → probe reads only nprobe cells.
+    (broadcast centroids, argmax cosine, ties to the lower centroid id).
+    Partitioning the corpus by cell id co-locates each cell → probe reads
+    only nprobe cells.
     """
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec")
-    )
-    scored = emb.crossJoin(F.broadcast(c)).select(
-        id_col,
-        vec_col,
-        "centroid_id",
-        cosine_pd(F.col(vec_col), F.col("centroid_vec")).alias("sim"),
-    )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(id_col).orderBy(F.desc("sim"), "centroid_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, vec_col, F.col("centroid_id").alias("cell"))
-    )
+    return _argmax_cell(emb, centroids, id_col, vec_col).select(id_col, vec_col, "cell")
 
 
 def ivf_topk(
@@ -291,38 +438,27 @@ def ivf_topk(
     only the ``nprobe`` cells whose centroids are nearest to it. Candidate
     fraction ≈ nprobe / n_cells. Recall vs brute force asserted in tests.
     """
-    from pyspark.sql import Window as W
-
     cells = ivf_assign(emb, centroids, id_col, vec_col)
-    c = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid_vec")
-    )
+    c = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid_vec"))
     q = query.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"))
-    wq = W.partitionBy("query_id").orderBy(F.desc("sim"), "cell")
-    probes = (
-        q.crossJoin(F.broadcast(c))
-        .select(
+    probes = _rank(
+        q.crossJoin(F.broadcast(c)).select(
             "query_id",
             "query_vec",
-            F.col("centroid_id").alias("cell"),
+            "cell",
             cosine_pd(F.col("query_vec"), F.col("centroid_vec")).alias("sim"),
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select("query_id", "query_vec", "cell")
-    )
+        ),
+        F.desc("sim"),
+        "cell",
+        nprobe,
+        name="rn",
+    ).select("query_id", "query_vec", "cell")
     scored = cells.join(F.broadcast(probes), "cell").select(
         "query_id",
         F.col(id_col).alias("neighbor_id"),
         cosine_pd(F.col("query_vec"), F.col(vec_col)).alias("cos_sim"),
     ).filter(F.col("neighbor_id") != F.col("query_id"))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, "cos_sim", k)
 
 
 # ---------------------------------------------------------------- queries
@@ -563,18 +699,8 @@ def cell_stats(
         "cell",
         cosine_pd(F.col(vec_col), F.col("centroid_vec")).alias("sim"),
     )
-    # nearest cell per vector via max_by (hash aggregate, map-side
-    # combine; ties to the lower cell id via the -cell ordering field) —
-    # the row_number window this replaces sorted every (id × k) row.
     return (
-        scored.groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct("cell", "sim"),
-                F.struct(F.col("sim"), (-F.col("cell")).alias("__nc")),
-            ).alias("__m")
-        )
-        .select(F.col("__m.cell").alias("cell"), F.col("__m.sim").alias("sim"))
+        _nearest_cell(scored, id_col)
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -685,7 +811,7 @@ def kmeans_train(
     )
 
     for _ in range(max_iters):
-        cdf = spark.createDataFrame(cents, ["cell", "cvec"])
+        cdf = spark.createDataFrame(cents, [id_col, vec_col])
         assigned = _argmax_cell(emb, cdf, id_col, vec_col)
         rows = (
             assigned.select("cell", F.posexplode(qv).alias("pos", "q"))
@@ -759,6 +885,8 @@ def _kmeans_train_driver(
         for j in range(d):
             acc = acc + V[:, j : j + 1] * C_[None, :, j]
         nc = np.sqrt(_fold_rows(C_ * C_))
+        if not (nv.all() and nc.all()):  # as cosine_pd on the distributed path
+            raise ValueError("kmeans_train: zero-norm vector, cosine is undefined")
         return acc / (nv[:, None] * nc[None, :])
 
     Q = np.floor(V * _KMEANS_SCALE).astype(np.int64)
@@ -799,43 +927,14 @@ def _kmeans_train_driver(
     return spark.createDataFrame(out, ["cell", "centroid", "n_members"])
 
 
-def _argmax_cell(
-    emb: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, vec, cell, sim): nearest centroid by cosine, ties to the lower
-    cell id. ``centroids`` is (cell, cvec).
-
-    max_by over a (sim, -cell) ordering struct — a hash AGGREGATE with
-    map-side partial combine, where the equivalent row_number window had
-    to shuffle-and-sort every (id × k) scored row. Identical rows: struct
-    comparison is lexicographic, so max picks highest sim, then lowest
-    cell id on exact ties."""
-    scored = emb.crossJoin(F.broadcast(centroids)).select(
-        id_col,
-        vec_col,
-        "cell",
-        cosine_pd(F.col(vec_col), F.col("cvec")).alias("sim"),
-    )
-    return scored.groupBy(id_col).agg(
-        F.max_by(
-            F.struct("cell", F.col(vec_col).alias("__vec"), "sim"),
-            F.struct(F.col("sim"), (-F.col("cell")).alias("__nc")),
-        ).alias("__m")
-    ).select(
-        id_col,
-        F.col("__m.__vec").alias(vec_col),
-        F.col("__m.cell").alias("cell"),
-        F.col("__m.sim").alias("sim"),
-    )
-
-
 def q_kmeans_train_stats(spark, sf_dir: str) -> DataFrame:
     """Cell stats AFTER 3 Lloyd iterations from the first-8-vector seeds —
     the trained counterpart of q_kmeans_cell_stats (oracle: the same
     iterations unrolled in SQL over the fixed-point sums)."""
     from wurzel_spark.tables import table as _table
 
-    emb = _table(spark, sf_dir, "embeddings").localCheckpoint(eager=False)
+    # kmeans_train pins its input itself; a pin here would store a second copy
+    emb = _table(spark, sf_dir, "embeddings")
     trained = kmeans_train(emb, k=8, max_iters=3)
     return cell_stats(
         emb,
@@ -1005,8 +1104,7 @@ def semdedup_keep(
     embedding modality (wurzel/steps/duplication/step.py:21-34 handles
     only text hashes). Returns kept rows: (id, cell, centroid_sim).
     """
-    c = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
-    assigned = _argmax_cell(emb, c, id_col, vec_col)
+    assigned = _argmax_cell(emb, centroids, id_col, vec_col)
 
     out_schema = StructType(
         [
@@ -1248,15 +1346,7 @@ def lsh_topk_multiprobe(
         .groupBy("query_id", "neighbor_id")
         .agg(F.max("cos_sim").alias("cos_sim"))  # dedup multi-bucket hits
     )
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(scored, "cos_sim", k)
 
 
 def q_ann_topk_multiprobe(spark, sf_dir: str) -> DataFrame:
@@ -1452,12 +1542,20 @@ def pq_encode(
     )
 
 
+def _pq_codes(
+    emb: DataFrame, m: int, ksub: int, id_col: str = "vec_id", vec_col: str = "embedding"
+) -> tuple[DataFrame, DataFrame]:
+    """(codebook, codes) of ``emb``; the encoder reuses the driver-built
+    codebook's rows instead of collecting the frame."""
+    cb, cb_rows = _pq_codebook_with_rows(emb, m, ksub, id_col, vec_col)
+    return cb, pq_encode(emb, cb, m, id_col, vec_col, local_rows=cb_rows)
+
+
 def pq_code_stats(emb: DataFrame, m: int = _PQ_M, ksub: int = _PQ_KSUB) -> DataFrame:
     """Codebook occupancy: vectors per (subspace, codeword) — the balance
     readout that tells you whether the codebook spans the corpus (empty
     codewords → retrain; one mega-codeword → quantization is useless)."""
-    cb, cb_rows = _pq_codebook_with_rows(emb, m, ksub)
-    codes = pq_encode(emb, cb, m, local_rows=cb_rows)
+    _, codes = _pq_codes(emb, m, ksub)
     return (
         codes.groupBy("sub", "code")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
@@ -1495,76 +1593,13 @@ def pq_topk(
     bit-deterministic under any partitioning. Approximate by construction
     → registered rows-only with a recall floor asserted in tests.
     """
-    from pyspark.sql import Window as W
-
     ncorp = _l2_normalized(emb, id_col, vec_col)
     nquery = _l2_normalized(query, id_col, vec_col)
-    cb, cb_rows = _pq_codebook_with_rows(ncorp, m, ksub, id_col, vec_col)
-    codes = pq_encode(ncorp, cb, m, id_col, vec_col, local_rows=cb_rows)
-
-    dsub_col = F.size(F.col(vec_col)) / F.lit(m)
-    qsubs = nquery.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-        vec_col,
-    ).select(
-        "query_id",
-        "sub",
-        F.slice(
-            F.col(vec_col),
-            (F.col("sub") * dsub_col.cast("int") + 1).cast("int"),
-            dsub_col.cast("int"),
-        ).alias("qsv"),
+    cb, codes = _pq_codes(ncorp, m, ksub, id_col, vec_col)
+    scored = _adc_scores(
+        codes, nquery, [F.col(id_col).alias("query_id")], vec_col, cb, m, id_col
     )
-    lut = qsubs.join(F.broadcast(cb), "sub").select(
-        "query_id", "sub", "code", _sub_l2(F.col("qsv"), F.col("cw")).alias("t")
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["sub", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("sub", "t"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s["t"],
-            ).alias("approx_d2")
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    w = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "approx_d2")
-            .orderBy("query_id", "rank")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv = nquery.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    exact = (
-        shortlist.join(
-            ncorp.select(F.col(id_col).alias("neighbor_id"), vec_col), "neighbor_id"
-        )
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("query_vec"), F.col(vec_col)).alias("cos_sim"),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    return _adc_top_k(scored, ncorp, nquery, k, rerank, id_col, vec_col)
 
 
 def q_pq_code_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1629,8 +1664,6 @@ def hybrid_rrf_topk(
     swap brute-force cosine for the PQ/IVF/multi-probe variants above at
     corpus scale — the fusion is rank-only and does not change).
     """
-    from pyspark.sql import Window as W
-
     from wurzel_spark.operators.textstats import _BM25_QUERIES, bm25_topk
 
     qids = sorted(_BM25_QUERIES)
@@ -1650,13 +1683,7 @@ def hybrid_rrf_topk(
             + F.coalesce(F.lit(1.0) / (F.lit(rrf_k) + F.col("rank_vec")), F.lit(0.0))
         ).alias("rrf_score"),
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("rrf_score"), "doc_id")
-    return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "rrf_score")
-        .orderBy("query_id", "rank")
-    )
+    return _top_k(fused, "rrf_score", k, nid="doc_id")
 
 
 def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1812,8 +1839,6 @@ def ivfpq_topk(
     Approximate by construction → registered rows-only; recall floor
     (and rerank's recovery to ≥ IVF recall) asserted in tests.
     """
-    from pyspark.sql import Window as W
-
     ncorp = _l2_normalized(emb, id_col, vec_col)
     nquery = _l2_normalized(query, id_col, vec_col)
     ncent = _l2_normalized(centroids, id_col, vec_col)
@@ -1832,103 +1857,30 @@ def ivfpq_topk(
     # three consumers (codebook collect, encode kernel, cell join) — pin,
     # or the corpus-by-centroids assignment pass executes three times
     resid = resid.localCheckpoint(eager=True)
-    cb, cb_rows = _pq_codebook_with_rows(
-        resid.select(id_col, vec_col), m, ksub, id_col, vec_col
-    )
-    codes = pq_encode(
-        resid.select(id_col, vec_col), cb, m, id_col, vec_col, local_rows=cb_rows
-    ).join(resid.select(id_col, "cell"), id_col)
+    cb, codes = _pq_codes(resid.select(id_col, vec_col), m, ksub, id_col, vec_col)
+    codes = codes.join(resid.select(id_col, "cell"), id_col)
 
     # probe the nprobe nearest cells per query (same rule as ivf_topk)
     q = nquery.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    wq = W.partitionBy("query_id").orderBy(F.desc("sim"), "cell")
-    probes = (
-        q.crossJoin(F.broadcast(cvec))
-        .select(
+    probes = _rank(
+        q.crossJoin(F.broadcast(cvec)).select(
             "query_id",
             "qv",
             "cell",
             dot(F.col("qv"), F.col("centroid_vec")).alias("sim"),
             "centroid_vec",
-        )
-        .withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id",
-            "cell",
-            F.zip_with(F.col("qv"), F.col("centroid_vec"), lambda x, y: x - y).alias(
-                "qrv"
-            ),
-        )
-    )
-    dsub_col = F.size(F.col("qrv")) / F.lit(m)
-    qsubs = probes.select(
-        "query_id",
+        ),
+        F.desc("sim"),
         "cell",
-        F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("sub"),
-        "qrv",
+        nprobe,
+        name="rn",
     ).select(
         "query_id",
         "cell",
-        "sub",
-        F.slice(
-            F.col("qrv"),
-            (F.col("sub") * dsub_col.cast("int") + 1).cast("int"),
-            dsub_col.cast("int"),
-        ).alias("qsv"),
+        F.zip_with(F.col("qv"), F.col("centroid_vec"), lambda x, y: x - y).alias("qrv"),
     )
-    lut = qsubs.join(F.broadcast(cb), "sub").select(
-        "query_id", "cell", "sub", "code", _sub_l2(F.col("qsv"), F.col("cw")).alias("t")
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["cell", "sub", "code"])
-        .groupBy("query_id", F.col(id_col).alias("neighbor_id"))
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct("sub", "t"))),
-                F.lit(0.0),
-                lambda acc, s: acc + s["t"],
-            ).alias("approx_d2"),
-            F.count(F.lit(1)).alias("n_subs"),
-        )
-        # a candidate must have all m subspace terms (it does by
-        # construction — every (cell,sub,code) of a probed-cell vector
-        # hits the LUT), guard anyway so a partial sum never ranks
-        .filter((F.col("n_subs") == m) & (F.col("neighbor_id") != F.col("query_id")))
-        .drop("n_subs")
-    )
-    w = W.partitionBy("query_id").orderBy("approx_d2", "neighbor_id")
-    if not rerank:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "neighbor_id", "approx_d2")
-            .orderBy("query_id", "rank")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
-    )
-    qv2 = nquery.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec"))
-    exact = (
-        shortlist.join(
-            ncorp.select(F.col(id_col).alias("neighbor_id"), vec_col), "neighbor_id"
-        )
-        .join(F.broadcast(qv2), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            dot(F.col("query_vec"), F.col(vec_col)).alias("cos_sim"),
-        )
-    )
-    w2 = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cos_sim")
-        .orderBy("query_id", "rank")
-    )
+    scored = _adc_scores(codes, probes, ["query_id", "cell"], "qrv", cb, m, id_col)
+    return _adc_top_k(scored, ncorp, nquery, k, rerank, id_col, vec_col)
 
 
 def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1968,19 +1920,16 @@ def index_drift_stats(
     division — order-independent, oracle-hash-green. One assignment pass
     over the union; the comparison itself is |cells| rows.
     """
-    c = centroids.select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec")
-    )
     # assign each snapshot independently — ids may overlap between
     # snapshots (the same vector existing at index time and now), so a
     # union + per-id argmax would silently collapse them
     per_old = (
-        _argmax_cell(old_emb, c, id_col, vec_col)
+        _argmax_cell(old_emb, centroids, id_col, vec_col)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_old"))
     )
     per_new = (
-        _argmax_cell(new_emb, c, id_col, vec_col)
+        _argmax_cell(new_emb, centroids, id_col, vec_col)
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_new"))
     )
@@ -2084,15 +2033,12 @@ def matryoshka_recall_stats(
     this is an EVAL harness, run on samples, not the serving path).
     Cosines are the shared sequential-fold kernel → oracle-hash-green.
     """
-    from pyspark.sql import Window as W
-
     q = query.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
 
     def _topk(d: int | None) -> DataFrame:
         ev = F.col(vec_col) if d is None else F.slice(F.col(vec_col), 1, d)
         qv = F.col("qv") if d is None else F.slice(F.col("qv"), 1, d)
-        w = W.partitionBy("query_id").orderBy(F.desc("sim"), "nid")
-        return (
+        scored = (
             emb.crossJoin(F.broadcast(q))
             .select(
                 "query_id",
@@ -2100,10 +2046,8 @@ def matryoshka_recall_stats(
                 cosine_pd(ev, qv).alias("sim"),
             )
             .filter(F.col("nid") != F.col("query_id"))
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select("query_id", "nid")
         )
+        return _rank(scored, F.desc("sim"), "nid", k, name="rn").select("query_id", "nid")
 
     full = _topk(None).localCheckpoint(eager=True)  # one baseline pass,
     # not one per dims entry (the unioned plan would re-evaluate it)
@@ -2194,8 +2138,7 @@ def ivf_write(
     ivf_topk does. This is what "at 100 TB: written out partitioned by
     cell" (ivf_topk's docstring) concretely means.
     """
-    c = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
-    assigned = _argmax_cell(emb, c, id_col, vec_col).select(id_col, vec_col, "cell")
+    assigned = ivf_assign(emb, centroids, id_col, vec_col)
     assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
 
 
@@ -2220,26 +2163,23 @@ def hard_negatives_from_scores(
     by query_id — per-query candidate lists are bounded (k·nprobe cells),
     so the sort inside each partition is small regardless of corpus size.
     """
-    from pyspark.sql import Window as W
-
-    wq = W.partitionBy("query_id")
-    wr = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
-    ranked = scored.select(
-        "query_id",
+    ranked = _rank(
+        scored.select(
+            "query_id",
+            "neighbor_id",
+            "cos_sim",
+            F.max("cos_sim").over(W.partitionBy("query_id")).alias("gold_cos"),
+        ),
+        F.desc("cos_sim"),
         "neighbor_id",
-        "cos_sim",
-        F.max("cos_sim").over(wq).alias("gold_cos"),
-        F.row_number().over(wr).alias("rank"),
     )
     negs = ranked.filter(
         (F.col("rank") >= 2)
         & (F.col("cos_sim") >= F.col("gold_cos") - F.lit(margin))
         & (F.col("cos_sim") <= F.lit(ceiling))
     )
-    wn = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), "neighbor_id")
     return (
-        negs.withColumn("neg_rank", F.row_number().over(wn))
-        .filter(F.col("neg_rank") <= k)
+        _rank(negs, F.desc("cos_sim"), "neighbor_id", k, name="neg_rank")
         .select("query_id", "neg_rank", "neighbor_id", "cos_sim", "gold_cos")
         .orderBy("query_id", "neg_rank")
     )
@@ -2355,8 +2295,6 @@ def bitext_margin_pairs(
     table — per-side top-k sums, both margin ranks, and the mutual flag
     are six window functions over two partitionings, no self-join, and
     vectors drop right after the cos projection."""
-    from pyspark.sql import Window as W
-
     def _side(lang: str, idc: str) -> DataFrame:
         return (
             docs.filter(F.col("lang") == lang)
@@ -2426,11 +2364,15 @@ def bitext_margin_pairs(
         )
     )
     wx, wy = W.partitionBy("src_id"), W.partitionBy("tgt_id")
-    rnx = F.row_number().over(wx.orderBy(F.col("cos_q").desc(), "tgt_id"))
-    rny = F.row_number().over(wy.orderBy(F.col("cos_q").desc(), "src_id"))
+    cos_desc = F.col("cos_q").desc()
     enriched = (
-        pairs.withColumn("rn_x", rnx)
-        .withColumn("rn_y", rny)
+        _rank(
+            _rank(pairs, cos_desc, "tgt_id", part="src_id", name="rn_x"),
+            cos_desc,
+            "src_id",
+            part="tgt_id",
+            name="rn_y",
+        )
         .withColumn(
             "sx",
             F.sum(F.when(F.col("rn_x") <= k, F.col("cos_q")).otherwise(F.lit(0))).over(wx),
@@ -2451,11 +2393,15 @@ def bitext_margin_pairs(
             - (F.col("ny") * F.col("sx") + F.col("nx") * F.col("sy")),
         )
     )
-    fwd = F.row_number().over(wx.orderBy(F.col("margin_q").desc(), "tgt_id"))
-    bwd = F.row_number().over(wy.orderBy(F.col("margin_q").desc(), "src_id"))
+    margin_desc = F.col("margin_q").desc()
     return (
-        enriched.withColumn("fwd_rn", fwd)
-        .withColumn("bwd_rn", bwd)
+        _rank(
+            _rank(enriched, margin_desc, "tgt_id", part="src_id", name="fwd_rn"),
+            margin_desc,
+            "src_id",
+            part="tgt_id",
+            name="bwd_rn",
+        )
         .filter((F.col("fwd_rn") == 1) & (F.col("margin_q") > 0))
         .select(
             "src_id",
@@ -2597,8 +2543,6 @@ def binary_embedding_recall(
     WindowGroupLimit); the audit is the exact-verifier configuration
     (ann_topk_bruteforce precedent) — the production path is the packed
     bitmap index this audit signs off."""
-    from pyspark.sql import Window as W
-
     pow_lo = F.array(*[F.lit(1 << i).cast("long") for i in range(32)])
 
     def pack(vec, off):
@@ -2634,10 +2578,12 @@ def binary_embedding_recall(
         F.expr("bit_count(lo ^ qlo) + bit_count(hi ^ qhi)").alias("hamming"),
         cosine(F.col("vec"), F.col("qvec")).alias("cos"),
     )
-    wq = W.partitionBy("query_id")
-    ranked = scored.withColumn(
-        "rn_ham", F.row_number().over(wq.orderBy("hamming", "id"))
-    ).withColumn("rn_cos", F.row_number().over(wq.orderBy(F.col("cos").desc(), "id")))
+    ranked = _rank(
+        _rank(scored, "hamming", "id", name="rn_ham"),
+        F.col("cos").desc(),
+        "id",
+        name="rn_cos",
+    )
     return (
         ranked.groupBy("query_id")
         .agg(
@@ -2762,8 +2708,6 @@ def retrieval_ndcg_eval(
     linear pair pass, two windows per query partition (rank prune via
     WindowGroupLimit), one grouped aggregate; the audit configuration
     (fixed query count) per the ann_topk_bruteforce precedent."""
-    from pyspark.sql import Window as W
-
     disc = F.array(*[F.lit(d).cast("long") for d in NDCG_DISCOUNTS])
     base = emb.filter(
         F.col(vec_col).isNotNull()
@@ -2789,10 +2733,12 @@ def retrieval_ndcg_eval(
         .alias("rel"),
         cosine(F.col("vec"), F.col("qvec")).alias("cos"),
     )
-    wq = W.partitionBy("query_id")
-    ranked = scored.withColumn(
-        "rn_cos", F.row_number().over(wq.orderBy(F.col("cos").desc(), "id"))
-    ).withColumn("rn_ideal", F.row_number().over(wq.orderBy(F.col("rel").desc(), "id")))
+    ranked = _rank(
+        _rank(scored, F.col("cos").desc(), "id", name="rn_cos"),
+        F.col("rel").desc(),
+        "id",
+        name="rn_ideal",
+    )
     agg = ranked.groupBy("query_id").agg(
         F.sum(
             F.when(F.col("rn_cos") <= k, F.col("rel") * F.element_at(disc, F.col("rn_cos").cast("int")))
@@ -2908,13 +2854,11 @@ def ivf_nprobe_sweep(
     cell sizes (the self row stays in its cell's cost; it is excluded
     only from the top-k pool).
 
-    Scale shape: one corpus × broadcast-centroids assignment pass (one
-    rank window per corpus row over 8 rows), one corpus ×
+    Scale shape: one corpus × broadcast-centroids assignment pass (a
+    nearest-cell aggregate, map-side combined), one corpus ×
     broadcast-queries brute pass with the per-query top-k pruned by
     WindowGroupLimit, then centroid-grain joins — the audit
     configuration (fixed query count), linear in the corpus."""
-    from pyspark.sql import Window as W
-
     base = emb.filter(
         F.col(vec_col).isNotNull()
         & (F.size(F.col(vec_col)) == _BINARY_DIM)
@@ -2927,35 +2871,35 @@ def ivf_nprobe_sweep(
         F.col("id").alias("query_id"), F.col("vec").alias("qvec")
     )
 
-    # corpus → nearest-centroid cell (rank 1 of the per-row centroid order)
-    w_assign = W.partitionBy("id").orderBy(F.desc("ccos"), "cid")
-    assigned = (
-        base.crossJoin(F.broadcast(cents))
-        .select("id", "cid", cosine(F.col("vec"), F.col("cvec")).alias("ccos"))
-        .withColumn("crn", F.row_number().over(w_assign))
-        .filter(F.col("crn") == 1)
-        .select("id", F.col("cid").alias("cell"))
-    )
+    # corpus → nearest-centroid cell
+    assigned = _nearest_cell(
+        base.crossJoin(F.broadcast(cents)).select(
+            "id", F.col("cid").alias("cell"), cosine(F.col("vec"), F.col("cvec")).alias("sim")
+        ),
+        "id",
+    ).select("id", "cell")
     cell_sizes = assigned.groupBy("cell").agg(
         F.count(F.lit(1)).cast("long").alias("sz")
     )
 
     # per-query centroid ranking (which cells probe first)
-    w_q = W.partitionBy("query_id").orderBy(F.desc("qcos"), "cid")
-    qranks = (
-        queries.crossJoin(F.broadcast(cents))
-        .select("query_id", "cid", cosine(F.col("qvec"), F.col("cvec")).alias("qcos"))
-        .select("query_id", "cid", F.row_number().over(w_q).alias("crank"))
-    )
+    qranks = _rank(
+        queries.crossJoin(F.broadcast(cents)).select(
+            "query_id", "cid", cosine(F.col("qvec"), F.col("cvec")).alias("qcos")
+        ),
+        F.desc("qcos"),
+        "cid",
+        name="crank",
+    ).select("query_id", "cid", "crank")
 
     # brute-force top-k (the ground truth), each member tagged with its cell
-    w_b = W.partitionBy("query_id").orderBy(F.desc("cos"), "id")
-    topk = (
+    scored = (
         base.crossJoin(F.broadcast(queries))
         .filter(F.col("id") != F.col("query_id"))
         .select("query_id", "id", cosine(F.col("vec"), F.col("qvec")).alias("cos"))
-        .withColumn("rn", F.row_number().over(w_b))
-        .filter(F.col("rn") <= k)
+    )
+    topk = (
+        _rank(scored, F.desc("cos"), "id", k, name="rn")
         .join(assigned, "id")
         .join(qranks.withColumnRenamed("query_id", "qq"),
               (F.col("query_id") == F.col("qq")) & (F.col("cell") == F.col("cid")))
@@ -3109,8 +3053,6 @@ def knn_label_accuracy(
     Scale shape: the audit configuration — queries broadcast against
     the corpus, one linear pair pass, per-query WindowGroupLimit-pruned
     top-k, then (query × label)-grain vote counts."""
-    from pyspark.sql import Window as W
-
     base = emb.filter(
         F.col(vec_col).isNotNull()
         & (F.size(F.col(vec_col)) == _BINARY_DIM)
@@ -3126,8 +3068,7 @@ def knn_label_accuracy(
         F.col("vec").alias("qvec"),
         F.col("lbl").alias("qlbl"),
     )
-    w_b = W.partitionBy("query_id").orderBy(F.desc("cos"), "id")
-    topk = (
+    scored = (
         base.crossJoin(F.broadcast(q))
         .filter(F.col("id") != F.col("query_id"))
         .select(
@@ -3139,16 +3080,14 @@ def knn_label_accuracy(
             # ~100x less interpreter than the HOF on the hot corpus pass
             cosine_pd(F.col("vec"), F.col("qvec")).alias("cos"),
         )
-        .withColumn("rn", F.row_number().over(w_b))
-        .filter(F.col("rn") <= k)
     )
+    topk = _rank(scored, F.desc("cos"), "id", k, name="rn")
     votes = topk.groupBy("query_id", "qlbl", "lbl").agg(
         F.count(F.lit(1)).cast("long").alias("n_votes"),
         F.min(F.when(F.col("rn") == 1, F.col("lbl"))).alias("nn1"),
     )
-    w_v = W.partitionBy("query_id").orderBy(F.desc("n_votes"), "lbl")
     verdicts = (
-        votes.withColumn("vr", F.row_number().over(w_v))
+        _rank(votes, F.desc("n_votes"), "lbl", name="vr")
         .groupBy("query_id", "qlbl")
         .agg(
             F.max(F.when(F.col("vr") == 1, F.col("lbl"))).alias("maj_lbl"),

@@ -21,7 +21,7 @@ assert the physical plan contains zero Exchange operators.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from wurzel_spark.plans.inspect import plan_text
 
@@ -41,10 +41,6 @@ def write_bucketed(
     if path:
         w = w.option("path", path)
     w.saveAsTable(table_name)
-
-
-def bucketed_table(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
 
 
 def exchange_count(df: DataFrame) -> int:
