@@ -324,3 +324,47 @@ def test_ann_core_is_written_once():
         if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "cosine"
     }
     assert callers == {"binary_embedding_recall", "retrieval_ndcg_eval", "ivf_nprobe_sweep"}
+
+
+def test_text_primitives_are_written_once():
+    """Every text operator tokenizes with TXT.words, hashes words through
+    dedup._word_hashes, windows n-grams through TXT.windows and zips
+    bigram pairs through TXT.bigrams: none spells its own copy."""
+    import ast
+
+    def name(node):
+        f = getattr(node, "func", None)
+        return getattr(f, "attr", getattr(f, "id", None)) if isinstance(node, ast.Call) else None
+
+    def calls(node, fn):
+        return any(name(c) == fn for c in ast.walk(node))
+
+    primitives = {
+        # split(trim(…), r"\s+")
+        "tokenizer": lambda c: name(c) == "split" and name(c.args[0]) == "trim",
+        # transform(…, lambda w: xxhash64(w))
+        "word hashes": lambda c: name(c) == "transform"
+        and isinstance(c.args[1], ast.Lambda)
+        and name(c.args[1].body) == "xxhash64"
+        and [ast.unparse(a) for a in c.args[1].body.args] == [c.args[1].args.args[0].arg],
+        # transform(sequence(lit(1), …), lambda i: … slice(…) …)
+        "window": lambda c: name(c) == "transform"
+        and name(c.args[0]) == "sequence"
+        and ast.unparse(c.args[0].args[0]) == "F.lit(1)"
+        and calls(c.args[1], "slice"),
+        # arrays_zip(slice(…), slice(…))
+        "bigrams": lambda c: name(c) == "arrays_zip" and calls(c, "slice"),
+    }
+    sites = {k: [] for k in primitives}
+    for p in _py_files("wurzel_spark"):
+        for top in ast.parse(p.read_text()).body:
+            for c in ast.walk(top):
+                for k, is_site in primitives.items():
+                    if name(c) and len(c.args) >= 2 and is_site(c):
+                        sites[k].append(f"{p.name}:{getattr(top, 'name', '<module>')}")
+    assert sites == {
+        "tokenizer": ["text.py:words"],
+        "word hashes": ["dedup.py:_word_hashes"],
+        "window": ["text.py:windows"],
+        "bigrams": ["text.py:bigrams"],
+    }

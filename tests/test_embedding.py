@@ -89,3 +89,10 @@ def test_simple_context_drops_stopwords_and_punctuation(spark):
     assert out[1] == "cat Dog sat on."
     assert out[2] == "" and out[3] == ""
     assert out[4] is None
+
+
+def test_simple_context_writes_back_to_keywords_col(spark):
+    df = spark.createDataFrame([(1, "the cat sat")], "id int, kw string")
+    out = simple_context(df, keywords_col="kw", stopwords=("the",))
+    assert out.columns == ["id", "kw"]
+    assert out.collect()[0]["kw"] == "cat sat"

@@ -1134,15 +1134,15 @@ def test_streaming_source_tv_matches_batch(spark, tmp_path):
 
 
 def test_streaming_source_tv_replay_is_idempotent(spark, tmp_path):
-    from wurzel_spark.operators.textstats import source_tv_matrix
+    from wurzel_spark.operators.textstats import source_term_counts, source_tv_matrix
     from wurzel_spark.streaming._state import write_batch_state
-    from wurzel_spark.streaming.sourcetv import _term_counts, drain_source_tv_state
+    from wurzel_spark.streaming.sourcetv import drain_source_tv_state
     from wurzel_spark.tables import table as _table
 
     sf = "/root/testdata/sf0.001"
     docs = _table(spark, sf, "documents").localCheckpoint()
     state = str(tmp_path / "tv_state2")
-    mine = _term_counts(docs, "text").withColumn("src_batch", F_lit0())
+    mine = source_term_counts(docs, "text").withColumn("src_batch", F_lit0())
     for _ in range(3):
         write_batch_state(spark, mine, state, 0, ["src_batch", "source", "w"], None)
     got = drain_source_tv_state(spark, state)

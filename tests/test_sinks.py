@@ -217,31 +217,6 @@ def test_content_hash_stamping(spark, tmp_path):
         assert p2[p["doc_id"]]["text_sha256_hash"] == p["text_sha256_hash"]
 
 
-def test_tlsh_like_digest_locality(spark):
-    """Near-duplicate texts share digest segments; unrelated texts don't.
-    Blank text -> the documented all-zeros digest."""
-    from pyspark.sql import functions as F
-
-    from wurzel_spark.functions.text import tlsh_like_digest
-
-    base = "the quick brown fox jumps over the lazy dog " * 10
-    near = base + "and then naps"
-    far = "completely different content about spark shuffles " * 10
-    df = spark.createDataFrame(
-        [("base", base), ("near", near), ("far", far), ("blank", "  ")],
-        "name string, text string",
-    )
-    d = {
-        r["name"]: r["dig"]
-        for r in df.select("name", tlsh_like_digest(F.col("text")).alias("dig")).collect()
-    }
-    segs = lambda x: {x[i : i + 16] for i in range(0, 64, 16)}
-    assert all(len(v) == 64 for v in d.values())
-    assert len(segs(d["base"]) & segs(d["near"])) >= 2  # high word-set overlap
-    assert not segs(d["base"]) & segs(d["far"])
-    assert d["blank"] == "0" * 64
-
-
 def test_kb_prune_is_scope_matched_and_exact(spark, tmp_path):
     """VERDICT r4 #9 (reference elevenlabs/step.py:284, wonderful/
     step.py:207): a second run with FEWER docs deletes exactly the stale

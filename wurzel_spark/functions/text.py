@@ -7,6 +7,16 @@ Reference parity (SURVEY §2.8): whitespace tokenizer
 (wurzel/steps/embedding/step.py:35,172-175), content hashes
 (wurzel/steps/qdrant/step.py:259-283), keyword list parse
 (wurzel/datacontract/common.py:150), per-doc metrics (common.py:149-157).
+
+Every text operator builds on three primitives, each written once:
+
+- :func:`words` — the whitespace tokenizer (:func:`word_count` is its
+  size);
+- ``operators/dedup._word_hashes`` — xxhash64 per word occurrence, read
+  through ``_word_hash_frame`` by every near-dup and span pass;
+- :func:`windows` — ``f`` over every n-word window of a word array, with
+  the caller's short-document rule (:func:`bigrams` is its two-column
+  zip form for the (w1, w2) streams).
 """
 
 from __future__ import annotations
@@ -27,6 +37,28 @@ def words(col: Column) -> Column:
 
 def word_count(col: Column) -> Column:
     return F.size(words(col))
+
+
+def windows(ws, n, f, short: Column | None = None) -> Column:
+    """``f(slice(ws, i, n))`` for every n-word window, i = 1 … size(ws)−n+1,
+    in document order. ``ws`` is a word array (a column, a column name or
+    a let-bound lambda variable: a captured expression re-evaluates per
+    window); ``n`` is an int or an int column. Spark's ``sequence(1, 0)``
+    counts DOWN, so an array shorter than ``n`` gets ``short`` instead —
+    an empty array, or ``f`` of the whole run — and with ``short=None``
+    the caller must have dropped those rows up front."""
+    k = F.size(ws) - (n - 1)
+    grams = F.transform(F.sequence(F.lit(1), k), lambda i: f(F.slice(ws, i, n)))
+    return grams if short is None else F.when(k > 0, grams).otherwise(short)
+
+
+def bigrams(ws) -> Column:
+    """array<struct<w1, w2>> of a word array's adjacent pairs — the
+    two-slice zip (no window loop); the caller drops arrays of < 2 words."""
+    return F.arrays_zip(
+        F.slice(ws, 1, F.size(ws) - 1).alias("w1"),
+        F.slice(ws, 2, F.size(ws) - 1).alias("w2"),
+    )
 
 
 def char_len(col: Column) -> Column:
@@ -76,46 +108,6 @@ def strip_markdown(col: Column) -> Column:
 def first_heading(col: Column) -> Column:
     """First `# ` heading (decagon/step.py:100-103, docling_step.py:92-109)."""
     return F.regexp_extract(col, r"(?m)^# (.+)$", 1)
-
-
-def tlsh_like_digest(col: Column) -> Column:
-    """Locality-sensitive content digest filling the reference's
-    ``text_tlsh_hash`` slot (qdrant/step.py:264-283 — computed with the tlsh
-    C library there, gated behind HAS_TLSH, stored but never joined).
-
-    The tlsh library isn't available here, so this is a 64-hex-char
-    **minwise digest**, not TLSH wire format: 4 seeded min-hashes over the
-    word-hash set, each rendered as 16 hex chars. Near-duplicate texts agree
-    on whole 16-char segments with probability ≈ their word-set Jaccard per
-    segment — so unlike TLSH's distance score, segment equality is directly
-    GROUP BY-able / joinable at scale (the upgrade the north star asks for).
-
-    Pure pyspark.sql.functions — no Python on executors. The word-hash
-    array is let-bound via transform(array(...), arr -> ...)[0] so the 4
-    seeded folds share ONE evaluation of the tokenize+hash pipeline (HOF
-    lambdas re-evaluate captured subexpressions per element otherwise).
-    Empty/blank text → 64 zeros.
-    """
-    hashes = F.transform(words(col), lambda w: F.xxhash64(w))
-    return F.transform(
-        F.array(hashes),
-        lambda arr: F.concat_ws(
-            "",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(3)),
-                lambda seed: F.lpad(
-                    F.hex(
-                        F.coalesce(
-                            F.array_min(F.transform(arr, lambda h: F.xxhash64(h, seed))),
-                            F.lit(0),
-                        )
-                    ),
-                    16,
-                    "0",
-                ),
-            ),
-        ),
-    )[0]
 
 
 def marker_words_count(col: Column, markers: tuple[str, ...]) -> Column:

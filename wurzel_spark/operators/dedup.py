@@ -71,16 +71,13 @@ def shingles(text_col, n: int = 3):
     Built from pure array functions (split → sequence → transform →
     array_distinct) — deterministic, codegen'd, no UDF.
     """
-    ws = TXT.words(text_col)
-    k = F.size(ws) - F.lit(n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k),
-            lambda i: F.array_join(F.slice(ws, i, n), " "),
-        ),
-    ).otherwise(F.array(F.array_join(ws, " ")))
-    return F.array_distinct(grams)
+    return F.array_distinct(_word_grams(TXT.words(text_col), n))
+
+
+def _word_grams(ws, n: int):
+    """POSITIONAL space-joined word n-grams; an array shorter than ``n``
+    yields its whole run joined."""
+    return TXT.windows(ws, n, lambda g: F.array_join(g, " "), F.array(F.array_join(ws, " ")))
 
 
 def _word_hashes(text_col):
@@ -103,18 +100,18 @@ def _word_hash_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _shingle_hashes_from(hs, n: int):
-    """Distinct shingle hashes from an ALREADY-hashed word array (``hs`` must
-    be a lambda-bound variable so the word-hash array is evaluated once per
-    row, not once per shingle position). xxhash64 over the long slice avoids
+def _gram_hashes(hs, n: int):
+    """POSITIONAL n-gram hashes of an ALREADY-hashed word array (``hs`` a
+    column or a lambda-bound variable, so the word-hash array is evaluated
+    once per row, not once per position); an array shorter than ``n``
+    yields the hash of its whole run. xxhash64 over the long slice avoids
     arithmetic overflow under ANSI mode."""
-    k = F.size(hs) - F.lit(n - 1)
-    return F.array_distinct(
-        F.when(
-            k > 0,
-            F.transform(F.sequence(F.lit(1), k), lambda i: F.xxhash64(F.slice(hs, i, n))),
-        ).otherwise(F.array(F.xxhash64(hs)))
-    )
+    return TXT.windows(hs, n, F.xxhash64, F.array(F.xxhash64(hs)))
+
+
+def _shingle_hashes_from(hs, n: int):
+    """Distinct shingle hashes: the set form of :func:`_gram_hashes`."""
+    return F.array_distinct(_gram_hashes(hs, n))
 
 
 def shingle_hashes(text_col, n: int = 3):
@@ -1293,18 +1290,7 @@ def duplicated_span_stats(
     DuckDB oracle builds literal span strings instead of hashes; counts
     agree since 64-bit collisions are negligible (~positions²/2⁶⁵).
     """
-    whs = F.transform(TXT.words(F.col(text_col)), lambda w: F.xxhash64(w))
-    k = F.size("whs") - F.lit(n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(F.sequence(F.lit(1), k), lambda i: F.xxhash64(F.slice("whs", i, n))),
-    ).otherwise(F.array(F.xxhash64("whs")))
-    spans = (
-        common.parallelize(df)
-        .select(F.col(id_col).alias("id"), whs.alias("whs"))
-        .filter(F.size("whs") > 0)
-        .select("id", F.explode(grams).alias("h"))
-    )
+    spans = _span_hash_stream(df, id_col, text_col, n)
     # "occurs in another doc" ⇔ min(id) != max(id) over the span hash.
     # SKEW-SAFE shape, join-free (default since r4): collapse to distinct
     # (id, h) with per-doc occurrence counts (map-side combine), then one
@@ -1405,22 +1391,16 @@ def eval_span_hashes(
 
 
 def _span_hash_stream(
-    df: DataFrame, id_col: str, text_col: str, n: int
+    df: DataFrame, id_col: str, text_col: str, n: int, pos: bool = False
 ) -> DataFrame:
-    whs = F.transform(TXT.words(F.col(text_col)), lambda w: F.xxhash64(w))
-    k = F.size("whs") - F.lit(n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k), lambda i: F.xxhash64(F.slice("whs", i, n))
-        ),
-    ).otherwise(F.array(F.xxhash64("whs")))
-    return (
-        common.parallelize(df)
-        .select(F.col(id_col).alias("id"), whs.alias("whs"))
-        .filter(F.size("whs") > 0)
-        .select("id", F.explode(grams).alias("h"))
-    )
+    """(id, h) — (id, pos, h) with ``pos``, 0-based — one row per n-word
+    span of every non-empty document: the positional span hashes of its
+    :func:`_word_hash_frame` (a doc shorter than ``n`` is one span)."""
+    wh = _word_hash_frame(df, id_col, text_col).filter(F.size("whs") > 0)
+    grams = _gram_hashes(F.col("whs"), n)
+    if pos:
+        return wh.select("id", F.posexplode(grams).alias("pos", "h"))
+    return wh.select("id", F.explode(grams).alias("h"))
 
 
 def decontamination_overlap(
@@ -1692,20 +1672,7 @@ def strip_duplicated_spans(
 
     Returns (id, text_clean, n_tokens, n_tokens_removed).
     """
-    whs = F.transform(TXT.words(F.col(text_col)), lambda w: F.xxhash64(w))
-    k = F.size("whs") - F.lit(n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k), lambda i: F.xxhash64(F.slice("whs", i, n))
-        ),
-    ).otherwise(F.array(F.xxhash64("whs")))
-    base = (
-        common.parallelize(df)
-        .select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"), whs.alias("whs"))
-        .filter(F.size("whs") > 0)
-        .select("id", "__text", F.posexplode(grams).alias("pos", "h"))
-    )
+    base = _span_hash_stream(df, id_col, text_col, n, pos=True)
     dup_h = (
         base.groupBy("h")
         .agg(F.min("id").alias("lo"), F.max("id").alias("hi"))
@@ -1831,15 +1798,7 @@ def md5_prefix_hash(col):
 def _positional_gram_hashes(ws_b, k: int, hash_fn):
     """POSITIONAL (non-distinct) k-gram hashes — winnowing needs the gram
     sequence in document order, unlike the shingle-set builders above."""
-    n = F.size(ws_b) - F.lit(k - 1)
-    grams = F.when(
-        n > 0,
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.array_join(F.slice(ws_b, i, k), " "),
-        ),
-    ).otherwise(F.array(F.array_join(ws_b, " ")))
-    return F.transform(grams, hash_fn)
+    return F.transform(_word_grams(ws_b, k), hash_fn)
 
 
 def _window_minima(hs_b, w: int):
@@ -1847,13 +1806,7 @@ def _window_minima(hs_b, w: int):
     the winnowing selection rule (min hash per window of w grams; ties
     collapse to one value, and distinct windows sharing a minimum emit it
     once, per Schleimer et al. §4's 'record each ... once' rule)."""
-    m = F.size(hs_b) - F.lit(w - 1)
-    return F.array_distinct(
-        F.when(
-            m > 0,
-            F.transform(F.sequence(F.lit(1), m), lambda j: F.array_min(F.slice(hs_b, j, w))),
-        ).otherwise(F.array(F.array_min(hs_b)))
-    )
+    return F.array_distinct(TXT.windows(hs_b, w, F.array_min, F.array(F.array_min(hs_b))))
 
 
 def winnow_fingerprints(
@@ -2374,10 +2327,26 @@ def ngram_novelty(
     tables, never a shingle-level join. Novelty is a single division of
     exact integers (cross-engine bit-exact).
     """
-    sh = common.parallelize(df).select(
+    sh = ngram_novelty_shingles(df, id_col, text_col, n)
+    sh = sh.localCheckpoint(eager=True)  # feeds sizes AND firsts
+    return ngram_novelty_from_shingles(sh, id_col)
+
+
+def ngram_novelty_shingles(
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
+) -> DataFrame:
+    """(id, shingle): the corpus pass of :func:`ngram_novelty` — one row
+    per distinct shingle hash of each document. Also the staging unit of
+    the streaming twin (streaming/novelty.py)."""
+    return common.parallelize(df).select(
         F.col(id_col).alias("id"), F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle")
     )
-    sh = sh.localCheckpoint(eager=True)  # feeds sizes AND firsts
+
+
+def ngram_novelty_from_shingles(sh: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(``id_col``, n_shingles, n_novel, novelty) over (id, shingle) rows —
+    the tail of :func:`ngram_novelty` and the streaming drain. A shingle is
+    novel in the doc with its minimum id."""
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
     novel = (
         sh.groupBy("shingle")

@@ -153,7 +153,7 @@ def simple_context(df: DataFrame, keywords_col: str = "keywords", stopwords: tup
     stop_arr = F.array(*[F.lit(s.lower()) for s in stopwords]) if stopwords else F.array()
     toks = F.split(F.col(keywords_col), r"([.,!?]+)?\s+")
     kept = F.filter(toks, lambda t: (t != "") & ~F.array_contains(stop_arr, F.lower(t)))
-    return df.withColumn("keywords", F.array_join(kept, " "))
+    return df.withColumn(keywords_col, F.array_join(kept, " "))
 
 
 def hash_embedding(text: str, dim: int = 64) -> list[float]:

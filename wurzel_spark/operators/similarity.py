@@ -169,19 +169,27 @@ def _nearest_cell(
     )
 
 
-def _argmax_cell(
-    emb: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+def _cell_sims(
+    emb: DataFrame, centroids: DataFrame, id_col: str, vec_col: str, *carry: str
 ) -> DataFrame:
-    """(id, vec, cell, sim): each vector's nearest centroid by cosine
-    (:func:`cosine_pd`), ties to the lower cell id. ``centroids`` is
-    (id_col, vec_col), its ids become cell ids."""
+    """(id, *carry, cell, sim): every vector's cosine (:func:`cosine_pd`)
+    to every centroid. ``centroids`` is (id_col, vec_col), its ids become
+    cell ids; only the centroids are broadcast."""
     c = centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cvec"))
-    scored = emb.crossJoin(F.broadcast(c)).select(
+    return emb.crossJoin(F.broadcast(c)).select(
         id_col,
-        vec_col,
+        *carry,
         "cell",
         cosine_pd(F.col(vec_col), F.col("cvec")).alias("sim"),
     )
+
+
+def _argmax_cell(
+    emb: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
+) -> DataFrame:
+    """(id, vec, cell, sim): each vector's nearest centroid by cosine,
+    ties to the lower cell id."""
+    scored = _cell_sims(emb, centroids, id_col, vec_col, vec_col)
     return _nearest_cell(scored, id_col, vec_col)
 
 
@@ -691,16 +699,8 @@ def cell_stats(
     watches (skewed cells → re-seed or split) and the partition-planning
     input for IVF search at 100 TB (cells map to partitions).
     """
-    c = centroids.select(
-        F.col(id_col).alias("cell"), F.col(vec_col).alias("centroid_vec")
-    )
-    scored = emb.crossJoin(F.broadcast(c)).select(
-        id_col,
-        "cell",
-        cosine_pd(F.col(vec_col), F.col("centroid_vec")).alias("sim"),
-    )
     return (
-        _nearest_cell(scored, id_col)
+        _nearest_cell(_cell_sims(emb, centroids, id_col, vec_col), id_col)
         .groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
@@ -1922,17 +1922,17 @@ def index_drift_stats(
     """
     # assign each snapshot independently — ids may overlap between
     # snapshots (the same vector existing at index time and now), so a
-    # union + per-id argmax would silently collapse them
-    per_old = (
-        _argmax_cell(old_emb, centroids, id_col, vec_col)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_old"))
-    )
-    per_new = (
-        _argmax_cell(new_emb, centroids, id_col, vec_col)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n_new"))
-    )
+    # union + per-id argmax would silently collapse them. Only the cell
+    # is read: no vector rides through the argmax buffer.
+    def per_cell(emb: DataFrame, name: str) -> DataFrame:
+        scored = _cell_sims(emb, centroids, id_col, vec_col)
+        return (
+            _nearest_cell(scored, id_col)
+            .groupBy("cell")
+            .agg(F.count(F.lit(1)).alias(name))
+        )
+
+    per_old, per_new = per_cell(old_emb, "n_old"), per_cell(new_emb, "n_new")
     per = (
         per_old.join(per_new, "cell", "full_outer")
         .select(

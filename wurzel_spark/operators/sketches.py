@@ -596,13 +596,9 @@ def _span_strings(df: DataFrame, id_col: str, text_col: str, n: int):
     across cores first (no-op on naturally-partitioned big inputs)."""
     df = parallelize(df)
     ws = TXT.words(F.col(text_col))
-    k = F.size("ws") - F.lit(n - 1)
-    grams = F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k), lambda i: F.concat_ws(" ", F.slice("ws", i, n))
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", F.col("ws"))))
+    grams = TXT.windows(
+        "ws", n, lambda g: F.concat_ws(" ", g), F.array(F.concat_ws(" ", F.col("ws")))
+    )
     return (
         df.select(F.col(id_col).alias("id"), ws.alias("ws"))
         .filter(F.size("ws") > 0)
@@ -1156,16 +1152,12 @@ def ngram_diversity_hll(
             lambda n: F.element_at(
                 F.transform(
                     F.array(ws),
-                    lambda w: F.when(
-                        F.size(w) - n + 1 >= 1,
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(w) - n + 1),
-                            lambda i: F.struct(
-                                n.alias("n"),
-                                F.concat_ws(" ", F.slice(w, i, n)).alias("g"),
-                            ),
-                        ),
-                    ).otherwise(F.array().cast("array<struct<n:int,g:string>>")),
+                    lambda w: TXT.windows(
+                        w,
+                        n,
+                        lambda g: F.struct(n.alias("n"), F.concat_ws(" ", g).alias("g")),
+                        F.array().cast("array<struct<n:int,g:string>>"),
+                    ),
                 ),
                 1,
             ),

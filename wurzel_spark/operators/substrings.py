@@ -58,18 +58,9 @@ def window_hashes(df: DataFrame, length: int = MIN_DUP_LEN,
     toks = parallelize(df).select(
         F.col(id_col).alias("doc_id"), ws.alias("ws")
     ).select("doc_id", "ws", F.size("ws").alias("n_tokens"))
-    k = F.col("n_tokens") - F.lit(length - 1)
     wins = (
-        toks.filter(k > 0)
-        .select(
-            "doc_id",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(1), k),
-                    lambda i: F.xxhash64(F.slice("ws", i, length)),
-                )
-            ).alias("s0", "h"),
-        )
+        toks.filter(F.col("n_tokens") - F.lit(length - 1) > 0)
+        .select("doc_id", F.posexplode(TXT.windows("ws", length, F.xxhash64)).alias("s0", "h"))
         .select("doc_id", (F.col("s0") + 1).alias("s"), "h")
     )
     return wins, toks

@@ -359,16 +359,10 @@ def pmi_bigrams(
     combine — the bigram_lm_score docstring's documented skew hazard,
     avoided here by construction). Top-k is a global sort of the
     ≥min_count survivors (vocabulary-sized, not corpus-sized)."""
-    ws = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-    toks = df.select(ws.alias("ws")).filter(F.size("ws") >= 2)
-    bg = toks.select(
-        F.explode(
-            F.arrays_zip(
-                F.slice("ws", 1, F.size("ws") - 1).alias("w1"),
-                F.slice("ws", 2, F.size("ws") - 1).alias("w2"),
-            )
-        ).alias("b")
-    ).select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+    toks = df.select(TXT.words(F.col(text_col)).alias("ws")).filter(F.size("ws") >= 2)
+    bg = toks.select(F.explode(TXT.bigrams(F.col("ws"))).alias("b")).select(
+        F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
+    )
     cxy = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_xy"))
     cxy = cxy.localCheckpoint(eager=True)  # feeds marginals, total, survivors
     cx = cxy.groupBy("w1").agg(F.sum("c_xy").alias("c_x"))
@@ -609,13 +603,9 @@ ORDER BY doc_id
 # ---------------------------------------------------- repetition filters
 
 def _ngrams_from(ws, n: int):
-    k = F.size(ws) - (n - 1)
-    return F.when(
-        k > 0,
-        F.transform(
-            F.sequence(F.lit(1), k), lambda i: F.concat_ws(" ", F.slice(ws, i, n))
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return TXT.windows(
+        ws, n, lambda g: F.concat_ws(" ", g), F.array().cast("array<string>")
+    )
 
 
 def word_ngrams(text_col, n: int):
@@ -991,17 +981,11 @@ def bigram_lm_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     reproduce counts exactly; a production variant would xxhash64 the
     words first so shuffles carry longs (collision-merge odds ~n²/2⁶⁵).
     """
-    ws = F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
+    ws = TXT.words(F.col(text_col))
     toks = df.select(F.col("doc_id"), ws.alias("ws")).filter(F.size("ws") >= 2)
-    bg = toks.select(
-        "doc_id",
-        F.explode(
-            F.arrays_zip(
-                F.slice("ws", 1, F.size("ws") - 1).alias("w1"),
-                F.slice("ws", 2, F.size("ws") - 1).alias("w2"),
-            )
-        ).alias("b"),
-    ).select("doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
+    bg = toks.select("doc_id", F.explode(TXT.bigrams(F.col("ws"))).alias("b")).select(
+        "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
+    )
     # Corpus counts as WINDOW functions over the bigram stream: the stream
     # is scanned once and shuffled twice (by (w1,w2), then by w1) instead
     # of three scans + two aggregate-join shuffles — measured 2.5× faster.
@@ -1236,7 +1220,7 @@ def _c4_kept_lines(c):
     return F.filter(
         _c4_nonempty_lines(c),
         lambda x: F.trim(x).rlike('[.!?"]$')
-        & (F.size(F.filter(F.split(F.trim(x), r"\s+"), lambda w: w != "")) >= 5)
+        & (TXT.word_count(x) >= 5)
         & ~F.lower(x).contains("javascript"),
     )
 
@@ -1287,8 +1271,7 @@ def c4_line_filter_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     n_kept_words = F.aggregate(
         kept,
         F.lit(0).cast("long"),
-        lambda acc, x: acc
-        + F.size(F.filter(F.split(F.trim(x), r"\s+"), lambda w: w != "")),
+        lambda acc, x: acc + TXT.word_count(x),
     )
     keep = (~_c4_page_drop(c)) & (n_sentences >= 3)
     return df.select(
@@ -1781,7 +1764,7 @@ def dsir_importance_scores(
     toks = df.select(
         "doc_id",
         "source",
-        F.explode(F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")).alias("w"),
+        F.explode(TXT.words(F.col(text_col))).alias("w"),
     ).select(
         "doc_id",
         "source",
@@ -1911,7 +1894,7 @@ def bpe_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         count = TK.token_counter("bpe")
         return s.fillna("").map(count).astype("int64")
 
-    ws = F.size(F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""))
+    ws = TXT.word_count(F.col(text_col))
     return (
         df.select(
             "doc_id",
@@ -2661,18 +2644,12 @@ def ngram_diversity_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
             lambda n: F.element_at(
                 F.transform(
                     F.array(ws),
-                    # sequence(1, 0) descends in Spark — guard short docs
-                    # with an explicit empty array instead
-                    lambda w: F.when(
-                        F.size(w) - n + 1 >= 1,
-                        F.transform(
-                            F.sequence(F.lit(1), F.size(w) - n + 1),
-                            lambda i: F.struct(
-                                n.alias("n"),
-                                F.xxhash64(F.slice(w, i, n)).alias("g"),
-                            ),
-                        ),
-                    ).otherwise(F.array().cast("array<struct<n:int,g:bigint>>")),
+                    lambda w: TXT.windows(
+                        w,
+                        n,
+                        lambda g: F.struct(n.alias("n"), F.xxhash64(g).alias("g")),
+                        F.array().cast("array<struct<n:int,g:bigint>>"),
+                    ),
                 ),
                 1,
             ),
@@ -3025,13 +3002,7 @@ def source_overlap_matrix(df: DataFrame, text_col: str = "text") -> DataFrame:
     grams_arr = F.element_at(
         F.transform(
             F.array(ws),
-            lambda w: F.when(
-                F.size(w) - n + 1 >= 1,
-                F.transform(
-                    F.sequence(F.lit(1), F.size(w) - n + 1),
-                    lambda i: F.xxhash64(F.slice(w, i, n)),
-                ),
-            ).otherwise(F.array().cast("array<bigint>")),
+            lambda w: TXT.windows(w, n, F.xxhash64, F.array().cast("array<bigint>")),
         ),
         1,
     )
@@ -4237,12 +4208,7 @@ def ccnet_doc_bigrams(df: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         "source",
         "lang",
-        F.explode(
-            F.arrays_zip(
-                F.slice("ws", 1, F.size("ws") - 1).alias("w1"),
-                F.slice("ws", 2, F.size("ws") - 1).alias("w2"),
-            )
-        ).alias("b"),
+        F.explode(TXT.bigrams(F.col("ws"))).alias("b"),
     ).select(
         "doc_id",
         "source",
@@ -6193,16 +6159,17 @@ def source_tv_matrix(df: DataFrame, text_col: str = "text") -> DataFrame:
     (map-side combinable); the head prune is a V-row sort-limit; the
     dense grid and pair join are (S·V)- and (S²·V)-row — dimension ×
     head bounded, never corpus-sized."""
-    toks = df.select(
-        "source",
-        F.explode(
-            F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-        ).alias("w"),
-    )
-    per_sw = toks.groupBy("source", "w").agg(
+    return source_tv_from_counts(source_term_counts(df, text_col))
+
+
+def source_term_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(source, w, c): per-source token counts — the corpus pass of
+    :func:`source_tv_matrix` and the staging unit of its streaming twin
+    (streaming/sourcetv.py); decimal(38,0) so the sums never overflow."""
+    toks = df.select("source", F.explode(TXT.words(F.col(text_col))).alias("w"))
+    return toks.groupBy("source", "w").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("c")
     )
-    return source_tv_from_counts(per_sw)
 
 
 def source_tv_from_counts(per_sw: DataFrame) -> DataFrame:
@@ -6721,9 +6688,7 @@ def prefix_template_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     body), then source-grain windows over prefix-grain rows."""
     from pyspark.sql import Window as W
 
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda x: x != ""
-    )
+    toks = TXT.words(F.lower(F.col(text_col)))
     prefix = F.array_join(F.slice(toks, 1, TEMPLATE_PREFIX_WORDS), " ")
     per_prefix = df.select("source", prefix.alias("prefix")).groupBy(
         "source", "prefix"

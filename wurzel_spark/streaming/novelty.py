@@ -3,8 +3,9 @@ micro-batches and publish global novelty at drain.
 
 Batch twin: operators/dedup.ngram_novelty. Novelty's "first seen" is
 defined by the MIN doc id, not arrival order, so the streaming form is
-order-INDEPENDENT: stage every batch's (id, shingle) pairs, and at drain
-run the same two aggregates as the batch operator over the staged union
+order-INDEPENDENT: stage every batch's (id, shingle) pairs
+(`ngram_novelty_shingles`), and at drain run the batch operator's own
+tail (`ngram_novelty_from_shingles`, imported) over the staged union
 — bit-equal to ngram_novelty over the whole corpus under any admission
 split (parity-tested with one-file-per-trigger admission and the
 compaction cadence enabled).
@@ -25,10 +26,8 @@ this module is the throughput-oriented exact twin.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from wurzel_spark.operators.common import parallelize
-from wurzel_spark.operators.dedup import shingle_hashes
+from wurzel_spark.operators.dedup import ngram_novelty_from_shingles, ngram_novelty_shingles
 from wurzel_spark.streaming._state import fold_stream, staged_state
 
 
@@ -46,10 +45,7 @@ def novelty_stream(
     ngram_novelty."""
     fold_stream(
         stream, state_dir, checkpoint_dir, ["id", "shingle"],
-        lambda b: parallelize(b).select(
-            F.col(id_col).alias("id"),
-            F.explode(shingle_hashes(F.col(text_col), n)).alias("shingle"),
-        ),
+        lambda b: ngram_novelty_shingles(b, id_col, text_col, n),
         compact_every,
     )
     return drain_novelty_state(stream.sparkSession, state_dir, id_col)
@@ -72,23 +68,4 @@ def drain_novelty_state(spark, state_dir: str, id_col: str = "doc_id") -> DataFr
         return spark.createDataFrame(
             [], f"{id_col} long, n_shingles long, n_novel long, novelty double"
         )
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    novel = (
-        sh.groupBy("shingle")
-        .agg(F.min("id").alias("id"))
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).alias("n_novel"))
-    )
-    return (
-        sizes.join(novel, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            "n_shingles",
-            F.coalesce(F.col("n_novel"), F.lit(0)).alias("n_novel"),
-            (
-                F.coalesce(F.col("n_novel"), F.lit(0)).cast("double")
-                / F.col("n_shingles")
-            ).alias("novelty"),
-        )
-        .orderBy(id_col)
-    )
+    return ngram_novelty_from_shingles(sh, id_col)

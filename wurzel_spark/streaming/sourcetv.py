@@ -5,9 +5,10 @@ at drain.
 Batch twin: operators/textstats.source_tv_matrix.  The per-(source,
 term) token counts are pure integer sums — additive across any batch
 admission split — so each batch stages its term counts keyed by
-(src_batch, source, w) and the drain sums them before the shared
-head-vocab/dense-grid/TV tail (`source_tv_from_counts`, imported, not
-re-implemented).  The live ingest-drift monitor: a new shard whose term
+(src_batch, source, w) — the batch operator's own corpus pass
+(`source_term_counts`, imported) — and the drain sums them before the
+shared head-vocab/dense-grid/TV tail (`source_tv_from_counts`, imported
+too).  The live ingest-drift monitor: a new shard whose term
 USAGE rates diverge from its source's history moves the drained matrix
 the moment it lands, before any model sees it.  Bit-equal to the batch
 query on the same rows; replayed batches overwrite their partition (the
@@ -20,22 +21,9 @@ Heaps-sublinear in tokens, never corpus-sized.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from wurzel_spark.operators.textstats import source_tv_from_counts
+from wurzel_spark.operators.textstats import source_term_counts, source_tv_from_counts
 from wurzel_spark.streaming._state import fold_stream, summed_state
-
-
-def _term_counts(batch_df: DataFrame, text_col: str) -> DataFrame:
-    toks = batch_df.select(
-        "source",
-        F.explode(
-            F.filter(F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != "")
-        ).alias("w"),
-    )
-    return toks.groupBy("source", "w").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("c")
-    )
 
 
 def source_tv_stream(
@@ -49,7 +37,7 @@ def source_tv_stream(
     drift matrix for the full corpus seen — identical to the batch twin."""
     fold_stream(
         stream, state_dir, checkpoint_dir, ["src_batch", "source", "w"],
-        lambda b: _term_counts(b, text_col), compact_every,
+        lambda b: source_term_counts(b, text_col), compact_every,
     )
     return drain_source_tv_state(stream.sparkSession, state_dir)
 
