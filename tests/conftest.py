@@ -25,6 +25,7 @@ os.environ.setdefault("SPARK_DRIVER_MEMORY", "6g")
 _TIER_FIRST = (
     "test_contract_consistency.py",
     "test_gate_sweep.py",
+    "test_near_dup_driver.py",
     "test_plans.py",
     "test_plans_round4.py",
     "test_plans_round6.py",

@@ -298,6 +298,36 @@ def test_near_dup_core_is_written_once():
     assert "minhash_signatures" not in src
 
 
+def test_near_dup_driver_twin_shares_the_kernel_math():
+    """The Arrow kernel and the near-dup core's driver twin compute
+    signatures through one numpy family function; the twin pulls once and
+    falls through only where common.fits (or the common.py helper that
+    asks it) says no."""
+    import ast
+
+    path = "wurzel_spark/operators/dedup.py"
+    src, fns = _source(path), _functions(path)
+    for row_fn in ("_simhash_rows(", "_minhash_rows(", "_band_hashes_rows(", "_pad_hash_matrix("):
+        assert src.count(row_fn) == 2 and row_fn in fns["_family_arrays"], row_fn
+    assert "_family_arrays(" in fns["_signatures"]
+    assert "_family_arrays(" in fns["_families_by_length"]
+    twin = fns["_near_pairs_driver"]
+    assert "_families_by_length(" in twin
+    pulls = (".toArrow(", ".toPandas(", ".collect(", "_collect_as_arrow(")
+    assert src.count(".toArrow(") == 1
+    assert [twin.count(p) for p in pulls] == [1, 0, 0, 0]
+    gates = []
+    for node in ast.walk(ast.parse(twin)):
+        if isinstance(node, ast.If) and any(
+            isinstance(r, ast.Return) and ast.unparse(r) == "return None" for r in node.body
+        ):
+            gates.append(ast.unparse(node.test).split("(")[0])
+    assert gates == ["not common.driver_input_fits", "not common.fits"], gates
+    assert twin.count("return None") == 2
+    helper = _functions("wurzel_spark/operators/common.py")["driver_input_fits"]
+    assert "return fits(plan_size_bytes(df), DRIVER_MAX_INPUT_BYTES)" in helper
+
+
 def test_ann_core_is_written_once():
     """similarity.py's ANN core has one ranker, one nearest-cell argmax,
     one PQ ADC scorer and one exact rerank. The column ``cosine`` (which

@@ -18,6 +18,7 @@ GATED_QUERIES = frozenset(
     {
         "cluster_best_keep",
         "cluster_best_keep_capped",
+        "combined_near_dup_pairs",
         "curation_funnel_v2",
         "dedup_clusters",
         "dup_graph_kcore",
@@ -27,8 +28,10 @@ GATED_QUERIES = frozenset(
         "kmeans_train_stats",
         "leakage_safe_split",
         "lsh_recall_audit",
+        "minhash_lsh_pairs",
         "quality_percentile_gate",
         "rfm_segments",
+        "simhash_near_pairs",
         "supplier_pagerank",
     }
 )

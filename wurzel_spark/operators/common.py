@@ -1,8 +1,8 @@
 """Every size gate in the package decides here.
 
 Below a gate, work takes a shortcut: it runs driver-side (union-find,
-PageRank, k-core, Lloyd, the two-phase rank's offsets), broadcasts a
-small side, or pins a SMALL reused intermediate with
+PageRank, k-core, Lloyd, the two-phase rank's offsets, the near-dup
+core), broadcasts a small side, or pins a SMALL reused intermediate with
 ``localCheckpoint``. Above it — or when the size is unknown — the
 bit-equal distributed twin runs. Each gate site measures its size and
 asks :func:`fits`, always through the module (``common.fits(...)``, never
@@ -11,6 +11,13 @@ in the package to its fall-through at once; the test suite's
 ``gates_off`` fixture and its repo-wide gates-off sweep do exactly
 that. Shared limits live here; a limit only one module knows stays a
 private constant there but still decides through :func:`fits`.
+
+Gate sites (14 in 7 modules): dedup ×6 — union-find, membership
+broadcast, incremental fold, the lsh_recall_audit pin, and the near-dup
+core's driver twin (its input bytes, then its band-join pair count);
+graph ×3 — pagerank, supplier_pagerank, k-core; textstats DSIR pin;
+relational rfm pin; selection two-phase sources; similarity kmeans;
+ordering broadcast.
 """
 
 from __future__ import annotations
@@ -27,6 +34,10 @@ BROADCAST_MAX_ROWS = 4_000_000
 # pin is cheap and saves a second scan; above it (or when the size is
 # unknown) the two-scan plan runs instead.
 CHECKPOINT_MAX_INPUT_BYTES = 1 << 28  # 256 MiB
+# Byte budget for pulling a corpus's word hashes to the driver (the
+# near-dup core's driver twin): one Arrow pull and numpy instead of the
+# distributed signature, band-join and verify jobs.
+DRIVER_MAX_INPUT_BYTES = 1 << 24  # 16 MiB
 
 
 def fits(size: int | None, limit: int) -> bool:
@@ -48,6 +59,11 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 def input_fits(df: DataFrame) -> bool:
     """Whether ``df``'s estimated size fits the checkpoint byte budget."""
     return fits(plan_size_bytes(df), CHECKPOINT_MAX_INPUT_BYTES)
+
+
+def driver_input_fits(df: DataFrame) -> bool:
+    """Whether ``df``'s estimated size fits the driver-pull byte budget."""
+    return fits(plan_size_bytes(df), DRIVER_MAX_INPUT_BYTES)
 
 
 def pin_if_small(frame: DataFrame, gate_df: DataFrame) -> DataFrame:

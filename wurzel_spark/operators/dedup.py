@@ -26,7 +26,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from wurzel_spark.functions import text as TXT
 from wurzel_spark.operators import common
@@ -69,9 +77,14 @@ def shingles(text_col, n: int = 3):
     """Distinct word-level n-gram shingles as an array column.
 
     Built from pure array functions (split → sequence → transform →
-    array_distinct) — deterministic, codegen'd, no UDF.
+    array_distinct) — deterministic, codegen'd, no UDF. The
+    transform(array(...)) wrapper let-binds the word array: each window
+    would otherwise split the whole document again.
     """
-    return F.array_distinct(_word_grams(TXT.words(text_col), n))
+    return F.element_at(
+        F.transform(F.array(TXT.words(text_col)), lambda ws: F.array_distinct(_word_grams(ws, n))),
+        1,
+    )
 
 
 def _word_grams(ws, n: int):
@@ -92,12 +105,17 @@ def _word_hashes(text_col):
     return F.transform(TXT.words(text_col), lambda w: F.xxhash64(w))
 
 
-def _word_hash_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _word_hash_frame(
+    df: DataFrame, id_col: str, text_col: str, spread: bool = True
+) -> DataFrame:
     """(id, whs): each document's word-hash array — the one corpus pass
-    that signatures, shingles and the Jaccard verifier all start from."""
-    return common.parallelize(df).select(
-        F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs")
-    )
+    that signatures, shingles and the Jaccard verifier all start from.
+    ``spread`` round-robins a small input across the cores first
+    (:func:`common.parallelize`); a pull to the driver or a candidate
+    subset gains nothing from it."""
+    if spread:
+        df = common.parallelize(df)
+    return df.select(F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs"))
 
 
 def _gram_hashes(hs, n: int):
@@ -330,6 +348,24 @@ def _simhash_rows(H: np.ndarray, M: np.ndarray) -> np.ndarray:
     return sig.view(np.int64)
 
 
+def _family_arrays(
+    arrs, families: tuple[str, ...], num_hashes: int, n: int, bands: int
+) -> dict[str, np.ndarray]:
+    """The signature math, written once for the Arrow kernel and the
+    driver twin: every requested family of a batch of non-empty
+    word-hash arrays, from one padded matrix (see :func:`_signatures`
+    for the families and their columns)."""
+    H, M = _pad_hash_matrix(arrs)
+    out = {}
+    if "simhash" in families:
+        out["simhash"] = _simhash_rows(H, M)
+    if "minhash" in families:
+        out["signature"] = _minhash_rows(H, M, num_hashes, n)
+        if "bands" in families:
+            out["bhs"] = _band_hashes_rows(out["signature"], bands, num_hashes // bands)
+    return out
+
+
 #: the kernel's output columns per signature family
 _FAMILY_FIELDS = {
     "simhash": [StructField("simhash", LongType())],
@@ -358,7 +394,6 @@ def _signatures(
     signatures land in IDENTICAL band buckets, so e empty docs would
     create O(e²) LSH candidate pairs.
     """
-    rows_per_band = num_hashes // bands
     fields = [f for fam in families for f in _FAMILY_FIELDS[fam]]
 
     @F.pandas_udf(StructType(fields))
@@ -366,16 +401,8 @@ def _signatures(
         arrs = whs.to_numpy()
         if len(arrs) == 0:
             return pd.DataFrame({f.name: [] for f in fields})
-        H, M = _pad_hash_matrix(arrs)
-        out = {}
-        if "simhash" in families:
-            out["simhash"] = _simhash_rows(H, M)
-        if "minhash" in families:
-            sig = _minhash_rows(H, M, num_hashes, n)
-            out["signature"] = list(sig)
-            if "bands" in families:
-                out["bhs"] = list(_band_hashes_rows(sig, bands, rows_per_band))
-        return pd.DataFrame(out)
+        out = _family_arrays(arrs, families, num_hashes, n, bands)
+        return pd.DataFrame({k: list(v) if v.ndim == 2 else v for k, v in out.items()})
 
     return (
         wh.filter(F.size("whs") > 0)
@@ -478,14 +505,18 @@ def _candidate_shingles(
     wh: DataFrame | None = None,
 ) -> DataFrame:
     """(id, sh): shingle hashes of just the docs whose id is in ``ids``
-    (one ``_CAND_ID`` column), reached through a broadcast LEFT SEMI join.
-    ``wh`` (the :func:`_word_hash_frame` of ``df``) is semi-joined instead
-    of ``df`` — no second text scan and split."""
+    (one ``_CAND_ID`` column, duplicates allowed), reached through a
+    broadcast LEFT SEMI join. ``wh`` (the :func:`_word_hash_frame` of
+    ``df``) is semi-joined instead of ``df`` — no second text scan and
+    split. The candidates are not spread over the cores: a round-robin
+    exchange per verify side is not reused, and each tokenized them again.
+    """
     if wh is None:
         wh = _word_hash_frame(
             df.join(F.broadcast(ids), F.col(id_col) == F.col(_CAND_ID), "left_semi"),
             id_col,
             text_col,
+            spread=False,
         )
     else:
         wh = wh.join(F.broadcast(ids), F.col("id") == F.col(_CAND_ID), "left_semi")
@@ -513,21 +544,22 @@ def _verify_jaccard_pairs(
     sf0.1, more than the pushdown saved; the semi-join is also the only
     shape that works unchanged when the candidate set is huge. The pair
     list itself is always broadcast so shingle arrays never shuffle.
-    ``cands`` must be materialized (localCheckpoint) by the caller.
+    ``cands`` must be materialized (localCheckpoint) by the caller. The
+    candidate ids keep their duplicates: the broadcast hashed relation
+    takes them as they are, and a distinct() would cost a shuffle job.
+    The pairs come unsorted; the entry points sort.
 
     Both ids come from ``df`` (or ``wh``, see :func:`_candidate_shingles`);
     ``df_b`` is the incremental case, where id_b docs come from that frame.
     """
     if df_b is None:
-        cand_ids = (
-            cands.select(F.col("id_a").alias(_CAND_ID))
-            .union(cands.select(F.col("id_b")))
-            .distinct()
+        cand_ids = cands.select(F.col("id_a").alias(_CAND_ID)).union(
+            cands.select(F.col("id_b"))
         )
         sh_a = sh_b = _candidate_shingles(df, cand_ids, id_col, text_col, n, wh)
     else:
-        ids_a = cands.select(F.col("id_a").alias(_CAND_ID)).distinct()
-        ids_b = cands.select(F.col("id_b").alias(_CAND_ID)).distinct()
+        ids_a = cands.select(F.col("id_a").alias(_CAND_ID))
+        ids_b = cands.select(F.col("id_b").alias(_CAND_ID))
         sh_a = _candidate_shingles(df, ids_a, id_col, text_col, n)
         sh_b = _candidate_shingles(df_b, ids_b, id_col, text_col, n)
     a = sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
@@ -539,8 +571,222 @@ def _verify_jaccard_pairs(
         .join(b, "id_b")
         .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .orderBy("id_a", "id_b")
     )
+
+
+# ------------------------------------------ near-dup core on the driver
+
+#: Below the driver-input gate the near-dup core runs as numpy on the
+#: driver (:func:`_near_pairs_driver`); each batch of set intersections
+#: probes at most this many shingle hashes, which bounds its memory.
+_PROBE_BATCH = 1 << 22
+
+
+def _ranges(counts: np.ndarray) -> np.ndarray:
+    """0 … c−1 for each c of ``counts``, concatenated."""
+    ends = np.cumsum(counts)
+    return np.arange(ends[-1] if len(ends) else 0) - np.repeat(ends - counts, counts)
+
+
+def _list_column(col) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(values, offsets, valid) of an Arrow list<long> column: row i holds
+    values[offsets[i]:offsets[i + 1]]; ``valid`` is False for a NULL list."""
+    arr = col.combine_chunks()
+    offs = arr.offsets.to_numpy().astype(np.int64)
+    vals = arr.values.to_numpy(zero_copy_only=False)[offs[0] : offs[-1]]
+    valid = ~arr.is_null().to_numpy(zero_copy_only=False)
+    return vals, offs - offs[0], valid
+
+
+def _families_by_length(
+    rows: list, families: tuple[str, ...], num_hashes: int, n: int, bands: int
+) -> dict[str, np.ndarray]:
+    """:func:`_family_arrays` over non-empty word-hash ``rows``, batched by
+    length class: a batch pads to less than twice its rows' lengths, so
+    one long document never pads the whole corpus to its length."""
+    shapes = _family_arrays([], families, num_hashes, n, bands)
+    out = {k: np.empty((len(rows),) + v.shape[1:], v.dtype) for k, v in shapes.items()}
+    cls = np.frexp(np.fromiter(map(len, rows), np.float64, len(rows)))[1]
+    for c in np.unique(cls):
+        idx = np.flatnonzero(cls == c)
+        batch = _family_arrays([rows[i] for i in idx], families, num_hashes, n, bands)
+        for k, v in batch.items():
+            out[k][idx] = v
+    return out
+
+
+def _buckets(keys: np.ndarray) -> list[tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Per column of ``keys`` (one band): the row order that sorts it and
+    the (start, size) in that order of every bucket — a run of at least
+    two equal keys."""
+    out = []
+    for col in keys.T:
+        order = np.argsort(col, kind="stable")
+        s = col[order]
+        starts = np.flatnonzero(np.r_[True, s[1:] != s[:-1]])
+        sizes = np.diff(np.r_[starts, len(s)])
+        out.append((order, starts[sizes > 1], sizes[sizes > 1]))
+    return out
+
+
+def _bucket_pair_count(buckets) -> int:
+    """Σ C(size, 2) over the buckets: the band join's rows, counted from
+    the bucket sizes alone, before any pair is built."""
+    return int(sum((sz * (sz - 1) // 2).sum() for _, _, sz in buckets))
+
+
+def _bucket_pairs(buckets, n_rows: int) -> tuple[np.ndarray, np.ndarray]:
+    """(lo, hi) row pairs, lo < hi, that share a bucket in any band, each
+    pair once."""
+    codes = [np.empty(0, np.int64)]
+    for order, starts, sizes in buckets:
+        pos = np.repeat(starts, sizes) + _ranges(sizes)
+        after = np.repeat(starts + sizes - 1, sizes) - pos  # later members of its bucket
+        left = np.repeat(pos, after)
+        a, b = order[left], order[left + 1 + _ranges(after)]
+        codes.append(np.minimum(a, b) * n_rows + np.maximum(a, b))
+    codes = np.unique(np.concatenate(codes))
+    return codes // max(n_rows, 1), codes % max(n_rows, 1)
+
+
+def _popcount64(x: np.ndarray) -> np.ndarray:
+    """Set bits per 64-bit word (SWAR) — Spark's ``bit_count``."""
+    x = x.view(np.uint64)
+    with np.errstate(over="ignore"):
+        x = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
+        m2 = np.uint64(0x3333333333333333)
+        x = (x & m2) + ((x >> np.uint64(2)) & m2)
+        x = (x + (x >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
+        return ((x * np.uint64(0x0101010101010101)) >> np.uint64(56)).astype(np.int32)
+
+
+def _rows_of_ids(rank: np.ndarray, a: np.ndarray, b: np.ndarray):
+    """(i, row_a, row_b) for every row pair whose id ranks are (a[i], b[i]):
+    the verify join's multiset, one row pair per i when ids are unique."""
+    by = np.argsort(rank, kind="stable")
+    cnt = np.bincount(rank, minlength=1)
+    start = np.cumsum(cnt) - cnt
+    per = cnt[a] * cnt[b]
+    i = np.repeat(np.arange(len(a)), per)
+    t = _ranges(per)
+    return i, by[start[a][i] + t // cnt[b][i]], by[start[b][i] + t % cnt[b][i]]
+
+
+def _set_jaccard(
+    vals: np.ndarray, offs: np.ndarray, ra: np.ndarray, rb: np.ndarray
+) -> np.ndarray:
+    """Exact Jaccard of the distinct-hash sets of rows ``ra[i]`` and
+    ``rb[i]`` (a list column as values + offsets): each hash of row a is
+    probed in row b's sorted (row, hash) keys, in batches of at most
+    ``_PROBE_BATCH`` probes."""
+    lens = np.diff(offs)
+    uniq, hid = np.unique(vals, return_inverse=True)
+    u = max(len(uniq), 1)
+    keys = np.sort(np.repeat(np.arange(len(lens)), lens) * u + hid)
+    la = lens[ra]
+    inter = np.zeros(len(ra), np.int64)
+    ends = np.cumsum(la)
+    marks = np.arange(_PROBE_BATCH, ends[-1] if len(ends) else 0, _PROBE_BATCH)
+    cuts = np.unique(np.r_[0, np.searchsorted(ends, marks), len(ra)])
+    for lo, hi in zip(cuts[:-1], cuts[1:]):
+        pair = np.repeat(np.arange(lo, hi), la[lo:hi])
+        q = rb[pair] * u + hid[np.repeat(offs[ra[lo:hi]], la[lo:hi]) + _ranges(la[lo:hi])]
+        hit = keys[np.minimum(np.searchsorted(keys, q), len(keys) - 1)] == q
+        inter[lo:hi] = np.bincount(pair - lo, weights=hit, minlength=hi - lo)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return inter.astype(np.float64) / (la + lens[rb] - inter).astype(np.float64)
+
+
+def _near_pairs_driver(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    families: tuple[str, ...],
+    num_hashes: int = 32,
+    n: int = 3,
+    bands: int = 8,
+    threshold: float = 0.5,
+    max_hamming: int = 3,
+    wh: DataFrame | None = None,
+) -> DataFrame | None:
+    """The near-dup core's driver twin, for ``df`` under the driver-input
+    gate: ``families`` ``("minhash",)`` gives :func:`minhash_dedup_pairs`'
+    rows, ``("simhash",)`` :func:`simhash_near_pairs`' and both
+    :func:`combined_near_dup_pairs`' — same columns, types and order.
+
+    One Arrow pull (one job, no text) of each document's word hashes
+    ``whs`` and, for MinHash, its shingle hashes ``sh`` — the JVM
+    expression the distributed verifier uses, so Jaccard values are
+    bit-identical. Signatures come from :func:`_family_arrays`, the Arrow
+    kernel's own math; candidates are the pairs sharing a band bucket
+    (MinHash band hash, SimHash 16-bit band), with the distributed
+    twin's rules: empty and NULL documents have no signature, a pair of
+    equal ids is never a candidate, and duplicate ids verify as the
+    distributed join does (every row of each id). Returns None — the
+    distributed twin runs — above the input gate, or when the band join
+    would build more than ``DRIVER_MAX_EDGES`` pairs (one skewed bucket
+    of e documents alone builds e²/2).
+    """
+    if not common.driver_input_fits(df):
+        return None
+    if wh is None:
+        wh = _word_hash_frame(df, id_col, text_col, spread=False)
+    minhash = "minhash" in families
+    sh = [_shingle_hashes_from_whs(F.col("whs"), n).alias("sh")] if minhash else []
+    pulled = wh.filter(F.col("id").isNotNull()).select("id", "whs", *sh)
+    tbl = pulled.toArrow()
+    # ranks order like the ids; duplicate ids share one
+    ids, rank = np.unique(
+        tbl.column("id").to_numpy(zero_copy_only=False), return_inverse=True
+    )
+    vals, offs, valid = _list_column(tbl.column("whs"))
+    live = np.flatnonzero(np.diff(offs) * valid > 0)  # the kernel's empty-document rule
+    whs = np.split(vals, offs[1:-1])
+    simhash = "simhash" in families
+    kernel = (("simhash",) if simhash else ()) + (("minhash", "bands") if minhash else ())
+    sig = _families_by_length([whs[i] for i in live], kernel, num_hashes, n, bands)
+    keys = {"minhash": sig["bhs"]} if minhash else {}
+    if simhash:
+        keys["simhash"] = (sig["simhash"][:, None] >> np.arange(0, 64, 16)) & 0xFFFF
+    buckets = {f: _buckets(k) for f, k in keys.items()}
+    n_cand = sum(map(_bucket_pair_count, buckets.values()))
+    if not common.fits(n_cand, common.DRIVER_MAX_EDGES):
+        return None
+    out = {}
+    for fam in [f for f in ("minhash", "simhash") if f in families]:
+        lo, hi = _bucket_pairs(buckets[fam], len(live))
+        a, b = rank[live[lo]], rank[live[hi]]
+        keep = a != b  # the band join's id_a < id_b
+        lo, hi, a, b = lo[keep], hi[keep], np.minimum(a, b)[keep], np.maximum(a, b)[keep]
+        if fam == "simhash":
+            v = _popcount64(sig["simhash"][lo] ^ sig["simhash"][hi])
+            keep = v <= max_hamming
+        else:
+            i, ra, rb = _rows_of_ids(rank, a, b)
+            sh_vals, sh_offs, sh_valid = _list_column(tbl.column("sh"))
+            v = _set_jaccard(sh_vals, sh_offs, ra, rb)
+            a, b = a[i], b[i]
+            keep = sh_valid[ra] & sh_valid[rb] & (v >= threshold)
+        a, b, v = a[keep], b[keep], v[keep]
+        order = np.lexsort((b, a))
+        out[fam] = (ids[a[order]], ids[b[order]], v[order])
+    id_t = pulled.schema["id"].dataType
+    if len(out) == 1:
+        ((fam, (a, b, v)),) = out.items()
+        name, t = ("jaccard", DoubleType()) if fam == "minhash" else ("hamming", IntegerType())
+        pdf = pd.DataFrame({"id_a": a, "id_b": b, name: v})
+        fields = [StructField(name, t)]
+    else:
+        pdf = pd.concat(
+            [
+                pd.DataFrame({"id_a": a, "id_b": b, "method": fam, "score": v.astype(float)})
+                for fam, (a, b, v) in out.items()
+            ],
+            ignore_index=True,
+        )
+        fields = [StructField("method", StringType()), StructField("score", DoubleType())]
+    schema = StructType([StructField("id_a", id_t), StructField("id_b", id_t), *fields])
+    return df.sparkSession.createDataFrame(pdf, schema)
 
 
 def minhash_dedup_pairs(
@@ -560,9 +806,15 @@ def minhash_dedup_pairs(
     streaming path computes signatures ONCE per batch and feeds all
     three consumers. Pass ``wh`` ((id, whs) word hashes) to derive both
     the signatures and the candidate verification from one shared corpus
-    pass (lsh_recall_audit).
+    pass (lsh_recall_audit). Without ``sigs``, a ``df`` under the
+    driver-input gate runs on the driver (:func:`_near_pairs_driver`).
     """
     if sigs is None:
+        local = _near_pairs_driver(
+            df, id_col, text_col, ("minhash",), num_hashes, n, bands, threshold, wh=wh
+        )
+        if local is not None:
+            return local
         sigs = minhash_banded_signatures(
             df, id_col, text_col, num_hashes, n, bands, wh=wh
         )
@@ -572,7 +824,9 @@ def minhash_dedup_pairs(
     # distributed (executor block storage); on a long-lived cluster use a
     # checkpoint dir instead for lineage resilience.
     cands = lsh_candidate_pairs(sigs, bands, num_hashes // bands).localCheckpoint()
-    return _verify_jaccard_pairs(df, cands, id_col, text_col, threshold, n, wh=wh)
+    return _verify_jaccard_pairs(df, cands, id_col, text_col, threshold, n, wh=wh).orderBy(
+        "id_a", "id_b"
+    )
 
 
 # -------------------------------------------------------------- SimHash
@@ -587,7 +841,7 @@ def simhash_band_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs from an ``(id, simhash)`` signature table, using the
     4-band pigeonhole trick: if hamming(a,b) ≤ 3, at least one of the four
     16-bit bands is identical → join on band equality, verify with
-    bit_count."""
+    bit_count. The pairs come unsorted; callers that need an order sort."""
     # let-bind simhash once — 4 direct band references would inline the
     # signature expression 4×. Materialized once — feeds both self-join
     # sides, and pins the kernel output as an attribute before the HOF
@@ -627,7 +881,6 @@ def simhash_band_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
             ham.alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .orderBy("id_a", "id_b")
     )
 
 
@@ -635,8 +888,14 @@ def simhash_near_pairs(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text", max_hamming: int = 3
 ) -> DataFrame:
     """Near-dup pairs by SimHash hamming distance ≤ k (see
-    :func:`simhash_band_pairs`)."""
-    return simhash_band_pairs(simhash64(df, id_col, text_col), max_hamming)
+    :func:`simhash_band_pairs`); a ``df`` under the driver-input gate runs
+    on the driver (:func:`_near_pairs_driver`)."""
+    local = _near_pairs_driver(df, id_col, text_col, ("simhash",), max_hamming=max_hamming)
+    if local is not None:
+        return local
+    return simhash_band_pairs(simhash64(df, id_col, text_col), max_hamming).orderBy(
+        "id_a", "id_b"
+    )
 
 
 # ------------------------------------------------- combined (single pass)
@@ -682,7 +941,14 @@ def combined_near_dup_pairs(
 ) -> DataFrame:
     """MinHash-LSH and SimHash near-dup pairs from one shared signature
     pass: ``method`` column says which family found the pair, ``score`` is
-    the verified Jaccard (minhash) or hamming distance (simhash)."""
+    the verified Jaccard (minhash) or hamming distance (simhash). Unsorted
+    above the driver-input gate; under it the driver twin
+    (:func:`_near_pairs_driver`) answers, sorted by method and ids."""
+    local = _near_pairs_driver(
+        df, id_col, text_col, ("minhash", "simhash"), num_hashes, n, bands, threshold, max_hamming
+    )
+    if local is not None:
+        return local
     sigs = combined_near_dup_signatures(df, id_col, text_col, num_hashes, n, bands)
     # one materialization feeds both pair pipelines
     sigs = sigs.localCheckpoint()
@@ -1537,7 +1803,7 @@ def incremental_near_dup_pairs(
     cands = _band_pairs(new_sigs, corpus_index).localCheckpoint()
     return _verify_jaccard_pairs(
         new_docs, cands, id_col, text_col, threshold, n, df_b=corpus_docs
-    )
+    ).orderBy("id_a", "id_b")
 
 
 def duplicated_sentence_stats(
