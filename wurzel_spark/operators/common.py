@@ -36,8 +36,12 @@ BROADCAST_MAX_ROWS = 4_000_000
 CHECKPOINT_MAX_INPUT_BYTES = 1 << 28  # 256 MiB
 # Byte budget for pulling a corpus's word hashes to the driver (the
 # near-dup core's driver twin): one Arrow pull and numpy instead of the
-# distributed signature, band-join and verify jobs.
-DRIVER_MAX_INPUT_BYTES = 1 << 24  # 16 MiB
+# distributed signature, band-join and verify jobs. Set below the
+# measured crossover on 4 cores: the twin won every family at 1.1 MiB of
+# estimated input, tied the distributed twin on combined_near_dup_pairs
+# at 2.3 MiB and lost it at 5.7 MiB, where its single-core signature
+# pass alone took 3 s (PERF.md, "Where the driver twin stops paying").
+DRIVER_MAX_INPUT_BYTES = 1 << 21  # 2 MiB
 
 
 def fits(size: int | None, limit: int) -> bool:

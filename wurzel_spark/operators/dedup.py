@@ -111,8 +111,8 @@ def _word_hash_frame(
     """(id, whs): each document's word-hash array — the one corpus pass
     that signatures, shingles and the Jaccard verifier all start from.
     ``spread`` round-robins a small input across the cores first
-    (:func:`common.parallelize`); a pull to the driver or a candidate
-    subset gains nothing from it."""
+    (:func:`common.parallelize`); a pull to the driver gains nothing
+    from it."""
     if spread:
         df = common.parallelize(df)
     return df.select(F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs"))
@@ -505,18 +505,14 @@ def _candidate_shingles(
     wh: DataFrame | None = None,
 ) -> DataFrame:
     """(id, sh): shingle hashes of just the docs whose id is in ``ids``
-    (one ``_CAND_ID`` column, duplicates allowed), reached through a
-    broadcast LEFT SEMI join. ``wh`` (the :func:`_word_hash_frame` of
-    ``df``) is semi-joined instead of ``df`` — no second text scan and
-    split. The candidates are not spread over the cores: a round-robin
-    exchange per verify side is not reused, and each tokenized them again.
-    """
+    (one ``_CAND_ID`` column), reached through a broadcast LEFT SEMI join.
+    ``wh`` (the :func:`_word_hash_frame` of ``df``) is semi-joined instead
+    of ``df`` — no second text scan and split."""
     if wh is None:
         wh = _word_hash_frame(
             df.join(F.broadcast(ids), F.col(id_col) == F.col(_CAND_ID), "left_semi"),
             id_col,
             text_col,
-            spread=False,
         )
     else:
         wh = wh.join(F.broadcast(ids), F.col("id") == F.col(_CAND_ID), "left_semi")
@@ -545,21 +541,21 @@ def _verify_jaccard_pairs(
     shape that works unchanged when the candidate set is huge. The pair
     list itself is always broadcast so shingle arrays never shuffle.
     ``cands`` must be materialized (localCheckpoint) by the caller. The
-    candidate ids keep their duplicates: the broadcast hashed relation
-    takes them as they are, and a distinct() would cost a shuffle job.
-    The pairs come unsorted; the entry points sort.
+    pairs come unsorted; the entry points sort.
 
     Both ids come from ``df`` (or ``wh``, see :func:`_candidate_shingles`);
     ``df_b`` is the incremental case, where id_b docs come from that frame.
     """
     if df_b is None:
-        cand_ids = cands.select(F.col("id_a").alias(_CAND_ID)).union(
-            cands.select(F.col("id_b"))
+        cand_ids = (
+            cands.select(F.col("id_a").alias(_CAND_ID))
+            .union(cands.select(F.col("id_b")))
+            .distinct()
         )
         sh_a = sh_b = _candidate_shingles(df, cand_ids, id_col, text_col, n, wh)
     else:
-        ids_a = cands.select(F.col("id_a").alias(_CAND_ID))
-        ids_b = cands.select(F.col("id_b").alias(_CAND_ID))
+        ids_a = cands.select(F.col("id_a").alias(_CAND_ID)).distinct()
+        ids_b = cands.select(F.col("id_b").alias(_CAND_ID)).distinct()
         sh_a = _candidate_shingles(df, ids_a, id_col, text_col, n)
         sh_b = _candidate_shingles(df_b, ids_b, id_col, text_col, n)
     a = sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
