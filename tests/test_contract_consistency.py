@@ -292,7 +292,7 @@ def test_near_dup_core_is_written_once():
     assert src.count("@F.pandas_udf") == 2
     assert src.count("_word_hashes(F.col(") == 1
     assert "_word_hashes(F.col(" in _functions("wurzel_spark/operators/dedup.py")["_word_hash_frame"]
-    assert src.count("posexplode(bhs)") == 1
+    assert "common.band_pairs(" in _functions("wurzel_spark/operators/dedup.py")["lsh_candidate_pairs"]
     assert src.count('array_intersect("sh_a", "sh_b")') == 1
     assert "cast(x AS string)" not in src
     assert "minhash_signatures" not in src
@@ -398,3 +398,61 @@ def test_text_primitives_are_written_once():
         "window": ["text.py:windows"],
         "bigrams": ["text.py:bigrams"],
     }
+
+
+def _package_sites(is_site):
+    """{(module file, top-level name)} of the top-level definitions of
+    wurzel_spark whose source ``is_site`` accepts (a function or class
+    name, or an assigned module constant's)."""
+    import ast
+
+    sites = set()
+    for p in _py_files("wurzel_spark"):
+        src = p.read_text()
+        for node in ast.parse(src).body:
+            seg = ast.get_source_segment(src, node) or ""
+            if is_site(node, seg):
+                name = getattr(node, "name", None) or ast.unparse(getattr(node, "targets", [node])[0])
+                sites.add((p.name, name))
+    return sites
+
+
+def test_pair_joins_are_written_once():
+    """Every pair operator bands through common.band_pairs and counts set
+    overlaps through dedup._overlap_pairs: the first-shared-band rule, the
+    band posexplode, the per-pair overlap count and the df-cap anti-join
+    have one site each, and the capped-pairs oracle CTE is written once."""
+    import ast
+    import re
+
+    def has(needle):
+        return lambda node, seg: needle in seg
+
+    def overlap_count(node, seg):
+        # F.count(…).alias("n_inter" | "n_shared")
+        return any(
+            isinstance(c, ast.Call)
+            and getattr(c.func, "attr", None) == "alias"
+            and [ast.unparse(a) for a in c.args] in (["'n_inter'"], ["'n_shared'"])
+            and isinstance(c.func.value, ast.Call)
+            and getattr(c.func.value.func, "attr", None) == "count"
+            for c in ast.walk(node)
+        )
+
+    def band_explode(node, seg):
+        return any("posexplode(" in line and "band" in line for line in seg.splitlines())
+
+    band_join = {("common.py", "band_pairs")}
+    assert _package_sites(has("array_position(")) == band_join
+    assert _package_sites(band_explode) == band_join
+    # source_overlap_matrix counts shared grams per ordered SOURCE pair
+    assert _package_sites(overlap_count) == {
+        ("dedup.py", "_overlap_pairs"),
+        ("textstats.py", "source_overlap_matrix"),
+    }
+    assert _package_sites(has("> max_df")) == {("dedup.py", "_cap_df")}
+    capped_pairs = re.compile(r"_CAPPED_SHINGLES_CTE\}\s*,\s*pairs AS \(")
+    assert _package_sites(lambda node, seg: bool(capped_pairs.search(seg))) == {
+        ("dedup.py", "_CAPPED_PAIRS_CTE")
+    }
+    assert {f for f, _ in _package_sites(has("_CAPPED_SHINGLES_CTE"))} == {"dedup.py"}

@@ -1,5 +1,6 @@
 """Dedup family: exact semantics + LSH recall against exact Jaccard."""
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from wurzel_spark.operators.dedup import (
@@ -27,7 +28,10 @@ def _corpus(spark):
         (3, other),
         (4, "short unique text"),
     ]
-    return spark.createDataFrame(rows, "doc_id long, text string")
+    # a local relation (pandas), not a list: its size estimate is real, so
+    # the near-dup size gates can take the driver twin
+    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
+    return spark.createDataFrame(pdf, "doc_id long, text string")
 
 
 def test_exact_dup_groups(spark):
@@ -49,13 +53,32 @@ def test_jaccard_finds_planted_near_dup(spark):
     assert (0, 3) not in pairs
 
 
-def test_minhash_lsh_recall_vs_exact(spark):
-    exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(_corpus(spark), threshold=0.5).collect()}
-    lsh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(_corpus(spark), threshold=0.5).collect()}
+def _check_minhash_recall(df):
+    exact = {(r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
+    lsh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(df, threshold=0.5).collect()}
     assert exact, "planted near-dups must exist"
     recall = len(exact & lsh) / len(exact)
     assert recall == 1.0  # high-sim pairs must survive banding
     assert lsh <= exact  # verification step removes false positives
+
+
+def _check_simhash(df):
+    pairs = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(df, max_hamming=3).collect()}
+    assert (0, 1) in pairs  # identical text → hamming 0
+
+
+def _check_combined(df):
+    got = combined_near_dup_pairs(df).collect()
+    mh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(df, threshold=0.5).collect()}
+    sh = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(df, max_hamming=3).collect()}
+    assert {(r["id_a"], r["id_b"]) for r in got if r["method"] == "minhash"} == mh
+    assert {(r["id_a"], r["id_b"]) for r in got if r["method"] == "simhash"} == sh
+    keys = [(r["method"], r["id_a"], r["id_b"]) for r in got]
+    assert keys == sorted(keys)
+
+
+def test_minhash_lsh_recall_vs_exact(spark):
+    _check_minhash_recall(_corpus(spark))
 
 
 def test_minhash_pairs_id_col_named_cid(spark):
@@ -71,8 +94,7 @@ def test_minhash_pairs_id_col_named_cid(spark):
 
 
 def test_simhash_finds_exact_and_near(spark):
-    pairs = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(_corpus(spark), max_hamming=3).collect()}
-    assert (0, 1) in pairs  # identical text → hamming 0
+    _check_simhash(_corpus(spark))
 
 
 def test_combined_signatures_match_single_family_ops(spark):
@@ -86,12 +108,22 @@ def test_combined_signatures_match_single_family_ops(spark):
 
 
 def test_combined_pairs_match_union_of_families(spark):
+    _check_combined(_corpus(spark))
+
+
+def test_near_dup_recall_and_parity_with_gates_off(spark, gates_off):
+    """The tests above run the near-dup driver twin (the corpus fits its
+    gate); the same planted-dup assertions hold for the distributed twin
+    and its band join."""
+    from wurzel_spark.operators.dedup import _near_pairs_driver
+
     df = _corpus(spark)
-    got = combined_near_dup_pairs(df).collect()
-    mh = {(r["id_a"], r["id_b"]) for r in minhash_dedup_pairs(df, threshold=0.5).collect()}
-    sh = {(r["id_a"], r["id_b"]) for r in simhash_near_pairs(df, max_hamming=3).collect()}
-    assert {(r["id_a"], r["id_b"]) for r in got if r["method"] == "minhash"} == mh
-    assert {(r["id_a"], r["id_b"]) for r in got if r["method"] == "simhash"} == sh
+    assert _near_pairs_driver(df, "doc_id", "text", ("minhash",)) is not None
+    with gates_off():
+        assert _near_pairs_driver(df, "doc_id", "text", ("minhash",)) is None
+        _check_minhash_recall(df)
+        _check_simhash(df)
+        _check_combined(df)
 
 
 def test_combined_signatures_drop_empty_docs(spark):
@@ -202,6 +234,19 @@ def test_winnow_fingerprints_plan_is_map_only(spark, sf_dir):
     t = plan_text(df)
     assert "Exchange hashpartitioning" not in t, t
     assert "BroadcastNestedLoopJoin" not in t and "CartesianProduct" not in t
+
+
+def test_duplicated_span_stats_scans_the_corpus_once(spark, sf_dir):
+    """n_spans comes from the span stream the statistic already builds,
+    not from a second scan and split of the documents: both aggregates
+    read one shuffle, whose exchange the executed plan reuses."""
+    from wurzel_spark.operators.dedup import duplicated_span_stats
+    from wurzel_spark.tables import table
+
+    df = duplicated_span_stats(table(spark, sf_dir, "documents"), n=20)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("Initial Plan")[0]
+    assert final.count("FileScan parquet") == 1, final
 
 
 def test_merge_cluster_labels_matches_full_recompute(spark):

@@ -233,8 +233,9 @@ def test_cohort_retention_prunes_to_two_columns(spark, sf_dir):
 
 def test_duplicated_spans_skew_safe_no_window(spark, sf_dir):
     """r4 skew-safe shape: NO window over the span hash (windows get
-    neither map-side combine nor AQE skew-split); the cross-doc dup flag
-    arrives via aggregate + join, and all kernels stay JVM-side."""
+    neither map-side combine nor AQE skew-split); the unique-span counts
+    and the per-doc span counts meet in one per-doc aggregate over their
+    union — no join back at all — and all kernels stay JVM-side."""
     from wurzel_spark.operators import dedup
     from wurzel_spark.plans.inspect import plan_text
     from wurzel_spark.tables import table
@@ -242,7 +243,7 @@ def test_duplicated_spans_skew_safe_no_window(spark, sf_dir):
     df = dedup.duplicated_span_stats(table(spark, sf_dir, "documents"))
     s = plan_text(df)
     assert "Window" not in s
-    assert ("SortMergeJoin" in s) or ("BroadcastHashJoin" in s) or ("ShuffledHashJoin" in s)
+    assert "Union" in s and "Join" not in s
     assert "ArrowEvalPython" not in s and "BatchEvalPython" not in s
 
 

@@ -18,11 +18,16 @@ core's driver twin (its input bytes, then its band-join pair count);
 graph ×3 — pagerank, supplier_pagerank, k-core; textstats DSIR pin;
 relational rfm pin; selection two-phase sources; similarity kmeans;
 ordering broadcast.
+
+The module also holds the one banded-LSH candidate join,
+:func:`band_pairs`, which the MinHash, SimHash, cosine, bitext and md5
+audit pair operators all band through.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 # Driver-side graph algorithms (union-find, quantized PageRank, k-core)
 # run at or under this many directed edges: ≤ ~16 MB of long pairs,
@@ -119,3 +124,52 @@ def pin(df: DataFrame) -> DataFrame:
     selects columns of a checkpoint already, whose blocks a second pin
     would merely copy (one job per pin)."""
     return df if _projects_a_checkpoint(df) else df.localCheckpoint()
+
+
+def band_pairs(df: DataFrame, bands: str, other: DataFrame | None = None) -> DataFrame:
+    """The one banded-LSH candidate join. ``df`` holds ``(id, <bands>,
+    *carried)``, ``bands`` an array column of per-band values; rows that
+    share a value at the same band index pair up. Returns ``(id_a, id_b,
+    a_<c>…, b_<c>…)`` for every carried column c of each side.
+
+    Without ``other`` it is the self-join of ``df`` (id_a < id_b); with
+    it, id_a comes from ``df`` and id_b from ``other`` (same bands
+    column), and no id predicate applies.
+
+    Each exploded row carries its whole bands array, so a pair sharing j
+    bands is kept only at its FIRST shared band — a per-row filter in
+    place of a distinct() shuffle over the pair set. The join does not
+    pin; callers pin where they need to (the near-dup signature kernel's
+    output, see ``dedup.lsh_candidate_pairs``).
+    """
+
+    def banded(s: DataFrame) -> DataFrame:
+        return s.select("*", F.posexplode(bands).alias("band_idx", "band_value"))
+
+    a = banded(df)
+    b = a if other is None else banded(other)
+    a, b = a.alias("a"), b.alias("b")
+    on = (F.col("a.band_idx") == F.col("b.band_idx")) & (
+        F.col("a.band_value") == F.col("b.band_value")
+    )
+    if other is None:
+        on = on & (F.col("a.id") < F.col("b.id"))
+    first_shared = F.expr(
+        f"array_position(zip_with(a.{bands}, b.{bands}, (x, y) -> x = y), true) - 1"
+    )
+
+    def carried(s: DataFrame, side: str) -> list:
+        return [
+            F.col(f"{side}.{c}").alias(f"{side}_{c}") for c in s.columns if c not in ("id", bands)
+        ]
+
+    return (
+        a.join(b, on)
+        .filter(F.col("a.band_idx") == first_shared)
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *carried(df, "a"),
+            *carried(df if other is None else other, "b"),
+        )
+    )

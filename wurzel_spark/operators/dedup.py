@@ -158,6 +158,84 @@ def _shingle_hashes_from_whs(whs_col, n: int = 3):
     )
 
 
+def _shingle_set_rows(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_df: int | None = None,
+    wh: DataFrame | None = None,
+) -> DataFrame:
+    """(id, n, shingle): one row per distinct shingle hash of each
+    document, ``n`` the document's set size — the input of
+    :func:`_overlap_pairs`. ``wh`` (optional, the :func:`_word_hash_frame`
+    of ``df``) is the shared-corpus-pass input (lsh_recall_audit).
+
+    With ``max_df``, shingles in more than that many documents are dropped
+    (:func:`_cap_df`) and ``n`` recounts the kept set, so the Jaccard and
+    containment denominators match the capped sets."""
+    if wh is None:
+        wh = _word_hash_frame(df, id_col, text_col)
+    base = wh.select("id", _shingle_hashes_from_whs(F.col("whs"), n).alias("arr"))
+    sh = base.select("id", F.size("arr").alias("n"), F.explode("arr").alias("shingle"))
+    if max_df is None:
+        return sh
+    from pyspark.sql import Window as W
+
+    return _cap_df(sh, "shingle", max_df).withColumn(
+        "n", F.count(F.lit(1)).over(W.partitionBy("id"))
+    )
+
+
+def _cap_df(rows: DataFrame, on: str, max_df: int) -> DataFrame:
+    """``rows`` without the ``on`` elements found in more than ``max_df``
+    rows — the document-frequency cap on an (id, element) table whose
+    elements are distinct per id. Hot elements form a SMALL set (each
+    appears in many documents by definition), so they come from a groupBy
+    (map-side partial aggregation) and leave through a broadcast
+    anti-join; a count-over-window would shuffle every row into element
+    partitions just to count them."""
+    hot = (
+        rows.groupBy(on)
+        .agg(F.count(F.lit(1)).alias("__df"))
+        .filter(F.col("__df") > max_df)
+        .select(on)
+    )
+    return rows.join(F.broadcast(hot), on, "left_anti")
+
+
+def _overlap_pairs(rows: DataFrame, on: str = "shingle") -> DataFrame:
+    """The one exact set-overlap self-join. ``rows`` holds (id, n, <on>):
+    one row per distinct element of each set, ``n`` a per-id value (its
+    set size) carried on every row. Returns (id_a, id_b, n_inter, n_a,
+    n_b) for every pair id_a < id_b sharing an element, n_inter the count
+    of shared elements: explode, equi-join on the element, count per pair.
+
+    Because each row carries ``n``, |A| and |B| ride through the join and
+    no size-aggregate join is needed. The join is the shuffle; an element
+    in d sets contributes d² join rows (see :func:`_cap_df`)."""
+    a, b = rows.alias("a"), rows.alias("b")
+    return (
+        a.join(b, (F.col(f"a.{on}") == F.col(f"b.{on}")) & (F.col("a.id") < F.col("b.id")))
+        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .agg(
+            F.count(F.lit(1)).alias("n_inter"),
+            F.first(F.col("a.n")).alias("n_a"),
+            F.first(F.col("b.n")).alias("n_b"),
+        )
+    )
+
+
+def _jaccard_at(pairs: DataFrame, threshold: float, sort: bool) -> DataFrame:
+    """(id_a, id_b, jaccard) of overlap counts (id_a, id_b, n_inter, n_a,
+    n_b), kept at ``threshold`` and above. Consumers that immediately
+    re-shuffle (clustering, keep-set joins) pass sort=False — a global
+    sort before another exchange is pure waste."""
+    jac = F.col("n_inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
+    out = pairs.select("id_a", "id_b", jac.alias("jaccard")).filter(F.col("jaccard") >= threshold)
+    return out.orderBy("id_a", "id_b") if sort else out
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -171,9 +249,10 @@ def ngram_jaccard_pairs(
     """All-pairs n-gram Jaccard similarity ≥ threshold.
 
     Exact (not approximate): explode distinct shingles, self-join on the
-    shingle to count intersections, compute |A∩B| / (|A|+|B|-|A∩B|).
-    The shingle join is the shuffle; at 100 TB you'd pre-filter with
-    MinHash-LSH (below) and use this only to verify candidates.
+    shingle to count intersections (:func:`_overlap_pairs`), compute
+    |A∩B| / (|A|+|B|-|A∩B|). The shingle join is the shuffle; at 100 TB
+    you'd pre-filter with MinHash-LSH (below) and use this only to verify
+    candidates.
 
     ``max_df`` guards the quadratic hazard in the self-join: a shingle
     present in d documents contributes d² join rows, so one boilerplate
@@ -183,49 +262,10 @@ def ngram_jaccard_pairs(
     by production shingle dedup) — results then measure similarity over
     discriminative shingles only, which is why the oracle-checked queries
     leave it off: exactness at test scale, cap documented for real corpora.
+    ``wh``: see :func:`_shingle_set_rows`.
     """
-    # Each exploded row carries its document's set size, so |A| and |B| ride
-    # along through the join and no separate size-aggregate joins are needed
-    # — the text→shingle pipeline is evaluated once per join side instead of
-    # three times, with zero extra shuffles.
-    # ``wh`` (optional, the :func:`_word_hash_frame` of ``df``) is the
-    # shared-corpus-pass input (lsh_recall_audit); without it the frame is
-    # built here.
-    if wh is None:
-        wh = _word_hash_frame(df, id_col, text_col)
-    base = wh.select("id", _shingle_hashes_from_whs(F.col("whs"), n).alias("arr"))
-    sh = base.select("id", F.size("arr").alias("n"), F.explode("arr").alias("shingle"))
-    if max_df is not None:
-        # hyper-frequent shingles form a SMALL set (by definition each
-        # appears in many docs) → broadcast anti-join; sizes recomputed so
-        # containment/jaccard denominators stay consistent with the kept set
-        frequent = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        kept = sh.join(F.broadcast(frequent), "shingle", "left_anti")
-        from pyspark.sql import Window as W
-
-        sh = kept.withColumn("n", F.count(F.lit(1)).over(W.partitionBy("id")))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.first(F.col("a.n")).alias("n_a"),
-            F.first(F.col("b.n")).alias("n_b"),
-        )
-    )
-    jac = F.col("n_inter").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-    out = pairs.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-    # Consumers that immediately re-shuffle (clustering, keep-set joins)
-    # pass sort=False — a global sort before another exchange is pure waste.
-    return out.orderBy("id_a", "id_b") if sort else out
+    rows = _shingle_set_rows(df, id_col, text_col, n, max_df, wh)
+    return _jaccard_at(_overlap_pairs(rows), threshold, sort)
 
 
 # ---------------------------------------------------- signature kernel
@@ -431,64 +471,24 @@ def minhash_banded_signatures(
     return _signatures(wh, ("minhash", "bands"), num_hashes, n, bands)
 
 
-def _band_pairs(sigs: DataFrame, other: DataFrame | None = None) -> DataFrame:
-    """(id_a, id_b) pairs of documents that share a band hash (``bhs``),
-    each pair once. Without ``other`` this is the self-join of ``sigs``
-    (id_a < id_b); with it, id_a comes from ``sigs`` (a new batch) and
-    id_b from ``other`` (an index), and no document pairs with itself — a
-    replayed batch may already be in the index.
-
-    ``sigs`` is pinned: it feeds both self-join sides (without this the
-    whole signature pipeline runs twice), and the pin turns the kernel's
-    ``bhs`` into a plain attribute — projection collapse would otherwise
-    inline the Python UDF call into the zip_with HOF below, where Spark
-    cannot evaluate it. A projection of a checkpoint is already pinned, so
-    ``common.pin`` leaves it alone.
-
-    Each exploded row carries its doc's whole band-hash array (``bands``
-    longs — cheap), so the join keeps each pair only at its FIRST shared
-    band: a pair sharing j bands would otherwise surface j times, and
-    this per-row filter replaces the distinct() that cost a full extra
-    shuffle over the candidate-pair set.
-    """
-
-    def banded(s: DataFrame) -> DataFrame:
-        return s.select("id", "bhs").selectExpr(
-            "id", "bhs", "posexplode(bhs) AS (band_idx, band_hash)"
-        )
-
-    a = banded(common.pin(sigs))
-    b = a if other is None else banded(other)
-    a, b = a.alias("a"), b.alias("b")
-    ids = (
-        F.col("a.id") < F.col("b.id") if other is None else F.col("a.id") != F.col("b.id")
-    )
-    first_shared = F.expr(
-        "array_position(zip_with(a.bhs, b.bhs, (x, y) -> x = y), true) - 1"
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & ids,
-        )
-        .filter(F.col("a.band_idx") == first_shared)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    )
-
-
 def lsh_candidate_pairs(
     sig_df: DataFrame, bands: int = 8, rows_per_band: int = 4
 ) -> DataFrame:
-    """LSH banding: documents sharing any band hash are candidate
-    near-duplicates. The join on (band_idx, band_hash) replaces the O(n²)
-    comparison — the core trick that makes near-dedup feasible at 100 TB.
-    ``sig_df`` carries the ``bhs`` the signature kernel folded with this
-    ``bands`` × ``rows_per_band`` layout (:func:`minhash_banded_signatures`,
+    """LSH banding: (id_a, id_b) documents sharing any band hash are
+    candidate near-duplicates, each pair once. The join on (band_idx,
+    band_hash) (:func:`common.band_pairs`) replaces the O(n²) comparison —
+    the core trick that makes near-dedup feasible at 100 TB. ``sig_df``
+    carries the ``bhs`` the signature kernel folded with this ``bands`` ×
+    ``rows_per_band`` layout (:func:`minhash_banded_signatures`,
     :func:`combined_near_dup_signatures`).
+
+    ``sig_df`` is pinned: it feeds both self-join sides (without this the
+    whole signature pipeline runs twice), and the pin turns the kernel's
+    ``bhs`` into a plain attribute for the band join's lambda. A
+    projection of a checkpoint is already pinned, so ``common.pin``
+    leaves it alone.
     """
-    return _band_pairs(sig_df)
+    return common.band_pairs(common.pin(sig_df).select("id", "bhs"), "bhs")
 
 
 #: candidate-id column of the verify semi-joins; reserved so that it can
@@ -836,46 +836,18 @@ def simhash64(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
 def simhash_band_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs from an ``(id, simhash)`` signature table, using the
     4-band pigeonhole trick: if hamming(a,b) ≤ 3, at least one of the four
-    16-bit bands is identical → join on band equality, verify with
-    bit_count. The pairs come unsorted; callers that need an order sort."""
-    # let-bind simhash once — 4 direct band references would inline the
-    # signature expression 4×. Materialized once — feeds both self-join
-    # sides, and pins the kernel output as an attribute before the HOF
-    # references it (see _band_pairs).
-    banded = common.pin(sigs).selectExpr(
-        "id",
-        "simhash",
-        "posexplode(transform(array(simhash), s -> transform(sequence(0, 3),"
-        " b -> shiftright(s, 16 * b) & 65535))[0]) AS (band_idx, band_val)",
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    ham = F.bit_count(xor)
-    # A pair with j identical bands surfaces j times from the band join.
-    # The XOR already says WHICH bands are identical, so keep each pair only
-    # at its first zero band — a per-row filter, replacing the distinct()
-    # that cost a full extra shuffle + exchange barrier over the pair set.
-    first_zero_band = F.coalesce(
-        *[
-            F.when(
-                F.shiftright(xor, 16 * j).bitwiseAND(F.lit(65535)) == 0, F.lit(j)
-            )
-            for j in range(4)
-        ]
-    )
+    16-bit bands is identical → band join (:func:`common.band_pairs`),
+    verify with bit_count. The pairs come unsorted; callers that need an
+    order sort.
+
+    ``sigs`` is pinned, as in :func:`lsh_candidate_pairs`, so the bands
+    array reads ``simhash`` as a plain attribute."""
+    bands = F.expr("transform(sequence(0, 3), b -> shiftright(simhash, 16 * b) & 65535)")
+    banded = common.pin(sigs).select("id", "simhash", bands.alias("bands"))
+    ham = F.bit_count(F.col("a_simhash").bitwiseXOR(F.col("b_simhash")))
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(F.col("a.band_idx") == first_zero_band)
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            ham.alias("hamming"),
-        )
+        common.band_pairs(banded, "bands")
+        .select("id_a", "id_b", ham.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -937,9 +909,9 @@ def combined_near_dup_pairs(
 ) -> DataFrame:
     """MinHash-LSH and SimHash near-dup pairs from one shared signature
     pass: ``method`` column says which family found the pair, ``score`` is
-    the verified Jaccard (minhash) or hamming distance (simhash). Unsorted
-    above the driver-input gate; under it the driver twin
-    (:func:`_near_pairs_driver`) answers, sorted by method and ids."""
+    the verified Jaccard (minhash) or hamming distance (simhash), sorted
+    by method and ids. Under the driver-input gate the driver twin
+    (:func:`_near_pairs_driver`) answers, already in that order."""
     local = _near_pairs_driver(
         df, id_col, text_col, ("minhash", "simhash"), num_hashes, n, bands, threshold, max_hamming
     )
@@ -962,7 +934,7 @@ def combined_near_dup_pairs(
             F.lit("simhash").alias("method"),
             F.col("hamming").cast("double").alias("score"),
         )
-    )
+    ).orderBy("method", "id_a", "id_b")
 
 
 # ---------------------------------------------------------------- queries
@@ -1052,9 +1024,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_combined_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both near-dup families from one shared signature pass (rows-only
     check; tests assert parity with the separate operators)."""
-    return combined_near_dup_pairs(table(spark, sf_dir, "documents")).orderBy(
-        "method", "id_a", "id_b"
-    )
+    return combined_near_dup_pairs(table(spark, sf_dir, "documents"))
 
 
 # ------------------------------------------------ dedup keep-set / clusters
@@ -1381,30 +1351,7 @@ def containment_pairs(
     ``max_df`` caps shingle document frequency exactly as in
     :func:`ngram_jaccard_pairs` (the d² self-join hazard is identical).
     """
-    sh = common.parallelize(df).select(
-        F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("arr")
-    ).select("id", F.size("arr").alias("n"), F.explode("arr").alias("shingle"))
-    if max_df is not None:
-        frequent = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        kept = sh.join(F.broadcast(frequent), "shingle", "left_anti")
-        from pyspark.sql import Window as W
-
-        sh = kept.withColumn("n", F.count(F.lit(1)).over(W.partitionBy("id")))
-    a, b = sh.alias("a"), sh.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.first(F.col("a.n")).alias("n_a"),
-            F.first(F.col("b.n")).alias("n_b"),
-        )
-    )
+    pairs = _overlap_pairs(_shingle_set_rows(df, id_col, text_col, n, max_df))
     inter = F.col("n_inter").cast("double")
     cont_a = inter / F.col("n_a").cast("double")
     cont_b = inter / F.col("n_b").cast("double")
@@ -1484,6 +1431,16 @@ sh0 AS (
   GROUP BY a.id, b.id
 )"""
 
+# pairs(id_a, id_b) at Jaccard ≥ 0.5 over the capped shingles: the edge
+# list of every capped-pair oracle (clusters, k-core, splits)
+_CAPPED_PAIRS_CTE = f"""{_CAPPED_SHINGLES_CTE}, pairs AS (
+  SELECT id_a, id_b
+  FROM inter
+  JOIN sizes sa ON sa.id = id_a
+  JOIN sizes sb ON sb.id = id_b
+  WHERE CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter) >= 0.5
+)"""
+
 
 def q_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Jaccard with the df-cap ON — the configuration you would run
@@ -1543,16 +1500,17 @@ def duplicated_span_stats(
 
     Per doc: ``n_spans`` (token positions), ``n_dup_spans`` (positions
     whose span occurs in ≥1 other doc), ``dup_span_frac`` (one IEEE
-    division of exact int64s — cross-engine bit-stable).
+    division of exact int64s — cross-engine bit-stable). Documents with a
+    NULL id are left out.
 
     Scale shape: spans are NON-distinct rolling xxhash64 n-grams (one long
-    per token position — linear in corpus tokens); one groupBy(hash) →
-    distinct-doc count, one join back on the hash, one per-doc aggregate.
+    per token position — linear in corpus tokens); one per-(doc, hash)
+    count, one per-hash aggregate, one per-doc aggregate — no join.
     Shuffles carry (hash, id) longs only — the text never moves. The
     DuckDB oracle builds literal span strings instead of hashes; counts
     agree since 64-bit collisions are negligible (~positions²/2⁶⁵).
     """
-    spans = _span_hash_stream(df, id_col, text_col, n)
+    spans = _span_hash_stream(df, id_col, text_col, n).filter(F.col("id").isNotNull())
     # "occurs in another doc" ⇔ min(id) != max(id) over the span hash.
     # SKEW-SAFE shape, join-free (default since r4): collapse to distinct
     # (id, h) with per-doc occurrence counts (map-side combine), then one
@@ -1560,14 +1518,19 @@ def duplicated_span_stats(
     # join-back-on-h a naive flagging needs: n_dup = n_spans − n_uniq,
     # and a span hash UNIQUE to one doc (min==max) names that doc in the
     # aggregate itself — so the per-h output maps straight to (doc,
-    # uniq-count) rows with no further reference to the span table.
-    # n_spans is row-local arithmetic on the token count. A
-    # mega-duplicated span (license header in millions of docs) costs ≤1
+    # uniq-count) rows with no further reference to the span table. A
+    # non-empty doc's span rows are exactly its n_spans, so one per-doc
+    # aggregate over the per-doc counts and the unique-span counts yields
+    # both (one corpus pass: the two branches share the first exchange,
+    # and the non-NULL id filter keeps them identical when a caller's
+    # join infers one on the id).
+    # A mega-duplicated span (license header in millions of docs) costs ≤1
     # row per doc into shuffle 1 and is FILTERED OUT by shuffle 2's
     # combine — it never concentrates anywhere (the earlier
     # `W.partitionBy("h")` window put every occurrence in ONE partition
     # with no partial aggregation; VERDICT r3 #2).
     per_doc = spans.groupBy("id", "h").agg(F.count(F.lit(1)).alias("c"))
+    zero = F.lit(0).cast("long")
     uniq = (
         per_doc.groupBy("h")
         .agg(
@@ -1576,28 +1539,17 @@ def duplicated_span_stats(
             F.sum("c").alias("tc"),
         )
         .filter(F.col("lo") == F.col("hi"))
-        .groupBy(F.col("lo").alias("id"))
-        .agg(F.sum("tc").alias("n_uniq"))
-    )
-    sz = F.size(TXT.words(F.col(text_col)))
-    k2 = sz - F.lit(n - 1)
-    totals = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.when(k2 > 0, k2).otherwise(F.lit(1)).cast("long").alias("n_spans"),
-            sz.alias("__sz"),
-        )
-        .filter(F.col("__sz") > 0)
-        .drop("__sz")
+        .select(F.col("lo").alias("id"), zero.alias("c"), F.col("tc").alias("u"))
     )
     return (
-        totals.join(uniq, "id", "left")
+        per_doc.select("id", "c", zero.alias("u"))
+        .unionByName(uniq)
+        .groupBy("id")
+        .agg(F.sum("c").alias("n_spans"), F.sum("u").alias("n_uniq"))
         .select(
             F.col("id").alias(id_col),
             "n_spans",
-            (F.col("n_spans") - F.coalesce(F.col("n_uniq"), F.lit(0))).alias(
-                "n_dup_spans"
-            ),
+            (F.col("n_spans") - F.col("n_uniq")).alias("n_dup_spans"),
         )
         .withColumn(
             "dup_span_frac",
@@ -1796,7 +1748,13 @@ def incremental_near_dup_pairs(
         new_sigs = minhash_banded_signatures(
             new_docs, id_col, text_col, num_hashes, n, bands
         )
-    cands = _band_pairs(new_sigs, corpus_index).localCheckpoint()
+    cands = (
+        common.band_pairs(
+            common.pin(new_sigs).select("id", "bhs"), "bhs", corpus_index.select("id", "bhs")
+        )
+        .filter(F.col("id_a") != F.col("id_b"))  # a replayed batch may already be indexed
+        .localCheckpoint()
+    )
     return _verify_jaccard_pairs(
         new_docs, cands, id_col, text_col, threshold, n, df_b=corpus_docs
     ).orderBy("id_a", "id_b")
@@ -2140,60 +2098,30 @@ def winnow_overlap_pairs(
     winnowing fingerprints, ``overlap = |fps_a ∩ fps_b| / min(|fps_a|,
     |fps_b|)`` (containment form — robust to length mismatch).
 
-    Scale shape: identical to the shingle self-join family — explode the
-    (already distinct) fingerprint longs, equi-join on the 8-byte hash,
-    count per pair; per-doc fingerprint counts ride through the explode so
-    no extra aggregation join. ``max_df`` drops fingerprints appearing in
-    more than that many docs (boilerplate guard — same d² hazard and same
-    cap as ngram_jaccard_pairs; dedup.py:142-150).
+    Scale shape: the shingle self-join family's own join
+    (:func:`_overlap_pairs` over the already distinct fingerprint longs);
+    per-doc fingerprint counts ride through the explode, so no extra
+    aggregation join. ``max_df`` drops fingerprints appearing in more than
+    that many docs (:func:`_cap_df`, the boilerplate guard of
+    ngram_jaccard_pairs); the counts stay the uncapped fingerprint sets'.
     """
     fp = winnow_fingerprints(df, id_col, text_col, k, w, hasher).select(
-        "doc_id", "n_fingerprints", F.explode("fps").alias("fp")
+        F.col("doc_id").alias("id"), F.col("n_fingerprints").alias("n"), F.explode("fps").alias("fp")
     )
-    # Materialize ONCE before the self-join: the a/b branches differ by
-    # their alias projections, so Catalyst does not merge them into a
-    # ReusedExchange and the md5 k-gram hashing (the dominant cost — one
-    # hash per positional gram) would run twice (plan-censused r6:
-    # 2 HashAggregate/md5 subtrees → 1). The exploded table is 24 B/row,
-    # tiny next to the work it pins.
+    # Materialize ONCE: the md5 k-gram hashing (the dominant cost — one
+    # hash per positional gram) feeds the cap's hot-fingerprint aggregate
+    # and the self-join (plan-censused r6: 2 HashAggregate/md5 subtrees →
+    # 1). The exploded table is 24 B/row, tiny next to the work it pins.
     fp = fp.localCheckpoint(eager=True)
     if max_df is not None:
-        # hot-fingerprint table via groupBy (map-side partial agg) +
-        # broadcast anti-join — NOT a count-over-window, which shuffles
-        # every (fp, doc) row into fp-partitions just to compute df
-        # (r7: the window form cost ~0.4 s of winnow_overlap's 1.8 s at
-        # sf0.1; the hot table is ≤ |hot fps| rows, tiny by the cap's own
-        # definition of hot)
-        hot = (
-            fp.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") > max_df)
-            .select("fp")
-        )
-        fp = fp.join(F.broadcast(hot), "fp", "left_anti")
-    a = fp.select(
-        F.col("doc_id").alias("id_a"), F.col("n_fingerprints").alias("n_a"), "fp"
-    )
-    b = fp.select(
-        F.col("doc_id").alias("id_b"), F.col("n_fingerprints").alias("n_b"), "fp"
-    )
-    pairs = (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .select(
-            "id_a",
-            "id_b",
-            "n_shared",
-            (
-                F.col("n_shared").cast("double")
-                / F.least("n_a", "n_b").cast("double")
-            ).alias("overlap"),
-        )
+        fp = _cap_df(fp, "fp", max_df)
+    overlap = F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double")
+    return (
+        _overlap_pairs(fp, "fp")
+        .select("id_a", "id_b", F.col("n_inter").alias("n_shared"), overlap.alias("overlap"))
         .filter(F.col("overlap") >= threshold)
+        .orderBy("id_a", "id_b")
     )
-    return pairs.orderBy("id_a", "id_b")
 
 
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2398,14 +2326,7 @@ def q_incremental_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 INCREMENTAL_CLUSTER_SQL = f"""
-WITH RECURSIVE {_CAPPED_SHINGLES_CTE},
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.id = id_a
-  JOIN sizes sb ON sb.id = id_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter) >= 0.5
-),
+WITH RECURSIVE {_CAPPED_PAIRS_CTE},
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION ALL
@@ -2470,8 +2391,8 @@ def ngram_jaccard_prefix_pairs(
     """
     from pyspark.sql import Window as W
 
-    docs_arr = common.parallelize(df).select(
-        F.col(id_col).alias("id"), shingle_hashes(F.col(text_col), n).alias("arr")
+    docs_arr = _word_hash_frame(df, id_col, text_col).select(
+        "id", _shingle_hashes_from_whs(F.col("whs"), n).alias("arr")
     ).select("id", F.size("arr").alias("n"), "arr")
     docs_arr = docs_arr.localCheckpoint(eager=True)  # feeds prefix AND verify
     sh = docs_arr.select("id", "n", F.explode("arr").alias("shingle"))
@@ -2493,27 +2414,7 @@ def ngram_jaccard_prefix_pairs(
             # shingle — the plain exact join (same shape as
             # ngram_jaccard_pairs, reusing the checkpointed shingles)
             # beats the prefix machinery by ~3× here.
-            a, b = sh.alias("a"), sh.alias("b")
-            pairs = (
-                a.join(
-                    b,
-                    (F.col("a.shingle") == F.col("b.shingle"))
-                    & (F.col("a.id") < F.col("b.id")),
-                )
-                .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-                .agg(
-                    F.count(F.lit(1)).alias("n_inter"),
-                    F.first(F.col("a.n")).alias("n_a"),
-                    F.first(F.col("b.n")).alias("n_b"),
-                )
-            )
-            jac0 = F.col("n_inter").cast("double") / (
-                F.col("n_a") + F.col("n_b") - F.col("n_inter")
-            )
-            out0 = pairs.select("id_a", "id_b", jac0.alias("jaccard")).filter(
-                F.col("jaccard") >= threshold
-            )
-            return out0.orderBy("id_a", "id_b") if sort else out0
+            return _jaccard_at(_overlap_pairs(sh), threshold, sort)
     # o_min = ceil(t·n) computed with a 1e-9 guard: double rounding can
     # overshoot an exact integer product (0.55·100 → 55.000000000000007 →
     # ceil 56, one too many, which would SHORTEN the prefix below the
@@ -2530,38 +2431,18 @@ def ngram_jaccard_prefix_pairs(
             ),
         )
         .filter(F.col("rn") <= prefix_len)
-        .select("id", "shingle")
+        .select("id", "n", "shingle")
     )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cand = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    av = docs_arr.select(
-        F.col("id").alias("id_a"), F.col("n").alias("n_a"), F.col("arr").alias("arr_a")
-    )
-    bv = docs_arr.select(
-        F.col("id").alias("id_b"), F.col("n").alias("n_b"), F.col("arr").alias("arr_b")
-    )
+    av = docs_arr.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a"))
+    bv = docs_arr.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b"))
     verified = (
-        cand.join(av, "id_a")
+        _overlap_pairs(prefix)
+        .drop("n_inter")
+        .join(av, "id_a")
         .join(bv, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("arr_a", "arr_b")).alias("n_inter"),
-            "n_a",
-            "n_b",
-        )
+        .withColumn("n_inter", F.size(F.array_intersect("arr_a", "arr_b")))
     )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("n_inter")
-    )
-    out = verified.select("id_a", "id_b", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
-    )
-    return out.orderBy("id_a", "id_b") if sort else out
+    return _jaccard_at(verified, threshold, sort)
 
 
 def q_ngram_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:

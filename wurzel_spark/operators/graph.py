@@ -366,26 +366,10 @@ def q_dup_graph_transitivity_capped(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 def _transitivity_sql(capped: bool = False) -> str:
-    from wurzel_spark.operators.dedup import (
-        _CAPPED_SHINGLES_CTE,
-        _JACCARD_PAIRS_CTE,
-    )
+    from wurzel_spark.operators.dedup import _CAPPED_PAIRS_CTE, _JACCARD_PAIRS_CTE
 
-    if capped:
-        # pairs(id_a, id_b) from the df-capped shingle CTE — the same
-        # cap + threshold as NGRAM_JACCARD_CAPPED_SQL, shared per the
-        # cluster_best_keep_capped precedent
-        pairs_cte = f"""{_CAPPED_SHINGLES_CTE}, pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.id = id_a
-  JOIN sizes sb ON sb.id = id_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter) >= 0.5
-)"""
-    else:
-        pairs_cte = _JACCARD_PAIRS_CTE
     return f"""
-WITH {pairs_cte},
+WITH {_CAPPED_PAIRS_CTE if capped else _JACCARD_PAIRS_CTE},
 und AS (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION ALL SELECT id_b, id_a FROM pairs
@@ -539,17 +523,10 @@ def q_dup_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kcore_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
-    from wurzel_spark.operators.dedup import _CAPPED_SHINGLES_CTE
+    from wurzel_spark.operators.dedup import _CAPPED_PAIRS_CTE
 
-    pairs_cte = f"""{_CAPPED_SHINGLES_CTE}, pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.id = id_a
-  JOIN sizes sb ON sb.id = id_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter) >= 0.5
-)"""
     parts = [
-        pairs_cte,
+        _CAPPED_PAIRS_CTE,
         """e0 AS MATERIALIZED (
   SELECT id_a AS u, id_b AS v FROM pairs
   UNION ALL SELECT id_b, id_a FROM pairs

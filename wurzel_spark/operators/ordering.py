@@ -422,17 +422,10 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_safe_split_sql() -> str:
-    from wurzel_spark.operators.dedup import _CAPPED_SHINGLES_CTE
+    from wurzel_spark.operators.dedup import _CAPPED_PAIRS_CTE
 
     return f"""
-WITH RECURSIVE {_CAPPED_SHINGLES_CTE},
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.id = id_a
-  JOIN sizes sb ON sb.id = id_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter) >= 0.5
-),
+WITH RECURSIVE {_CAPPED_PAIRS_CTE},
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION ALL

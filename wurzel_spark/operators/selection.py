@@ -292,14 +292,7 @@ def q_cluster_best_keep_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 CLUSTER_BEST_KEEP_CAPPED_SQL = f"""
-WITH RECURSIVE {dedup._CAPPED_SHINGLES_CTE},
-pairs AS (
-  SELECT id_a, id_b
-  FROM inter
-  JOIN sizes sa ON sa.id = id_a
-  JOIN sizes sb ON sb.id = id_b
-  WHERE CAST(n_inter AS DOUBLE) / (sa.n_shingles + sb.n_shingles - n_inter) >= 0.5
-),
+WITH RECURSIVE {dedup._CAPPED_PAIRS_CTE},
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM pairs
   UNION ALL

@@ -384,9 +384,8 @@ def cosine_lsh_near_dup_pairs(
     prob (1-θ/π)^r — at cos ≥ 0.95 with 4 bands × 6 bits recall ≈ 0.95).
     Candidates join on (band_idx, band_value) — an equi hash join, never a
     cartesian/BroadcastNestedLoop — then the EXACT cosine verifies each
-    pair. A pair sharing j bands surfaces j times; the carried band-value
-    array keeps it only at its first shared band (same trick as
-    minhash/simhash — no distinct() shuffle over the pair set).
+    pair. The join is :func:`common.band_pairs`, which keeps a pair
+    sharing j bands once, at its first shared band.
     """
     nb = len(planes) // bands
     bucketed = hyperplane_lsh_buckets(emb, planes, id_col, vec_col)
@@ -395,23 +394,11 @@ def cosine_lsh_near_dup_pairs(
     )
     banded = bucketed.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec"), band_arr.alias("bvs")
-    ).selectExpr("id", "vec", "bvs", "posexplode(bvs) AS (band_idx, bv)")
-    a, b = banded.alias("a"), banded.alias("b")
-    first_shared = F.expr(
-        "array_position(zip_with(a.bvs, b.bvs, (x, y) -> x = y), true) - 1"
     )
     return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .filter(F.col("a.band_idx") == first_shared)
+        common.band_pairs(banded, "bvs")
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cosine_pd(F.col("a.vec"), F.col("b.vec")).alias("cos_sim"),
+            "id_a", "id_b", cosine_pd(F.col("a_vec"), F.col("b_vec")).alias("cos_sim")
         )
         .filter(F.col("cos_sim") >= threshold)
         .orderBy("id_a", "id_b")
@@ -2289,12 +2276,11 @@ def bitext_margin_pairs(
     here and by scalar subqueries in the oracle.
 
     Scale shape: candidate generation is an equi hash join on
-    (band, bits) — never a cartesian; a pair sharing several bands is
-    kept once via the zip_with first-shared-band trick (no distinct()
-    over the pair set); then one ALL-WINDOW pipeline over the candidate
-    table — per-side top-k sums, both margin ranks, and the mutual flag
-    are six window functions over two partitionings, no self-join, and
-    vectors drop right after the cos projection."""
+    (band, bits) — never a cartesian; :func:`common.band_pairs` keeps a
+    pair sharing several bands once; then one ALL-WINDOW pipeline over
+    the candidate table — per-side top-k sums, both margin ranks, and the
+    mutual flag are six window functions over two partitionings, no
+    self-join, and vectors drop right after the cos projection."""
     def _side(lang: str, idc: str) -> DataFrame:
         return (
             docs.filter(F.col("lang") == lang)
@@ -2334,34 +2320,15 @@ def bitext_margin_pairs(
             *[F.substring("bucket", i * bits + 1, bits) for i in range(bands)]
         )
         return bucketed.select(
-            F.col(idc),
-            F.col(f"{idc}_vec").alias(f"{idc[:3]}_vec"),
-            band_arr.alias(f"{idc[:3]}_bvs"),
-        ).selectExpr(
-            idc,
-            f"{idc[:3]}_vec",
-            f"{idc[:3]}_bvs",
-            f"posexplode({idc[:3]}_bvs) AS (band_idx, bv)",
+            F.col(idc).alias("id"), F.col(f"{idc}_vec").alias("vec"), band_arr.alias("bvs")
         )
-    ab, bb = _banded(a, "src_id"), _banded(b, "tgt_id")
-    first_shared = F.expr(
-        "array_position(zip_with(src_bvs, tgt_bvs, (x, y) -> x = y), true) - 1"
-    )
-    pairs = (
-        ab.join(
-            bb.withColumnRenamed("band_idx", "b_band_idx").withColumnRenamed(
-                "bv", "b_bv"
-            ),
-            (F.col("band_idx") == F.col("b_band_idx")) & (F.col("bv") == F.col("b_bv")),
-        )
-        .filter(F.col("band_idx") == first_shared)
-        .select(
-            "src_id",
-            "tgt_id",
-            F.floor(cosine_pd(F.col("src_vec"), F.col("tgt_vec")) * _BITEXT_QSCALE)
-            .cast("long")
-            .alias("cos_q"),
-        )
+
+    pairs = common.band_pairs(_banded(a, "src_id"), "bvs", _banded(b, "tgt_id")).select(
+        F.col("id_a").alias("src_id"),
+        F.col("id_b").alias("tgt_id"),
+        F.floor(cosine_pd(F.col("a_vec"), F.col("b_vec")) * _BITEXT_QSCALE)
+        .cast("long")
+        .alias("cos_q"),
     )
     wx, wy = W.partitionBy("src_id"), W.partitionBy("tgt_id")
     cos_desc = F.col("cos_q").desc()

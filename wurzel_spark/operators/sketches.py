@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
-from wurzel_spark.operators.common import parallelize
+from wurzel_spark.operators.common import band_pairs, parallelize
 from wurzel_spark.operators.dedup import md5_prefix_hash, shingles
 from wurzel_spark.tables import table
 
@@ -426,9 +426,11 @@ def minhash_jaccard_est_pairs(
     Scale shape: the 32-seed signature is one projection (no shuffle —
     nested array transforms, all let-bound so the gram array is built
     once per row); candidates come from the banded equi-join on 8-byte
-    band keys. Carrying the gram arrays into the verify join to compute
-    TRUE Jaccard is the test-scale convenience — production verification
-    uses the explode-join exact path (``ngram_jaccard_capped``).
+    band keys (``common.band_pairs``: each pair once, at its first shared
+    band, where the oracle takes DISTINCT pairs). Carrying the gram
+    arrays into the verify join to compute TRUE Jaccard is the test-scale
+    convenience — production verification uses the explode-join exact
+    path (``ngram_jaccard_capped``).
     """
     base = df.filter(F.size(TXT.words(F.col(text_col))) > 0).select(
         F.col(id_col).alias("id"), shingles(F.col(text_col), n).alias("gs")
@@ -473,14 +475,7 @@ def minhash_jaccard_est_pairs(
         ),
         1,
     )
-    keyed = sigs.select("id", F.explode(bands).alias("bk"))
-    cand = (
-        keyed.alias("a")
-        .join(keyed.alias("b"), "bk")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = band_pairs(sigs.select("id", bands.alias("bks")), "bks")
     sa = sigs.select(
         F.col("id").alias("id_a"),
         F.col("n_sh").alias("na"),
