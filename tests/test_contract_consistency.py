@@ -456,3 +456,41 @@ def test_pair_joins_are_written_once():
         ("dedup.py", "_CAPPED_PAIRS_CTE")
     }
     assert {f for f, _ in _package_sites(has("_CAPPED_SHINGLES_CTE"))} == {"dedup.py"}
+
+
+def test_pipeline_layer_is_written_once():
+    """``Pipeline.run`` and the manifest run through one step runner: one
+    step loop (``manifest._run_graph``), one chain call with the one
+    materialize write (``manifest._run_step``), one sorted persist
+    (``manifest.save_sorted``), one report class built in one place (the
+    prometheus middleware), one cycle DFS, one YAML parse and one lazy
+    HTTP session."""
+    import ast
+
+    segs = {}  # (module, top-level name) -> source
+    for f in ("stage.py", "manifest.py", "middleware.py", "cli.py", "metrics.py"):
+        src = _source(f"wurzel_spark/{f}")
+        for node in ast.parse(src).body:
+            if hasattr(node, "name"):
+                segs[(f, node.name)] = ast.get_source_segment(src, node)
+
+    def sites(needle):
+        return {k for k, seg in segs.items() if needle in seg}
+
+    for needle in (".write", ".parquet(", ".count(", "StageReport(", "perf_counter", "chain.execute("):
+        assert needle not in segs[("stage.py", "Pipeline")], needle
+    # the one step loop, over the graph's topological order
+    assert sites("in manifest.topo_order():") == {("manifest.py", "_run_graph")}
+    assert sites("chain.execute(") == {("manifest.py", "_run_step")}
+    assert sites(".write.mode(") == {("manifest.py", "_run_step"), ("manifest.py", "save_sorted")}
+    assert sites("orderBy(") == {("manifest.py", "save_sorted")}
+    sorted_write = re.compile(r"orderBy\([^()]*(\([^()]*\))?[^()]*\)\.write")
+    assert [p.name for p in _py_files("wurzel_spark") if sorted_write.search(p.read_text())] == [
+        "manifest.py"
+    ]
+    assert sites("StageReport(") == {("middleware.py", "prometheus")}
+    assert {k for k in segs if "Report" in k[1]} == {("metrics.py", "StageReport")}
+    assert "class " not in segs[("middleware.py", "prometheus")]
+    assert sites("GRAY") == {("manifest.py", "ManifestValidator")}
+    assert sites("safe_load(") == {("manifest.py", "Manifest")}
+    assert _source("wurzel_spark/sinks/http_backends.py").count("def _session(") == 1

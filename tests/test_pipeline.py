@@ -177,3 +177,31 @@ def test_curation_v2_stage_pipeline(spark):
     texts = {r["doc_id"]: r["text"] for r in out.collect()}
     assert "<EMAIL>" not in texts.get(4, "")
     assert pipe.history() == "Redact-Gate-BestKeep-DomainCap"
+
+
+def test_report_counts_read_the_step_boundary_not_the_source(spark):
+    """With reports on, each stage's count reads its input from the step
+    boundary's cache: the first stage's UDF filter runs for its own count
+    and once more to fill that cache, not once per downstream count (a
+    count used to replay every stage from the source: 4 × 50 calls here)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("boolean")
+    def keep(v):
+        acc.add(1)
+        return v % 2 == 0
+
+    pipe = (
+        Pipeline(lambda s: s.range(50).selectExpr("id AS v"))
+        >> Stage("Filter", lambda df: df.filter(keep("v")))
+        >> Stage("A", lambda df: df.withColumn("a", F.col("v") + 1))
+        >> Stage("B", lambda df: df.withColumn("b", F.col("a") + 1))
+        >> Stage("C", lambda df: df.withColumn("c", F.col("b") + 1))
+    )
+    out = pipe.run(spark, with_reports=True)
+    assert [(r.stage, r.rows_out) for r in pipe.reports] == [
+        ("Filter", 25), ("A", 25), ("B", 25), ("C", 25)
+    ]
+    assert acc.value == 2 * 50
+    assert out.count() == 25
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -320,3 +320,28 @@ def test_sha256_stamp_matches_reference_pinned_values(spark):
         for r in df.select("md", TXT.sha256_hex(F.col("md")).alias("h")).collect()
     }
     assert got == pinned
+
+
+def test_kb_delta_publish_honours_url_exclusion(spark, tmp_path):
+    """write_delta filters like write: an excluded (non-public) URL in the
+    delta is never uploaded, and the prune keeps only public docs."""
+    root = str(tmp_path / "kb_delta_excl")
+    ulog = str(tmp_path / "upserts.log")
+
+    class RecordingClient(LocalKBClient):
+        def upsert_doc(self, name, payload):
+            with open(ulog, "a") as f:
+                f.write(name + "\n")
+            super().upsert_doc(name, payload)
+
+    sink = KBUploaderSink(
+        lambda: RecordingClient(root), history="Pipe", exclude_url_substr="neverejn"
+    )
+    old = spark.createDataFrame([("http://a", "A")], "url string, text string")
+    new = spark.createDataFrame(
+        [("http://a", "A"), ("http://b", "B"), ("http://x/neverejna/c", "C")],
+        "url string, text string",
+    )
+    sink.write_delta(new, old)
+    assert open(ulog).read().split() == [doc_name("http://b", "Pipe")]
+    assert LocalKBClient(root).list_docs("Pipe") == [doc_name("http://b", "Pipe")]

@@ -48,3 +48,22 @@ def test_window_builder_short_document_rules(spark):
             assert filtered.get(tuple(ws)) == (want if long else None), (n, ws)
             pairs = [(b.w1, b.w2) for b in r["bg"]] if r["bg"] is not None else None
             assert pairs == (list(zip(ws, ws[1:])) if len(ws) >= 2 else None), ws
+
+
+def test_word_hashes_run_once_per_document(spark, sf_dir):
+    """The empty-document rule of the signature kernel and the span-hash
+    stream must not put a second split of the text into the plan (a
+    ``size(whs) > 0`` filter is pushed below the spread into the scan and
+    re-tokenizes every document there)."""
+    from wurzel_spark import tables
+    from wurzel_spark.operators import dedup as D
+
+    docs = tables.table(spark, sf_dir, "documents")
+
+    def splits(df):
+        return df._jdf.queryExecution().optimizedPlan().toString().count("split(trim(")
+
+    assert splits(D.simhash64(docs)) == 1
+    assert splits(D.combined_near_dup_signatures(docs, "doc_id", "text")) == 1
+    assert splits(D._span_hash_stream(docs, "doc_id", "text", 5)) == 1
+    assert splits(D._span_hash_stream(docs, "doc_id", "text", 5, pos=True)) == 1

@@ -22,7 +22,7 @@ import sys
 
 def _cmd_run(args) -> int:
     from wurzel_spark import get_spark
-    from wurzel_spark.manifest import Manifest, run_manifest, run_single_step
+    from wurzel_spark.manifest import Manifest, run_manifest, run_single_step, save_sorted
 
     m = Manifest.from_file(args.manifest)
     spark = get_spark(m.name)
@@ -51,9 +51,7 @@ def _cmd_run(args) -> int:
             if args.out:
                 import os
 
-                df.orderBy(df.columns[0]).write.mode("overwrite").parquet(
-                    os.path.join(args.out, name)
-                )
+                save_sorted(df, os.path.join(args.out, name))
         finally:
             df.unpersist()
     return 0
@@ -133,27 +131,16 @@ def _cmd_validate(args) -> int:
     wurzel/manifest/validator.py): print EVERY error — dangling refs,
     cycles, unresolvable `uses`, unregistered middlewares — instead of
     failing on the first, exit 1 when any exist."""
-    import yaml as _yaml
+    from wurzel_spark.manifest import Manifest, ManifestError, ManifestValidator
 
-    from wurzel_spark.manifest import Manifest, ManifestValidator, StepSpec
-
-    data = _yaml.safe_load(open(args.manifest, encoding="utf-8").read()) or {}
-    # build the Manifest WITHOUT the fail-fast structural validate so the
-    # validator can report every problem at once
-    steps = {}
-    for name, spec in (data.get("steps") or {}).items():
-        steps[name] = StepSpec(
-            name=name,
-            uses=str(spec.get("uses", "")),
-            depends_on=list(spec.get("dependsOn", []) or []),
-            settings=dict(spec.get("settings", {}) or {}),
-        )
-    pipeline = data.get("pipeline") or {}
-    manifest = Manifest(
-        name=pipeline.get("name", "pipeline"),
-        steps=steps,
-        schedule=pipeline.get("schedule"),
-    )
+    # parse WITHOUT the fail-fast validate so the validator can report
+    # every problem at once
+    try:
+        with open(args.manifest, encoding="utf-8") as f:
+            manifest = Manifest._parse(f.read())
+    except ManifestError as e:
+        print(e)
+        return 1
     errors = ManifestValidator(manifest).validate_all(
         middlewares=args.middlewares.split(",") if args.middlewares else None
     )

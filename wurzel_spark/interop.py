@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wurzel_spark.manifest import save_sorted
+
 MARKDOWN_CONTRACT_SCHEMA = T.StructType(
     [
         # all-nullable: file sources cannot enforce non-null; the contract
@@ -70,7 +72,7 @@ def write_contract_json(df: DataFrame, path: str, single_file: bool = True) -> N
         with open(path, "w", encoding="utf-8") as f:
             json.dump(rows, f, ensure_ascii=False, sort_keys=True)
     else:
-        df.orderBy(first).write.mode("overwrite").json(path)
+        save_sorted(df, path, "json")
 
 
 def _string_bearing(dt: T.DataType) -> bool:

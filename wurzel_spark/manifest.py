@@ -44,8 +44,10 @@ from __future__ import annotations
 import importlib
 import os
 from collections import Counter
-from contextlib import contextmanager
+from collections.abc import Callable
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
+from pathlib import Path
 
 import pandas as pd  # module-level: pandas_udf type hints resolve via globals
 import yaml
@@ -60,8 +62,11 @@ class ManifestError(ValueError):
 
 @dataclass
 class StepSpec:
+    """One step: ``uses`` names a registry entry or "module:callable"; a
+    ``Pipeline`` passes its stage callables directly."""
+
     name: str
-    uses: str
+    uses: str | Callable
     depends_on: list[str] = field(default_factory=list)
     settings: dict = field(default_factory=dict)
 
@@ -74,23 +79,29 @@ class Manifest:
 
     @classmethod
     def from_yaml(cls, text: str) -> "Manifest":
-        data = yaml.safe_load(text)
-        if not isinstance(data, dict) or "steps" not in data:
-            raise ManifestError("manifest needs a 'steps' mapping")
-        pipe = data.get("pipeline", {})
-        steps = {}
-        for name, spec in data["steps"].items():
-            if "uses" not in spec:
-                raise ManifestError(f"step '{name}' missing 'uses'")
-            steps[name] = StepSpec(
-                name=name,
-                uses=spec["uses"],
-                depends_on=list(spec.get("dependsOn", [])),
-                settings=dict(spec.get("settings", {})),
-            )
-        m = cls(name=pipe.get("name", "pipeline"), steps=steps, schedule=pipe.get("schedule"))
+        m = cls._parse(text)
         m.validate()
         return m
+
+    @classmethod
+    def _parse(cls, text: str) -> "Manifest":
+        """The step graph as written, before any semantic check (a missing
+        ``uses`` parses as ""); ``validate`` does the fail-fast checks,
+        ``ManifestValidator`` reports every problem."""
+        data = yaml.safe_load(text)
+        if not isinstance(data, dict) or not isinstance(data.get("steps"), dict):
+            raise ManifestError("manifest needs a 'steps' mapping")
+        pipe = data.get("pipeline") or {}
+        steps = {}
+        for name, spec in data["steps"].items():
+            spec = spec or {}
+            steps[name] = StepSpec(
+                name=name,
+                uses=str(spec.get("uses", "")),
+                depends_on=list(spec.get("dependsOn") or []),
+                settings=dict(spec.get("settings") or {}),
+            )
+        return cls(name=pipe.get("name", "pipeline"), steps=steps, schedule=pipe.get("schedule"))
 
     @classmethod
     def from_file(cls, path: str) -> "Manifest":
@@ -98,26 +109,16 @@ class Manifest:
             return cls.from_yaml(f.read())
 
     def validate(self) -> None:
-        """Dangling refs + cycle detection (validator.py:49+, DFS coloring)."""
-        for s in self.steps.values():
-            for dep in s.depends_on:
-                if dep not in self.steps:
-                    raise ManifestError(f"step '{s.name}' dependsOn unknown step '{dep}'")
-        WHITE, GRAY, BLACK = 0, 1, 2
-        color = {n: WHITE for n in self.steps}
-
-        def dfs(n: str, path: list[str]) -> None:
-            color[n] = GRAY
-            for dep in self.steps[n].depends_on:
-                if color[dep] == GRAY:
-                    raise ManifestError(f"cycle: {' -> '.join([*path, n, dep])}")
-                if color[dep] == WHITE:
-                    dfs(dep, [*path, n])
-            color[n] = BLACK
-
-        for n in self.steps:
-            if color[n] == WHITE:
-                dfs(n, [])
+        """Fail-fast structural check: raises the first missing ``uses``,
+        dangling ref or cycle that :class:`ManifestValidator` finds."""
+        v = ManifestValidator(self)
+        errors = [
+            *(f"step '{n}' missing 'uses'" for n, s in self.steps.items() if not s.uses),
+            *v.validate_step_refs(),
+            *v.validate_no_cycles(),
+        ]
+        if errors:
+            raise ManifestError(errors[0])
 
     def topo_order(self) -> list[str]:
         order: list[str] = []
@@ -180,7 +181,7 @@ class ManifestValidator:
     human-readable error strings — an empty list means clean — and
     ``validate_all`` aggregates them so a user sees EVERY problem in one
     pass instead of fixing them raise-by-raise. ``Manifest.validate``
-    (raising, used at parse time) keeps its fail-fast contract on the
+    (raising, used at parse time) raises the first error of the
     structural subset."""
 
     def __init__(self, manifest: "Manifest") -> None:
@@ -193,10 +194,7 @@ class ManifestValidator:
         for s in self._m.steps.values():
             for dep in s.depends_on:
                 if dep not in self._m.steps:
-                    errors.append(
-                        f"Step '{s.name}' depends on '{dep}', "
-                        "which is not defined in steps."
-                    )
+                    errors.append(f"Step '{s.name}' dependsOn unknown step '{dep}'")
         return errors
 
     def validate_no_cycles(self) -> list[str]:
@@ -213,7 +211,7 @@ class ManifestValidator:
                 if dep not in self._m.steps:
                     continue
                 if color[dep] == GRAY:
-                    errors.append(f"Cycle detected: {' -> '.join([*path, n, dep])}")
+                    errors.append(f"Dependency cycle: {' -> '.join([*path, n, dep])}")
                 elif color[dep] == WHITE:
                     dfs(dep, [*path, n])
             color[n] = BLACK
@@ -299,8 +297,11 @@ def _coerce_env(raw: str, current) -> object:
 
 # ------------------------------------------------------------ step registry
 
-def _resolve(uses: str):
-    """'module:callable' import or registry lookup (cli/_main.py:89-121)."""
+def _resolve(uses: str | Callable):
+    """'module:callable' import or registry lookup (cli/_main.py:89-121);
+    a callable is its own step."""
+    if callable(uses):
+        return uses
     if ":" in uses:
         mod, attr = uses.split(":", 1)
         return getattr(importlib.import_module(mod), attr)
@@ -350,9 +351,18 @@ def _union(spark, inputs):
     return reduce(DataFrame.unionByName, inputs)
 
 
+def save_sorted(df: DataFrame, path: str, fmt: str = "parquet") -> None:
+    """Deterministic persist: sort by the first column, then overwrite
+    ``path`` (the reference's output-sorting contract,
+    base_executor.py:67-87), so artifacts are content-hash comparable
+    across runs. ``parquet_sink``, ``Pipeline.save`` and ``run --out``
+    all write through it."""
+    df.orderBy(df.columns[0]).write.mode("overwrite").format(fmt).save(path)
+
+
 def _parquet_sink(spark, inputs, *, path: str):
     (df,) = inputs
-    df.orderBy(df.columns[0]).write.mode("overwrite").parquet(path)
+    save_sorted(df, path)
     return df
 
 
@@ -466,31 +476,50 @@ def step_env_encapsulation(settings: dict):
         os.environ.update(old)
 
 
-def _execute_step(spark, manifest, name, inputs, chain=None, encapsulate=True):
-    """One step through the middleware chain (SURVEY §3.4): secrets resolve
-    before the fn sees its settings; prometheus times/pushes around it;
-    settings are env-encapsulated for the step's duration (skippable via
-    ``encapsulate=False`` — the reference's ``dont_encapsulate`` /
-    DVC ``encapsulateEnv: false`` knob, backend_dvc.py:64-69)."""
+def _run_step(spark, manifest, name, inputs, chain=None, materialize_dir=None,
+              key=None, encapsulate=True):
+    """Run one step through the middleware chain (SURVEY §3.4) and return
+    ``(output, ctx.report)`` — the one step runner behind ``run_manifest``,
+    ``run_single_step`` and ``Pipeline.run``.
+
+    Secrets resolve before the fn sees its settings; prometheus times the
+    step and builds its StageReport; settings are env-encapsulated for the
+    step's duration (skippable via ``encapsulate=False`` — the reference's
+    ``dont_encapsulate`` / DVC ``encapsulateEnv: false`` knob,
+    backend_dvc.py:64-69). With ``materialize_dir`` a DataFrame output is
+    written to ``<dir>/<name>`` as Parquet and read back. ``key`` (a
+    Pipeline's incremental cache key, DVC's dependency checksum) is stored
+    beside it; when the stored key already matches, the step does not run
+    at all: its stored output is read and nothing is written, and the step
+    reports as ``"<name> (cached)"``."""
     from wurzel_spark.metrics import resolve_run_id
     from wurzel_spark.middleware import StepContext, chain_from_env
 
-    spec = manifest.steps[name]
-    fn = _resolve(spec.uses)
+    fn = _resolve(manifest.steps[name].uses)
+    path = None if materialize_dir is None else os.path.join(materialize_dir, name)
+    # Spark readers skip the "_"-prefixed key file in the output dir
+    keyfile = Path(path or ".", "_wurzel_cache_key")
+    hit = key is not None and keyfile.is_file() and keyfile.read_text().strip() == key
     chain = chain if chain is not None else chain_from_env()
     ctx = StepContext(
-        step_name=name,
+        step_name=f"{name} (cached)" if hit else name,
         settings=manifest.env_settings(name),
         run_id=resolve_run_id(spark),
     )
 
     def _run(c):
-        if not encapsulate:
-            return fn(spark, inputs, **c.settings)
-        with step_env_encapsulation(c.settings):
-            return fn(spark, inputs, **c.settings)
+        if hit:
+            return spark.read.parquet(path)
+        with step_env_encapsulation(c.settings) if encapsulate else nullcontext():
+            out = fn(spark, inputs, **c.settings)
+        if path is None or not isinstance(out, DataFrame):
+            return out
+        out.write.mode("overwrite").parquet(path)
+        if key is not None:
+            keyfile.write_text(key)
+        return spark.read.parquet(path)
 
-    return chain.execute(ctx, _run)
+    return chain.execute(ctx, _run), ctx.report
 
 
 def _cache_filled(df) -> bool:
@@ -511,7 +540,15 @@ def run_manifest(
     materialize_dir: str | None = None,
     chain=None,
 ) -> dict[str, DataFrame]:
-    """Execute the step graph; returns terminal outputs.
+    """Execute the step graph; returns terminal outputs."""
+    return _run_graph(spark, manifest, materialize_dir, chain)
+
+
+def _run_graph(spark, manifest, materialize_dir=None, chain=None, keys=None, reports=None):
+    """Run every step of ``manifest`` in dependency order through
+    :func:`_run_step`; returns the terminal outputs. ``keys`` maps step
+    names to incremental cache keys; each step's StageReport (built by a
+    prometheus middleware in ``chain``) is appended to ``reports``.
 
     Step-boundary rule: a non-terminal step's DataFrame output is
     persisted (MEMORY_AND_DISK, lineage kept, so a lost executor only
@@ -539,12 +576,17 @@ def run_manifest(
         for name in manifest.topo_order():
             spec = manifest.steps[name]
             inputs = [outputs[d] for d in spec.depends_on]
-            df = _execute_step(spark, manifest, name, inputs, chain=chain)
-            if materialize_dir is not None:
-                path = os.path.join(materialize_dir, name)
-                df.write.mode("overwrite").parquet(path)
-                df = spark.read.parquet(path)
-            elif waiting[name] and isinstance(df, DataFrame) and not df.is_cached:
+            df, report = _run_step(
+                spark, manifest, name, inputs, chain, materialize_dir, (keys or {}).get(name)
+            )
+            if reports is not None and "stage_report" in report:
+                reports.append(report["stage_report"])
+            if (
+                materialize_dir is None
+                and waiting[name]
+                and isinstance(df, DataFrame)
+                and not df.is_cached
+            ):
                 df.persist(StorageLevel.MEMORY_AND_DISK)
                 cached.append(df)
                 if any(_cache_filled(i) for i in inputs):
@@ -576,11 +618,10 @@ def run_single_step(
     parent outputs are read back from their materialization dirs, only this
     step's fn runs, and its result is written to its own dir for children.
     """
-    spec = manifest.steps[step]
     inputs = [
-        spark.read.parquet(os.path.join(materialize_dir, d)) for d in spec.depends_on
+        spark.read.parquet(os.path.join(materialize_dir, d))
+        for d in manifest.steps[step].depends_on
     ]
-    df = _execute_step(spark, manifest, step, inputs, encapsulate=encapsulate)
-    path = os.path.join(materialize_dir, step)
-    df.write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    return _run_step(
+        spark, manifest, step, inputs, materialize_dir=materialize_dir, encapsulate=encapsulate
+    )[0]

@@ -7,7 +7,8 @@
 
 labeled ``(step_name, run_id)`` and pushed to a Prometheus pushgateway.
 
-Spark shape: StageReports (stage.py) already carry rows/seconds per stage;
+Spark shape: a StageReport carries rows/seconds per step; the prometheus
+middleware (middleware.py) builds one per step the runner executes, and
 this module renders them in Prometheus text exposition format and hands the
 payload to a pluggable ``push`` callable (HTTP POST to a pushgateway in
 production, a file or list in tests). The run_id mirrors WURZEL_RUN_ID
@@ -20,6 +21,7 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -30,6 +32,15 @@ _GAUGES = (
     "wurzel_step_status",
     "wurzel_step_timestamp_seconds",
 )
+
+
+@dataclass
+class StageReport:
+    """Parity with wurzel's StepReport (base_executor.py:53-64)."""
+
+    stage: str
+    rows_out: int | None
+    seconds: float
 
 
 def resolve_run_id(spark: SparkSession | None = None, run_id: str | None = None) -> str:
@@ -58,8 +69,8 @@ def render_exposition(
     now: float | None = None,
     contract_metrics: dict[str, dict[str, float]] | None = None,
 ) -> str:
-    """StageReports → Prometheus text format. ``reports`` is the
-    Pipeline.run(with_reports=True) list; rows_out may be None when the
+    """StageReports → Prometheus text format (e.g. the
+    Pipeline.run(with_reports=True) list); rows_out may be None when the
     caller skipped counting (counting costs an action)."""
     ts = now if now is not None else time.time()
     lines: list[str] = []

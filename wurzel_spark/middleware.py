@@ -18,7 +18,9 @@ Reference shape:
     the step up front, not mid-write.
 
 Everything here is driver-side control flow — no Spark actions are added
-unless a middleware explicitly asks for a count.
+unless a middleware explicitly asks for a count. The one step runner
+(``manifest._run_step``) calls the chain for every step of a manifest and
+every stage of a ``Pipeline``.
 """
 
 from __future__ import annotations
@@ -29,6 +31,8 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
+
+from pyspark.sql import DataFrame
 
 from wurzel_spark import metrics as M
 
@@ -117,44 +121,37 @@ def prometheus(
     push: Callable[[str], None] | None = None,
     count_rows: bool = False,
 ) -> Middleware:
-    """Time the step and push per-step gauges (prometheus.py:70-120).
+    """Time the step, build its :class:`~wurzel_spark.metrics.StageReport`
+    (``ctx.report["stage_report"]``) and push per-step gauges
+    (prometheus.py:70-120).
 
     ``count_rows`` is off by default because counting a lazy DataFrame costs
-    an extra action; turn it on only where the report is worth a job.
+    an extra action; turn it on only where the report is worth a job. The
+    count is part of the step's time.
     """
 
     def mw(ctx: StepContext, call_next):
         t0 = time.time()
-        status = 1
-        result = None
         try:
             result = call_next(ctx)
-            return result
         except Exception:
-            status = 0
-            raise
-        finally:
             seconds = time.time() - t0
-            rows = None
-            if count_rows and status and hasattr(result, "count"):
-                rows = result.count()
-            if status:
-
-                class _R:  # duck-typed StageReport for metrics.render_exposition
-                    stage = ctx.step_name
-                    rows_out = rows
-
-                _R.seconds = seconds
-                payload = M.render_exposition([_R], ctx.run_id)
-            else:
+            ctx.report.update(seconds=seconds, rows_out=None, status=0)
+            if push is not None:
                 labels = f'step_name="{ctx.step_name}",run_id="{ctx.run_id}"'
-                payload = (
+                push(
                     f"wurzel_step_status{{{labels}}} 0\n"
                     f"wurzel_step_duration_seconds{{{labels}}} {seconds:.6f}\n"
                 )
-            ctx.report.update(seconds=seconds, rows_out=rows, status=status)
-            if push is not None:
-                push(payload)
+            raise
+        rows = result.count() if count_rows and isinstance(result, DataFrame) else None
+        report = M.StageReport(ctx.step_name, rows, time.time() - t0)
+        ctx.report.update(
+            seconds=report.seconds, rows_out=rows, status=1, stage_report=report
+        )
+        if push is not None:
+            push(M.render_exposition([report], ctx.run_id))
+        return result
 
     return mw
 

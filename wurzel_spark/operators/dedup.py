@@ -118,6 +118,15 @@ def _word_hash_frame(
     return df.select(F.col(id_col).alias("id"), _word_hashes(F.col(text_col)).alias("whs"))
 
 
+def _nonempty(wh: DataFrame) -> DataFrame:
+    """A :func:`_word_hash_frame` without its zero-word docs. Not a
+    filter: Catalyst would push ``size(whs) > 0`` below the spread's
+    round-robin into the scan, splitting and hashing every document a
+    second time there; an explode of the one-element array is not pushed
+    down, so each document's word hashes are computed once."""
+    return wh.select("id", F.explode(F.when(F.size("whs") > 0, F.array("whs"))).alias("whs"))
+
+
 def _gram_hashes(hs, n: int):
     """POSITIONAL n-gram hashes of an ALREADY-hashed word array (``hs`` a
     column or a lambda-bound variable, so the word-hash array is evaluated
@@ -445,7 +454,7 @@ def _signatures(
         return pd.DataFrame({k: list(v) if v.ndim == 2 else v for k, v in out.items()})
 
     return (
-        wh.filter(F.size("whs") > 0)
+        _nonempty(wh)
         .select("id", _kernel("whs").alias("c"))
         .select("id", *[F.col(f"c.{f.name}").alias(f.name) for f in fields])
     )
@@ -1610,7 +1619,7 @@ def _span_hash_stream(
     """(id, h) — (id, pos, h) with ``pos``, 0-based — one row per n-word
     span of every non-empty document: the positional span hashes of its
     :func:`_word_hash_frame` (a doc shorter than ``n`` is one span)."""
-    wh = _word_hash_frame(df, id_col, text_col).filter(F.size("whs") > 0)
+    wh = _nonempty(_word_hash_frame(df, id_col, text_col))
     grams = _gram_hashes(F.col("whs"), n)
     if pos:
         return wh.select("id", F.posexplode(grams).alias("pos", "h"))

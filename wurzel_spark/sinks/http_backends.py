@@ -47,15 +47,27 @@ log = getLogger(__name__)
 _GATEWAY_STATUSES = (502, 503, 504, 524)
 
 
-def _default_session_factory(headers: dict[str, str]) -> Callable[[], Any]:
-    def make():
-        import requests
+class _LazySession:
+    """One session per client (and one bare session, for a client with a
+    ``bare_session_factory``), built on first use: the client's factory's,
+    or a ``requests`` session carrying the client's ``_headers()``."""
 
-        s = requests.Session()
-        s.headers.update(headers)
-        return s
+    def _headers(self) -> dict[str, str]:
+        return {}
 
-    return make
+    def _session(self, bare: bool = False):
+        attr = "_b" if bare else "_s"
+        if getattr(self, attr, None) is None:
+            factory = self.bare_session_factory if bare else self.session_factory
+            if factory is None:
+                import requests
+
+                s = requests.Session()
+                s.headers.update({} if bare else self._headers())
+            else:
+                s = factory()
+            setattr(self, attr, s)
+        return getattr(self, attr)
 
 
 class HTTPError(RuntimeError):
@@ -78,7 +90,7 @@ def _check(resp) -> dict:
 
 
 @dataclass
-class QdrantHTTPBackend(CollectionBackend):
+class QdrantHTTPBackend(_LazySession, CollectionBackend):
     """Qdrant REST dialect of the 6-method collection protocol.
 
     Payload-index parity with qdrant/step.py:189-219: after
@@ -93,13 +105,8 @@ class QdrantHTTPBackend(CollectionBackend):
     timeout: float = 30.0
     session_factory: Callable[[], Any] | None = None
 
-    def _session(self):
-        if getattr(self, "_s", None) is None:
-            factory = self.session_factory or _default_session_factory(
-                {"api-key": self.api_key} if self.api_key else {}
-            )
-            self._s = factory()
-        return self._s
+    def _headers(self) -> dict[str, str]:
+        return {"api-key": self.api_key} if self.api_key else {}
 
     def _req(self, method: str, path: str, payload: dict | None = None) -> dict:
         resp = self._session().request(
@@ -208,7 +215,7 @@ class QdrantHTTPBackend(CollectionBackend):
 
 
 @dataclass
-class MilvusHTTPBackend(CollectionBackend):
+class MilvusHTTPBackend(_LazySession, CollectionBackend):
     """Milvus v2 REST dialect.
 
     Collection layout mirrors milvus/step.py:66-93: auto-id INT64 pk,
@@ -231,14 +238,11 @@ class MilvusHTTPBackend(CollectionBackend):
     timeout: float = 30.0
     session_factory: Callable[[], Any] | None = None
 
-    def _session(self):
-        if getattr(self, "_s", None) is None:
-            headers = {"Content-Type": "application/json"}
-            if self.token:
-                headers["Authorization"] = f"Bearer {self.token}"
-            factory = self.session_factory or _default_session_factory(headers)
-            self._s = factory()
-        return self._s
+    def _headers(self) -> dict[str, str]:
+        headers = {"Content-Type": "application/json"}
+        if self.token:
+            headers["Authorization"] = f"Bearer {self.token}"
+        return headers
 
     def _post(self, path: str, payload: dict) -> dict:
         resp = self._session().post(
@@ -340,7 +344,7 @@ class MilvusHTTPBackend(CollectionBackend):
 
 
 @dataclass
-class WonderfulKBClient(KBClient):
+class WonderfulKBClient(_LazySession, KBClient):
     """Wonderful RAG dialect of the KB protocol (wonderful/step.py:26-200).
 
     upsert: existing file → in-place POST /storage/upload; new file →
@@ -358,19 +362,8 @@ class WonderfulKBClient(KBClient):
     session_factory: Callable[[], Any] | None = None
     bare_session_factory: Callable[[], Any] | None = None
 
-    def _session(self):
-        if getattr(self, "_s", None) is None:
-            factory = self.session_factory or _default_session_factory(
-                {"x-api-key": self.api_key}
-            )
-            self._s = factory()
-        return self._s
-
-    def _bare(self):
-        if getattr(self, "_b", None) is None:
-            factory = self.bare_session_factory or _default_session_factory({})
-            self._b = factory()
-        return self._b
+    def _headers(self) -> dict[str, str]:
+        return {"x-api-key": self.api_key}
 
     def _api(self, method: str, endpoint: str, payload: dict | None = None) -> dict:
         resp = self._session().request(
@@ -424,7 +417,7 @@ class WonderfulKBClient(KBClient):
             raise
         rec = created.get("data", created)
         try:
-            put = self._bare().put(
+            put = self._session(bare=True).put(
                 rec["url"],
                 data=content,
                 headers={"Content-Type": "text/markdown"},
@@ -480,7 +473,7 @@ class WonderfulKBClient(KBClient):
 
 
 @dataclass
-class ElevenLabsKBClient(KBClient):
+class ElevenLabsKBClient(_LazySession, KBClient):
     """ElevenLabs convai knowledge-base dialect (elevenlabs/step.py:31-358).
 
     Listing pages through ``GET /v1/convai/knowledge-base`` filtering to
@@ -509,13 +502,8 @@ class ElevenLabsKBClient(KBClient):
     timeout: float = 30.0
     session_factory: Callable[[], Any] | None = None
 
-    def _session(self):
-        if getattr(self, "_s", None) is None:
-            factory = self.session_factory or _default_session_factory(
-                {"xi-api-key": self.api_key}
-            )
-            self._s = factory()
-        return self._s
+    def _headers(self) -> dict[str, str]:
+        return {"xi-api-key": self.api_key}
 
     def _scope(self, tag: str) -> str:
         return f"{self.name_prefix}{tag}" if tag else self.name_prefix
@@ -629,7 +617,7 @@ class ElevenLabsKBClient(KBClient):
 
 
 @dataclass
-class DecagonKBClient(KBClient):
+class DecagonKBClient(_LazySession, KBClient):
     """Decagon article dialect (decagon/step.py:40-161): server-side
     chunking via /article/chunks, then one /article/new per chunk with
     chunk_index/total_chunks metadata."""
@@ -640,16 +628,8 @@ class DecagonKBClient(KBClient):
     timeout: float = 30.0
     session_factory: Callable[[], Any] | None = None
 
-    def _session(self):
-        if getattr(self, "_s", None) is None:
-            factory = self.session_factory or _default_session_factory(
-                {
-                    "Content-Type": "application/json",
-                    "Authorization": f"Bearer {self.api_key}",
-                }
-            )
-            self._s = factory()
-        return self._s
+    def _headers(self) -> dict[str, str]:
+        return {"Content-Type": "application/json", "Authorization": f"Bearer {self.api_key}"}
 
     def _post(self, endpoint: str, payload: dict) -> dict:
         resp = self._session().post(

@@ -302,10 +302,12 @@ class KBUploaderSink:
         if failed:
             log.warning("%d stale doc(s) could not be pruned", failed)
 
-    def write(self, df: DataFrame) -> DataFrame:
+    def _publish(self, to_upload: DataFrame, keep: DataFrame) -> None:
+        """Upload ``to_upload`` (one client per partition), prune remote
+        docs of this lineage missing from ``keep``, then trigger the sync
+        re-index."""
         history = self.history
         factory = self.client_factory
-        to_upload = self._uploadable(df)
 
         def upload(rows) -> None:
             client = factory()
@@ -316,14 +318,15 @@ class KBUploaderSink:
                 retry_call(client.upsert_doc, name, payload)
 
         to_upload.foreachPartition(upload)
-
         if self.prune:
-            # keep-set = what was uploaded (the filtered input): the KB
-            # mirrors the input minus exclusions, before the sync re-index
-            self._prune_stale(factory(), to_upload)
+            self._prune_stale(factory(), keep)
+        factory().sync()
 
-        client = factory()
-        client.sync()
+    def write(self, df: DataFrame) -> DataFrame:
+        # keep-set = what was uploaded (the filtered input): the KB
+        # mirrors the input minus exclusions
+        to_upload = self._uploadable(df)
+        self._publish(to_upload, to_upload)
         return df
 
     def write_delta(self, new_df: DataFrame, old_df: DataFrame) -> DataFrame:
@@ -331,10 +334,11 @@ class KBUploaderSink:
         docs whose content hash changed or that are new since ``old_df``
         (operators/snapshots.snapshot_diff keyed on the url identity) —
         then prune against the FULL new snapshot's names so removed docs
-        disappear and unchanged docs survive untouched. Uploads scale
-        with the delta, not the corpus; upserts are idempotent by
-        deterministic doc name, so re-running a partially-failed delta
-        publish converges.
+        disappear and unchanged docs survive untouched. Both sides pass
+        :meth:`_uploadable` first, so excluded URLs are neither uploaded
+        nor kept. Uploads scale with the delta, not the corpus; upserts are
+        idempotent by deterministic doc name, so re-running a
+        partially-failed delta publish converges.
         """
         from wurzel_spark.operators.snapshots import snapshot_diff
 
@@ -343,25 +347,7 @@ class KBUploaderSink:
             .filter(F.col("status") != "removed")
             .select("url")
         )
-        delta = new_df.join(changed, "url", "left_semi")
-        history = self.history
-        factory = self.client_factory
-
-        def upload(rows) -> None:
-            client = factory()
-            for r in rows:
-                d = r.asDict(recursive=True)
-                name = doc_name(d.get("url", ""), history)
-                payload = {**d, "history": history, "name": name}
-                retry_call(client.upsert_doc, name, payload)
-
-        delta.foreachPartition(upload)
-
-        if self.prune:
-            # prune against the FULL new snapshot (not the delta) so
-            # unchanged docs survive and removed docs disappear
-            self._prune_stale(factory(), new_df)
-
-        client = factory()
-        client.sync()
+        keep = self._uploadable(new_df)
+        delta = keep.join(changed, "url", "left_semi")
+        self._publish(delta, keep)
         return delta

@@ -18,6 +18,8 @@ import shutil
 
 from pyspark.sql import DataFrame
 
+from wurzel_spark.manifest import save_sorted
+
 
 def write_snapshot(
     df: DataFrame,
@@ -51,7 +53,7 @@ def write_snapshot(
         # each task writes its own part file, nothing funnels through
         # the driver), then the pointer flip below publishes it
         path = os.path.join(root, timestamp)
-        df.orderBy(df.columns[0]).write.mode("overwrite").json(path)
+        save_sorted(df, path, "json")
         manifest["path"] = path
         manifest["partitioned"] = True
     else:

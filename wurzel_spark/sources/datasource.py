@@ -26,15 +26,15 @@ control matters. Both emit identical rows (parity-tested).
 
 from __future__ import annotations
 
-import json
 import os
 import re
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-#: front-matter pattern (common.py:17) — same as sources/markdown.py
-_FM_RE = re.compile(r"(?s)\A---\s*\n(.*?)\n---\s*\n(.*)\Z")
+from wurzel_spark.sources import markdown
+
+_FM_RE = re.compile(markdown._FM_RE)
 
 
 def _parse_markdown_file(path: str, url_prefix: str):
@@ -42,38 +42,20 @@ def _parse_markdown_file(path: str, url_prefix: str):
     defaulting rules. Pure function so the reader and tests share it."""
     with open(path, encoding="utf-8") as fh:
         raw = fh.read()
-    stem = os.path.splitext(os.path.basename(path))[0]
-    md, keywords, metadata = raw, None, None
+    md, fm = raw, None
     m = _FM_RE.match(raw)
     if m:
         # fence always strips on a pattern match — a YAML failure only
         # resets the metadata (common.py:116-131; md_test.py '\t url:')
-        md = m.group(2)
-        try:
-            import yaml
-
-            data = yaml.safe_load(m.group(1))
-        except Exception:
-            data = None
-        if isinstance(data, dict):
-            kw = data.get("keywords", data.get("topics"))
-            keywords = str(kw) if kw is not None else None
-            meta = data.get("metadata")
-            if isinstance(meta, dict):
-                metadata = {
-                    str(k): json.dumps(v) if isinstance(v, (dict, list)) else str(v)
-                    for k, v in meta.items()
-                }
-            url = data.get("url")
-            if url is not None:
-                return (md, stem if keywords is None else keywords, str(url), metadata)
+        md, fm = m.group(2), markdown.front_matter(m.group(1))
+    keywords, url, metadata = fm or (None, None, None)
     # default only on MISSING keywords (reference: metadata.get with a
     # stem default) — an explicit empty string stays empty, matching the
     # expression reader's NULL-only coalesce
     return (
         md,
-        stem if keywords is None else keywords,
-        url_prefix + os.path.abspath(path),
+        os.path.splitext(os.path.basename(path))[0] if keywords is None else keywords,
+        url_prefix + os.path.abspath(path) if url is None else url,
         metadata,
     )
 

@@ -40,35 +40,47 @@ _META_SCHEMA = T.StructType(
 )
 
 
-@F.pandas_udf(_META_SCHEMA)
-def _parse_front_matter(yaml_text: pd.Series) -> pd.DataFrame:
-    """YAML front-matter → (keywords, url, metadata, valid). Vectorized over
-    Arrow batches; yaml.safe_load per document (cheap — front matter is a
-    few lines).
-    """
+def front_matter(yaml_text: str) -> tuple[str | None, str | None, dict | None] | None:
+    """Front-matter YAML → (keywords, url, metadata), or None when it does
+    not parse to a mapping or a value does not convert (invalid YAML: the
+    contract's defaults apply, common.py:117-131). The deprecated
+    ``topics`` key maps to keywords (common.py:133-139); nested metadata
+    values are JSON-encoded. Pure, so both markdown readers (this module's
+    and ``sources/datasource.py``'s) apply the same rule."""
     import yaml
 
+    try:
+        data = yaml.safe_load(yaml_text) if yaml_text else None
+        if not isinstance(data, dict):
+            return None
+        kw = data.get("keywords", data.get("topics"))
+        meta = data.get("metadata")
+        return (
+            str(kw) if kw is not None else None,
+            str(data["url"]) if data.get("url") is not None else None,
+            {
+                str(k): json.dumps(v) if isinstance(v, (dict, list)) else str(v)
+                for k, v in meta.items()
+            }
+            if isinstance(meta, dict)
+            else None,
+        )
+    except Exception:
+        return None
+
+
+@F.pandas_udf(_META_SCHEMA)
+def _parse_front_matter(yaml_text: pd.Series) -> pd.DataFrame:
+    """YAML front-matter → (keywords, url, metadata, valid) through
+    :func:`front_matter`. Vectorized over Arrow batches; one yaml.safe_load
+    per document (cheap — front matter is a few lines)."""
     out = []
     for txt in yaml_text:
-        rec = {"keywords": None, "url": None, "metadata": None, "valid": False}
-        if txt:
-            try:
-                data = yaml.safe_load(txt)
-                if isinstance(data, dict):
-                    # deprecated `topics` key → keywords (common.py:133-139)
-                    kw = data.get("keywords", data.get("topics"))
-                    rec["keywords"] = str(kw) if kw is not None else None
-                    rec["url"] = str(data["url"]) if data.get("url") is not None else None
-                    meta = data.get("metadata")
-                    if isinstance(meta, dict):
-                        rec["metadata"] = {
-                            str(k): json.dumps(v) if isinstance(v, (dict, list)) else str(v)
-                            for k, v in meta.items()
-                        }
-                    rec["valid"] = True
-            except Exception:
-                pass  # invalid YAML → whole body is md (common.py:117-131)
-        out.append(rec)
+        fm = front_matter(txt)
+        keywords, url, metadata = fm or (None, None, None)
+        out.append(
+            {"keywords": keywords, "url": url, "metadata": metadata, "valid": fm is not None}
+        )
     return pd.DataFrame(out)
 
 

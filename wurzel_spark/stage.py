@@ -7,23 +7,25 @@ the "DAG" is the Catalyst plan, so there is no scheduler, no per-step
 process, no mandatory disk round-trip (SURVEY §3.2: the reference's DVC/Argo
 compile step becomes a no-op).
 
-What survives from the reference's executor:
+A Pipeline is a linear step graph: ``run`` hands its stages to the one step
+runner a manifest runs through (``manifest._run_graph``), which owns the
+middleware chain, the step-boundary persist, the per-stage Parquet
+materialization (DVC inspectability / incremental re-runs, SURVEY §3.2)
+and the StageReports. What survives from the reference's executor:
   - static composition check (typed_step.py:261-275) → contract compatibility
   - dynamic run-time validation (base_executor.py:322-325) → Contract.validate
   - History lineage (core/history.py:16, stamped into sink payloads,
     qdrant/step.py:99) → a literal `history` column, '-'-joined stage names
   - per-stage reports {inputs, results, time} (base_executor.py:348-362)
-    → StageReport
+    → StageReport, built by the prometheus middleware
   - deterministic output ordering before persist (base_executor.py:67-87)
-    → Pipeline.save orders by the first column
-  - optional per-stage Parquet materialization (DVC inspectability /
-    incremental re-runs, SURVEY §3.2) → materialize_dir
+    → Pipeline.save → manifest.save_sorted
 """
 
 from __future__ import annotations
 
-import os
-import time
+import hashlib
+import inspect
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -31,15 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wurzel_spark.contracts import Contract, StaticTypeError
-
-
-@dataclass
-class StageReport:
-    """Parity with wurzel's StepReport (base_executor.py:53-64)."""
-
-    stage: str
-    rows_out: int | None
-    seconds: float
+from wurzel_spark.manifest import Manifest, ManifestError, StepSpec, _run_graph, save_sorted
+from wurzel_spark.metrics import StageReport
+from wurzel_spark.middleware import MiddlewareChain, prometheus
 
 
 @dataclass
@@ -89,19 +85,32 @@ class Pipeline:
         """Lineage string: '-'-joined stage names (core/history.py:16)."""
         return "-".join(s.name for s in self.stages)
 
-    def _stage_key(self, prev_key: str, st: Stage) -> str:
-        """Cache key chain: upstream key + stage name + stage fn source.
+    def _steps(self, cache_fingerprint: str) -> tuple[Manifest, dict[str, str]]:
+        """The stages as a linear step graph (the first stage reads the
+        source), with each stage's incremental cache key.
+
+        Cache key chain: upstream key + stage name + stage fn source.
         Mirrors DVC's dependency checksums (SURVEY §4: stage deps = upstream
         outputs + step source file) — editing a stage's code invalidates its
         cache and everything downstream."""
-        import hashlib
-        import inspect
+        steps: dict[str, StepSpec] = {}
+        keys: dict[str, str] = {}
+        key, prev = f"src|{cache_fingerprint}", None
+        for st in self.stages:
+            if st.name in steps:
+                raise ManifestError(f"duplicate stage name '{st.name}'")
 
-        try:
-            src = inspect.getsource(st.fn)
-        except (OSError, TypeError):  # builtins / C callables / REPL lambdas
-            src = st.name
-        return hashlib.sha256(f"{prev_key}|{st.name}|{src}".encode()).hexdigest()
+            def run(spark, inputs, st=st):
+                return st(inputs[0] if inputs else self.source(spark))
+
+            try:
+                src = inspect.getsource(st.fn)
+            except (OSError, TypeError):  # builtins / C callables / REPL lambdas
+                src = st.name
+            key = keys[st.name] = hashlib.sha256(f"{key}|{st.name}|{src}".encode()).hexdigest()
+            steps[st.name] = StepSpec(st.name, run, [prev] if prev else [])
+            prev = st.name
+        return Manifest(self.history(), steps), keys
 
     def run(
         self,
@@ -113,10 +122,16 @@ class Pipeline:
     ) -> DataFrame:
         """Compose all stages into one Catalyst plan.
 
+        Each stage's output is persisted at its step boundary while the next
+        stage runs, so a stage's actions (a contract's validation, a report
+        count) read it from the cache instead of replaying every upstream
+        stage from the source. With ``with_reports`` each stage appends a
+        counted StageReport to ``self.reports``.
+
         With ``materialize_dir``, each stage's output is persisted to
         Parquet and re-read (wurzel's per-step artifact dirs / DVC stage
         cache) — inspectable and incrementally re-runnable, at the cost of
-        breaking plan fusion. Default is full fusion.
+        breaking plan fusion.
 
         With ``incremental=True`` (requires ``materialize_dir``), a stage
         whose stored cache key matches is NOT recomputed — its Parquet
@@ -127,52 +142,23 @@ class Pipeline:
         (e.g. a content/snapshot hash); leaves with always-fresh inputs can
         pass a changing fingerprint (DVC's ``always_changed``).
         """
-        df = self.source(spark)
-        key = f"src|{cache_fingerprint}"
-        for st in self.stages:
-            key = self._stage_key(key, st)
-            t0 = time.perf_counter()
-            if materialize_dir:
-                path = os.path.join(materialize_dir, st.name)
-                keyfile = os.path.join(path, "_wurzel_cache_key")
-                if incremental and os.path.isfile(keyfile):
-                    with open(keyfile, encoding="utf-8") as f:
-                        if f.read().strip() == key:
-                            df = spark.read.parquet(path)
-                            if with_reports:
-                                self.reports.append(
-                                    StageReport(
-                                        f"{st.name} (cached)",
-                                        df.count() if with_reports else None,
-                                        time.perf_counter() - t0,
-                                    )
-                                )
-                            continue
-                df = st(df)
-                df.write.mode("overwrite").parquet(path)
-                # Spark readers ignore underscore-prefixed files in the dir.
-                with open(keyfile, "w", encoding="utf-8") as f:
-                    f.write(key)
-                df = spark.read.parquet(path)
-            else:
-                df = st(df)
-            if with_reports:
-                self.reports.append(
-                    StageReport(
-                        st.name,
-                        df.count() if materialize_dir or with_reports else None,
-                        time.perf_counter() - t0,
-                    )
-                )
+        if not self.stages:
+            return self.source(spark).withColumn("history", F.lit(""))
+        graph, keys = self._steps(cache_fingerprint)
+        chain = MiddlewareChain([prometheus(count_rows=True)] if with_reports else [])
+        (df,) = _run_graph(
+            spark,
+            graph,
+            materialize_dir,
+            chain,
+            keys if incremental and materialize_dir else None,
+            self.reports if with_reports else None,
+        ).values()
         return df.withColumn("history", F.lit(self.history()))
 
     def save(self, df: DataFrame, path: str, fmt: str = "parquet") -> None:
-        """Deterministic persist: sort by first column before writing
-        (the reference's output-sorting contract, base_executor.py:67-87) —
-        makes artifacts content-hash comparable across runs.
-        """
-        first = df.columns[0]
-        df.orderBy(first).write.mode("overwrite").format(fmt).save(path)
+        """Deterministic persist (:func:`manifest.save_sorted`)."""
+        save_sorted(df, path, fmt)
 
 
 def self_consuming_source(
