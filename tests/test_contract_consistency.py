@@ -2,7 +2,23 @@
 scripted edits can silently break (r6 lesson: a dedup script ate two
 oracle_sql entries — caught only by a full verify run)."""
 
+import ast
+import functools
+import pathlib
 import re
+
+_ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+
+@functools.lru_cache(maxsize=None)
+def _segments(path):
+    """((top-level node, its source lines), …) of one module, parsed and
+    sliced once per session: every guard below reads these."""
+    src = pathlib.Path(path).read_text()
+    lines = src.splitlines(keepends=True)
+    return tuple(
+        (node, "".join(lines[node.lineno - 1 : node.end_lineno])) for node in ast.parse(src).body
+    )
 
 
 def _entry():
@@ -83,7 +99,6 @@ def test_window_boundary_marker_position():
 
 
 def test_driver_window_has_50_entries_and_no_dups():
-    import ast
     import collections
 
     src = open("/root/repo/__spark_entry__.py").read()
@@ -175,18 +190,12 @@ def test_bench_compact_keep_names_all_resolve():
 def _streaming_sites(needle):
     """{(module file, enclosing top-level function)} of the sites of
     ``needle`` in the streaming/ sources."""
-    import ast
-    import pathlib
-
-    import wurzel_spark.streaming as S
-
-    sites = set()
-    for path in sorted(pathlib.Path(S.__file__).parent.glob("*.py")):
-        src = path.read_text()
-        for node in ast.parse(src).body:
-            if needle in (ast.get_source_segment(src, node) or ""):
-                sites.add((path.name, getattr(node, "name", "<module>")))
-    return sites
+    return {
+        (path.name, getattr(node, "name", "<module>"))
+        for path in sorted((_ROOT / "wurzel_spark/streaming").glob("*.py"))
+        for node, seg in _segments(path)
+        if needle in seg
+    }
 
 
 def test_streaming_skeleton_lives_only_in_the_fold_runner():
@@ -216,10 +225,7 @@ _RETIRED_GATE_NAMES = (
 
 
 def _py_files(*dirs):
-    import pathlib
-
-    root = pathlib.Path(__file__).resolve().parent.parent
-    return [p for d in dirs for p in sorted((root / d).rglob("*.py"))]
+    return [p for d in dirs for p in sorted((_ROOT / d).rglob("*.py"))]
 
 
 def test_size_gates_decide_only_through_common_fits():
@@ -228,9 +234,6 @@ def test_size_gates_decide_only_through_common_fits():
     per-module gate limits or aliases survive, only common.py reads the
     plan-size estimate, and no module from-imports ``fits`` (a bound
     name would keep the real function under the monkeypatch)."""
-    import ast
-    import pathlib
-
     this = pathlib.Path(__file__).resolve()
     files = [p for p in _py_files("wurzel_spark", "tests") if p != this]
     retired = sorted(
@@ -254,20 +257,13 @@ def test_size_gates_decide_only_through_common_fits():
 
 def _source(path):
     """Text of a file, by its path from the repo root."""
-    import pathlib
-
-    return (pathlib.Path(__file__).resolve().parent.parent / path).read_text()
+    return (_ROOT / path).read_text()
 
 
 def _functions(path):
     """{top-level function name: source} of one module."""
-    import ast
-
-    src = _source(path)
     return {
-        node.name: ast.get_source_segment(src, node)
-        for node in ast.parse(src).body
-        if isinstance(node, ast.FunctionDef)
+        node.name: seg for node, seg in _segments(_ROOT / path) if isinstance(node, ast.FunctionDef)
     }
 
 
@@ -303,8 +299,6 @@ def test_near_dup_driver_twin_shares_the_kernel_math():
     signatures through one numpy family function; the twin pulls once and
     falls through only where common.fits (or the common.py helper that
     asks it) says no."""
-    import ast
-
     path = "wurzel_spark/operators/dedup.py"
     src, fns = _source(path), _functions(path)
     for row_fn in ("_simhash_rows(", "_minhash_rows(", "_band_hashes_rows(", "_pad_hash_matrix("):
@@ -333,8 +327,6 @@ def test_ann_core_is_written_once():
     one PQ ADC scorer and one exact rerank. The column ``cosine`` (which
     fails on a zero vector under ANSI) stays with the three audits that
     compute it; every other scorer uses the ``cosine_pd`` kernel."""
-    import ast
-
     path = "wurzel_spark/operators/similarity.py"
     src, fns = _source(path), _functions(path)
     sites = {
@@ -360,8 +352,6 @@ def test_text_primitives_are_written_once():
     """Every text operator tokenizes with TXT.words, hashes words through
     dedup._word_hashes, windows n-grams through TXT.windows and zips
     bigram pairs through TXT.bigrams: none spells its own copy."""
-    import ast
-
     def name(node):
         f = getattr(node, "func", None)
         return getattr(f, "attr", getattr(f, "id", None)) if isinstance(node, ast.Call) else None
@@ -404,17 +394,12 @@ def _package_sites(is_site):
     """{(module file, top-level name)} of the top-level definitions of
     wurzel_spark whose source ``is_site`` accepts (a function or class
     name, or an assigned module constant's)."""
-    import ast
-
-    sites = set()
-    for p in _py_files("wurzel_spark"):
-        src = p.read_text()
-        for node in ast.parse(src).body:
-            seg = ast.get_source_segment(src, node) or ""
-            if is_site(node, seg):
-                name = getattr(node, "name", None) or ast.unparse(getattr(node, "targets", [node])[0])
-                sites.add((p.name, name))
-    return sites
+    return {
+        (p.name, getattr(node, "name", None) or ast.unparse(getattr(node, "targets", [node])[0]))
+        for p in _py_files("wurzel_spark")
+        for node, seg in _segments(p)
+        if is_site(node, seg)
+    }
 
 
 def test_pair_joins_are_written_once():
@@ -422,8 +407,6 @@ def test_pair_joins_are_written_once():
     overlaps through dedup._overlap_pairs: the first-shared-band rule, the
     band posexplode, the per-pair overlap count and the df-cap anti-join
     have one site each, and the capped-pairs oracle CTE is written once."""
-    import ast
-    import re
 
     def has(needle):
         return lambda node, seg: needle in seg
@@ -465,14 +448,12 @@ def test_pipeline_layer_is_written_once():
     (``manifest.save_sorted``), one report class built in one place (the
     prometheus middleware), one cycle DFS, one YAML parse and one lazy
     HTTP session."""
-    import ast
-
-    segs = {}  # (module, top-level name) -> source
-    for f in ("stage.py", "manifest.py", "middleware.py", "cli.py", "metrics.py"):
-        src = _source(f"wurzel_spark/{f}")
-        for node in ast.parse(src).body:
-            if hasattr(node, "name"):
-                segs[(f, node.name)] = ast.get_source_segment(src, node)
+    segs = {  # (module, top-level name) -> source
+        (f, node.name): seg
+        for f in ("stage.py", "manifest.py", "middleware.py", "cli.py", "metrics.py")
+        for node, seg in _segments(_ROOT / "wurzel_spark" / f)
+        if hasattr(node, "name")
+    }
 
     def sites(needle):
         return {k for k, seg in segs.items() if needle in seg}
@@ -493,4 +474,56 @@ def test_pipeline_layer_is_written_once():
     assert "class " not in segs[("middleware.py", "prometheus")]
     assert sites("GRAY") == {("manifest.py", "ManifestValidator")}
     assert sites("safe_load(") == {("manifest.py", "Manifest")}
-    assert _source("wurzel_spark/sinks/http_backends.py").count("def _session(") == 1
+    assert _package_sites(lambda node, seg: "def _session(" in seg) == {
+        ("http_session.py", "LazySession")
+    }
+
+
+def test_oracle_rules_are_written_once():
+    """Every DuckDB oracle renders the rules it shares with other oracles
+    through one fragment each, kept beside its Spark twin: the tokenizer
+    (``TXT.words_sql``), a SQL list literal (``TXT.sql_list``), the
+    3-word shingle rows, the transitive closure, the Knuth id hash, the
+    cosine norm and the synthetic CDC log."""
+    list_render = re.compile(r"""f"'\{\w+\}'" for """)
+    rules = {
+        "regexp_split_to_array(trim(": {("text.py", "words_sql")},
+        "DISTINCT_SHINGLE": {("dedup.py", "_SHINGLE_ROWS")},
+        "reach(src, dst)": {("dedup.py", "_REACH_CTE")},
+        "2654435761": {("common.py", "_KNUTH")},
+        "sqrt(list_dot_product(": {("similarity.py", "_norm_sql")},
+    }
+    for needle, want in rules.items():
+        assert _package_sites(lambda node, seg: needle in seg) == want, needle
+    # the CDC log's insert day, doc_id % 7, in its Spark and its SQL form
+    assert _package_sites(lambda node, seg: "% 7" in seg and "DAY" in seg) == {
+        ("snapshots.py", "_cdc_log"),
+        ("snapshots.py", "_CDC_LOG_CTE"),
+    }
+    assert _package_sites(lambda node, seg: bool(list_render.search(seg))) == {
+        ("text.py", "sql_list")
+    }
+
+
+def test_every_oracle_runs_with_the_registered_columns(registered_dfs, sf_dir):
+    """Each ``oracle_sql()`` entry runs on DuckDB and yields the columns of
+    its registered query (sorted by name, as the oracle compare sorts them);
+    a query whose plan build raised is left to the plan sweeps."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    bad = {}
+    for name, sql in _entry().oracle_sql().items():
+        df = registered_dfs.get(name)
+        if df is None or isinstance(df, Exception):
+            continue
+        try:
+            cols = sorted(c[0] for c in con.execute(sql).description)
+        except duckdb.Error as ex:
+            bad[name] = str(ex).splitlines()[0]
+            continue
+        if cols != sorted(df.columns):
+            bad[name] = (cols, sorted(df.columns))
+    assert not bad, bad

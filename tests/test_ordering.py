@@ -36,13 +36,13 @@ def test_corpus_shuffle_matches_naive_global_rank(spark):
     """The two-phase bucketed rank must equal the naive single-window
     ROW_NUMBER over the same (hash, id) order."""
     from pyspark.sql import Window as W
-    from wurzel_spark.operators.ordering import _det_hash
+    from wurzel_spark.operators.common import knuth_hash
 
     df = spark.range(0, 5000).withColumnRenamed("id", "doc_id")
     got = {r.doc_id: r.shuffle_pos for r in corpus_shuffle(df).collect()}
     naive = {
         r.doc_id: r.pos
-        for r in df.withColumn("__h", _det_hash(F.col("doc_id")))
+        for r in df.withColumn("__h", knuth_hash(F.col("doc_id")))
         .withColumn("pos", F.row_number().over(W.orderBy("__h", "doc_id")))
         .collect()
     }

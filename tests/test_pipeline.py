@@ -181,9 +181,9 @@ def test_curation_v2_stage_pipeline(spark):
 
 def test_report_counts_read_the_step_boundary_not_the_source(spark):
     """With reports on, each stage's count reads its input from the step
-    boundary's cache: the first stage's UDF filter runs for its own count
-    and once more to fill that cache, not once per downstream count (a
-    count used to replay every stage from the source: 4 × 50 calls here)."""
+    boundary's cache, and the first stage's own count fills that cache,
+    so its UDF filter runs once in all (a count used to replay every
+    stage from the source: 4 × 50 calls here)."""
     acc = spark.sparkContext.accumulator(0)
 
     @F.udf("boolean")
@@ -202,6 +202,24 @@ def test_report_counts_read_the_step_boundary_not_the_source(spark):
     assert [(r.stage, r.rows_out) for r in pipe.reports] == [
         ("Filter", 25), ("A", 25), ("B", 25), ("C", 25)
     ]
-    assert acc.value == 2 * 50
+    assert acc.value == 50
     assert out.count() == 25
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_failed_report_count_leaves_no_cache(spark):
+    """A stage whose report count fails leaves nothing cached: the count
+    persisted the stage's output for the next stage, and the failure
+    unpersists it again."""
+    @F.udf("boolean")
+    def boom(v):
+        raise ValueError("bad row")
+
+    pipe = (
+        Pipeline(lambda s: s.range(5).selectExpr("id AS v"))
+        >> Stage("Boom", lambda df: df.filter(boom("v")))
+        >> Stage("A", lambda df: df.withColumn("a", F.col("v") + 1))
+    )
+    with pytest.raises(Exception, match="bad row"):
+        pipe.run(spark, with_reports=True)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -67,3 +67,40 @@ def test_word_hashes_run_once_per_document(spark, sf_dir):
     assert splits(D.combined_near_dup_signatures(docs, "doc_id", "text")) == 1
     assert splits(D._span_hash_stream(docs, "doc_id", "text", 5)) == 1
     assert splits(D._span_hash_stream(docs, "doc_id", "text", 5, pos=True)) == 1
+
+
+def test_tokenizer_twins_agree_on_whitespace_edges(spark):
+    """``TXT.words`` (Java ``\\s``) and its DuckDB twin ``TXT.words_sql``
+    (RE2, whose ``\\s`` lacks the vertical tab) split the same strings into
+    the same words: vertical tab, tab, newline, form feed, blanks, empty
+    and NULL text, and the non-breaking, em and separator spaces neither
+    engine splits on."""
+    import duckdb
+    import pandas as pd
+
+    texts = [
+        "a\x0bb",
+        "a\x0bb c\td",
+        "\x0b",
+        "a\tb\nc\fd\re",
+        "  a   b  ",
+        "",
+        "   ",
+        "a\xa0b",
+        "a b",
+        "a\x1cb",
+        "a\x85b",
+        None,
+    ]
+    rows = list(enumerate(texts))
+    got = {
+        r.i: r.ws
+        for r in spark.createDataFrame(rows, "i int, text string")
+        .select("i", TXT.words(F.col("text")).alias("ws"))
+        .collect()
+    }
+    con = duckdb.connect()
+    con.register("edge", pd.DataFrame(rows, columns=["i", "text"]))
+    want = dict(con.execute(f"SELECT i, {TXT.words_sql()} FROM edge").fetchall())
+    assert got == want
+    assert got[0] == ["a", "b"] and got[1] == ["a", "b", "c", "d"]

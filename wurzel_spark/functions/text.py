@@ -1,7 +1,13 @@
 """Text Column builders — pure `pyspark.sql.functions` compositions.
 
 Everything here compiles into whole-stage codegen (no Python in the hot
-path) and has an exact ANSI-SQL twin for the DuckDB oracle.
+path). The rules the DuckDB oracles share have their SQL twin here too,
+each beside its Spark form: :func:`words_sql` (the tokenizer),
+:func:`markers_sql` (marker-word hits), :func:`permille_sql` (the
+integer score, e.g. the stopword density q1000) and :func:`sql_list`
+(a list literal's items). An oracle renders these rules through the
+fragments, never by hand (guard:
+``test_contract_consistency.py::test_oracle_rules_are_written_once``).
 
 Reference parity (SURVEY §2.8): whitespace tokenizer
 (wurzel/steps/embedding/step.py:35,172-175), content hashes
@@ -33,6 +39,14 @@ def normalize_ws(col: Column) -> Column:
 def words(col: Column) -> Column:
     """Whitespace tokenization → array<string>. Empty/blank input → []."""
     return F.filter(F.split(F.trim(col), r"\s+"), lambda w: w != "")
+
+
+def words_sql(col: str = "text") -> str:
+    """DuckDB twin of :func:`words` over the SQL expression ``col``.
+    Spark splits on Java's ``\\s``, which includes the vertical tab;
+    RE2's ``\\s`` does not, so the class names ``\\v`` as well."""
+    v = "w" if col == "x" else "x"
+    return f"list_filter(regexp_split_to_array(trim({col}), '[\\s\\v]+'), {v} -> {v} != '')"
 
 
 def word_count(col: Column) -> Column:
@@ -118,3 +132,27 @@ def marker_words_count(col: Column, markers: tuple[str, ...]) -> Column:
     space is consumed by the first non-overlapping match)."""
     arr = F.array(*[F.lit(m) for m in markers])
     return F.size(F.filter(words(col), lambda w: F.array_contains(arr, w)))
+
+
+def sql_list(items) -> str:
+    """``'a', 'b', …``: the items of a SQL list literal (no quote in any
+    item)."""
+    return ", ".join(f"'{s}'" for s in items)
+
+
+def markers_sql(ws: str, markers: tuple[str, ...]) -> str:
+    """DuckDB twin of :func:`marker_words_count` over a word-list
+    expression ``ws``."""
+    return f"len(list_filter({ws}, w -> list_contains([{sql_list(markers)}], w)))"
+
+
+def permille(num: str, den: str) -> Column:
+    """``floor(1000 · num / den)`` of two integer columns, 0 where ``den``
+    is 0: exact integer floor-div (Spark ``div``). The stopword-density
+    score q1000 is ``permille`` of stopword hits over words."""
+    return F.when(F.col(den) > 0, F.expr(f"(1000 * {num}) div {den}")).otherwise(F.lit(0))
+
+
+def permille_sql(num: str, den: str) -> str:
+    """DuckDB twin of :func:`permille` (``//`` floor-div)."""
+    return f"CASE WHEN {den} > 0 THEN (1000 * {num}) // {den} ELSE 0 END"

@@ -477,7 +477,7 @@ def step_env_encapsulation(settings: dict):
 
 
 def _run_step(spark, manifest, name, inputs, chain=None, materialize_dir=None,
-              key=None, encapsulate=True):
+              key=None, encapsulate=True, boundary=False):
     """Run one step through the middleware chain (SURVEY §3.4) and return
     ``(output, ctx.report)`` — the one step runner behind ``run_manifest``,
     ``run_single_step`` and ``Pipeline.run``.
@@ -491,7 +491,8 @@ def _run_step(spark, manifest, name, inputs, chain=None, materialize_dir=None,
     Pipeline's incremental cache key, DVC's dependency checksum) is stored
     beside it; when the stored key already matches, the step does not run
     at all: its stored output is read and nothing is written, and the step
-    reports as ``"<name> (cached)"``."""
+    reports as ``"<name> (cached)"``. ``boundary`` tells the chain that
+    the caller persists the output at its step boundary."""
     from wurzel_spark.metrics import resolve_run_id
     from wurzel_spark.middleware import StepContext, chain_from_env
 
@@ -505,6 +506,7 @@ def _run_step(spark, manifest, name, inputs, chain=None, materialize_dir=None,
         step_name=f"{name} (cached)" if hit else name,
         settings=manifest.env_settings(name),
         run_id=resolve_run_id(spark),
+        boundary=boundary,
     )
 
     def _run(c):
@@ -558,6 +560,8 @@ def _run_graph(spark, manifest, materialize_dir=None, chain=None, keys=None, rep
     upstream steps once, not once per action. A step that has read its
     cached inputs gets its own output counted at once, while those
     inputs are still cached; filled later, it would recompute them. A
+    middleware that counts rows persists the output itself, so its count
+    fills the cache. A
     cached output is unpersisted as soon as no step still to run needs
     it, so at most the live frontier of the graph stays cached, and
     nothing stays cached when the run returns or raises. A chain of lazy
@@ -576,17 +580,16 @@ def _run_graph(spark, manifest, materialize_dir=None, chain=None, keys=None, rep
         for name in manifest.topo_order():
             spec = manifest.steps[name]
             inputs = [outputs[d] for d in spec.depends_on]
+            boundary = materialize_dir is None and waiting[name] > 0
             df, report = _run_step(
-                spark, manifest, name, inputs, chain, materialize_dir, (keys or {}).get(name)
+                spark, manifest, name, inputs, chain, materialize_dir, (keys or {}).get(name),
+                boundary=boundary,
             )
             if reports is not None and "stage_report" in report:
                 reports.append(report["stage_report"])
-            if (
-                materialize_dir is None
-                and waiting[name]
-                and isinstance(df, DataFrame)
-                and not df.is_cached
-            ):
+            if report.get("persisted"):  # a counting middleware filled it
+                cached.append(df)
+            elif boundary and isinstance(df, DataFrame) and not df.is_cached:
                 df.persist(StorageLevel.MEMORY_AND_DISK)
                 cached.append(df)
                 if any(_cache_filled(i) for i in inputs):

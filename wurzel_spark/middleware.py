@@ -32,6 +32,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from wurzel_spark import metrics as M
@@ -47,6 +48,8 @@ class StepContext:
     settings: dict
     run_id: str = "local"
     report: dict = field(default_factory=dict)  # middlewares stash outputs here
+    # the runner persists the output at its step boundary (manifest._run_graph)
+    boundary: bool = False
 
 
 # middleware(ctx, call_next) -> result;  call_next(ctx) runs the rest of the chain
@@ -127,7 +130,9 @@ def prometheus(
 
     ``count_rows`` is off by default because counting a lazy DataFrame costs
     an extra action; turn it on only where the report is worth a job. The
-    count is part of the step's time.
+    count is part of the step's time. At a step boundary the output is
+    persisted first (``report["persisted"]``), so the count fills the cache
+    the next step reads instead of computing the step once more.
     """
 
     def mw(ctx: StepContext, call_next):
@@ -144,7 +149,17 @@ def prometheus(
                     f"wurzel_step_duration_seconds{{{labels}}} {seconds:.6f}\n"
                 )
             raise
-        rows = result.count() if count_rows and isinstance(result, DataFrame) else None
+        rows = None
+        if count_rows and isinstance(result, DataFrame):
+            if ctx.boundary and not result.is_cached:
+                result.persist(StorageLevel.MEMORY_AND_DISK)
+                ctx.report["persisted"] = True
+            try:
+                rows = result.count()
+            except Exception:
+                if ctx.report.get("persisted"):
+                    result.unpersist()
+                raise
         report = M.StageReport(ctx.step_name, rows, time.time() - t0)
         ctx.report.update(
             seconds=report.seconds, rows_out=rows, status=1, stage_report=report

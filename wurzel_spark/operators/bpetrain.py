@@ -86,10 +86,10 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_pair_counts(table(spark, sf_dir, "documents"))
 
 
-BPE_PAIR_COUNTS_SQL = r"""
+BPE_PAIR_COUNTS_SQL = rf"""
 WITH wf AS (
   SELECT w AS word, COUNT(*) AS freq FROM (
-    SELECT unnest(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')) AS w
+    SELECT unnest({TXT.words_sql()}) AS w
     FROM documents
   ) GROUP BY w
 ), pairs AS (

@@ -21,12 +21,13 @@ ordering broadcast.
 
 The module also holds the one banded-LSH candidate join,
 :func:`band_pairs`, which the MinHash, SimHash, cosine, bitext and md5
-audit pair operators all band through.
+audit pair operators all band through, and the one deterministic id hash,
+:func:`knuth_hash`, with its DuckDB twin :func:`knuth_sql`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Driver-side graph algorithms (union-find, quantized PageRank, k-core)
@@ -173,3 +174,24 @@ def band_pairs(df: DataFrame, bands: str, other: DataFrame | None = None) -> Dat
             *carried(df if other is None else other, "b"),
         )
     )
+
+
+# Knuth's multiplicative hash constant (2^32 / phi) and the prime id fold
+# that keeps the product far inside int64.
+_KNUTH = 2654435761
+_FOLD = 1000003
+
+
+def knuth_hash(col: Column) -> Column:
+    """Deterministic 32-bit multiplicative hash of an integer id — the
+    samplers' and orderings' hash, reproducible bit-exactly by any engine
+    (no xxhash, no RNG). Ids that collide mod 1000003 share a hash, so
+    callers break ties on the raw id. A production corpus with >1e6 ids
+    wants a full-width splitmix64 here (hash VALUES then aren't
+    oracle-portable, which is why the registered configs keep this one)."""
+    return ((col % _FOLD) * F.lit(_KNUTH)) % F.lit(4294967296)
+
+
+def knuth_sql(col: str = "doc_id") -> str:
+    """DuckDB twin of :func:`knuth_hash` over the SQL expression ``col``."""
+    return f"(({col} % {_FOLD}) * {_KNUTH}) % 4294967296"

@@ -87,6 +87,21 @@ def shingles(text_col, n: int = 3):
     )
 
 
+# DuckDB twin of ``shingles(text, 3)`` over ``documents``: one row per
+# (id, shingle); a document shorter than 3 words is one shingle of its
+# whole run.
+_SHINGLE_ROWS = f"""
+  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
+    SELECT doc_id, unnest(list_distinct(
+      CASE WHEN len(ws) >= 3
+           THEN list_transform(range(1, len(ws) - 1),
+                               i -> array_to_string(ws[i:i+2], ' '))
+           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
+    FROM (SELECT doc_id, {TXT.words_sql()} AS ws FROM documents)
+  )
+"""
+
+
 def _word_grams(ws, n: int):
     """POSITIONAL space-joined word n-grams; an array shorter than ``n``
     yields its whole run joined."""
@@ -988,18 +1003,9 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(table(spark, sf_dir, "documents"), threshold=0.5)
 
 
-NGRAM_JACCARD_SQL = """
+NGRAM_JACCARD_SQL = f"""
 WITH sh AS (
-  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws) - 1),
-                               i -> array_to_string(ws[i:i+2], ' '))
-           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
-          FROM documents)
-  )
+  {_SHINGLE_ROWS}
 ), sizes AS (
   SELECT id, COUNT(*) AS n_shingles FROM sh GROUP BY id
 ), inter AS (
@@ -1077,18 +1083,9 @@ def q_dedup_near_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dedup_keep_stats(docs, pairs)
 
 
-_JACCARD_PAIRS_CTE = """
+_JACCARD_PAIRS_CTE = f"""
 sh AS (
-  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws) - 1),
-                               i -> array_to_string(ws[i:i+2], ' '))
-           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
-          FROM documents)
-  )
+  {_SHINGLE_ROWS}
 ), sizes AS (
   SELECT id, COUNT(*) AS n_shingles FROM sh GROUP BY id
 ), inter AS (
@@ -1302,6 +1299,22 @@ def near_dup_cluster_members(
     return members
 
 
+# DuckDB twin of near_dup_cluster_members' closure over a ``pairs(id_a,
+# id_b)`` CTE, for a query that opens WITH RECURSIVE: ``reach`` pairs
+# each node (src) with every node of its component (dst), so
+# LEAST(src, MIN(dst)) is its cluster id.
+_REACH_CTE = """edges AS (
+  SELECT id_a AS src, id_b AS dst FROM pairs
+  UNION ALL
+  SELECT id_b AS src, id_a AS dst FROM pairs
+),
+reach(src, dst) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+)"""
+
+
 def near_dup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     """Component sizes over :func:`near_dup_cluster_members`: one row per
     ≥2-member component, (cluster_id = min member id, size)."""
@@ -1320,16 +1333,7 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DEDUP_CLUSTERS_SQL = f"""
 WITH RECURSIVE {_JACCARD_PAIRS_CTE},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
+{_REACH_CTE},
 labels AS (
   SELECT src AS id, LEAST(src, MIN(dst)) AS label FROM reach GROUP BY src
 )
@@ -1418,16 +1422,7 @@ CAPPED_MAX_DF = 4
 
 _CAPPED_SHINGLES_CTE = f"""
 sh0 AS (
-  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws) - 1),
-                               i -> array_to_string(ws[i:i+2], ' '))
-           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
-          FROM documents)
-  )
+  {_SHINGLE_ROWS}
 ), freq AS (
   SELECT shingle FROM sh0 GROUP BY shingle HAVING COUNT(*) > {CAPPED_MAX_DF}
 ), sh AS (
@@ -1572,10 +1567,10 @@ def q_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicated_span_stats(table(spark, sf_dir, "documents"), n=20)
 
 
-DUP_SPANS_SQL = r"""
+DUP_SPANS_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), nonempty AS (
   SELECT doc_id, ws FROM toks WHERE len(ws) > 0
@@ -1679,10 +1674,10 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontamination_overlap(docs.filter(F.col("doc_id") % 100 != 0), eval_set, n=13)
 
 
-DECONTAMINATION_SQL = r"""
+DECONTAMINATION_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), nonempty AS (
   SELECT doc_id, ws FROM toks WHERE len(ws) > 0
@@ -1968,10 +1963,10 @@ def q_strip_duplicated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strip_duplicated_spans(table(spark, sf_dir, "documents"), n=20)
 
 
-STRIP_SPANS_SQL = r"""
+STRIP_SPANS_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), nonempty AS (
   SELECT doc_id, ws, len(ws) AS m FROM toks WHERE len(ws) > 0
@@ -2137,10 +2132,10 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return winnow_fingerprints(table(spark, sf_dir, "documents")).drop("fps")
 
 
-WINNOW_FP_SQL = r"""
+WINNOW_FP_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), nonempty AS (
   SELECT doc_id, ws FROM toks WHERE len(ws) > 0
@@ -2201,7 +2196,7 @@ def q_winnow_overlap_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 WINNOW_OVERLAP_SQL = f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), nonempty AS (
   SELECT doc_id, ws FROM toks WHERE len(ws) > 0
@@ -2336,16 +2331,7 @@ def q_incremental_cluster_members(spark: SparkSession, sf_dir: str) -> DataFrame
 
 INCREMENTAL_CLUSTER_SQL = f"""
 WITH RECURSIVE {_CAPPED_PAIRS_CTE},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
+{_REACH_CTE}
 SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
 FROM reach GROUP BY src
 ORDER BY doc_id
@@ -2525,18 +2511,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_novelty(table(spark, sf_dir, "documents"))
 
 
-NGRAM_NOVELTY_SQL = """
+NGRAM_NOVELTY_SQL = f"""
 WITH sh AS (
-  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws) - 1),
-                               i -> array_to_string(ws[i:i+2], ' '))
-           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
-          FROM documents)
-  )
+  {_SHINGLE_ROWS}
 ), sizes AS (
   SELECT id, COUNT(*) AS n_shingles FROM sh GROUP BY id
 ), novel AS (
@@ -2623,18 +2600,9 @@ def q_incremental_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return incremental_ngram_novelty(new, build_novelty_index(old))
 
 
-INCREMENTAL_NOVELTY_SQL = """
+INCREMENTAL_NOVELTY_SQL = f"""
 WITH sh AS (
-  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws) - 1),
-                               i -> array_to_string(ws[i:i+2], ' '))
-           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
-          FROM documents)
-  )
+  {_SHINGLE_ROWS}
 ), old_sh AS (
   SELECT DISTINCT shingle FROM sh WHERE id % 5 != 4
 ), new_sh AS (
@@ -2710,10 +2678,10 @@ def q_decontamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontamination_report(docs.filter(F.col("doc_id") % 50 != 0), evals)
 
 
-DECONTAMINATION_REPORT_SQL = r"""
+DECONTAMINATION_REPORT_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, source,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), nonempty AS (
   SELECT doc_id, source, ws FROM toks WHERE len(ws) > 0
@@ -3059,7 +3027,7 @@ WITH pairs AS (
                              i -> array_to_string(ws[i:i+2], ' '))
          ELSE [array_to_string(ws, ' ')] END)) AS gram
   FROM (SELECT doc_id,
-               list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+               {TXT.words_sql()} AS ws
         FROM documents)
 ), gdf AS (
   SELECT gram, CAST(COUNT(*) AS BIGINT) AS gram_df FROM grams GROUP BY gram

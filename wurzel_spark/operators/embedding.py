@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wurzel_spark.functions import text as TXT
+from wurzel_spark.http_session import LazySession
 
 #: model-name → query prefix (embedding/settings.py:58-60)
 DEFAULT_PREFIX_MAP = {"e5-": "query: "}
@@ -43,7 +44,7 @@ class EmbeddingAPIError(RuntimeError):
     per input and skips)."""
 
 
-class TEIClient:
+class TEIClient(LazySession):
     """Text-Embeddings-Inference HTTP client (reference
     wurzel/steps/embedding/huggingface.py:43-153, re-expressed for
     per-partition reuse):
@@ -58,9 +59,9 @@ class TEIClient:
         (UnrecoverableFatalException parity).
 
     Holds only strings/numbers until first use → picklable, so executors
-    can build one session per partition from ``session_factory`` (the
-    injectable-transport pattern of sinks/http_backends.py — tests run a
-    fake session, production the default ``requests.Session``).
+    can build one session per partition from ``session_factory`` through
+    the shared :class:`~wurzel_spark.http_session.LazySession` — tests run
+    a fake session, production the default ``requests.Session``.
     """
 
     def __init__(
@@ -74,17 +75,6 @@ class TEIClient:
         self.timeout = timeout
         self.normalize = normalize
         self.session_factory = session_factory
-        self._s = None
-
-    def _session(self):
-        if self._s is None:
-            if self.session_factory is not None:
-                self._s = self.session_factory()
-            else:  # pragma: no cover - needs network
-                import requests
-
-                self._s = requests.Session()
-        return self._s
 
     def _request(self, method: str, path: str, payload=None) -> object:
         try:
@@ -208,7 +198,7 @@ def tei_embed_stage(
         result so embeddings are not recomputed by the check.
 
     ``session_factory`` injects the transport (fake in tests, a
-    ``requests.Session`` by default) — the sinks/http_backends.py pattern.
+    ``requests.Session`` by default) — the shared LazySession seam.
     """
     cleaned = clean_for_embedding(df)
     if not prefix:

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from wurzel_spark.functions import text as TXT
+from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
 Z_BITS = 16  # per-dimension bits → 32-bit z-value, plenty for file-level stats
@@ -295,7 +297,6 @@ def training_shard_stats(
     :func:`write_training_shards`): per shard, document count and token
     sum — balanced counts (±1) certify the striping, token sums certify
     which docs landed where."""
-    from wurzel_spark.functions import text as TXT
     from wurzel_spark.operators.ordering import corpus_shuffle
 
     shuffled = corpus_shuffle(df.select(id_col, text_col), id_col)
@@ -316,10 +317,10 @@ def q_training_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return training_shard_stats(table(spark, sf_dir, "documents"))
 
 
-TRAINING_SHARD_SQL = """
+TRAINING_SHARD_SQL = f"""
 WITH h AS (
   SELECT doc_id, text,
-         ((doc_id % 1000003) * 2654435761) % 4294967296 AS h
+         {common.knuth_sql()} AS h
   FROM documents
 ), ranked AS (
   SELECT doc_id, text,
@@ -328,7 +329,7 @@ WITH h AS (
 )
 SELECT (pos - 1) % 8 AS shard,
        COUNT(*) AS n_docs,
-       CAST(SUM(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != ''))) AS BIGINT) AS n_tokens
+       CAST(SUM(len({TXT.words_sql()})) AS BIGINT) AS n_tokens
 FROM ranked GROUP BY (pos - 1) % 8 ORDER BY shard
 """
 
@@ -400,7 +401,6 @@ FROM documents"""
 # ------------------------------------------------ rendezvous sharding
 
 RDV_N_SHARDS = 16
-_RDV_KNUTH = 2654435761  # 2^32/phi — ordering._det_hash convention
 _RDV_MOD = 1000003
 
 
@@ -409,16 +409,15 @@ def _rdv_score(id_col: Column, shard: int) -> Column:
     with the shard index into one BIGINT so GREATEST doubles as argmax:
     ``score*NS + shard`` is unique per shard (ties impossible), and
     ``% NS`` recovers the winning shard. Same portable multiplicative
-    arithmetic as ordering._det_hash — reproducible in any engine, no
+    arithmetic as common.knuth_hash — reproducible in any engine, no
     xxhash (a production corpus swaps in a full-width splitmix64 once
     no oracle is in the loop; hash VALUES then aren't portable)."""
-    # double-mod keeps the fold non-negative for SIGNED ids too: both
-    # engines' % is a remainder (dividend's sign), so a negative doc_id
-    # would otherwise yield negative scores and a shard outside 0..NS-1
+    # double-mod (the second is knuth_hash's own % 1000003 fold) keeps the
+    # fold non-negative for SIGNED ids too: both engines' % is a remainder
+    # (dividend's sign), so a negative doc_id would otherwise yield
+    # negative scores and a shard outside 0..NS-1
     folded = (id_col * F.lit(131) + F.lit(shard * 7919)) % F.lit(_RDV_MOD)
-    mixed = ((folded + F.lit(_RDV_MOD)) % F.lit(_RDV_MOD)) * F.lit(
-        _RDV_KNUTH
-    ) % F.lit(4294967296)
+    mixed = common.knuth_hash(folded + F.lit(_RDV_MOD))
     return mixed * F.lit(RDV_N_SHARDS) + F.lit(shard)
 
 
@@ -473,9 +472,8 @@ def q_rendezvous_shard_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _rdv_score_sql(shard: int) -> str:
     return (
-        f"(((((doc_id * 131 + {shard * 7919}) % {_RDV_MOD} + {_RDV_MOD})"
-        f" % {_RDV_MOD}) * {_RDV_KNUTH}) "
-        f"% 4294967296) * {RDV_N_SHARDS} + {shard}"
+        f"({common.knuth_sql(f'((doc_id * 131 + {shard * 7919}) % {_RDV_MOD} + {_RDV_MOD})')})"
+        f" * {RDV_N_SHARDS} + {shard}"
     )
 
 

@@ -27,20 +27,7 @@ from wurzel_spark.functions import text as TXT
 from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
-_KNUTH = 2654435761  # Knuth multiplicative hash constant (2^32 / phi)
-_MOD = 1000003  # prime id fold keeping the product far inside int64
 _N_BUCKETS = 1024
-
-
-def _det_hash(col):
-    """Deterministic 32-bit multiplicative hash of an integer id — the
-    same arithmetic as textstats.mixture_sample, reproducible bit-exactly
-    by any engine (no xxhash, no RNG). The ``% _MOD`` fold means ids that
-    collide mod 1000003 share a hash; ties below always break on the raw
-    id, so the order stays total. A production corpus with >1e6 ids wants
-    a full-width splitmix64 here (hash VALUES then aren't oracle-portable,
-    which is why the registered config keeps the portable form)."""
-    return ((col % _MOD) * F.lit(_KNUTH)) % F.lit(4294967296)
 
 
 def train_split_assign(
@@ -58,7 +45,7 @@ def train_split_assign(
     Map-only projection; the split filter a consumer applies pushes into
     the parquet scan.
     """
-    band = _det_hash(F.col(id_col)) % F.lit(1000)
+    band = common.knuth_hash(F.col(id_col)) % F.lit(1000)
     train_hi = 1000 - val_permille - test_permille
     split = (
         F.when(band < train_hi, F.lit("train"))
@@ -83,7 +70,7 @@ def corpus_shuffle(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    h = _det_hash(F.col(id_col))
+    h = common.knuth_hash(F.col(id_col))
     b = df.withColumn("__h", h).withColumn(
         "__bkt", F.floor(F.col("__h") / F.lit(4294967296 // _N_BUCKETS))
     )
@@ -124,12 +111,12 @@ def q_train_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TRAIN_SPLIT_SQL = """
+TRAIN_SPLIT_SQL = f"""
 WITH assigned AS (
   SELECT source, n_chars, doc_id,
-         CASE WHEN ((doc_id % 1000003) * 2654435761) % 4294967296 % 1000 < 900
+         CASE WHEN {common.knuth_sql()} % 1000 < 900
               THEN 'train'
-              WHEN ((doc_id % 1000003) * 2654435761) % 4294967296 % 1000 < 950
+              WHEN {common.knuth_sql()} % 1000 < 950
               THEN 'val'
               ELSE 'test' END AS split
   FROM documents
@@ -152,10 +139,10 @@ def q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CORPUS_SHUFFLE_SQL = """
+CORPUS_SHUFFLE_SQL = f"""
 WITH h AS (
   SELECT doc_id,
-         ((doc_id % 1000003) * 2654435761) % 4294967296 AS h
+         {common.knuth_sql()} AS h
   FROM documents
 )
 SELECT doc_id,
@@ -223,18 +210,18 @@ def q_split_leakage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return split_leakage_stats(table(spark, sf_dir, "documents"))
 
 
-SPLIT_LEAKAGE_SQL = r"""
+SPLIT_LEAKAGE_SQL = rf"""
 WITH assigned AS (
   SELECT doc_id, text,
-         CASE WHEN ((doc_id % 1000003) * 2654435761) % 4294967296 % 1000 < 900
+         CASE WHEN {common.knuth_sql()} % 1000 < 900
               THEN 'train'
-              WHEN ((doc_id % 1000003) * 2654435761) % 4294967296 % 1000 < 950
+              WHEN {common.knuth_sql()} % 1000 < 950
               THEN 'val'
               ELSE 'test' END AS split
   FROM documents
 ), toks AS (
   SELECT doc_id, split,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM assigned
 ), nonempty AS (
   SELECT doc_id, split, ws, len(ws) AS m FROM toks WHERE len(ws) > 0
@@ -299,7 +286,7 @@ def curriculum_order(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     from pyspark.sql import Window as W
 
     ws = TXT.words(F.col("text"))
-    h = _det_hash(F.col(id_col))
+    h = common.knuth_hash(F.col(id_col))
     b = (
         df.select(id_col, F.size(ws).alias("n_words"))
         .withColumn("band", _word_band(F.col("n_words")))
@@ -342,7 +329,7 @@ def _curriculum_sql() -> str:
     return f"""
 WITH base AS (
   SELECT doc_id,
-         len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '')) AS n_words
+         len({TXT.words_sql()}) AS n_words
   FROM documents
 ), banded AS (
   SELECT doc_id, n_words,
@@ -350,7 +337,7 @@ WITH base AS (
               WHEN n_words < {e[1]} THEN 1
               WHEN n_words < {e[2]} THEN 2
               ELSE 3 END AS band,
-         ((doc_id % {_MOD}) * {_KNUTH}) % 4294967296 AS h
+         {common.knuth_sql()} AS h
   FROM base
 )
 SELECT doc_id, n_words, CAST(band AS INT) AS band,
@@ -394,7 +381,7 @@ def leakage_safe_split(
     eff = df.join(mem, id_col, "left").withColumn(
         "__eff", F.coalesce(F.col("__eff"), F.col(id_col))
     )
-    band = _det_hash(F.col("__eff")) % F.lit(1000)
+    band = common.knuth_hash(F.col("__eff")) % F.lit(1000)
     train_hi = 1000 - val_permille - test_permille
     split = (
         F.when(band < train_hi, F.lit("train"))
@@ -422,20 +409,11 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _leakage_safe_split_sql() -> str:
-    from wurzel_spark.operators.dedup import _CAPPED_PAIRS_CTE
+    from wurzel_spark.operators.dedup import _CAPPED_PAIRS_CTE, _REACH_CTE
 
     return f"""
 WITH RECURSIVE {_CAPPED_PAIRS_CTE},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
+{_REACH_CTE},
 members AS (
   SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id
   FROM reach GROUP BY src
@@ -445,9 +423,9 @@ eff AS (
   FROM documents d LEFT JOIN members m ON d.doc_id = m.doc_id
 )
 SELECT doc_id,
-       CASE WHEN ((eff % 1000003) * 2654435761) % 4294967296 % 1000 < 900
+       CASE WHEN {common.knuth_sql('eff')} % 1000 < 900
             THEN 'train'
-            WHEN ((eff % 1000003) * 2654435761) % 4294967296 % 1000 < 950
+            WHEN {common.knuth_sql('eff')} % 1000 < 950
             THEN 'val'
             ELSE 'test' END AS split
 FROM eff
@@ -480,7 +458,7 @@ def proportional_interleave(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    w = W.partitionBy("source").orderBy(_det_hash(F.col(id_col)).asc(), F.col(id_col))
+    w = W.partitionBy("source").orderBy(common.knuth_hash(F.col(id_col)).asc(), F.col(id_col))
     wc = W.partitionBy("source")
     return (
         df.select("source", id_col)
@@ -506,7 +484,7 @@ WITH ranked AS (
   SELECT doc_id, source,
          ROW_NUMBER() OVER (
            PARTITION BY source
-           ORDER BY ((doc_id % 1000003) * 2654435761) % 4294967296, doc_id
+           ORDER BY {common.knuth_sql()}, doc_id
          ) AS rank_in_source,
          COUNT(*) OVER (PARTITION BY source) AS n_source
   FROM documents
@@ -574,10 +552,10 @@ def q_shuffle_run_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shuffle_run_stats(corpus_shuffle(table(spark, sf_dir, "documents")))
 
 
-SHUFFLE_RUN_SQL = """
+SHUFFLE_RUN_SQL = f"""
 WITH h AS (
   SELECT doc_id, source,
-         ((doc_id % 1000003) * 2654435761) % 4294967296 AS h
+         {common.knuth_sql()} AS h
   FROM documents
 ), ranked AS (
   SELECT source,

@@ -174,10 +174,10 @@ def q_sequence_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sequence_pack_stats(table(spark, sf_dir, "documents"), max_len=512)
 
 
-_PACK_CTE = r"""
+_PACK_CTE = rf"""
 d AS (
   SELECT doc_id,
-         len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != ''))
+         len({TXT.words_sql()})
            AS n_tok
   FROM documents
 ), d2 AS (
@@ -297,7 +297,7 @@ def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
 LENGTH_BUCKET_SQL = f"""
 WITH toks AS (
   SELECT doc_id AS id,
-         len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '')) AS n_tokens
+         len({TXT.words_sql()}) AS n_tokens
   FROM documents
 ), bucketed AS (
   SELECT id, n_tokens, CAST(FLOOR(n_tokens / {BUCKET_WIDTH}) AS BIGINT) AS bucket

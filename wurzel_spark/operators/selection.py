@@ -98,22 +98,13 @@ def q_cluster_best_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CLUSTER_BEST_KEEP_SQL = f"""
 WITH RECURSIVE {dedup._JACCARD_PAIRS_CTE},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
+{dedup._REACH_CTE},
 labels AS (
   SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id FROM reach GROUP BY src
 ),
 scored AS (
   SELECT l.cluster_id, l.doc_id,
-         len(list_filter(regexp_split_to_array(trim(d.text), '\\s+'), x -> x != '')) AS n_words
+         len({TXT.words_sql('d.text')}) AS n_words
   FROM labels l JOIN documents d ON d.doc_id = l.doc_id
 ),
 ranked AS (
@@ -129,14 +120,6 @@ FROM ranked WHERE rk = 1 ORDER BY cluster_id
 
 
 # ------------------------------------------------------- per-domain caps
-
-# Knuth multiplicative hash on the folded doc_id — same deterministic
-# uniform-ish sampler mixture_sample uses (textstats.py), engine-exact.
-def _knuth_hash(id_col):
-    return ((F.col(id_col) % 1000003) * F.lit(2654435761)) % F.lit(4294967296)
-
-
-_KNUTH_SQL = "((doc_id % 1000003) * 2654435761) % 4294967296"
 
 DOMAIN_CAP = 40
 
@@ -161,7 +144,7 @@ def domain_cap_sample(
     Returns the kept rows (doc_id, source, rk) ordered by doc_id.
     """
     ranked = df.select(
-        "doc_id", F.col(source_col).alias("source"), _knuth_hash("doc_id").alias("h")
+        "doc_id", F.col(source_col).alias("source"), common.knuth_hash(F.col("doc_id")).alias("h")
     ).withColumn(
         "rk",
         F.row_number().over(
@@ -183,7 +166,7 @@ DOMAIN_CAP_SQL = f"""
 WITH ranked AS (
   SELECT doc_id, source,
          ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY {_KNUTH_SQL} ASC, doc_id ASC) AS rk
+                            ORDER BY {common.knuth_sql()} ASC, doc_id ASC) AS rk
   FROM documents
 )
 SELECT doc_id, source, CAST(rk AS BIGINT) AS rk
@@ -236,7 +219,7 @@ def temperature_mixture_sample(
     # report) — pin it so the corpus count-scan runs once, not per branch.
     thresh = thresh.localCheckpoint(eager=True)
     kept = (
-        df.select(F.col(lang_col).alias("lang"), _knuth_hash("doc_id").alias("h"))
+        df.select(F.col(lang_col).alias("lang"), common.knuth_hash(F.col("doc_id")).alias("h"))
         .join(F.broadcast(thresh.select("lang", "keep_threshold")), "lang")
         .filter(F.col("h") < F.col("keep_threshold"))
         .groupBy("lang")
@@ -271,7 +254,7 @@ WITH counts AS (
 ), kept AS (
   SELECT d.lang, COUNT(*) AS n_kept
   FROM documents d JOIN thresh t ON t.lang = d.lang
-  WHERE {_KNUTH_SQL} < t.keep_threshold
+  WHERE {common.knuth_sql()} < t.keep_threshold
   GROUP BY d.lang
 )
 SELECT t.lang, t.n_docs, t.keep_threshold, COALESCE(k.n_kept, 0) AS n_kept
@@ -293,22 +276,13 @@ def q_cluster_best_keep_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CLUSTER_BEST_KEEP_CAPPED_SQL = f"""
 WITH RECURSIVE {dedup._CAPPED_PAIRS_CTE},
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM pairs
-  UNION ALL
-  SELECT id_b AS src, id_a AS dst FROM pairs
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
+{dedup._REACH_CTE},
 labels AS (
   SELECT src AS doc_id, LEAST(src, MIN(dst)) AS cluster_id FROM reach GROUP BY src
 ),
 scored AS (
   SELECT l.cluster_id, l.doc_id,
-         len(list_filter(regexp_split_to_array(trim(d.text), '\\s+'), x -> x != '')) AS n_words
+         len({TXT.words_sql('d.text')}) AS n_words
   FROM labels l JOIN documents d ON d.doc_id = l.doc_id
 ),
 ranked AS (
@@ -470,7 +444,7 @@ _STOPLIST_SQL = " + ".join(
 QUALITY_PERCENTILE_SQL = f"""
 WITH base AS (
   SELECT doc_id, source,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), scored AS (
   SELECT doc_id, source,
@@ -581,16 +555,7 @@ def q_curation_funnel_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CURATION_FUNNEL_V2_SQL = f"""
 WITH sh AS (
-  SELECT doc_id AS id, DISTINCT_SHINGLE AS shingle FROM (
-    SELECT doc_id, unnest(list_distinct(
-      CASE WHEN len(ws) >= 3
-           THEN list_transform(range(1, len(ws) - 1),
-                               i -> array_to_string(ws[i:i+2], ' '))
-           ELSE [array_to_string(ws, ' ')] END)) AS DISTINCT_SHINGLE
-    FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
-          FROM documents)
-  )
+  {dedup._SHINGLE_ROWS}
 ), sizes AS (
   SELECT id, COUNT(*) AS n_shingles FROM sh GROUP BY id
 ), novel AS (
@@ -602,7 +567,7 @@ WITH sh AS (
   WHERE CAST(COALESCE(n_novel, 0) AS DOUBLE) / n_shingles >= {NOVELTY_FLOOR}
 ), base AS (
   SELECT doc_id, source,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), scored AS (
   SELECT doc_id, source, {_STOPLIST_SQL} AS stop_hits, len(ws) AS n_words FROM base
@@ -671,14 +636,7 @@ def doremi_mixture_weights(df: DataFrame, text_col: str = "text") -> DataFrame:
         .agg(F.sum("nw").alias("sum_nw"), F.sum("sh").alias("sum_sh"))
         .select(
             "source",
-            (
-                F.lit(1000)
-                - F.when(
-                    F.col("sum_nw") > 0, F.expr("(1000 * sum_sh) div sum_nw")
-                ).otherwise(F.lit(0))
-            )
-            .cast("long")
-            .alias("loss_permille"),
+            (F.lit(1000) - TXT.permille("sum_sh", "sum_nw")).cast("long").alias("loss_permille"),
         )
     )
     whole = W.partitionBy()
@@ -715,20 +673,19 @@ def q_doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _doremi_sql() -> str:
-    stoplist = ", ".join(f"'{w}'" for w in STOPWORDS)
     head = f"""
 WITH base AS (
   SELECT source,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), sums AS (
   SELECT source,
          CAST(SUM(len(ws)) AS BIGINT) AS sum_nw,
-         CAST(SUM(len(list_filter(ws, w -> list_contains([{stoplist}], w)))) AS BIGINT) AS sum_sh
+         CAST(SUM({TXT.markers_sql('ws', STOPWORDS)}) AS BIGINT) AS sum_sh
   FROM base GROUP BY source
 ), losses AS (
   SELECT source,
-         CAST(1000 - CASE WHEN sum_nw > 0 THEN (1000 * sum_sh) // sum_nw ELSE 0 END AS BIGINT) AS loss_permille
+         CAST(1000 - {TXT.permille_sql('sum_sh', 'sum_nw')} AS BIGINT) AS loss_permille
   FROM sums
 ), it0 AS (
   SELECT source, loss_permille,

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from wurzel_spark.functions import text as TXT
 from wurzel_spark.operators import common
 from wurzel_spark.tables import table
 
@@ -56,6 +57,22 @@ def dot(a, b) -> Column:
 
 def norm(a) -> Column:
     return F.sqrt(dot(a, a))
+
+
+def _dbl(x: str) -> str:
+    return f"CAST({x} AS DOUBLE[])"
+
+
+def _norm_sql(a: str) -> str:
+    """DuckDB twin of :func:`norm` over a DOUBLE[] expression."""
+    return f"sqrt(list_dot_product({a}, {a}))"
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB cosine of two DOUBLE[] expressions — every oracle's twin of
+    the cosine kernels (``list_dot_product`` folds in order, as :func:`dot`
+    does)."""
+    return f"list_dot_product({a}, {b}) / ({_norm_sql(a)} * {_norm_sql(b)})"
 
 
 def _l2_normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -465,13 +482,11 @@ def q_ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(emb, query, k=10)
 
 
-ANN_TOPK_SQL = """
+ANN_TOPK_SQL = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings WHERE vec_id < 3),
 scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))
-           / (sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[])))
-              * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))) AS cos_sim
+         {_cos_sql(_dbl('q.query_vec'), _dbl('e.embedding'))} AS cos_sim
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id != q.query_id
 ),
@@ -501,11 +516,11 @@ def q_embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EMB_NORMS_SQL = """
+EMB_NORMS_SQL = f"""
 SELECT label,
        COUNT(*) AS n_vectors,
-       MIN(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))) AS min_norm,
-       MAX(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))) AS max_norm
+       MIN({_norm_sql(_dbl('embedding'))}) AS min_norm,
+       MAX({_norm_sql(_dbl('embedding'))}) AS max_norm
 FROM embeddings
 GROUP BY label
 ORDER BY label
@@ -548,45 +563,6 @@ def q_cosine_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.filter(F.col("vec_id") < _N_PLANES).orderBy("vec_id").collect()
     ]
     return cosine_lsh_near_dup_pairs(emb, planes, bands=_N_BANDS, threshold=0.4)
-
-
-COSINE_PAIRS_SQL = """
-WITH planes AS (
-  SELECT vec_id AS pid, CAST(embedding AS DOUBLE[]) AS pvec
-  FROM embeddings WHERE vec_id < 24
-),
-bits AS (
-  SELECT e.vec_id,
-         p.pid,
-         CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), p.pvec) >= 0
-              THEN '1' ELSE '0' END AS bit
-  FROM embeddings e CROSS JOIN planes p
-),
-buckets AS (
-  SELECT vec_id, string_agg(bit, '' ORDER BY pid) AS bucket
-  FROM bits GROUP BY vec_id
-),
-bandrows AS (
-  SELECT vec_id, t.band_idx, substring(bucket, CAST(t.band_idx * 6 + 1 AS INT), 6) AS bv
-  FROM buckets, range(4) t(band_idx)
-),
-cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM bandrows a
-  JOIN bandrows b ON a.band_idx = b.band_idx AND a.bv = b.bv AND a.vec_id < b.vec_id
-)
-SELECT c.id_a, c.id_b,
-       list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])))) AS cos_sim
-FROM cand c
-JOIN embeddings ea ON ea.vec_id = c.id_a
-JOIN embeddings eb ON eb.vec_id = c.id_b
-WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])))) >= 0.4
-ORDER BY id_a, id_b
-"""
 
 
 def q_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -655,17 +631,13 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     return range_search(emb, emb.filter(F.col("vec_id") < 3), threshold=0.3)
 
 
-ANN_RANGE_SQL = """
+ANN_RANGE_SQL = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings WHERE vec_id < 3)
 SELECT q.query_id, e.vec_id AS neighbor_id,
-       list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))) AS cos_sim
+       {_cos_sql(_dbl('q.query_vec'), _dbl('e.embedding'))} AS cos_sim
 FROM embeddings e CROSS JOIN q
 WHERE e.vec_id != q.query_id
-  AND list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))
-        / (sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[])))
-           * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))) >= 0.3
+  AND {_cos_sql(_dbl('q.query_vec'), _dbl('e.embedding'))} >= 0.3
 ORDER BY query_id, neighbor_id
 """
 
@@ -940,11 +912,7 @@ def _kmeans_unrolled_sql(k: int, iters: int) -> str:
     scale = int(_KMEANS_SCALE)
 
     def cos(vec: str, cvec: str) -> str:
-        return (
-            f"list_dot_product(CAST({vec} AS DOUBLE[]), {cvec})"
-            f" / (sqrt(list_dot_product(CAST({vec} AS DOUBLE[]), CAST({vec} AS DOUBLE[])))"
-            f" * sqrt(list_dot_product({cvec}, {cvec})))"
-        )
+        return _cos_sql(_dbl(vec), cvec)
 
     parts = [
         f"""c0 AS (
@@ -995,16 +963,14 @@ ORDER BY cell
 KMEANS_TRAIN_SQL = _kmeans_unrolled_sql(k=8, iters=3)
 
 
-KMEANS_CELLS_SQL = """
+KMEANS_CELLS_SQL = f"""
 WITH c AS (
   SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cvec
   FROM embeddings WHERE vec_id < 8
 ),
 scored AS (
   SELECT e.vec_id, c.cell,
-         list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-           / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(c.cvec, c.cvec))) AS sim
+         {_cos_sql(_dbl('e.embedding'), 'c.cvec')} AS sim
   FROM embeddings e CROSS JOIN c
 ),
 assigned AS (
@@ -1031,7 +997,6 @@ def q_text_embedding_join(spark, sf_dir: str) -> DataFrame:
     sequential-fold kernel the ANN queries use, so floats hash-match the
     oracle bit-for-bit.
     """
-    from wurzel_spark.functions import text as TXT
     from wurzel_spark.tables import table as _table
 
     docs = _table(spark, sf_dir, "documents")
@@ -1049,12 +1014,12 @@ def q_text_embedding_join(spark, sf_dir: str) -> DataFrame:
     )
 
 
-TEXT_EMB_JOIN_SQL = r"""
+TEXT_EMB_JOIN_SQL = rf"""
 SELECT d.doc_id,
        e.label,
-       len(list_filter(regexp_split_to_array(trim(d.text), '\s+'), x -> x != '')) AS n_words,
+       len({TXT.words_sql('d.text')}) AS n_words,
        length(d.text) AS n_chars,
-       sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) AS l2_norm
+       {_norm_sql(_dbl('e.embedding'))} AS l2_norm
 FROM documents d JOIN embeddings e ON d.doc_id = e.vec_id
 ORDER BY d.doc_id
 """
@@ -1150,7 +1115,7 @@ def q_semdedup_keep(spark, sf_dir: str) -> DataFrame:
     return semdedup_keep(emb, emb.filter(F.col("vec_id") < 8), threshold=0.4)
 
 
-SEMDEDUP_SQL = """
+SEMDEDUP_SQL = f"""
 WITH c AS (
   SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cvec
   FROM embeddings WHERE vec_id < 8
@@ -1158,13 +1123,9 @@ WITH c AS (
 assigned AS (
   SELECT vec_id, embedding, cell, sim FROM (
     SELECT e.vec_id, e.embedding, c.cell,
-           list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-             / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(c.cvec, c.cvec))) AS sim,
+           {_cos_sql(_dbl('e.embedding'), 'c.cvec')} AS sim,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-             / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-                * sqrt(list_dot_product(c.cvec, c.cvec))) DESC, c.cell) AS rn
+                              ORDER BY {_cos_sql(_dbl('e.embedding'), 'c.cvec')} DESC, c.cell) AS rn
     FROM embeddings e CROSS JOIN c
   ) WHERE rn = 1
 ),
@@ -1176,9 +1137,7 @@ ranked AS (
 dropped AS (
   SELECT DISTINCT a.cell, a.vec_id
   FROM ranked a JOIN ranked b ON a.cell = b.cell AND b.r < a.r
-  WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-          / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-             * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))))
+  WHERE {_cos_sql(_dbl('a.embedding'), _dbl('b.embedding'))}
         >= 0.4
 )
 SELECT r.vec_id, r.cell, r.sim AS centroid_sim
@@ -1243,17 +1202,16 @@ cand AS (
   JOIN bandrows b ON a.band_idx = b.band_idx AND a.bv = b.bv AND a.vec_id < b.vec_id
 )
 SELECT c.id_a, c.id_b,
-       list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])))) AS cos_sim
+       {_cos_sql(_dbl('ea.embedding'), _dbl('eb.embedding'))} AS cos_sim
 FROM cand c
 JOIN embeddings ea ON ea.vec_id = c.id_a
 JOIN embeddings eb ON eb.vec_id = c.id_b
-WHERE list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))
-         / (sqrt(list_dot_product(CAST(ea.embedding AS DOUBLE[]), CAST(ea.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(eb.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[])))) >= {threshold}
+WHERE {_cos_sql(_dbl('ea.embedding'), _dbl('eb.embedding'))} >= {threshold}
 ORDER BY id_a, id_b
 """
+
+
+COSINE_PAIRS_SQL = _cosine_pairs_sql(_N_PLANES, _N_BANDS, 0.4)
 
 
 COSINE_PAIRS_SCALED_SQL = _cosine_pairs_sql(_N_PLANES_SCALED, _N_BANDS, 0.4)
@@ -1963,16 +1921,14 @@ def q_index_drift_stats(spark, sf_dir: str) -> DataFrame:
     )
 
 
-INDEX_DRIFT_SQL = """
+INDEX_DRIFT_SQL = f"""
 WITH c AS (
   SELECT vec_id AS cell, CAST(embedding AS DOUBLE[]) AS cvec
   FROM embeddings WHERE vec_id < 8
 ),
 scored AS (
   SELECT e.vec_id, c.cell,
-         list_dot_product(CAST(e.embedding AS DOUBLE[]), c.cvec)
-           / (sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))
-              * sqrt(list_dot_product(c.cvec, c.cvec))) AS sim
+         {_cos_sql(_dbl('e.embedding'), 'c.cvec')} AS sim
   FROM embeddings e CROSS JOIN c
 ),
 assigned AS (
@@ -2071,12 +2027,6 @@ def q_matryoshka_recall(spark, sf_dir: str) -> DataFrame:
 
 
 def _matryoshka_sql() -> str:
-    def _cos(a: str, b: str) -> str:
-        return (
-            f"list_dot_product({a}, {b}) / "
-            f"(sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))"
-        )
-
     parts = []
     for d in MATRYOSHKA_DIMS:
         parts.append(f"""
@@ -2099,7 +2049,7 @@ GROUP BY f.query_id""")
   SELECT query_id, nid FROM (
     SELECT q.query_id, e.vec_id AS nid,
            ROW_NUMBER() OVER (PARTITION BY q.query_id
-             ORDER BY {_cos(slice_expr_e, slice_expr_q)} DESC, e.vec_id) AS rn
+             ORDER BY {_cos_sql(slice_expr_e, slice_expr_q)} DESC, e.vec_id) AS rn
     FROM embeddings e CROSS JOIN q
     WHERE e.vec_id != q.query_id
   ) WHERE rn <= 10
@@ -2193,14 +2143,12 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hard_negatives_from_scores(scored, k=5, margin=0.1, ceiling=0.95)
 
 
-HARD_NEGATIVE_SQL = """
+HARD_NEGATIVE_SQL = f"""
 WITH q AS (
   SELECT vec_id AS query_id, embedding AS query_vec FROM embeddings WHERE vec_id < 8
 ), scored AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))
-           / (sqrt(list_dot_product(CAST(q.query_vec AS DOUBLE[]), CAST(q.query_vec AS DOUBLE[])))
-              * sqrt(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[])))) AS cos_sim
+         {_cos_sql(_dbl('q.query_vec'), _dbl('e.embedding'))} AS cos_sim
   FROM embeddings e CROSS JOIN q
   WHERE e.vec_id != q.query_id
 ), ranked AS (
@@ -2388,13 +2336,6 @@ def q_bitext_margin_pairs(spark, sf_dir: str) -> DataFrame:
 
 
 def _bitext_sql() -> str:
-    def cos(x: str, y: str) -> str:
-        return (
-            f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
-            f" / (sqrt(list_dot_product(CAST({x} AS DOUBLE[]), CAST({x} AS DOUBLE[])))"
-            f" * sqrt(list_dot_product(CAST({y} AS DOUBLE[]), CAST({y} AS DOUBLE[]))))"
-        )
-
     return f"""
 WITH a AS (
   SELECT d.doc_id AS src_id, e.embedding AS vec
@@ -2439,7 +2380,7 @@ WITH a AS (
   FROM aband ab JOIN bband bb ON ab.band_idx = bb.band_idx AND ab.bv = bb.bv
 ), pairs AS (
   SELECT c.src_id, c.tgt_id,
-         CAST(floor({cos("a.vec", "b.vec")} * {_BITEXT_QSCALE}) AS BIGINT) AS cos_q
+         CAST(floor({_cos_sql(_dbl("a.vec"), _dbl("b.vec"))} * {_BITEXT_QSCALE}) AS BIGINT) AS cos_q
   FROM cand c JOIN a ON c.src_id = a.src_id JOIN b ON c.tgt_id = b.tgt_id
 ), enriched AS (
   SELECT src_id, tgt_id, cos_q,
@@ -2580,13 +2521,6 @@ def q_binary_embedding_recall(spark, sf_dir: str) -> DataFrame:
 
 
 def _binary_recall_sql() -> str:
-    def cos(x: str, y: str) -> str:
-        return (
-            f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
-            f" / (sqrt(list_dot_product(CAST({x} AS DOUBLE[]), CAST({x} AS DOUBLE[])))"
-            f" * sqrt(list_dot_product(CAST({y} AS DOUBLE[]), CAST({y} AS DOUBLE[]))))"
-        )
-
     def pack(off: int) -> str:
         return (
             "list_sum(list_transform(range(0, 32), i -> CASE WHEN "
@@ -2609,7 +2543,7 @@ WITH base AS (
 ), scored AS (
   SELECT q.query_id, b.id,
          bit_count(xor(b.lo, q.qlo)) + bit_count(xor(b.hi, q.qhi)) AS hamming,
-         {cos("b.vec", "q.qvec")} AS cos
+         {_cos_sql(_dbl("b.vec"), _dbl("q.qvec"))} AS cos
   FROM base b CROSS JOIN q WHERE b.id != q.query_id
 ), ranked AS (
   SELECT query_id, id,
@@ -2741,13 +2675,6 @@ def q_retrieval_ndcg_eval(spark, sf_dir: str) -> DataFrame:
 
 
 def _ndcg_sql() -> str:
-    def cos(x: str, y: str) -> str:
-        return (
-            f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
-            f" / (sqrt(list_dot_product(CAST({x} AS DOUBLE[]), CAST({x} AS DOUBLE[])))"
-            f" * sqrt(list_dot_product(CAST({y} AS DOUBLE[]), CAST({y} AS DOUBLE[]))))"
-        )
-
     disc = "[" + ", ".join(str(d) for d in NDCG_DISCOUNTS) + "]"
     return f"""
 WITH base AS (
@@ -2761,7 +2688,7 @@ WITH base AS (
   SELECT q.query_id, b.id,
          CAST(CASE WHEN b.lbl = q.qlbl THEN 2
                    WHEN ABS(b.lbl - q.qlbl) = 1 THEN 1 ELSE 0 END AS BIGINT) AS rel,
-         {cos("b.vec", "q.qvec")} AS cos
+         {_cos_sql(_dbl("b.vec"), _dbl("q.qvec"))} AS cos
   FROM base b CROSS JOIN q WHERE b.id != q.query_id
 ), ranked AS (
   SELECT query_id, rel,
@@ -2924,13 +2851,6 @@ def q_ivf_nprobe_sweep(spark, sf_dir: str) -> DataFrame:
 
 
 def _ivf_sweep_sql() -> str:
-    def cos(x: str, y: str) -> str:
-        return (
-            f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
-            f" / (sqrt(list_dot_product(CAST({x} AS DOUBLE[]), CAST({x} AS DOUBLE[])))"
-            f" * sqrt(list_dot_product(CAST({y} AS DOUBLE[]), CAST({y} AS DOUBLE[]))))"
-        )
-
     probes = ", ".join(str(p) for p in IVF_SWEEP_NPROBES)
     return f"""
 WITH base AS (
@@ -2946,7 +2866,7 @@ WITH base AS (
   SELECT id, cid AS cell FROM (
     SELECT b.id, c.cid,
            ROW_NUMBER() OVER (PARTITION BY b.id
-                              ORDER BY {cos("b.vec", "c.cvec")} DESC, c.cid) AS crn
+                              ORDER BY {_cos_sql(_dbl("b.vec"), _dbl("c.cvec"))} DESC, c.cid) AS crn
     FROM base b CROSS JOIN cents c
   ) WHERE crn = 1
 ), cell_sizes AS (
@@ -2954,13 +2874,13 @@ WITH base AS (
 ), qranks AS (
   SELECT query_id, cid,
          ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY {cos("q.qvec", "c.cvec")} DESC, c.cid) AS crank
+                            ORDER BY {_cos_sql(_dbl("q.qvec"), _dbl("c.cvec"))} DESC, c.cid) AS crank
   FROM q CROSS JOIN cents c
 ), topk AS (
   SELECT s.query_id, qr.crank FROM (
     SELECT b.id, q.query_id,
            ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {cos("b.vec", "q.qvec")} DESC, b.id) AS rn
+                              ORDER BY {_cos_sql(_dbl("b.vec"), _dbl("q.qvec"))} DESC, b.id) AS rn
     FROM base b CROSS JOIN q WHERE b.id != q.query_id
   ) s
   JOIN assigned a ON a.id = s.id
@@ -3089,13 +3009,6 @@ def q_knn_label_accuracy(spark, sf_dir: str) -> DataFrame:
 
 
 def _knn_sql() -> str:
-    def cos(x: str, y: str) -> str:
-        return (
-            f"list_dot_product(CAST({x} AS DOUBLE[]), CAST({y} AS DOUBLE[]))"
-            f" / (sqrt(list_dot_product(CAST({x} AS DOUBLE[]), CAST({x} AS DOUBLE[])))"
-            f" * sqrt(list_dot_product(CAST({y} AS DOUBLE[]), CAST({y} AS DOUBLE[]))))"
-        )
-
     return f"""
 WITH base AS (
   SELECT vec_id AS id, embedding AS vec, CAST(label AS BIGINT) AS lbl
@@ -3109,7 +3022,7 @@ WITH base AS (
   SELECT * FROM (
     SELECT q.query_id, q.qlbl, b.id, b.lbl,
            ROW_NUMBER() OVER (PARTITION BY q.query_id
-                              ORDER BY {cos("b.vec", "q.qvec")} DESC, b.id) AS rn
+                              ORDER BY {_cos_sql(_dbl("b.vec"), _dbl("q.qvec"))} DESC, b.id) AS rn
     FROM base b CROSS JOIN q WHERE b.id != q.query_id
   ) WHERE rn <= {KNN_EVAL_K}
 ), votes AS (

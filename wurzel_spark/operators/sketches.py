@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wurzel_spark.functions import text as TXT
+from wurzel_spark.operators import common
 from wurzel_spark.operators.common import band_pairs, parallelize
 from wurzel_spark.operators.dedup import md5_prefix_hash, shingles
 from wurzel_spark.tables import table
@@ -39,9 +40,9 @@ _2_60 = 1 << 60
 # DuckDB-side twin of md5_prefix_hash, for the oracle strings below.
 _SQL_H = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
 
-_SQL_WORDS = r"""
+_SQL_WORDS = rf"""
   SELECT doc_id, source,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 """
 
@@ -806,14 +807,14 @@ def q_bloom_decontam_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SPANS = r"""
+_SQL_SPANS = rf"""
   SELECT doc_id AS id, g FROM (
     SELECT doc_id,
            CASE WHEN len(ws) >= 13
                 THEN array_to_string(ws[i:i+12], ' ')
                 ELSE array_to_string(ws, ' ') END AS g
     FROM (SELECT doc_id,
-                 list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+                 {TXT.words_sql()} AS ws
           FROM documents WHERE len(trim(text)) > 0)
     , UNNEST(range(1, GREATEST(len(ws) - 11, 2))) AS t(i)
     WHERE len(ws) > 0
@@ -921,13 +922,6 @@ def cms_estimate_terms(
 SAMPLE_QUANTILE_K = 128
 SAMPLE_QUANTILE_P1000 = (500, 900, 990)  # permille grid
 
-_KNUTH_SQL = "((doc_id % 1000003) * 2654435761) % 4294967296"
-
-
-def _knuth_hash(id_col):
-    return ((F.col(id_col) % 1000003) * F.lit(2654435761)) % F.lit(4294967296)
-
-
 def bottomk_sample(
     df: DataFrame,
     k: int = SAMPLE_QUANTILE_K,
@@ -941,7 +935,7 @@ def bottomk_sample(
     merged, never a full sort."""
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(group_col).orderBy(_knuth_hash(id_col).asc(), F.col(id_col))
+    w = W.partitionBy(group_col).orderBy(common.knuth_hash(F.col(id_col)).asc(), F.col(id_col))
     return (
         df.withColumn("__hrn", F.row_number().over(w))
         .filter(F.col("__hrn") <= k)
@@ -1074,7 +1068,7 @@ SAMPLE_QUANTILE_SQL = f"""
 WITH hsamp AS (
   SELECT source, n_chars, doc_id,
          ROW_NUMBER() OVER (
-           PARTITION BY source ORDER BY {_KNUTH_SQL}, doc_id) AS hrn
+           PARTITION BY source ORDER BY {common.knuth_sql()}, doc_id) AS hrn
   FROM documents
 ), samp AS (
   SELECT source, n_chars, doc_id,
@@ -1265,7 +1259,7 @@ def q_ngram_diversity_hll_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
 NGRAM_DIVERSITY_HLL_SQL = rf"""
 WITH toks AS (
   SELECT source,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), grams AS (
   SELECT source, t.n, array_to_string(ws[i:i+t.n-1], ' ') AS g
@@ -1429,7 +1423,7 @@ WITH hashed AS (
   SELECT DISTINCT source, {_SQL_H.format(x="t.w")} AS h
   FROM (
     SELECT source,
-           list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+           {TXT.words_sql()} AS ws
     FROM documents
   ), UNNEST(ws) AS t(w)
 ), bk AS (

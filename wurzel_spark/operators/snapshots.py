@@ -301,13 +301,15 @@ SELECT doc_id, sha256(text) AS content_sha256 FROM merged ORDER BY doc_id
 """
 
 
-def q_cdc_snapshot_at(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-travel read over a synthetic CDC log: every doc inserted at
-    t0+(id%7) days, 11-residue docs updated at day 10, 13-residue docs
-    deleted at day 20; read AS OF day 15 — updates visible, deletes not
-    yet applied."""
+# The synthetic CDC log behind q_cdc_snapshot_at and q_scd2_intervals:
+# every doc inserted at t0+(id%7) days, 11-residue docs updated at day
+# 10, 13-residue docs deleted at day 20.
+_CDC_T0 = "2026-01-01 00:00:00"
+
+
+def _cdc_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    t0 = F.to_timestamp(F.lit("2026-01-01 00:00:00"))
+    t0 = F.to_timestamp(F.lit(_CDC_T0))
     ins = docs.select(
         "doc_id",
         F.timestamp_add("DAY", (F.col("doc_id") % 7).cast("int"), t0).alias("ts"),
@@ -326,33 +328,42 @@ def q_cdc_snapshot_at(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(CDC_DELETE).alias("op"),
         F.lit(None).cast("string").alias("text"),
     )
-    log = ins.unionByName(upd).unionByName(dele)
-    at = F.timestamp_add("DAY", F.lit(15), t0)
-    state = cdc_snapshot_at(log, at)
+    return ins.unionByName(upd).unionByName(dele)
+
+
+# DuckDB twin of _cdc_log.
+_CDC_LOG_CTE = f"""log AS (
+  SELECT doc_id,
+         TIMESTAMP '{_CDC_T0}' + INTERVAL (doc_id % 7) DAY AS ts,
+         'upsert' AS op, text
+  FROM documents
+  UNION ALL
+  SELECT doc_id, TIMESTAMP '{_CDC_T0}' + INTERVAL 10 DAY,
+         'upsert', text || ' [v2]'
+  FROM documents WHERE doc_id % 11 = 0
+  UNION ALL
+  SELECT doc_id, TIMESTAMP '{_CDC_T0}' + INTERVAL 20 DAY,
+         'delete', CAST(NULL AS VARCHAR)
+  FROM documents WHERE doc_id % 13 = 5
+)"""
+
+
+def q_cdc_snapshot_at(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-travel read over the synthetic CDC log (:func:`_cdc_log`) AS
+    OF day 15 — updates visible, deletes not yet applied."""
+    at = F.timestamp_add("DAY", F.lit(15), F.to_timestamp(F.lit(_CDC_T0)))
+    state = cdc_snapshot_at(_cdc_log(spark, sf_dir), at)
     return state.select(
         "doc_id", F.sha2(F.col("text"), 256).alias("content_sha256")
     ).orderBy("doc_id")
 
 
-CDC_SNAPSHOT_AT_SQL = """
-WITH log AS (
-  SELECT doc_id,
-         TIMESTAMP '2026-01-01 00:00:00' + INTERVAL (doc_id % 7) DAY AS ts,
-         'upsert' AS op, text
-  FROM documents
-  UNION ALL
-  SELECT doc_id, TIMESTAMP '2026-01-01 00:00:00' + INTERVAL 10 DAY,
-         'upsert', text || ' [v2]'
-  FROM documents WHERE doc_id % 11 = 0
-  UNION ALL
-  SELECT doc_id, TIMESTAMP '2026-01-01 00:00:00' + INTERVAL 20 DAY,
-         'delete', CAST(NULL AS VARCHAR)
-  FROM documents WHERE doc_id % 13 = 5
-), ranked AS (
+CDC_SNAPSHOT_AT_SQL = f"""
+WITH {_CDC_LOG_CTE}, ranked AS (
   SELECT doc_id, op, text,
          ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY ts DESC, op DESC) AS rn
   FROM log
-  WHERE ts <= TIMESTAMP '2026-01-01 00:00:00' + INTERVAL 15 DAY
+  WHERE ts <= TIMESTAMP '{_CDC_T0}' + INTERVAL 15 DAY
 )
 SELECT doc_id, sha256(text) AS content_sha256
 FROM ranked WHERE rn = 1 AND op = 'upsert'
@@ -415,32 +426,11 @@ def scd2_intervals(
 
 
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD2 history over the same synthetic CDC log as
-    [[q_cdc_snapshot_at]] (insert at t0+(id%7)d, 11-residue update at
-    day 10, 13-residue delete at day 20): updated docs carry two
-    versions with touching bounds, deleted docs' last interval closes at
-    the tombstone, everything else is a single current row."""
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-    t0 = F.to_timestamp(F.lit("2026-01-01 00:00:00"))
-    ins = docs.select(
-        "doc_id",
-        F.timestamp_add("DAY", (F.col("doc_id") % 7).cast("int"), t0).alias("ts"),
-        F.lit(CDC_UPSERT).alias("op"),
-        "text",
-    )
-    upd = docs.filter(F.col("doc_id") % 11 == 0).select(
-        "doc_id",
-        F.timestamp_add("DAY", F.lit(10), t0).alias("ts"),
-        F.lit(CDC_UPSERT).alias("op"),
-        F.concat(F.col("text"), F.lit(" [v2]")).alias("text"),
-    )
-    dele = docs.filter(F.col("doc_id") % 13 == 5).select(
-        "doc_id",
-        F.timestamp_add("DAY", F.lit(20), t0).alias("ts"),
-        F.lit(CDC_DELETE).alias("op"),
-        F.lit(None).cast("string").alias("text"),
-    )
-    hist = scd2_intervals(ins.unionByName(upd).unionByName(dele))
+    """SCD2 history over the synthetic CDC log (:func:`_cdc_log`):
+    updated docs carry two versions with touching bounds, deleted docs'
+    last interval closes at the tombstone, everything else is a single
+    current row."""
+    hist = scd2_intervals(_cdc_log(spark, sf_dir))
     return hist.select(
         "doc_id",
         "version_n",
@@ -451,21 +441,8 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "version_n")
 
 
-SCD2_SQL = """
-WITH log AS (
-  SELECT doc_id,
-         TIMESTAMP '2026-01-01 00:00:00' + INTERVAL (doc_id % 7) DAY AS ts,
-         'upsert' AS op, text
-  FROM documents
-  UNION ALL
-  SELECT doc_id, TIMESTAMP '2026-01-01 00:00:00' + INTERVAL 10 DAY,
-         'upsert', text || ' [v2]'
-  FROM documents WHERE doc_id % 11 = 0
-  UNION ALL
-  SELECT doc_id, TIMESTAMP '2026-01-01 00:00:00' + INTERVAL 20 DAY,
-         'delete', CAST(NULL AS VARCHAR)
-  FROM documents WHERE doc_id % 13 = 5
-), timed AS (
+SCD2_SQL = f"""
+WITH {_CDC_LOG_CTE}, timed AS (
   SELECT doc_id, ts, op, text,
          LEAD(ts) OVER (PARTITION BY doc_id ORDER BY ts, op) AS valid_to
   FROM log

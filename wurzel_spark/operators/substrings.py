@@ -210,7 +210,7 @@ _L = MIN_DUP_LEN
 _DUP_STARTS_CTE = rf"""
 toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), w AS (
   SELECT doc_id, ws, len(ws) AS n_tokens FROM toks

@@ -181,11 +181,11 @@ def q_doc_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return doc_metrics(table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-DOC_METRICS_SQL = """
+DOC_METRICS_SQL = f"""
 SELECT doc_id,
        length(text) AS char_len,
        len(string_split(text, chr(10))) AS n_lines,
-       len(list_filter(regexp_split_to_array(trim(text), '\\s+'), w -> w != '')) AS n_words,
+       len({TXT.words_sql()}) AS n_words,
        sha256(text) AS text_sha256
 FROM documents ORDER BY doc_id
 """
@@ -195,10 +195,10 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return token_stats(table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-TOKEN_STATS_SQL = """
+TOKEN_STATS_SQL = f"""
 WITH w AS (
   SELECT doc_id, text,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 )
 SELECT doc_id,
@@ -214,11 +214,7 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _dd_markers(markers) -> str:
-    lst = ", ".join(f"'{m}'" for m in markers)
-    return (
-        "CAST(len(list_filter(regexp_split_to_array(trim(text), '\\s+'),"
-        f" w -> list_contains([{lst}], w))) AS BIGINT)"
-    )
+    return f"CAST({TXT.markers_sql(TXT.words_sql(), markers)} AS BIGINT)"
 
 
 def _lang_id_sql(order_by: bool = True) -> str:
@@ -403,9 +399,9 @@ def q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PMI_BIGRAMS_SQL = rf"""
 WITH toks AS (
-  SELECT list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+  SELECT {TXT.words_sql()} AS ws
   FROM documents
-  WHERE len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')) >= 2
+  WHERE len({TXT.words_sql()}) >= 2
 ), bg AS (
   SELECT ws[i] AS w1, ws[i+1] AS w2
   FROM toks, UNNEST(range(1, len(ws))) AS t(i)
@@ -458,7 +454,7 @@ def _quality_sql() -> str:
 WITH base AS (
   SELECT doc_id, text,
          length(text) AS n_chars,
-         len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '')) AS n_words,
+         len({TXT.words_sql()}) AS n_words,
          length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
          length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit,
          {stop_sum} AS stop_hits
@@ -528,10 +524,10 @@ def q_pipeline_filter_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-PIPELINE_STATS_SQL = """
+PIPELINE_STATS_SQL = f"""
 WITH scored AS (
   SELECT doc_id, source, text,
-         len(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '')) AS n_words,
+         len({TXT.words_sql()}) AS n_words,
          length(text) AS n_chars,
          CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE)
            / length(text) AS digit_ratio
@@ -708,10 +704,10 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(table(spark, sf_dir, "documents")).orderBy("doc_id")
 
 
-REPETITION_STATS_SQL = """
+REPETITION_STATS_SQL = f"""
 WITH base AS (
   SELECT doc_id, length(text) AS n_chars,
-         list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), grams AS (
   SELECT doc_id, n_chars,
@@ -793,11 +789,11 @@ def q_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-DISTINCTIVE_TERMS_SQL = """
+DISTINCTIVE_TERMS_SQL = f"""
 WITH tf AS (
   SELECT source, term, COUNT(*) AS tf FROM (
     SELECT source,
-           unnest(list_filter(regexp_split_to_array(trim(text), '\\s+'), x -> x != '')) AS term
+           unnest({TXT.words_sql()}) AS term
     FROM documents
   ) GROUP BY source, term
 ), dfreq AS (
@@ -838,9 +834,7 @@ def mixture_sample(df: DataFrame, rates_permille: dict[str, int]) -> DataFrame:
     The doc_id is folded mod 1000003 (prime) first so the product stays
     far inside int64 even for petabyte-scale id spaces.
     """
-    h = ((F.col("doc_id") % 1000003) * F.lit(2654435761)) % F.lit(4294967296) % F.lit(
-        1000
-    )
+    h = common.knuth_hash(F.col("doc_id")) % F.lit(1000)
     rate = F.lit(None).cast("long")
     expr = None
     for src, permille in rates_permille.items():
@@ -864,7 +858,7 @@ def _mixture_sql() -> str:
     )
     return f"""
 SELECT doc_id, source FROM documents
-WHERE ((doc_id % 1000003) * 2654435761) % 4294967296 % 1000
+WHERE {common.knuth_sql()} % 1000
       < (CASE {case} ELSE 0 END)
 ORDER BY doc_id
 """
@@ -1024,10 +1018,10 @@ def q_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bigram_lm_score(table(spark, sf_dir, "documents"))
 
 
-BIGRAM_LM_SQL = r"""
+BIGRAM_LM_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), eligible AS (
   SELECT doc_id, ws FROM toks WHERE len(ws) >= 2
@@ -1144,9 +1138,9 @@ def q_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # The Gopher rule CTE chain (base → m → f), one definition — shared by
 # GOPHER_SQL and CALIBRATION_SQL below (the C4 drift lesson, ADVICE r7).
-_GOPHER_CTE = r"""base AS (
+_GOPHER_CTE = rf"""base AS (
   SELECT doc_id, source,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws,
+         {TXT.words_sql()} AS ws,
          list_filter(regexp_split_to_array(text, '\n'), x -> trim(x) != '') AS lines,
          len(regexp_extract_all(text, '(#|\.\.\.)')) AS n_symbols
   FROM documents
@@ -1316,18 +1310,18 @@ def q_c4_clean_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c4_clean_docs(table(spark, sf_dir, "documents"))
 
 
-_C4_KEPT_CTE = r"""
+_C4_KEPT_CTE = rf"""
 base AS (
   SELECT doc_id,
          list_filter(regexp_split_to_array(text, '\n'), x -> trim(x) != '') AS lines,
          (contains(lower(text), 'lorem ipsum')) AS has_lorem_ipsum,
-         (contains(text, '{') OR contains(text, '}')) AS has_curly
+         (contains(text, '{{') OR contains(text, '}}')) AS has_curly
   FROM documents
 ), k AS (
   SELECT doc_id, lines, has_lorem_ipsum, has_curly,
          list_filter(lines, x ->
            regexp_matches(trim(x), '[.!?"]$')
-           AND len(list_filter(regexp_split_to_array(trim(x), '\s+'), w -> w != '')) >= 5
+           AND len({TXT.words_sql('x')}) >= 5
            AND NOT contains(lower(x), 'javascript')) AS kept
   FROM base
 ), m AS (
@@ -1335,7 +1329,7 @@ base AS (
          -- array_to_string([]) is NULL in DuckDB; Spark concat_ws gives ''
          len(regexp_extract_all(COALESCE(array_to_string(kept, chr(10)), ''), '[.!?]+')) AS n_sentences,
          CAST(COALESCE(list_sum(list_transform(kept, x ->
-           len(list_filter(regexp_split_to_array(trim(x), '\s+'), w -> w != '')))), 0) AS BIGINT) AS n_kept_words
+           len({TXT.words_sql('x')}))), 0) AS BIGINT) AS n_kept_words
   FROM k
 )"""
 
@@ -1451,12 +1445,12 @@ WITH staged AS (
           AND len(regexp_extract_all(text, '{PII_PATTERNS["n_phones"]}')) = 0) AS p_ok
   FROM (
     SELECT doc_id, source, text,
-           list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+           {TXT.words_sql()} AS ws
     FROM documents
   )
 ), surv AS (
   SELECT doc_id, source,
-         len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')) AS n_tokens
+         len({TXT.words_sql()}) AS n_tokens
   FROM (
     SELECT doc_id, source, text,
            ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn
@@ -1595,13 +1589,11 @@ def _bm25_sql() -> str:
     values = ", ".join(
         f"({qid}, '{t}')" for qid, ts in sorted(_BM25_QUERIES.items()) for t in ts
     )
-    terms = ", ".join(
-        f"'{t}'" for t in sorted({t for ts in _BM25_QUERIES.values() for t in ts})
-    )
+    terms = TXT.sql_list(sorted({t for ts in _BM25_QUERIES.values() for t in ts}))
     return rf"""
 WITH d2 AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), d3 AS (
   SELECT doc_id, ws, len(ws) AS dl FROM d2
@@ -1679,9 +1671,7 @@ def quality_mixture_sample(
     for i, p in enumerate(permille):
         rate = F.when(band == i, p) if rate is None else rate.when(band == i, p)
     rate = rate.otherwise(F.lit(0))
-    h = ((F.col("doc_id") % 1000003) * F.lit(2654435761)) % F.lit(
-        4294967296
-    ) % F.lit(1000)
+    h = common.knuth_hash(F.col("doc_id")) % F.lit(1000)
     return (
         scored.select("doc_id", "familiarity", band.alias("band"), rate.alias("__r"), h.alias("__h"))
         .filter(F.col("__h") < F.col("__r"))
@@ -1715,7 +1705,7 @@ banded AS (
   SELECT doc_id, familiarity, {band_case} AS band FROM lm
 )
 SELECT doc_id, band, familiarity FROM banded
-WHERE ((doc_id % 1000003) * 2654435761) % 4294967296 % 1000 < ({rate_case})
+WHERE {common.knuth_sql()} % 1000 < ({rate_case})
 ORDER BY doc_id
 """
 
@@ -1831,11 +1821,10 @@ def q_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dsir_importance_sample(table(spark, sf_dir, "documents"))
 
 
-IMPORTANCE_SAMPLE_SQL = r"""
+IMPORTANCE_SAMPLE_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, source,
-         unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS w
+         unnest({TXT.words_sql()}) AS w
   FROM documents
 ), tb AS (
   SELECT doc_id, source,
@@ -2153,7 +2142,7 @@ def q_retrieval_self_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 RETRIEVAL_EVAL_SQL = rf"""
 WITH d2 AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), d3 AS (
   SELECT doc_id, ws, len(ws) AS dl FROM d2
@@ -2346,8 +2335,7 @@ def _data_budget_sql() -> str:
     return rf"""
 WITH per AS (
   SELECT source, COUNT(*) AS n_docs,
-         CAST(SUM(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                  x -> x != ''))) AS BIGINT) AS available_tokens,
+         CAST(SUM(len({TXT.words_sql()})) AS BIGINT) AS available_tokens,
          CAST(CASE {case} ELSE 0 END AS BIGINT) AS permille
   FROM documents GROUP BY source
 ), plan AS (
@@ -2409,16 +2397,16 @@ def q_markdown_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     return markdown_structure_stats(table(spark, sf_dir, "documents"))
 
 
-MARKDOWN_STRUCTURE_SQL = r"""
+MARKDOWN_STRUCTURE_SQL = rf"""
 WITH base AS (
   SELECT doc_id,
          len(string_split(text, chr(10))) AS n_lines,
-         len(regexp_extract_all(text, '(^|\n)#{1,6} ')) AS headings,
+         len(regexp_extract_all(text, '(^|\n)#{{1,6}} ')) AS headings,
          len(regexp_extract_all(text, '(^|\n)```')) AS fences,
          len(regexp_extract_all(text, '(^|\n)\|')) AS table_rows,
          len(regexp_extract_all(text, '(^|\n)[ \t]*[-*+] ')) AS bullets,
          len(regexp_extract_all(text, '\[[^\]]*\]\([^)]*\)')) AS links,
-         len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')) AS words
+         len({TXT.words_sql()}) AS words
   FROM documents
 )
 SELECT doc_id,
@@ -2691,10 +2679,10 @@ def q_ngram_diversity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Oracle counts literal gram strings; Spark counts xxhash64 of the token
 # slice — totals and distinct counts agree modulo ~2⁻⁶⁵ collisions (the
 # duplicated_span_stats precedent).
-NGRAM_DIVERSITY_SQL = r"""
+NGRAM_DIVERSITY_SQL = rf"""
 WITH toks AS (
   SELECT source,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), grams AS (
   SELECT source, t.n, array_to_string(ws[i:i+t.n-1], ' ') AS g
@@ -2719,6 +2707,9 @@ ORDER BY source, n
 # stopword-density score q1000 = floor(1000 * stopword_hits / n_words).
 QUALITY_SWEEP_STEP = 100
 QUALITY_SWEEP_POINTS = 11  # k = 0..10  →  threshold = k * 100
+# q1000 over a DuckDB word list ``ws`` (the Spark twin is
+# TXT.permille of the stopword hits over the words).
+_Q1000_EXPR = TXT.permille_sql(TXT.markers_sql("ws", STOPWORDS), "len(ws)")
 
 
 def quality_threshold_sweep(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -2756,10 +2747,7 @@ def quality_score_buckets(df: DataFrame, text_col: str = "text") -> DataFrame:
     scored = per_doc.select(
         "source",
         "nw",
-        F.when(F.col("nw") > 0, F.expr("(1000 * sh) div nw"))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("q1000"),
+        TXT.permille("sh", "nw").cast("long").alias("q1000"),
     )
     return scored.groupBy(
         "source", F.expr(f"q1000 div {QUALITY_SWEEP_STEP}").alias("b")
@@ -2820,12 +2808,12 @@ def _quality_sweep_sql() -> str:
     return rf"""
 WITH per_doc AS (
   SELECT source,
-         CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')) AS BIGINT) AS nw,
+         CAST(len({TXT.words_sql()}) AS BIGINT) AS nw,
          {sh} AS sh
   FROM documents
 ), scored AS (
   SELECT source, nw,
-         CASE WHEN nw > 0 THEN (1000 * sh) // nw ELSE 0 END AS q1000
+         {TXT.permille_sql('sh', 'nw')} AS q1000
   FROM per_doc
 ), buckets AS (
   SELECT source, q1000 // {QUALITY_SWEEP_STEP} AS b,
@@ -2943,15 +2931,13 @@ def q_vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 VOCAB_GROWTH_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, UNNEST(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                    x -> x != '')) AS w
+  SELECT doc_id, UNNEST({TXT.words_sql()}) AS w
   FROM documents
 ), first AS (
   SELECT w, MIN(doc_id) AS fd FROM toks GROUP BY w
 ), docs AS (
   SELECT doc_id,
-         CAST(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                              x -> x != '')) AS BIGINT) AS nt
+         CAST(len({TXT.words_sql()}) AS BIGINT) AS nt
   FROM documents
 ), ranked AS (
   SELECT doc_id, nt,
@@ -3049,7 +3035,7 @@ def q_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_OVERLAP_SQL = rf"""
 WITH toks AS (
   SELECT source,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), grams AS (
   SELECT DISTINCT source, array_to_string(ws[i:i+{OVERLAP_GRAM_N - 1}], ' ') AS g
@@ -3154,8 +3140,7 @@ def q_term_freq_of_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 TERM_FREQ_OF_FREQ_SQL = rf"""
 WITH toks AS (
-  SELECT source, UNNEST(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                    x -> x != '')) AS w
+  SELECT source, UNNEST({TXT.words_sql()}) AS w
   FROM documents
 ), types AS (
   SELECT source, w, CAST(COUNT(*) AS BIGINT) AS c
@@ -3192,10 +3177,8 @@ def eval_sample_manifest(
     """
     from pyspark.sql import Window as W
 
-    from wurzel_spark.operators.sketches import _knuth_hash
-
     w = W.partitionBy("source", "lang").orderBy(
-        _knuth_hash("doc_id").asc(), F.col("doc_id")
+        common.knuth_hash(F.col("doc_id")).asc(), F.col("doc_id")
     )
     return (
         df.select("source", "lang", "doc_id")
@@ -3215,7 +3198,7 @@ WITH ranked AS (
   SELECT source, lang, doc_id,
          ROW_NUMBER() OVER (
            PARTITION BY source, lang
-           ORDER BY ((doc_id % 1000003) * 2654435761) % 4294967296, doc_id
+           ORDER BY {common.knuth_sql()}, doc_id
          ) AS rk
   FROM documents
 )
@@ -3261,20 +3244,14 @@ def score_label_hist(df: DataFrame, text_col: str = "text") -> DataFrame:
     (streaming/calibration.py); calibration bins AND the exact AUC both
     derive from it without touching the corpus again."""
     c = F.col(text_col)
-    n_words = F.size(TXT.words(c))
-    stop_hits = TXT.marker_words_count(c, STOPWORDS)
     flags, _ = _gopher_flag_exprs(c)
     keep = _gopher_keep(flags)
     per_doc = df.select(
         "source",
-        F.when(n_words > 0, F.lit(1000) * stop_hits.cast("long"))
-        .otherwise(F.lit(0))
-        .alias("__num"),
-        F.when(n_words > 0, n_words.cast("long")).otherwise(F.lit(1)).alias("__den"),
+        TXT.marker_words_count(c, STOPWORDS).cast("long").alias("__sh"),
+        TXT.word_count(c).cast("long").alias("__nw"),
         keep.cast("long").alias("keep"),
-    ).select(
-        "source", F.expr("__num div __den").cast("long").alias("q1000"), "keep"
-    )
+    ).select("source", TXT.permille("__sh", "__nw").cast("long").alias("q1000"), "keep")
     return per_doc.groupBy("source", "q1000").agg(
         F.sum("keep").alias("pos"),
         (F.count(F.lit(1)) - F.sum("keep")).alias("neg"),
@@ -3313,16 +3290,13 @@ def q_score_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _calibration_sql() -> str:
-    stoplist = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
 WITH {_GOPHER_CTE},
 keepers AS (
   SELECT doc_id, {_GOPHER_KEEP_EXPR} AS gopher_keep FROM f
 ), scored AS (
   SELECT doc_id,
-         CASE WHEN len(ws) > 0
-              THEN (1000 * len(list_filter(ws, w -> list_contains([{stoplist}], w)))) // len(ws)
-              ELSE 0 END AS q1000
+         {_Q1000_EXPR} AS q1000
   FROM base
 ), joined AS (
   SELECT LEAST(q1000 // 100, {CALIBRATION_N_BINS - 1}) AS bin, q1000,
@@ -3416,10 +3390,10 @@ def q_tokenizer_fertility_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tokenizer_fertility_stats(table(spark, sf_dir, "documents"))
 
 
-TOKENIZER_FERTILITY_SQL = r"""
+TOKENIZER_FERTILITY_SQL = rf"""
 WITH w AS (
   SELECT source, lang,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws,
+         {TXT.words_sql()} AS ws,
          length(text) AS nc
   FROM documents
 ), per AS (
@@ -3669,7 +3643,7 @@ def q_inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 INVERTED_INDEX_SQL = rf"""
 WITH toks AS (
-  SELECT doc_id, UNNEST(list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '')) AS term
+  SELECT doc_id, UNNEST({TXT.words_sql()}) AS term
   FROM documents
 ), post AS (
   SELECT CAST(concat('0x', substr(md5(term), 1, 15)) AS BIGINT) AS h,
@@ -3771,16 +3745,13 @@ def q_score_auc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _score_auc_sql() -> str:
-    stoplist = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
 WITH {_GOPHER_CTE},
 keepers AS (
   SELECT doc_id, {_GOPHER_KEEP_EXPR} AS gopher_keep FROM f
 ), per_doc AS (
   SELECT b.source,
-         CASE WHEN len(ws) > 0
-              THEN (1000 * len(list_filter(ws, w -> list_contains([{stoplist}], w)))) // len(ws)
-              ELSE 0 END AS q1000,
+         {_Q1000_EXPR} AS q1000,
          CASE WHEN k.gopher_keep THEN 1 ELSE 0 END AS keep
   FROM base b JOIN keepers k USING (doc_id)
 ), hist AS (
@@ -3900,7 +3871,7 @@ def q_blocklist_filter_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return blocklist_filter_stats(table(spark, sf_dir, "documents"))
 
 
-_BLK_IN = ", ".join(f"'{t}'" for t in BLOCKLIST_TERMS)
+_BLK_IN = TXT.sql_list(BLOCKLIST_TERMS)
 
 BLOCKLIST_SQL = rf"""
 WITH per AS (
@@ -3909,7 +3880,7 @@ WITH per AS (
          len(list_filter(ws, w -> w IN ({_BLK_IN}))) AS n_hits
   FROM (
     SELECT source,
-           list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+           {TXT.words_sql()} AS ws
     FROM documents
   )
 )
@@ -4296,7 +4267,7 @@ def q_ccnet_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 CCNET_LM_SQL = rf"""
 WITH toks AS (
   SELECT doc_id, source, lang,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), bg AS (
   SELECT doc_id, source, lang,
@@ -4375,11 +4346,7 @@ def filter_agreement_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         "source",
         "g",
         "b",
-        (
-            F.when(F.col("__nw") > 0, F.expr("div(1000 * __sh, __nw)"))
-            .otherwise(F.lit(0))
-            >= FILTER_AGREE_Q1000
-        ).alias("q"),
+        (TXT.permille("__sh", "__nw") >= FILTER_AGREE_Q1000).alias("q"),
     )
     i = lambda col: col.cast("long")  # noqa: E731
     agg = per.groupBy("source").agg(
@@ -4405,8 +4372,6 @@ def q_filter_agreement_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filter_agreement_stats(table(spark, sf_dir, "documents"))
 
 
-_STOP_IN = ", ".join(f"'{m}'" for m in STOPWORDS)
-
 FILTER_AGREEMENT_SQL = rf"""
 WITH {_GOPHER_CTE}, verdicts AS (
   SELECT base.source,
@@ -4414,9 +4379,8 @@ WITH {_GOPHER_CTE}, verdicts AS (
          NOT (f.n_words > 0
               AND len(list_filter(base.ws, w -> w IN ({_BLK_IN}))) * 1000
                   > {BLOCKLIST_MAX_PERMILLE} * f.n_words) AS b,
-         (CASE WHEN f.n_words > 0
-               THEN (1000 * len(list_filter(base.ws, w -> list_contains([{_STOP_IN}], w)))) // f.n_words
-               ELSE 0 END) >= {FILTER_AGREE_Q1000} AS q
+         ({TXT.permille_sql(TXT.markers_sql("base.ws", STOPWORDS), "f.n_words")})
+           >= {FILTER_AGREE_Q1000} AS q
   FROM f JOIN base USING (doc_id)
 )
 SELECT source, COUNT(*) AS n_docs,
@@ -4957,8 +4921,7 @@ def _waterfill_sql() -> str:
     return rf"""
 WITH per AS (
   SELECT source,
-         CAST(SUM(len(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                                  x -> x != ''))) AS HUGEINT) AS avail,
+         CAST(SUM(len({TXT.words_sql()})) AS HUGEINT) AS avail,
          CAST(CASE {case} ELSE 0 END AS BIGINT) AS w
   FROM documents GROUP BY source
 ), tot AS (
@@ -5232,15 +5195,14 @@ def q_code_switch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _code_switch_sql() -> str:
     hits = " + ".join(
         "(CASE WHEN len(list_intersect(toks, ["
-        + ", ".join(f"'{m}'" for m in marks)
+        + TXT.sql_list(marks)
         + f"])) >= {CS_MIN_MARKERS} THEN 1 ELSE 0 END)"
         for lang, marks in sorted(LANG_MARKERS.items())
     )
     return rf"""
 WITH toksed AS (
   SELECT source,
-         list_filter(regexp_split_to_array(trim(lower(COALESCE(text, ''))), '\s+'),
-                     x -> x != '') AS toks
+         {TXT.words_sql("lower(COALESCE(text, ''))")} AS toks
   FROM documents
 ), per AS (
   SELECT source, {hits} AS n_langs FROM toksed
@@ -5284,9 +5246,7 @@ def waterfill_sample_stats(
         .agg(F.sum("n_toks").alias("avail")),
         rates_permille,
     ).select("source", "alloc_tokens", "avail_tokens", "fill_permille")
-    h = (
-        (F.col("doc_id") % 1000003) * F.lit(2654435761) % F.lit(4294967296)
-    ) % F.lit(1000)
+    h = common.knuth_hash(F.col("doc_id")) % F.lit(1000)
     per = df.select(
         "source", "doc_id", TXT.word_count(F.col(text_col)).alias("n_toks")
     ).join(F.broadcast(plan), "source")
@@ -5328,10 +5288,9 @@ WITH plan AS (
   {plan_sql}
 ), per AS (
   SELECT d.source, d.doc_id,
-         len(list_filter(regexp_split_to_array(trim(d.text), '\s+'),
-                         x -> x != '')) AS n_toks,
+         len({TXT.words_sql('d.text')}) AS n_toks,
          p.alloc_tokens, p.fill_permille,
-         ((d.doc_id % 1000003) * 2654435761) % 4294967296 % 1000
+         {common.knuth_sql('d.doc_id')} % 1000
            < p.fill_permille AS keep
   FROM documents d JOIN plan p ON d.source = p.source
 ), agg AS (
@@ -5490,8 +5449,8 @@ def q_line_lang_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _line_lang_sql() -> str:
     struct_fields = ", ".join(
         f"c_{lang} := len(list_intersect("
-        "list_filter(regexp_split_to_array(trim(lower(ln)), '\\s+'), x -> x != ''), ["
-        + ", ".join(f"'{m}'" for m in LANG_MARKERS[lang])
+        f"{TXT.words_sql('lower(ln)')}, ["
+        + TXT.sql_list(LANG_MARKERS[lang])
         + "]))"
         for lang in _LANGS_SORTED
     )
@@ -5749,7 +5708,7 @@ def q_doc_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 DOC_TFIDF_SQL = rf"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(regexp_split_to_array(trim(text), '\s+'), x -> x != '') AS ws
+         {TXT.words_sql()} AS ws
   FROM documents
 ), stf AS (
   SELECT doc_id, t.term, CAST(COUNT(*) AS BIGINT) AS tf
@@ -6078,12 +6037,11 @@ def q_importance_ess(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _importance_ess_sql() -> str:
-    tgt = ", ".join(f"'{s}'" for s in DSIR_TARGET_SOURCES)
+    tgt = TXT.sql_list(DSIR_TARGET_SOURCES)
     return rf"""
 WITH words AS (
   SELECT doc_id, source,
-         unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS w
+         unnest({TXT.words_sql()}) AS w
   FROM documents
 ), toks AS (
   SELECT doc_id, source,
@@ -6252,8 +6210,7 @@ def q_source_tv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 SOURCE_TV_SQL = rf"""
 WITH toks AS (
   SELECT source,
-         unnest(list_filter(regexp_split_to_array(trim(text), '\s+'),
-                            x -> x != '')) AS w
+         unnest({TXT.words_sql()}) AS w
   FROM documents
 ), per_sw AS (
   SELECT source, w, CAST(COUNT(*) AS HUGEINT) AS c FROM toks GROUP BY source, w
@@ -6399,16 +6356,13 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _brier_sql() -> str:
-    stoplist = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
 WITH {_GOPHER_CTE},
 keepers AS (
   SELECT doc_id, {_GOPHER_KEEP_EXPR} AS gopher_keep FROM f
 ), per_doc AS (
   SELECT b.source,
-         CASE WHEN len(ws) > 0
-              THEN (1000 * len(list_filter(ws, w -> list_contains([{stoplist}], w)))) // len(ws)
-              ELSE 0 END AS q1000,
+         {_Q1000_EXPR} AS q1000,
          CASE WHEN k.gopher_keep THEN 1 ELSE 0 END AS keep
   FROM base b JOIN keepers k USING (doc_id)
 ), hist AS (
@@ -6624,16 +6578,13 @@ def q_score_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lift_sql() -> str:
-    stoplist = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
 WITH {_GOPHER_CTE},
 keepers AS (
   SELECT doc_id, {_GOPHER_KEEP_EXPR} AS gopher_keep FROM f
 ), per_doc AS (
   SELECT b.doc_id,
-         CASE WHEN len(ws) > 0
-              THEN (1000 * len(list_filter(ws, w -> list_contains([{stoplist}], w)))) // len(ws)
-              ELSE 0 END AS q1000,
+         {_Q1000_EXPR} AS q1000,
          CASE WHEN k.gopher_keep THEN 1 ELSE 0 END AS keep
   FROM base b JOIN keepers k USING (doc_id)
 ), bins AS (
@@ -6729,8 +6680,7 @@ PREFIX_TEMPLATE_SQL = rf"""
 WITH pre AS (
   SELECT source,
          array_to_string(
-           list_filter(regexp_split_to_array(trim(lower(text)), '\s+'),
-                       x -> x != '')[1:{TEMPLATE_PREFIX_WORDS}], ' ') AS prefix
+           {TXT.words_sql('lower(text)')}[1:{TEMPLATE_PREFIX_WORDS}], ' ') AS prefix
   FROM documents
 ), per_prefix AS (
   SELECT source, prefix, CAST(COUNT(*) AS BIGINT) AS c

@@ -37,6 +37,7 @@ from dataclasses import dataclass, field
 from logging import getLogger
 from typing import Any, Callable
 
+from wurzel_spark.http_session import LazySession
 from wurzel_spark.sinks.kb import KBClient, NonRetryableError, _is_read_timeout, retry_call
 from wurzel_spark.sinks.versioned import CollectionBackend
 
@@ -45,29 +46,6 @@ log = getLogger(__name__)
 # HTTP statuses a fire-and-forget sync trigger treats as "started" —
 # the gateway gave up but the server keeps indexing (wonderful/step.py:151+).
 _GATEWAY_STATUSES = (502, 503, 504, 524)
-
-
-class _LazySession:
-    """One session per client (and one bare session, for a client with a
-    ``bare_session_factory``), built on first use: the client's factory's,
-    or a ``requests`` session carrying the client's ``_headers()``."""
-
-    def _headers(self) -> dict[str, str]:
-        return {}
-
-    def _session(self, bare: bool = False):
-        attr = "_b" if bare else "_s"
-        if getattr(self, attr, None) is None:
-            factory = self.bare_session_factory if bare else self.session_factory
-            if factory is None:
-                import requests
-
-                s = requests.Session()
-                s.headers.update({} if bare else self._headers())
-            else:
-                s = factory()
-            setattr(self, attr, s)
-        return getattr(self, attr)
 
 
 class HTTPError(RuntimeError):
@@ -90,7 +68,7 @@ def _check(resp) -> dict:
 
 
 @dataclass
-class QdrantHTTPBackend(_LazySession, CollectionBackend):
+class QdrantHTTPBackend(LazySession, CollectionBackend):
     """Qdrant REST dialect of the 6-method collection protocol.
 
     Payload-index parity with qdrant/step.py:189-219: after
@@ -215,7 +193,7 @@ class QdrantHTTPBackend(_LazySession, CollectionBackend):
 
 
 @dataclass
-class MilvusHTTPBackend(_LazySession, CollectionBackend):
+class MilvusHTTPBackend(LazySession, CollectionBackend):
     """Milvus v2 REST dialect.
 
     Collection layout mirrors milvus/step.py:66-93: auto-id INT64 pk,
@@ -344,7 +322,7 @@ class MilvusHTTPBackend(_LazySession, CollectionBackend):
 
 
 @dataclass
-class WonderfulKBClient(_LazySession, KBClient):
+class WonderfulKBClient(LazySession, KBClient):
     """Wonderful RAG dialect of the KB protocol (wonderful/step.py:26-200).
 
     upsert: existing file → in-place POST /storage/upload; new file →
@@ -473,7 +451,7 @@ class WonderfulKBClient(_LazySession, KBClient):
 
 
 @dataclass
-class ElevenLabsKBClient(_LazySession, KBClient):
+class ElevenLabsKBClient(LazySession, KBClient):
     """ElevenLabs convai knowledge-base dialect (elevenlabs/step.py:31-358).
 
     Listing pages through ``GET /v1/convai/knowledge-base`` filtering to
@@ -617,7 +595,7 @@ class ElevenLabsKBClient(_LazySession, KBClient):
 
 
 @dataclass
-class DecagonKBClient(_LazySession, KBClient):
+class DecagonKBClient(LazySession, KBClient):
     """Decagon article dialect (decagon/step.py:40-161): server-side
     chunking via /article/chunks, then one /article/new per chunk with
     chunk_index/total_chunks metadata."""
